@@ -27,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     the (subj, pred, obj) triple view."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import docs_from_plain_documents
 
@@ -52,7 +52,8 @@ def entry(spark: SparkSession) -> DataFrame:
     raw, _ = scratch_table(parse_docs(docs), f"entry_parse_{app_id}",
                            overwrite=True)
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     return (
         edges.select("subj", "pred", "obj")
         .unionByName(linked.select("subj", "pred", "obj"))

@@ -102,15 +102,14 @@ BENCH_QUERIES = [
 ]
 
 
-def run_cpg_bench(spark, n_docs: int) -> tuple[float, int]:
+def run_cpg_bench(spark, n_docs: int) -> tuple[float, int, list]:
     """Full checkpointed pipeline (ingest -> parse -> link -> materialize)
     over the generated corpus — the production path, including the parquet
     stage commits.  The input corpus is materialized to a table FIRST
     (untimed): the north_rule input is an Iceberg table that exists before
     the job starts, so the timed region is the engine, not the synthetic
     corpus generator; ingest commits the input by reference
-    (pipeline.Passthrough).  Returns (best_seconds, n_docs, raw_runs,
-    stmt_eog_best_seconds) — the last is the statement-level-EOG A/B leg."""
+    (pipeline.Passthrough).  Returns (best_seconds, n_docs, raw_runs)."""
     import shutil
     import tempfile
 
@@ -152,18 +151,7 @@ def run_cpg_bench(spark, n_docs: int) -> tuple[float, int]:
         # 45 s is neighbor noise, so keep sampling (up to 4 shots)
         while min(runs) > 45 and len(runs) < 4:
             runs.append(one(f"bench{len(runs) + 1}"))
-
-        # expr-EOG A/B (round 5, VERDICT item 3): one timed shot at
-        # statement-level EOG attributes the flagship's round-4 −9.5 %
-        # docs/s move — same corpus, same session, back to back
-        os.environ["CPG_SPARK_STMT_EOG"] = "1"
-        try:
-            stmt_runs = [one("bench_stmt")]
-            while min(stmt_runs) > 45 and len(stmt_runs) < 2:
-                stmt_runs.append(one(f"bench_stmt{len(stmt_runs) + 1}"))
-        finally:
-            del os.environ["CPG_SPARK_STMT_EOG"]
-        return min(runs), n_docs, runs, min(stmt_runs)
+        return min(runs), n_docs, runs
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
@@ -214,7 +202,7 @@ def main() -> None:
     per_query: dict[str, float] = {}
 
     n_docs = args.cpg_docs or _cpg_docs_for_sf(sf)
-    cpg_sec, n_docs, cpg_runs, stmt_sec = run_cpg_bench(spark, n_docs)
+    cpg_sec, n_docs, cpg_runs = run_cpg_bench(spark, n_docs)
     per_query["cpg_pipeline"] = round(cpg_sec, 3)
 
     if not args.cpg_only:
@@ -251,12 +239,6 @@ def main() -> None:
         "cpg_docs": n_docs,
         "cpg_docs_per_sec": round(n_docs / cpg_sec, 1),
         "cpg_pipeline_runs": [round(r, 3) for r in cpg_runs],
-        # A/B attribution (r5): the same pipeline at statement-level EOG;
-        # the delta is the measured price of the reference-granularity
-        # expression-level EOG default
-        "cpg_pipeline_stmt_eog_sec": round(stmt_sec, 3),
-        "expr_eog_overhead_pct": round((cpg_sec - stmt_sec) * 100.0
-                                       / stmt_sec, 1),
         "cpus": args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "scratch": scratch or "default shared disk",
     }))

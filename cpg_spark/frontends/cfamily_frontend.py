@@ -2102,10 +2102,14 @@ class CFamilyFrontend(Emitter):
                     eid = None
                     if self.peek().kind != ")":
                         eid, _ = self.parse_expr(mpath)
+                        # one path per extra argument: `v(x, y, z)` must
+                        # not mint y and z at the same node id
+                        ai = 1
                         while self.accept(","):
                             if self.peek().kind == ")":
                                 break
-                            self.parse_expr(f"{mpath}.x[{ii}]")
+                            self.parse_expr(f"{mpath}.x[{ai}]")
+                            ai += 1
                     self.expect(")")
                     if eid is not None:
                         self.ast_edge(fid, eid, "INITIALIZERS", ii)

@@ -312,8 +312,7 @@ _OPERAND_FIELD_ORDER = {
 
 
 def expand_expression_eog(graph) -> None:
-    """EXPRESSION-LEVEL EOG — the DEFAULT since round 4 (statement
-    granularity remains behind ``parse_docs(expr_eog=False)``), matching
+    """EXPRESSION-LEVEL EOG — applied to every parse, matching
     the reference whose EvaluationOrderGraphPass always operates at
     expression level: rewrite a DocGraph's statement-level EOG so every
     operand evaluates before its operator, per

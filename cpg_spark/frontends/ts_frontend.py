@@ -587,20 +587,26 @@ class TsFrontend(Emitter):
 
     def _scan_past_return_type(self, k: int) -> int:
         """Arrow lookahead: token index of the `=>` following an optional
-        ``: Type`` return annotation starting at ``k``.  Angle depth is
-        tracked so generic return types scan past their commas —
-        ``(x): Map<string, number> => ...`` is an arrow (round-5 ADVICE
-        fix; the flat scan stopped at the ',').  Terminators only count
-        at depth 0."""
-        ang = 0
+        ``: Type`` return annotation starting at ``k`` (the token after
+        the parameter list's `)`).  Only a `:` opens an annotation, and
+        its scan stops at `(` and `.`, so a member-call chain
+        ``(a).map(x => ...)`` or a ternary ``c ? (a) : b.f(x => ...)``
+        never reaches the callback's `=>`.  Angle depth is tracked so
+        generic return types scan past their commas —
+        ``(x): Map<string, number> => ...`` is an arrow.  Terminators
+        only count at depth 0."""
         n = len(self.toks)
+        if k >= n or self.toks[k].text != ":":
+            return k
+        k += 1
+        ang = 0
         while k < n and self.toks[k].kind != "eof":
             tx = self.toks[k].text
             if tx == "<":
                 ang += 1
             elif tx in (">", ">>", ">>>") and ang:
                 ang = max(0, ang - len(tx))
-            elif ang == 0 and tx in ("=>", ";", ")", "{", ","):
+            elif ang == 0 and tx in ("=>", ";", ")", "{", ",", "(", "."):
                 break
             k += 1
         return k

@@ -11,9 +11,12 @@ static dimension table of the common ``java.lang``/``java.util``/
 ``java.io`` hierarchy (simple names — the source-level supertype
 spellings our Java frontend records).
 
-Spark shape: the dimension is a literal frame (≤ ~50 rows) with node ids
-precomputed at import time; everything else is broadcast semi-joins —
-no driver collect, no UDF.  Triggered JDK types materialize as
+Spark shape: the only Spark work is the trigger probe
+(:func:`probe_supertypes`), ONE aggregation job that also answers the
+supertype closure's "does anything resolve" question, so a corpus with
+no trigger pays nothing extra.  The table has ≤ ~50 names, so the rows
+for the triggered subset are built on the driver.  Triggered JDK types
+materialize as
 *implicit* RecordDeclarations (``is_inferred=True`` so cross-document
 copies collapse at materialize, like link-stage inference) whose
 record→Type ``SUPER_TYPE`` edges feed the existing
@@ -27,10 +30,11 @@ merged by the canonicalization CC (cpg_spark/operators/canonicalize.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpg_spark.ids import inferred_id, type_id
+from cpg_spark.schemas import EDGES_SCHEMA, NODES_SCHEMA
 
 # direct supertypes (superclass + interfaces), simple names — the subset
 # of the JDK the reference's reflection walk most commonly surfaces in
@@ -100,116 +104,62 @@ def _rec_id(name: str) -> int:
     return inferred_id("RecordDeclaration", name, container="jdk")
 
 
-# literal rows, ids precomputed at import (the table is static):
-#  links:   one row per DIRECT (sub -> sup) JDK edge
-#  closure: one row per TRANSITIVE (name -> ancestor) pair, used to find
-#           every table entry reachable from a triggered name
-_LINK_ROWS = [
-    {"jdk_sub": sub, "jdk_sub_rec": _rec_id(sub),
-     "jdk_sup": sup, "jdk_sup_type": type_id(sup)}
-    for sub, sups in JDK_DIRECT_SUPERS.items()
-    for sup in sups
-]
-_CLOSURE_ROWS = [
-    {"jdk_name": n, "jdk_reach": a}
-    for n in JDK_DIRECT_SUPERS
-    for a in (_ancestors(n) | {n})
-]
-
-
-def _null_loc():
-    return F.lit(None).cast(
-        "struct<start_line:int,start_col:int,end_line:int,end_col:int>")
-
-
-def external_jdk_hierarchy(nodes: DataFrame, edges: DataFrame):
-    """(implicit_nodes, implicit_edges) extending record SUPER_TYPE edges
-    whose target is a known JDK type with that type's full JDK ancestry.
-
-    Trigger = a corpus record's supertype NAME that (a) resolves to no
-    source RecordDeclaration anywhere (the in-source case belongs to
-    TypeHierarchyResolver / supertype_record_closure) and (b) is in the
-    static JDK table.  Everything reachable from a trigger materializes:
-    implicit RecordDeclaration nodes, Type nodes for their supertype
-    spellings, and record→Type SUPER_TYPE edges."""
+def probe_supertypes(nodes: DataFrame, edges: DataFrame):
+    """(any_resolved, triggers) from ONE aggregation job over the record
+    supertype names: ``any_resolved`` says whether some supertype names a
+    source RecordDeclaration (the closure's emptiness probe);
+    ``triggers`` are the sorted names that resolve to no source record
+    but are in the static JDK table (the in-source case belongs to
+    TypeHierarchyResolver / supertype_record_closure)."""
     from cpg_spark.operators.hierarchy import record_super_pairs
 
-    spark = nodes.sparkSession
-    links = spark.createDataFrame(
-        _LINK_ROWS,
-        "jdk_sub string, jdk_sub_rec bigint, jdk_sup string, "
-        "jdk_sup_type bigint")
-    closure = spark.createDataFrame(_CLOSURE_ROWS,
-                                    "jdk_name string, jdk_reach string")
-
     declared = nodes.filter(F.col("label") == "RecordDeclaration").select(
-        F.col("name").alias("super_name")).distinct()
-    triggers = (
-        record_super_pairs(nodes, edges)
-        .select("super_name").distinct()
-        .join(declared, "super_name", "left_anti")
-        .join(F.broadcast(closure.select(
-            F.col("jdk_name").alias("super_name")).distinct()),
-            "super_name", "left_semi")
-        .select(F.col("super_name").alias("jdk_name"))
+        F.col("name").alias("super_name"),
+        F.lit(True).alias("_declared")).distinct()
+    row = (
+        record_super_pairs(nodes, edges).select("super_name")
+        .join(F.broadcast(declared), "super_name", "left")
+        .agg(F.max(F.col("_declared").isNotNull()).alias("any_resolved"),
+             F.collect_set(F.when(
+                 F.col("_declared").isNull()
+                 & F.col("super_name").isin(*JDK_DIRECT_SUPERS),
+                 F.col("super_name"))).alias("triggers"))
+        .first()
     )
-    # every table entry reachable from a trigger (incl. the trigger) —
-    # the set the reflection walk would have visited
-    reach = (
-        F.broadcast(triggers).join(closure, "jdk_name")
-        .select(F.col("jdk_reach").alias("jdk_sub")).distinct()
-    )
-    out_links = links.join(F.broadcast(reach), "jdk_sub", "left_semi")
+    return bool(row["any_resolved"]), sorted(row["triggers"])
 
-    rec_ids = spark.createDataFrame(
-        [{"name": n, "nid": _rec_id(n)} for n in JDK_DIRECT_SUPERS],
-        "name string, nid bigint")
-    # both sides of every emitted link become implicit records — roots
-    # with no supertypes of their own (Object, bare interfaces) appear
-    # only on the sup side, and the closure's "supertype resolves to a
-    # known record" gate must pass for them too
-    rec_names = (
-        out_links.select(F.col("jdk_sub").alias("name"))
-        .unionByName(out_links.select(F.col("jdk_sup").alias("name")))
-        .distinct()
+
+def external_jdk_hierarchy(spark: SparkSession, triggers):
+    """(implicit_nodes, implicit_edges) extending record SUPER_TYPE edges
+    whose target is a triggered JDK type (see :func:`probe_supertypes`)
+    with that type's full JDK ancestry, or None when the triggers reach
+    no JDK edge.
+
+    Everything reachable from a trigger (incl. the trigger — the set the
+    reflection walk would have visited) materializes: implicit
+    RecordDeclaration nodes, Type nodes for their supertype spellings,
+    and record→Type SUPER_TYPE edges."""
+    reach = set()
+    for t in triggers:
+        reach |= _ancestors(t) | {t}
+    links = [(sub, sup) for sub in sorted(reach)
+             for sup in JDK_DIRECT_SUPERS.get(sub, ())]
+    if not links:
+        return None
+    # both sides of every link become implicit records — roots with no
+    # supertypes of their own (Object, bare interfaces) appear only on
+    # the sup side, and the closure's "supertype resolves to a known
+    # record" gate must pass for them too
+    rec_names = sorted({n for link in links for n in link})
+    sup_names = sorted({sup for _, sup in links})
+    node_rows = (
+        [(_rec_id(n), "RecordDeclaration", n, None, None, None, None,
+          True, True, None, {"kind": "class", "origin": "jdk"})
+         for n in rec_names]
+        + [(type_id(n), "Type", n, n, None, None, None, True, True, None, {})
+           for n in sup_names]
     )
-    rec_nodes = (
-        rec_names.join(F.broadcast(rec_ids), "name")
-        .select("name", F.col("nid").alias("node_id"))
-        .select(
-            "node_id", F.lit("RecordDeclaration").alias("label"), "name",
-            F.lit(None).cast("string").alias("code"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("span_offset"),
-            _null_loc().alias("loc"),
-            F.lit(True).alias("is_inferred"),
-            F.lit(True).alias("is_implicit"),
-            F.lit(None).cast("int").alias("argument_index"),
-            F.create_map(F.lit("kind"), F.lit("class"),
-                         F.lit("origin"), F.lit("jdk")).alias("props"),
-        )
-    )
-    type_nodes = (
-        out_links.select(F.col("jdk_sup").alias("name"),
-                         F.col("jdk_sup_type").alias("node_id"))
-        .dropDuplicates(["node_id"])
-        .select(
-            "node_id", F.lit("Type").alias("label"), "name",
-            F.col("name").alias("code"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("span_offset"),
-            _null_loc().alias("loc"),
-            F.lit(True).alias("is_inferred"),
-            F.lit(True).alias("is_implicit"),
-            F.lit(None).cast("int").alias("argument_index"),
-            F.create_map().cast("map<string,string>").alias("props"),
-        )
-    )
-    sup_edges = out_links.select(
-        F.col("jdk_sub_rec").alias("subj"),
-        F.lit("SUPER_TYPE").alias("pred"),
-        F.col("jdk_sup_type").alias("obj"),
-        F.create_map().cast("map<string,string>").alias("props"),
-        F.lit(None).cast("string").alias("doc_id"),
-    )
-    return rec_nodes.unionByName(type_nodes), sup_edges
+    edge_rows = [(_rec_id(sub), "SUPER_TYPE", type_id(sup), {}, None)
+                 for sub, sup in links]
+    return (spark.createDataFrame(node_rows, NODES_SCHEMA),
+            spark.createDataFrame(edge_rows, EDGES_SCHEMA))

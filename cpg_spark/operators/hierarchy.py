@@ -45,12 +45,15 @@ def record_super_pairs(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def supertype_record_closure(nodes: DataFrame, edges: DataFrame,
-                             with_depth: bool = False) -> DataFrame:
+                             with_depth: bool = False,
+                             nonempty: bool | None = None) -> DataFrame:
     """(descendant_record_name, ancestor_record_name[, depth]) transitive
     pairs, restricted to supertype names that actually resolve to a known
     RecordDeclaration (the reference drops unresolved names too).
     ``with_depth`` carries the minimal ancestry distance — the
-    innermost-ancestor ranking key for inherited member-call resolution."""
+    innermost-ancestor ranking key for inherited member-call resolution.
+    ``nonempty`` skips the emptiness probe when the caller already knows
+    whether any supertype resolves."""
     pairs = record_super_pairs(nodes, edges)
     records = nodes.filter(F.col("label") == "RecordDeclaration").select(
         F.col("name").alias("super_name")
@@ -58,7 +61,9 @@ def supertype_record_closure(nodes: DataFrame, edges: DataFrame,
     resolved = pairs.join(F.broadcast(records), "super_name").select(
         F.col("sub_name").alias("child"), F.col("super_name").alias("parent")
     ).persist()
-    if resolved.limit(1).count() == 0:
+    if nonempty is None:
+        nonempty = resolved.limit(1).count() > 0
+    if not nonempty:
         # flat corpus: skip the closure driver loop entirely
         resolved.unpersist()
         schema = ("descendant string, ancestor string"

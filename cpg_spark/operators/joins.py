@@ -161,25 +161,16 @@ def linking_join(
     dims: DataFrame,
     key_pairs: list[tuple[str, str]],
     salt_src: str,
-    dim_rows: int | None = None,
+    strategy: str,
     buckets: int = 16,
-    how: str = "inner",
-    force: str | None = None,
     hot_keys: list | None = None,
-) -> tuple[DataFrame, str]:
-    """Pick broadcast vs salted join; returns (joined, strategy_used).
-    ``hot_keys`` (see :func:`hot_fact_keys`) restricts salting to measured
-    hot keys on the salted path."""
-    strategy = force
-    if strategy is None:
-        if dim_rows is None:
-            dim_rows = bounded_dim_count(dims)
-        strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
+) -> DataFrame:
+    """Inner equi-join by ``strategy``: ``"broadcast"`` broadcasts the
+    dim side, ``"salted"`` runs :func:`salted_equi_join`.  ``hot_keys``
+    (see :func:`hot_fact_keys`) restricts salting to measured hot keys on
+    the salted path."""
     if strategy == "broadcast":
         cond = [F.col(fk) == F.col(dk) for fk, dk in key_pairs]
-        return facts.join(F.broadcast(dims), cond, how), "broadcast"
-    return (
-        salted_equi_join(facts, dims, key_pairs, salt_src, buckets=buckets,
-                         how=how, hot_keys=hot_keys),
-        "salted",
-    )
+        return facts.join(F.broadcast(dims), cond, "inner")
+    return salted_equi_join(facts, dims, key_pairs, salt_src, buckets=buckets,
+                            hot_keys=hot_keys)

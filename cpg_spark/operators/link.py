@@ -122,34 +122,6 @@ def _imports_dim(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _visibility_gate(cand: DataFrame, imports: DataFrame) -> DataFrame:
-    """Keep candidates where the declaration is in the mention's own
-    module (scope_path prefix — Go files of one package, same-file) or in
-    a module the document imports.  ``imports`` is tiny → broadcast."""
-    gated = cand.join(
-        F.broadcast(imports),
-        (F.col("doc_id") == F.col("imp_doc_id"))
-        & (F.col("d_module") == F.col("imp_module")),
-        "left_outer",
-    ).drop("imp_doc_id")
-    same_module = _same_module(F.col("scope_path"), F.col("d_module"))
-    return (
-        gated.filter(
-            same_module
-            | F.col("imp_module").isNotNull()
-            # member CALLS with an unknown base keep name-only matching
-            # (reference resolves member calls against all records when the
-            # base type is unknown, CallResolver.java:1089-1127); member
-            # REFS do not — the reference infers a field on the base type
-            # instead of matching foreign records (VariableUsageResolver
-            # .java:409-452)
-            | ((F.col("kind") == "member_call") & F.col("base_type").isNull())
-            | (F.col("kind") == "import")
-        )
-        .drop("imp_module")
-    )
-
-
 def symbol_dim(symbols: DataFrame) -> DataFrame:
     """The ONE symbol dimension both linking joins share: every
     resolvable kind, all signature columns.  Both joins must reference
@@ -332,9 +304,8 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
     return hits, terms
 
 
-def joined_mentions(mentions: DataFrame, symbols: DataFrame,
-                    strategy: str | None = None, buckets: int = 16,
-                    dim: DataFrame | None = None):
+def joined_mentions(mentions: DataFrame, dim: DataFrame, strategy: str,
+                    buckets: int = 16) -> DataFrame:
     """ONE linking join covering every resolvable mention kind (calls,
     member calls, refs, member refs, imports) — with the visibility rule
     encoded IN THE JOIN KEY, not as a post-join filter.
@@ -367,18 +338,15 @@ def joined_mentions(mentions: DataFrame, symbols: DataFrame,
     The single shared join also keeps the serial cost down: one
     broadcast hash relation (or salted dim explode) instead of one per
     mention kind — column pruning would make per-kind broadcast subtrees
-    non-identical, so Catalyst could not reuse the exchange.  Returns
-    (joined_persisted, strategy_used, dim_rows)."""
+    non-identical, so Catalyst could not reuse the exchange.  ``dim`` is
+    :func:`symbol_dim`; ``strategy`` is ``"broadcast"`` or ``"salted"``.
+    Returns the persisted candidate frame."""
     facts = mentions.filter(F.col("kind").isin(
         "call", "member_call", "super_call", "ref", "member_ref",
         "import")).select(
         "mention_id", "kind", "name", "base_type", "scope_path", "doc_id",
         "n_args", "n_kwargs", "arg_ids", "arg_types")
-    if dim is None:
-        dim = symbol_dim(symbols)
-    dim_rows = bounded_dim_count(dim) if strategy is None else None
-    if strategy == "salted" or (strategy is None and dim_rows is not None
-                                and dim_rows > BROADCAST_MAX_ROWS):
+    if strategy == "salted":
         # measure which names are actually hot BEFORE salting: only those
         # keys get the × buckets dim explosion; the long tail joins
         # unexploded (hot_fact_keys docstring has the numbers).  One
@@ -422,10 +390,10 @@ def joined_mentions(mentions: DataFrame, symbols: DataFrame,
     # candidate rows; every consumer runs _pick_winner per mention, so
     # duplicates are harmless and not worth a dedup shuffle
     fx = via_prefix.unionByName(via_import).unionByName(via_qual)
-    arm_ab, used = linking_join(
+    arm_ab = linking_join(
         fx, dim, key_pairs=[("name", "d_name"), ("_vis", "d_module")],
-        salt_src="mention_id", dim_rows=dim_rows, buckets=buckets,
-        how="inner", force=strategy, hot_keys=hot_keys,
+        salt_src="mention_id", strategy=strategy, buckets=buckets,
+        hot_keys=hot_keys,
     )
     arm_ab = arm_ab.drop("_vis")
     # the two residual name-only arms go through the SAME
@@ -437,33 +405,28 @@ def joined_mentions(mentions: DataFrame, symbols: DataFrame,
     # unknown-base member calls: name-only against the method slice
     arm_c_facts = facts.filter(
         (F.col("kind") == "member_call") & F.col("base_type").isNull())
-    arm_c, _ = linking_join(
+    arm_c = linking_join(
         arm_c_facts, dim, key_pairs=[("name", "d_name")],
-        salt_src="mention_id", dim_rows=dim_rows, buckets=buckets,
-        how="inner", force=used, hot_keys=hot_keys)
+        salt_src="mention_id", strategy=strategy, buckets=buckets,
+        hot_keys=hot_keys)
     arm_c = arm_c.filter(F.col("d_kind") == "method")
     # imports: (name, source module); base-less imports name-only
     arm_d_facts = facts.filter(F.col("kind") == "import")
-    arm_d, _ = linking_join(
+    arm_d = linking_join(
         arm_d_facts, dim, key_pairs=[("name", "d_name")],
-        salt_src="mention_id", dim_rows=dim_rows, buckets=buckets,
-        how="inner", force=used, hot_keys=hot_keys)
+        salt_src="mention_id", strategy=strategy, buckets=buckets,
+        hot_keys=hot_keys)
     arm_d = arm_d.filter(
         F.col("base_type").isNull()
         | (F.col("base_type") == F.col("d_module")))
 
-    joined = arm_ab.unionByName(arm_c).unionByName(arm_d).persist()
-    return joined, used, dim_rows
+    return arm_ab.unionByName(arm_c).unionByName(arm_d).persist()
 
 
-def link_calls(mentions: DataFrame, symbols: DataFrame,
-               strategy: str | None = None, buckets: int = 16,
-               closure: DataFrame | None = None,
-               nodes: DataFrame | None = None,
-               edges: DataFrame | None = None,
-               dim: DataFrame | None = None,
-               prejoined: DataFrame | None = None):
-    """Resolve ``call`` and ``member_call`` mentions.
+def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
+               closure: DataFrame, nodes: DataFrame, edges: DataFrame):
+    """Resolve ``call`` and ``member_call`` mentions from the shared
+    candidate frame ``joined`` (:func:`joined_mentions` over ``dim``).
 
     ``closure`` is the record supertype closure
     (descendant, ancestor, depth) from
@@ -472,34 +435,20 @@ def link_calls(mentions: DataFrame, symbols: DataFrame,
     ancestor records' methods, nearest ancestor first — the reference's
     ``getInvocationCandidatesFromParents`` walk
     (CallResolver.java:1707-1739) with overriding-candidate ranking
-    (:1089-1127).  Without it (None), only exact-record matches resolve
-    and every inherited call mis-resolves to an inferred node.
+    (:1089-1127).  ``nodes``/``edges`` feed the function-pointer walk.
 
-    Returns (edges, inferred_nodes, stats).
+    Returns (edges, inferred_nodes).
     """
     calls = mentions.filter(
         F.col("kind").isin("call", "member_call", "super_call")).select(
         "mention_id", "kind", "name", "base_type", "scope_path", "doc_id",
         "n_args", "n_kwargs", "arg_ids", "arg_types",
     )
-    fns = symbol_dim(symbols) if dim is None else dim
-    if prejoined is not None:
-        # shared single-join path (see joined_mentions)
-        joined = prejoined.filter(
-            F.col("kind").isin("call", "member_call", "super_call"))
-        used, dim_rows = strategy or "prejoined", None
-    else:
-        # standalone path: the UNFILTERED shared dim joins here; the
-        # candidate filter below already restricts d_kind
-        dim_rows = bounded_dim_count(fns) if strategy is None else None
-        joined, used = _name_join(calls, fns, dim_rows, buckets, strategy)
-        joined = _visibility_gate(joined, _imports_dim(mentions))
+    joined = joined.filter(
+        F.col("kind").isin("call", "member_call", "super_call"))
 
     # supertype walk: (base_type, d_record) ancestry pairs with minimal
     # depth; the closure is records-with-ancestry only -> broadcast
-    if closure is None:
-        closure = mentions.sparkSession.createDataFrame(
-            [], "descendant string, ancestor string, depth int")
     anc = closure.select(F.col("descendant").alias("_anc_child"),
                          F.col("ancestor").alias("_anc_parent"),
                          F.col("depth").alias("_anc_depth"))
@@ -647,119 +596,114 @@ def link_calls(mentions: DataFrame, symbols: DataFrame,
         .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull())
     )
 
-    # misses -> (1) function-pointer backward-DFG resolution where the
-    # graph is available, then (2) inferred FunctionDeclaration
+    # misses -> (1) function-pointer backward-DFG resolution, then (2)
+    # inferred FunctionDeclaration
     # (deterministic id on (name, arity) so identical misses across 10^12
     # docs collapse to ONE canonical inferred node)
-    missed = calls.join(winners.select("mention_id"), "mention_id", "left_anti")
-    fp_calls = None
-    fp_terms = None
-    term_inferred = None
-    if nodes is not None and edges is not None:
-        # materialize the miss set ONCE: the fnptr walk, the terminal
-        # join, the inference path and two anti-joins all consume it —
-        # lazily each re-runs the whole name-join + overload-ladder
-        # subtree (measured 54 s vs 18 s for the stage at 96k docs)
-        missed = missed.localCheckpoint(eager=True)
-        # keep the pre-anti-join miss set: a conditionally-assigned
-        # pointer can have BOTH a resolved target and an unresolved
-        # terminal; the terminal leg must still be processed even though
-        # the resolved hit removes the mention from `missed`
-        fp_base = missed
-        fp, fp_terms = _function_pointer_targets(missed, nodes, edges,
-                                                 mentions=mentions)
-        fp_calls = (
-            fp.select(
-                F.col("mention_id").alias("subj"),
-                F.lit("CALLS").alias("pred"),
-                F.col("fn_id").alias("obj"))
-            .join(missed.select(F.col("mention_id").alias("subj"), "doc_id"),
-                  "subj")
-            .withColumn("props", F.create_map().cast("map<string,string>"))
-            .select("subj", "pred", "obj", "props", "doc_id")
+    # materialize the miss set ONCE: the fnptr walk, the terminal join,
+    # the inference path and two anti-joins all consume it — lazily each
+    # re-runs the whole name-join + overload-ladder subtree (measured
+    # 54 s vs 18 s for the stage at 96k docs)
+    missed = calls.join(winners.select("mention_id"), "mention_id",
+                        "left_anti").localCheckpoint(eager=True)
+    # keep the pre-anti-join miss set: a conditionally-assigned pointer
+    # can have BOTH a resolved target and an unresolved terminal; the
+    # terminal leg must still be processed even though the resolved hit
+    # removes the mention from `missed`
+    fp_base = missed
+    fp, fp_terms = _function_pointer_targets(missed, nodes, edges,
+                                             mentions=mentions)
+    fp_calls = (
+        fp.select(
+            F.col("mention_id").alias("subj"),
+            F.lit("CALLS").alias("pred"),
+            F.col("fn_id").alias("obj"))
+        .join(missed.select(F.col("mention_id").alias("subj"), "doc_id"),
+              "subj")
+        .withColumn("props", F.create_map().cast("map<string,string>"))
+        .select("subj", "pred", "obj", "props", "doc_id")
+    )
+    fp_dfg = fp_calls.select(
+        F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
+        F.col("subj").alias("obj"), "props", "doc_id")
+    fp_calls = fp_calls.unionByName(fp_dfg)
+    missed = missed.join(fp.select("mention_id").distinct(),
+                         "mention_id", "left_anti")
+    # chains ending at an UNRESOLVED signature-hinted function ref
+    # (`&fun`): resolve the terminal's (name, arity) against the symbol
+    # dim, else infer FunctionDeclaration(name, arity) — the same key
+    # link_refs' miss path mints, so both collapse to ONE node at
+    # materialize (FunctionPointerTest noParamUnknown: every call
+    # through any pointer to &fun invokes one inferred fn).  Built
+    # lazily: with no terminals the window + dim join run over an empty
+    # sliver inside the same final job (an isEmpty probe here used to
+    # force the whole walk eagerly)
+    tm = fp_terms.join(
+        fp_base.select("mention_id", "doc_id"), "mention_id")
+    t_dim = dim.filter(F.col("d_kind").isin("function", "method")).select(
+        F.col("d_name").alias("t_name"), "d_decl_id", "d_n_params")
+    tj = tm.join(
+        F.broadcast(
+            t_dim.join(tm.select("t_name").distinct(), "t_name",
+                       "left_semi")),
+        ["t_name"], "left_outer",
+    )
+    # arity-mismatched declarations are NULLED, not row-dropped: a
+    # terminal whose name matches only wrong-arity decls must still fall
+    # through to inference — dropping its rows would erase the call
+    # entirely (no edge AND no inferred node)
+    _t_arity_ok = (F.coalesce(F.col("d_n_params"), F.lit(0))
+                   == F.col("t_nargs"))
+    tj = (tj.withColumn(
+              "d_n_params",
+              F.when(_t_arity_ok, F.col("d_n_params")))
+          .withColumn(
+              "d_decl_id",
+              F.when(_t_arity_ok, F.col("d_decl_id"))))
+    # one winner PER TERMINAL, not per mention: a pointer reaching
+    # several functions (cond ? &f : &g) keeps every invokes leg
+    # (multi-invokes semantics); best declared match first, else the
+    # inferred (name, arity) node
+    tw = Window.partitionBy("mention_id", "t_name", "t_nargs").orderBy(
+        F.col("d_decl_id").isNull().cast("int"), "d_decl_id")
+    tj = (tj.withColumn("_rk", F.row_number().over(tw))
+          .filter(F.col("_rk") == 1).drop("_rk"))
+    t_obj = F.coalesce(
+        F.col("d_decl_id"),
+        _inferred_id_col("FunctionDeclaration", F.col("t_name"),
+                         F.col("t_nargs")))
+    t_calls = tj.select(
+        F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
+        t_obj.alias("obj"),
+        F.create_map().cast("map<string,string>").alias("props"),
+        "doc_id")
+    t_dfg = t_calls.select(
+        F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
+        F.col("subj").alias("obj"), "props", "doc_id")
+    fp_calls = fp_calls.unionByName(t_calls).unionByName(t_dfg)
+    term_inferred = (
+        tj.filter(F.col("d_decl_id").isNull())
+        .select(
+            t_obj.alias("node_id"),
+            F.lit("FunctionDeclaration").alias("label"),
+            F.col("t_name").alias("name"),
+            F.lit(None).cast("string").alias("code"),
+            F.lit(None).cast("string").alias("doc_id"),
+            F.lit(None).cast("int").alias("span_offset"),
+            F.lit(None).cast(
+                "struct<start_line:int,start_col:int,"
+                "end_line:int,end_col:int>"
+            ).alias("loc"),
+            F.lit(True).alias("is_inferred"),
+            F.lit(False).alias("is_implicit"),
+            F.lit(None).cast("int").alias("argument_index"),
+            F.create_map(F.lit("arity"),
+                         F.col("t_nargs").cast("string")).alias("props"),
         )
-        fp_dfg = fp_calls.select(
-            F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
-            F.col("subj").alias("obj"), "props", "doc_id")
-        fp_calls = fp_calls.unionByName(fp_dfg)
-        missed = missed.join(fp.select("mention_id").distinct(),
-                             "mention_id", "left_anti")
-        # chains ending at an UNRESOLVED signature-hinted function ref
-        # (`&fun`): resolve the terminal's (name, arity) against the
-        # symbol dim, else infer FunctionDeclaration(name, arity) — the
-        # same key link_refs' miss path mints, so both collapse to ONE
-        # node at materialize (FunctionPointerTest noParamUnknown:
-        # every call through any pointer to &fun invokes one inferred fn)
-    if fp_terms is not None:
-        # built unconditionally and lazily: with no terminals the window
-        # + dim join run over an empty sliver inside the same final job
-        # (an isEmpty probe here used to force the whole walk eagerly)
-        tm = fp_terms.join(
-            fp_base.select("mention_id", "doc_id"), "mention_id")
-        t_dim = fns.filter(F.col("d_kind").isin("function", "method")).select(
-            F.col("d_name").alias("t_name"), "d_decl_id", "d_n_params")
-        tj = tm.join(
-            F.broadcast(
-                t_dim.join(tm.select("t_name").distinct(), "t_name",
-                           "left_semi")),
-            ["t_name"], "left_outer",
-        )
-        # arity-mismatched declarations are NULLED, not row-dropped: a
-        # terminal whose name matches only wrong-arity decls must still
-        # fall through to inference — dropping its rows would erase the
-        # call entirely (no edge AND no inferred node)
-        _t_arity_ok = (F.coalesce(F.col("d_n_params"), F.lit(0))
-                       == F.col("t_nargs"))
-        tj = (tj.withColumn(
-                  "d_n_params",
-                  F.when(_t_arity_ok, F.col("d_n_params")))
-              .withColumn(
-                  "d_decl_id",
-                  F.when(_t_arity_ok, F.col("d_decl_id"))))
-        # one winner PER TERMINAL, not per mention: a pointer reaching
-        # several functions (cond ? &f : &g) keeps every invokes leg
-        # (multi-invokes semantics); best declared match first, else the
-        # inferred (name, arity) node
-        tw = Window.partitionBy("mention_id", "t_name", "t_nargs").orderBy(
-            F.col("d_decl_id").isNull().cast("int"), "d_decl_id")
-        tj = (tj.withColumn("_rk", F.row_number().over(tw))
-              .filter(F.col("_rk") == 1).drop("_rk"))
-        t_obj = F.coalesce(
-            F.col("d_decl_id"),
-            _inferred_id_col("FunctionDeclaration", F.col("t_name"),
-                             F.col("t_nargs")))
-        t_calls = tj.select(
-            F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
-            t_obj.alias("obj"),
-            F.create_map().cast("map<string,string>").alias("props"),
-            "doc_id")
-        t_dfg = t_calls.select(
-            F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
-            F.col("subj").alias("obj"), "props", "doc_id")
-        fp_calls = fp_calls.unionByName(t_calls).unionByName(t_dfg)
-        term_inferred = (
-            tj.filter(F.col("d_decl_id").isNull())
-            .select(
-                t_obj.alias("node_id"),
-                F.lit("FunctionDeclaration").alias("label"),
-                F.col("t_name").alias("name"),
-                F.lit(None).cast("string").alias("code"),
-                F.lit(None).cast("string").alias("doc_id"),
-                F.lit(None).cast("int").alias("span_offset"),
-                F.lit(None).cast(
-                    "struct<start_line:int,start_col:int,"
-                    "end_line:int,end_col:int>"
-                ).alias("loc"),
-                F.lit(True).alias("is_inferred"),
-                F.lit(False).alias("is_implicit"),
-                F.lit(None).cast("int").alias("argument_index"),
-                F.create_map(F.lit("arity"),
-                             F.col("t_nargs").cast("string")).alias("props"),
-            )
-            .dropDuplicates(["node_id"])
-        )
-        missed = missed.join(fp_terms.select("mention_id").distinct(),
-                             "mention_id", "left_anti")
+        .dropDuplicates(["node_id"])
+    )
+    missed = missed.join(fp_terms.select("mention_id").distinct(),
+                         "mention_id", "left_anti")
     # unknown-class gate (CallResolverTest.ensureNoUnknownClassDummies):
     # a member call whose base type names NO record anywhere in the corpus
     # gets neither an inferred target nor a CALLS edge — the reference
@@ -769,9 +713,9 @@ def link_calls(mentions: DataFrame, symbols: DataFrame,
     # All three name sets are distinct projections of frames already in
     # the plan (no extra scan).
     known_bases = (
-        fns.filter(F.col("d_kind") == "record")
+        dim.filter(F.col("d_kind") == "record")
         .select(F.col("d_name").alias("base_type"))
-        .unionByName(fns.select(F.col("d_module").alias("base_type")))
+        .unionByName(dim.select(F.col("d_module").alias("base_type")))
         .unionByName(mentions.filter(F.col("kind") == "import")
                      .select(F.col("base_type")))
         .filter(F.col("base_type").isNotNull())
@@ -815,34 +759,18 @@ def link_calls(mentions: DataFrame, symbols: DataFrame,
         F.create_map().cast("map<string,string>").alias("props"), "doc_id",
     )
 
-    out_edges = calls_edges.unionByName(fn_dfg).unionByName(
-        arg_param).unionByName(inferred_calls)
-    if fp_calls is not None:
-        out_edges = out_edges.unionByName(fp_calls)
-    if term_inferred is not None:
-        inferred_nodes = inferred_nodes.unionByName(term_inferred)
-    stats = {"strategy": used, "dim_rows": dim_rows}
-    return out_edges, inferred_nodes, stats
+    out_edges = (calls_edges.unionByName(fn_dfg).unionByName(arg_param)
+                 .unionByName(inferred_calls).unionByName(fp_calls))
+    return out_edges, inferred_nodes.unionByName(term_inferred)
 
 
-def _name_join(facts: DataFrame, dims: DataFrame, dim_rows: int, buckets: int,
-               strategy: str | None):
-    """name-keyed linking join; facts carry ``name``, dims ``d_name``."""
-    return linking_join(
-        facts, dims, key_pairs=[("name", "d_name")], salt_src="mention_id",
-        dim_rows=dim_rows, buckets=buckets, how="inner", force=strategy,
-    )
-
-
-def link_refs(mentions: DataFrame, symbols: DataFrame,
-              strategy: str | None = None, buckets: int = 16,
-              dim: DataFrame | None = None,
-              prejoined: DataFrame | None = None,
-              closure: DataFrame | None = None):
+def link_refs(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
+              closure: DataFrame):
     """Resolve ``ref`` / ``member_ref`` / ``import`` mentions against
     module-level declarations (vars, functions, records) and record fields —
-    the VariableUsageResolver cascade (J2).  Returns
-    (edges, inferred_nodes, stats).
+    the VariableUsageResolver cascade (J2), from the shared candidate
+    frame ``joined`` (:func:`joined_mentions`).  Returns
+    (edges, inferred_nodes).
 
     ``dim`` is the shared symbol dimension (see :func:`symbol_dim`) —
     unfiltered so its broadcast exchange is reused with link_calls';
@@ -851,19 +779,15 @@ def link_refs(mentions: DataFrame, symbols: DataFrame,
     ``child.inheritedField`` resolves against ancestor records' fields,
     nearest ancestor first (VariableUsageResolver.java:375-407
     resolveMember walks superTypesMap)."""
-    refs = mentions.filter(
-        F.col("kind").isin("ref", "member_ref", "import")
-    ).select("mention_id", "kind", "name", "base_type", "scope_path",
-             "doc_id", "n_args")
-    decls = symbol_dim(symbols) if dim is None else dim
     # asterisk expansion (ImportResolver.java:62-120): a wildcard import
     # refers to EVERY module-level symbol of its source module — a
     # module-keyed join instead of the name join (records' members are
     # excluded like the reference's top-level-declarations walk)
-    star = refs.filter((F.col("kind") == "import") & (F.col("name") == "*"))
+    star = mentions.filter((F.col("kind") == "import")
+                           & (F.col("name") == "*"))
     star_refers = (
-        star.join(decls.filter(F.col("d_record").isNull()),
-                  star["base_type"] == decls["d_module"])
+        star.join(dim.filter(F.col("d_record").isNull()),
+                  star["base_type"] == dim["d_module"])
         .select(
             F.col("mention_id").alias("subj"),
             F.lit("REFERS_TO").alias("pred"),
@@ -872,23 +796,12 @@ def link_refs(mentions: DataFrame, symbols: DataFrame,
             "doc_id",
         )
     )
-    if prejoined is not None:
-        # shared single-join path: star mentions never match a name, so
-        # they are absent from the inner-joined frame by construction
-        joined = prejoined.filter(
-            F.col("kind").isin("ref", "member_ref", "import"))
-        used, dim_rows = strategy or "prejoined", None
-    else:
-        refs = refs.join(star.select("mention_id"), "mention_id", "left_anti")
-        dim_rows = bounded_dim_count(decls) if strategy is None else None
-        joined, used = _name_join(refs, decls, dim_rows, buckets, strategy)
-        joined = _visibility_gate(joined, _imports_dim(mentions))
+    # star mentions never match a name, so they are absent from the
+    # inner-joined frame by construction
+    joined = joined.filter(F.col("kind").isin("ref", "member_ref", "import"))
 
     # inherited-field walk: (base_type, d_record) ancestry pairs, nearest
     # ancestor first — mirrors the member-call supertype walk
-    if closure is None:
-        closure = mentions.sparkSession.createDataFrame(
-            [], "descendant string, ancestor string, depth int")
     anc = closure.select(F.col("descendant").alias("_anc_child"),
                          F.col("ancestor").alias("_anc_parent"),
                          F.col("depth").alias("_anc_depth"))
@@ -1038,7 +951,7 @@ def link_refs(mentions: DataFrame, symbols: DataFrame,
         F.col("subj").alias("obj"), "props", "doc_id")
     out = (refers.unionByName(dfg).unionByName(star_refers)
            .unionByName(refers_inf).unionByName(dfg_inf))
-    return out, ref_inferred, {"strategy": used, "dim_rows": dim_rows}
+    return out, ref_inferred
 
 
 def override_dispatch(calls_edges: DataFrame, overrides: DataFrame) -> DataFrame:
@@ -1071,102 +984,54 @@ def override_dispatch(calls_edges: DataFrame, overrides: DataFrame) -> DataFrame
     )
 
 
-def link_all(mentions: DataFrame, symbols: DataFrame,
-             strategy: str | None = None, buckets: int = 16,
-             nodes: DataFrame | None = None,
-             edges: DataFrame | None = None):
-    """Full linking stage. Returns (edges, inferred_nodes, stats).
-
-    Pass ``nodes``/``edges`` to enable inherited member-call resolution
-    through the record supertype closure (computed here, depth-ranked)
-    plus override-dispatch CALLS edges over the combined local+linked
-    call set."""
-    closure = None
-    if nodes is not None and edges is not None:
-        from cpg_spark.operators.hierarchy import supertype_record_closure
-
-        closure = supertype_record_closure(nodes, edges, with_depth=True)
-    dim = symbol_dim(symbols)
-    joined, used, _ = joined_mentions(mentions, symbols, strategy, buckets,
-                                      dim=dim)
-    call_edges, inferred_nodes, s1 = link_calls(mentions, symbols, used,
-                                                buckets, closure=closure,
-                                                nodes=nodes, edges=edges,
-                                                dim=dim, prejoined=joined)
-    ref_edges, ref_inferred, s2 = link_refs(mentions, symbols, used, buckets,
-                                            dim=dim, prejoined=joined,
-                                            closure=closure)
-    inferred_nodes = inferred_nodes.unionByName(ref_inferred)
-    linked = call_edges.unionByName(ref_edges)
-    if closure is not None:
-        from cpg_spark.operators.hierarchy import overrides_edges
-
-        ov = overrides_edges(nodes, edges, symbols,
-                             closure=closure.select("descendant", "ancestor"))
-        local_calls = edges.select("subj", "pred", "obj", "props", "doc_id")
-        linked = linked.unionByName(
-            override_dispatch(local_calls.unionByName(
-                call_edges.select("subj", "pred", "obj", "props", "doc_id")),
-                ov))
-    return linked, inferred_nodes, {
-        "calls": s1, "refs": s2,
-    }
-
-
 def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
                   edges: DataFrame, strategy: str | None = None,
-                  buckets: int = 16, infer_records: bool = False,
-                  jdk_hierarchy: bool | None = None):
-    """One output frame (row_kind edge|node) carrying linked edges,
-    OVERRIDES edges and inferred nodes — materializing a SINGLE table lets
-    Catalyst reuse the name-join exchanges across the edge and
-    inferred-node branches instead of executing the join per output.
+                  buckets: int = 16, infer_records: bool = False):
+    """The linking stage: one output frame (row_kind edge|node) carrying
+    linked edges, OVERRIDES edges and inferred nodes — materializing a
+    SINGLE table lets Catalyst reuse the name-join exchanges across the
+    edge and inferred-node branches instead of executing the join per
+    output (:func:`split_linked` separates them again).
+    ``strategy`` forces ``"broadcast"`` or ``"salted"`` for the name
+    join; None sizes the symbol dimension and picks.
     ``infer_records`` additionally mints inferred RecordDeclarations for
     member accesses on unknown records (InferenceConfiguration.inferRecords,
     off by default like the reference — cpg_spark/operators/infer.py).
-    ``jdk_hierarchy`` extends unresolved record supertypes with the static
-    JDK ancestry (JavaExternalTypeHierarchyResolver — a default pass in the
-    reference, so ON by default; disable with CPG_SPARK_JDK_HIERARCHY=0).
+    Unresolved record supertypes that name a JDK type pull in the static
+    JDK ancestry (JavaExternalTypeHierarchyResolver, a default pass in
+    the reference); the trigger set comes from the probe job the closure
+    needs anyway, so a corpus without one pays nothing for it.
     Returns (combined, stats)."""
-    import os as _os
-
+    from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
+                                                        probe_supertypes)
     from cpg_spark.operators.hierarchy import (overrides_edges,
                                                supertype_record_closure)
 
-    if jdk_hierarchy is None:
-        jdk_hierarchy = _os.environ.get("CPG_SPARK_JDK_HIERARCHY", "1") == "1"
-    jdk_nodes = jdk_edges = None
-    if jdk_hierarchy:
-        from cpg_spark.operators.external_hierarchy import \
-            external_jdk_hierarchy
-
-        jdk_nodes, jdk_edges = external_jdk_hierarchy(nodes, edges)
+    any_resolved, triggers = probe_supertypes(nodes, edges)
+    jdk = external_jdk_hierarchy(nodes.sparkSession, triggers)
+    if jdk is not None:
         # the closure below must see the implicit JDK records/edges so
         # `class A extends ArrayList` closes over the JDK chain
+        jdk_nodes, jdk_edges = jdk
         nodes = nodes.unionByName(jdk_nodes)
         edges = edges.unionByName(jdk_edges)
 
     # ONE closure computation (depth-ranked) feeds both the inherited
     # member-call walk and the OVERRIDES join
-    closure = supertype_record_closure(nodes, edges, with_depth=True)
+    closure = supertype_record_closure(
+        nodes, edges, with_depth=True,
+        nonempty=any_resolved or jdk is not None)
 
     dim = symbol_dim(symbols)
+    dim_rows = None
     if strategy is None:
         # ONE sizing job over the shared dimension (both joins use it)
-        from cpg_spark.operators.joins import BROADCAST_MAX_ROWS
-
-        n_dim = bounded_dim_count(dim)
-        strategy = "broadcast" if n_dim <= BROADCAST_MAX_ROWS else "salted"
-    joined, used, _ = joined_mentions(mentions, symbols, strategy, buckets,
-                                      dim=dim)
-    call_edges, inferred_nodes, s1 = link_calls(mentions, symbols,
-                                                used, buckets,
-                                                closure=closure,
-                                                nodes=nodes, edges=edges,
-                                                dim=dim, prejoined=joined)
-    ref_edges, ref_inferred, s2 = link_refs(mentions, symbols, used, buckets,
-                                            dim=dim, prejoined=joined,
-                                            closure=closure)
+        dim_rows = bounded_dim_count(dim)
+        strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
+    joined = joined_mentions(mentions, dim, strategy, buckets)
+    call_edges, inferred_nodes = link_calls(mentions, joined, dim, closure,
+                                            nodes, edges)
+    ref_edges, ref_inferred = link_refs(mentions, joined, dim, closure)
     inferred_nodes = inferred_nodes.unionByName(ref_inferred)
     ov = overrides_edges(nodes, edges, symbols,
                          closure=closure.select("descendant", "ancestor"))
@@ -1183,7 +1048,7 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
         .withColumn("row_kind", F.lit("edge"))
     )
     nodes_part = inferred_nodes.withColumn("row_kind", F.lit("node"))
-    if jdk_edges is not None:
+    if jdk is not None:
         all_edges = all_edges.unionByName(
             jdk_edges.withColumn("row_kind", F.lit("edge")))
         nodes_part = nodes_part.unionByName(
@@ -1197,7 +1062,7 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
         nodes_part = nodes_part.unionByName(
             rec_nodes.withColumn("row_kind", F.lit("node")))
     combined = all_edges.unionByName(nodes_part, allowMissingColumns=True)
-    return combined, {"calls": s1, "refs": s2}
+    return combined, {"strategy": strategy, "dim_rows": dim_rows}
 
 
 def split_linked(combined: DataFrame):

@@ -234,29 +234,24 @@ class _SpanParseCache:
     colocate, so a span duplicated N times parses at most 2×salt-K times
     total instead of N."""
 
-    def __init__(self, cap: int = 256, expr_eog: bool = False,
-                 py_parity: bool = False):
+    def __init__(self, cap: int = 256, py_parity: bool = False):
         from collections import OrderedDict
 
         self._d: "OrderedDict" = OrderedDict()
         self._first: set = set()  # sha1 digests of once-seen spans
         self.cap = cap
-        self.expr_eog = expr_eog
         self.py_parity = py_parity
         self.parses = 0
         self.hits = 0
 
     def _parse(self, parser, doc_id, offset, text):
+        from cpg_spark.frontends.eog import expand_expression_eog
+
         g = parser(doc_id, offset, text)
         self.parses += 1
-        if self.expr_eog:
-            # granularity applied BEFORE the relocation template is
-            # built, so cached duplicates relocate expression-level
-            # edges like any others (one flag value per parse_docs call
-            # keeps the cache granularity-homogeneous)
-            from cpg_spark.frontends.eog import expand_expression_eog
-
-            expand_expression_eog(g)
+        # expression-level EOG applied BEFORE the relocation template is
+        # built, so cached duplicates relocate those edges like any others
+        expand_expression_eog(g)
         return g
 
     def rows_for(self, kind: str, text: str, doc_id: str, offset: int):
@@ -297,10 +292,10 @@ _SYMBOL_KINDS = {"code/cpp", "code/java"}
 
 
 def _rows_for_doc(doc_id: str, spans, defines=None,
-                  expr_eog: bool = False,
                   py_parity: bool = False) -> list[dict]:
     # imported lazily so the workers pick up the shipped package
     from cpg_spark.frontends import FRONTENDS
+    from cpg_spark.frontends.eog import expand_expression_eog
 
     rows: list[dict] = []
     if spans is None:
@@ -332,19 +327,15 @@ def _rows_for_doc(doc_id: str, spans, defines=None,
             g = parser(doc_id, int(offset), text, parity_mode=True)
         else:
             g = parser(doc_id, int(offset), text)
-        if expr_eog:
-            # expression-level EOG rewrite — the default since round 4
-            # (EvaluationOrderGraphPass.java:917-951 runs at expression
-            # granularity); statement-level behind expr_eog=False
-            from cpg_spark.frontends.eog import expand_expression_eog
-
-            expand_expression_eog(g)
+        # expression-level EOG rewrite (EvaluationOrderGraphPass.java
+        # :917-951 runs at expression granularity)
+        expand_expression_eog(g)
         rows.extend(_graph_rows(g, doc_id, int(offset)))
     return rows
 
 
 def parse_docs(docs: DataFrame, target_partitions: int | None = None,
-               dedup_spans: bool = False, expr_eog: bool = True,
+               dedup_spans: bool = False,
                py_parity: bool = False) -> DataFrame:
     """docs(doc_id, spans) -> unified parse rows (PARSE_OUT_SCHEMA).
 
@@ -372,10 +363,7 @@ def parse_docs(docs: DataFrame, target_partitions: int | None = None,
     # the content-hash dedup cache would be wrong — bypass it
     if (dedup_spans and not docs.isStreaming
             and "defines" not in docs.columns):
-        # the expr-EOG rewrite composes with relocation: granularity is
-        # applied before the relocation template is built, and one flag
-        # value per call keeps every cache entry homogeneous
-        return _parse_docs_dedup(docs, target_partitions, expr_eog,
+        return _parse_docs_dedup(docs, target_partitions,
                                  py_parity=py_parity)
     if target_partitions and not docs.isStreaming:
         docs = docs.repartition(target_partitions, "doc_id")
@@ -393,7 +381,6 @@ def parse_docs(docs: DataFrame, target_partitions: int | None = None,
             for doc_id, spans, defines in zip(pdf["doc_id"], pdf["spans"],
                                               defs):
                 out.extend(_rows_for_doc(doc_id, spans, defines,
-                                         expr_eog=expr_eog,
                                          py_parity=py_parity))
                 if len(out) >= 65536:
                     frame = pd.DataFrame(out, columns=_COLS, dtype=object)
@@ -410,7 +397,6 @@ def parse_docs(docs: DataFrame, target_partitions: int | None = None,
 
 def _parse_docs_dedup(docs: DataFrame,
                       target_partitions: int | None,
-                      expr_eog: bool = False,
                       py_parity: bool = False) -> DataFrame:
     """Content-hash-partitioned span stream -> memoized parse + relocate."""
     spans = docs.select(
@@ -437,7 +423,7 @@ def _parse_docs_dedup(docs: DataFrame,
         )
 
     def run(batches):
-        cache = _SpanParseCache(expr_eog=expr_eog, py_parity=py_parity)
+        cache = _SpanParseCache(py_parity=py_parity)
         out: list[dict] = []
         for pdf in batches:
             for doc_id, kind, text, offset, prev in zip(

@@ -222,11 +222,7 @@ def _parse(spark, ctx):
     # the span-sequence invariant is enforced inside the parse UDF
     # (ValueError fails the stage) — no separate validation scan.
     # dedup_spans: identical spans across the corpus parse once (S3).
-    # CPG_SPARK_STMT_EOG=1 drops to statement-level EOG — the bench's
-    # A/B lever for attributing the expression-EOG cost (round 5,
-    # VERDICT item 3); expression level is the production default
-    raw = parse_docs(ctx["docs"], dedup_spans=True,
-                     expr_eog=os.environ.get("CPG_SPARK_STMT_EOG") != "1")
+    raw = parse_docs(ctx["docs"], dedup_spans=True)
     return {"cpg_raw": raw}, {}, {"cpg_raw": ["row_kind"]}
 
 
@@ -362,7 +358,7 @@ def run_cpg_pipeline(spark: SparkSession, docs: DataFrame, workdir: str,
     ctx: dict[str, DataFrame] = {"docs": docs}
     for step in CPG_STAGES:
         group = step if isinstance(step, list) else [step]
-        if len(group) == 1 or os.environ.get("CPG_SPARK_SEQUENTIAL") == "1":
+        if len(group) == 1:
             for stage in group:
                 ctx.update(p.run_stage(stage, ctx, resume=resume))
             continue

@@ -500,13 +500,14 @@ def q_ann_ivf_topk(spark, sf_dir):
 def q_cpg_triples(spark, sf_dir):
     """Flagship: parse + link the deterministic fixture corpus, return the
     (subj, pred, obj) triple view."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import fixture_docs
 
     raw = parse_docs(fixture_docs(spark)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     return (
         edges.select("subj", "pred", "obj")
         .unionByName(linked.select("subj", "pred", "obj"))
@@ -812,7 +813,7 @@ def q_cpg_inherited_calls(spark, sf_dir):
     resolves to the inherited Base.run two levels up; ``x.shared()``
     resolves to the NEAREST ancestor override (Mid.shared, not Base.shared);
     an unknown method still falls through to one inferred node."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -826,7 +827,8 @@ def q_cpg_inherited_calls(spark, sf_dir):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     calls = linked.filter(F.col("pred") == "CALLS")
     return (
         calls.join(mentions.select(F.col("mention_id").alias("subj"),
@@ -849,7 +851,7 @@ def q_cpg_calls_cpp(spark, sf_dir):
     target and the override), unknown-signature inference, and the
     unknown-class gate (no row for unknownTarget)."""
     from cpg_spark.fixtures_cfamily import CPP_FIXTURES
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -860,8 +862,8 @@ def q_cpg_calls_cpp(spark, sf_dir):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     all_calls = (
         edges.select("subj", "pred", "obj")
         .unionByName(linked.select("subj", "pred", "obj"))
@@ -893,7 +895,7 @@ def q_cpg_super_calls(spark, sf_dir):
     InterfaceN.super.target() invokes that interface's default method;
     super.field resolves to SuperClass.field."""
     from cpg_spark.fixtures_cfamily import JAVA_FIXTURES
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -907,7 +909,8 @@ def q_cpg_super_calls(spark, sf_dir):
          for d, t in rows], schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, _, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     targets = nodes.select(F.col("node_id").alias("obj"),
                            F.col("name").alias("target"),
                            F.col("doc_id").alias("target_doc"))
@@ -944,7 +947,7 @@ def q_cpg_fnptr_calls(spark, sf_dir):
     (CallResolver.java:1402-1434): ``f = helper; f(3)`` resolves to
     helper; a conditionally-assigned pointer resolves to BOTH reachable
     functions (the reference's multi-invokes)."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -954,7 +957,8 @@ def q_cpg_fnptr_calls(spark, sf_dir):
                      "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     calls = linked.filter(F.col("pred") == "CALLS")
     return (
         calls.join(mentions.select(F.col("mention_id").alias("subj"),
@@ -990,7 +994,7 @@ def q_cpg_fnptr_sigs(spark, sf_dir):
     bare calls ``p()`` both invoke it, and a pointer to an unknown
     ``&fun`` yields one inferred declaration per signature.  Output:
     (site, arity, callee, inferred) — a fixed golden table."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -1000,8 +1004,8 @@ def q_cpg_fnptr_sigs(spark, sf_dir):
                      "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     targets = (
         nodes.select("node_id", F.col("name").alias("callee"),
                      F.lit(False).alias("inferred"))
@@ -1079,7 +1083,7 @@ def q_cpg_static_imports(spark, sf_dir):
     by signature, the static-field read binds A.staticField, and the
     non-static ``nonStatic()`` must NOT resolve into A — it yields an
     inferred node.  Output: (kind, site, callee, inferred) fixed table."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -1092,8 +1096,8 @@ def q_cpg_static_imports(spark, sf_dir):
                      "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     targets = (
         nodes.select("node_id", F.col("name").alias("callee"),
                      F.col("label").alias("t_label"),
@@ -1289,13 +1293,14 @@ def q_cpg_overload_calls(spark, sf_dir):
 def q_cpg_crossdoc_calls(spark, sf_dir):
     """Cross-document CALLS resolution over the generated corpus: callers
     in mod docs, callees in hub docs (broadcast symbol-table join path)."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import generated_docs
 
     raw = parse_docs(generated_docs(spark, 120, n_hubs=4)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, _, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     calls = linked.filter(F.col("pred") == "CALLS")
     return (
         calls.join(
@@ -1678,7 +1683,7 @@ def q_cpg_eog_expr(spark, sf_dir):
         [{"doc_id": "java/EOG/0001",
           "spans": [{"kind": "code/java", "text": JAVA_FIXTURES["EOG"],
                      "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs, expr_eog=True))
+    nodes, edges, _, _ = split_parse_output(parse_docs(docs))
     nd = nodes.select(
         "node_id", F.col("label"), F.col("name"),
         F.coalesce(F.col("loc.start_line"), F.lit(-1)).alias("line"))
@@ -1953,7 +1958,8 @@ def q_cpg_jdk_hierarchy(spark, sf_dir):
     RuntimeException`` closes over Exception/Throwable/Object; the
     HashMap diamond (AbstractMap + Map interfaces) keeps minimal depths;
     in-source inheritance (Child extends Base) is untouched."""
-    from cpg_spark.operators.external_hierarchy import external_jdk_hierarchy
+    from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
+                                                        probe_supertypes)
     from cpg_spark.operators.hierarchy import supertype_record_closure
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
@@ -1964,7 +1970,8 @@ def q_cpg_jdk_hierarchy(spark, sf_dir):
                      "media_ref": None, "offset": 0}]}],
         schema=DOCS_SCHEMA)
     nodes, edges, _, _ = split_parse_output(parse_docs(docs))
-    jn, je = external_jdk_hierarchy(nodes, edges)
+    _, triggers = probe_supertypes(nodes, edges)
+    jn, je = external_jdk_hierarchy(spark, triggers)
     closure = supertype_record_closure(
         nodes.unionByName(jn), edges.unionByName(je), with_depth=True)
     return closure.select("descendant", "ancestor",
@@ -2103,7 +2110,7 @@ def q_cpg_includes(spark, sf_dir):
     inferred fallback (testDefinitionsAndDeclaration +
     testIncludeBlacklist/Whitelist/BothLists)."""
     from cpg_spark.operators.includes import load_includes, loaded_includes
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
 
     docs = _include_docs(spark)
@@ -2125,8 +2132,8 @@ def q_cpg_includes(spark, sf_dir):
 
     raw = parse_docs(load_includes(docs)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols,
-                                   nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     inc = nodes.filter(F.col("doc_id") == "res/include.cpp")
     facts = (
         inc.filter(F.col("label") == "RecordDeclaration")
@@ -2154,7 +2161,7 @@ def q_cpg_namespaces(spark, sf_dir):
     declaration), nested ``A { B { } }`` and header-form ``A::B`` share
     one FQN module, and ``using namespace A;`` grants unqualified
     visibility."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -2176,8 +2183,8 @@ def q_cpg_namespaces(spark, sf_dir):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols,
-                                   nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     calls = (
         linked.filter(F.col("pred") == "CALLS")
         .join(mentions.select(F.col("mention_id").alias("subj"),
@@ -2844,9 +2851,7 @@ def q_cpg_incremental(spark, sf_dir):
     # resolved-filter path is pinned by tests/test_incremental_link.py
     # (running a full batch-1 link here would triple the golden's cost
     # for no additional pinned fact)
-    # python corpus: the JDK external-hierarchy branch contributes
-    # nothing here, and disabling it drops several plan-compile rounds
-    combined, _ = incremental_link(raw1, raw2, jdk_hierarchy=False)
+    combined, _ = incremental_link(raw1, raw2)
     d_edges = combined.filter(F.col("row_kind") == "edge").select(
         "subj", "pred", "obj", "doc_id")
     n2 = split_parse_output(raw2)[0]

@@ -210,10 +210,13 @@ def execute_cypher(query: str, nodes: DataFrame, edges: DataFrame) -> DataFrame:
         if "const" in w:
             return F.lit(bool(w["const"]))
         if w["var"] in edge_vars:
-            # relationship property through the edge props map; numeric
-            # literals compare against the stringified value
+            # relationship property through the edge props map (string
+            # values); a numeric literal compares numerically, so
+            # `r.index < 10` does not sort "2" after "10"
             col = F.col(f"{w['var']}__props")[w["prop"]]
-            lit = str(_literal(w["val"]))
+            lit = _literal(w["val"])
+            if not isinstance(lit, str):
+                col = col.cast("double")
         elif w["var"] in vars_seen:
             col = _prop_col(f"{w['var']}__", w["prop"])
             lit = _literal(w["val"])

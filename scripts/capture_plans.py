@@ -38,7 +38,8 @@ def trim(plan: str, max_lines: int = 60) -> str:
 
 def main() -> None:
     import __spark_entry__ as em
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import (joined_mentions, link_combined,
+                                          split_linked, symbol_dim)
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import fixture_docs
 
@@ -118,7 +119,9 @@ def main() -> None:
     # the CPG linking join over the parsed fixture corpus
     raw = parse_docs(fixture_docs(spark)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, strategy="broadcast")
+    combined, _ = link_combined(mentions, symbols, nodes, edges,
+                                strategy="broadcast")
+    linked, _ = split_linked(combined)
     sections.append(
         "## cpg_link_calls (broadcast path)\n\n"
         "mentions x symbols name join — expect BroadcastHashJoin (symbol "
@@ -129,8 +132,7 @@ def main() -> None:
     # the shared visibility-keyed linking join (join key = (name, visible
     # module), NOT name-only + post-filter: 49.8M -> 73k intermediate
     # rows at 24k docs)
-    from cpg_spark.operators.link import joined_mentions
-    jm, _used, _ = joined_mentions(mentions, symbols, strategy="broadcast")
+    jm = joined_mentions(mentions, symbol_dim(symbols), "broadcast")
     sections.append(
         "## joined_mentions (visibility-keyed candidate join)\n\n"
         "expect equi-join keys (name = d_name) AND (_vis = d_module) — "

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from cpg_spark.session import build_session
 from cpg_spark.synth import generated_docs
 from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.pipeline import run_cpg_pipeline
 
 cpus = {cpus}
@@ -67,7 +67,8 @@ def compute_job():
         nodes, edges, mentions, symbols = split_parse_output(raw)
         # strategy=None: the engine sizes the dim and picks for itself
         # (salted above BROADCAST_MAX_ROWS) — measure what users get
-        linked, inferred, _ = link_all(mentions, symbols)
+        combined, _ = link_combined(mentions, symbols, nodes, edges)
+        linked, _ = split_linked(combined)
         return edges.select("subj", "pred", "obj").unionByName(
             linked.select("subj", "pred", "obj")).groupBy("pred").count().count()
     finally:

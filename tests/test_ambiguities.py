@@ -17,7 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -110,8 +110,8 @@ def test_function_call_or_type_cast(spark):
     assert casts == {"int", "S*"}  # s_t_p resolves through the chain
     # the two fnptr invocations are calls and resolve to foo through the
     # backward DFG walk (CallResolver.java:1402-1434)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     callees = {
         r["callee"] for r in linked.filter(F.col("pred") == "CALLS")
         .join(nodes.select(F.col("node_id").alias("obj"),

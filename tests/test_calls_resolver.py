@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.fixtures_cfamily import CPP_FIXTURES, JAVA_FIXTURES
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -33,8 +33,8 @@ def _run(spark, rows):
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     all_edges = edges.select("subj", "pred", "obj").unionByName(
         linked.select("subj", "pred", "obj"))
     nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
@@ -218,8 +218,8 @@ def test_inherited_field_member_ref(spark):
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
     men = {r["mention_id"]: r.asDict(recursive=True)
            for r in mentions.collect()}
@@ -277,8 +277,8 @@ def test_super_field_ref(spark, super_calls):
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
     men = {r["mention_id"]: r.asDict(recursive=True)
            for r in mentions.collect()}
@@ -327,7 +327,7 @@ def test_fix328_super_field_write_binds_inherited_field(spark):
     (JavaLanguageFrontendTest fix-328 leg)."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -343,8 +343,8 @@ def test_fix328_super_field_write_binds_inherited_field(spark):
           "text": animal, "media_ref": None, "offset": 0}]}],
         schema=DOCS_SCHEMA)
     nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     n = nodes.select("node_id", "label", "name", "doc_id")
     hits = (
         linked.filter(F.col("pred") == "REFERS_TO")

@@ -403,3 +403,19 @@ def test_cpp_conversion_operators():
              if n["label"] == "MethodDeclaration"}
     assert {"operator bool", "operator int",
             "operator const char*"} <= names
+
+
+def test_ctor_mem_initializer_args_get_unique_ids():
+    """Every argument of one member initializer is its own node:
+    `v(x, y, z)` must not parse y and z at the same path (a node-id
+    collision that materialize would silently dedup away)."""
+    from cpg_spark.frontends.cfamily_frontend import parse_cpp_document
+
+    src = ("struct P {\n  int v;\n"
+           "  P(int x, int y, int z) : v(x, y, z) { }\n};\n")
+    g = parse_cpp_document("cpp/minit/0001", 0, src, "minit")
+    ids = [n["node_id"] for n in g.nodes]
+    assert len(ids) == len(set(ids))
+    refs = [n["name"] for n in g.nodes
+            if n["label"] == "DeclaredReferenceExpression"]
+    assert sorted(refs) == ["x", "y", "z"]

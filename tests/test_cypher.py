@@ -179,3 +179,26 @@ def test_edge_variable_in_where(graph):
         " WHERE e.index = 0 RETURN p",
         nodes, edges).count()
     assert 0 < first_only <= all_rows
+
+
+def test_edge_property_orders_numerically(spark):
+    """Edge props are a string map; a numeric literal must compare
+    numerically — as strings "2" sorts after "10" and `< 10` missed it."""
+    nodes = spark.createDataFrame(
+        [(1, "CallExpression", "f"), (2, "Literal", "a"), (3, "Literal", "b")],
+        "node_id long, label string, name string")
+    edges = spark.createDataFrame(
+        [(1, "ARGUMENTS", 2, {"index": "2"}, "d"),
+         (1, "ARGUMENTS", 3, {"index": "12"}, "d")],
+        "subj long, pred string, obj long, props map<string,string>, "
+        "doc_id string")
+    rows = execute_cypher(
+        "MATCH (c:CallExpression)-[r:ARGUMENTS]->(a)"
+        " WHERE r.index < 10 RETURN a.name",
+        nodes, edges).collect()
+    assert [r["a_name"] for r in rows] == ["a"]
+    rows = execute_cypher(
+        "MATCH (c:CallExpression)-[r:ARGUMENTS]->(a)"
+        " WHERE r.index >= 10 RETURN a.name",
+        nodes, edges).collect()
+    assert [r["a_name"] for r in rows] == ["b"]

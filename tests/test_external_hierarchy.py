@@ -10,7 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.external_hierarchy import external_jdk_hierarchy
+from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
+                                                    probe_supertypes)
 from cpg_spark.operators.hierarchy import supertype_record_closure
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
@@ -33,8 +34,11 @@ def graph(spark):
                      "media_ref": None, "offset": 0}]}],
         schema=DOCS_SCHEMA)
     nodes, edges, _, _ = split_parse_output(parse_docs(docs))
-    jn, je = external_jdk_hierarchy(nodes, edges)
-    return nodes, edges, jn.persist(), je.persist()
+    any_resolved, triggers = probe_supertypes(nodes, edges)
+    # Child extends Base resolves in source; Base is no trigger
+    assert any_resolved and triggers == ["HashMap", "RuntimeException"]
+    jn, je = external_jdk_hierarchy(spark, triggers)
+    return nodes, edges, jn, je
 
 
 def test_implicit_jdk_records(graph):
@@ -89,3 +93,35 @@ def test_link_combined_carries_jdk_rows(spark, graph):
     names = {r["name"] for r in inferred_nodes.filter(
         F.col("label") == "RecordDeclaration").collect()}
     assert "Throwable" in names and "Map" in names
+
+
+def test_no_trigger_adds_nothing(spark):
+    """A corpus whose supertypes all resolve in source (or name no JDK
+    type) triggers nothing: no implicit rows reach the link output."""
+    from cpg_spark.operators.link import link_combined, split_linked
+
+    docs = spark.createDataFrame(
+        [{"doc_id": "java/nojdk/0001",
+          "spans": [{"kind": "code/java",
+                     "text": "class Base { }\nclass Child extends Base { }\n"
+                             "class Odd extends Unknown { }\n",
+                     "media_ref": None, "offset": 0}]}],
+        schema=DOCS_SCHEMA)
+    nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
+    assert probe_supertypes(nodes, edges) == (True, [])
+    assert external_jdk_hierarchy(spark, []) is None
+    combined, _ = link_combined(mentions, symbols, nodes, edges,
+                                strategy="broadcast")
+    _, inferred_nodes = split_linked(combined)
+    assert inferred_nodes.filter(F.col("props")["origin"] == "jdk").count() == 0
+
+
+def test_root_only_trigger_reaches_no_edge(spark):
+    """A trigger with no JDK supertypes of its own (a bare interface)
+    yields no link, so nothing materializes for it."""
+    assert external_jdk_hierarchy(spark, ["Runnable"]) is None
+    jn, je = external_jdk_hierarchy(spark, ["Thread"])
+    assert {r["name"] for r in jn.filter(
+        F.col("label") == "RecordDeclaration").collect()} == {
+        "Thread", "Object", "Runnable"}
+    assert je.count() == 2

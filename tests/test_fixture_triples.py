@@ -148,7 +148,7 @@ EXPECTED_STRUCTURE = {
 
 @pytest.fixture(scope="module")
 def fact_sets(spark):
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import fixture_docs
 
@@ -156,7 +156,8 @@ def fact_sets(spark):
     # reference's own emitted facts, which include its gap matrix
     raw = parse_docs(fixture_docs(spark), py_parity=True).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     all_nodes = nodes.unionByName(inferred).dropDuplicates(["node_id"])
     all_edges = edges.select("subj", "pred", "obj", "doc_id").unionByName(
         linked.select("subj", "pred", "obj", "doc_id")

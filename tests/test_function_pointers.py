@@ -25,7 +25,7 @@ from collections import defaultdict, deque
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -178,8 +178,8 @@ def _analyze(spark, doc_id, src):
         [(doc_id, [("code/cpp", src, None, 1)])], DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     node_rows = {r["node_id"]: r.asDict(recursive=True)
                  for r in nodes.collect()}
     for r in inferred.collect():

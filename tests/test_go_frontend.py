@@ -190,13 +190,14 @@ def test_cross_doc_call_and_construct(spark):
     them (reference runs them as one module)."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.synth import fixture_docs
 
     raw = parse_docs(fixture_docs(spark, langs=("go",))).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     resolved = (
         linked.filter(F.col("pred") == "CALLS")
         .join(nodes.select(F.col("node_id").alias("obj"),

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from cpg_spark.operators.includes import (include_directives,
                                           load_includes, loaded_includes)
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -84,8 +84,8 @@ def graph(spark):
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
     nodes, edges = nodes.persist(), edges.persist()
-    linked, inferred, _ = link_all(mentions, symbols,
-                                   nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     yield nodes, edges, linked.persist(), inferred
     raw.unpersist()
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 from cpg_spark.streaming.incremental import incremental_link
@@ -67,7 +67,8 @@ def test_cross_batch_call_resolves_without_full_relink(spark):
     n1, e1, m1, s1 = split_parse_output(raw1)
 
     # batch-1 link: shared_util resolves, later_fn gets an inferred target
-    linked1, inferred1, _ = link_all(m1, s1, nodes=n1, edges=e1)
+    combined1, _ = link_combined(m1, s1, n1, e1)
+    linked1, inferred1 = split_linked(combined1)
     resolved1 = (
         linked1.filter(F.col("pred") == "CALLS")
         .join(inferred1.select(F.col("node_id").alias("obj")),
@@ -101,7 +102,8 @@ def test_cross_batch_call_resolves_without_full_relink(spark):
     # (content-hash ids -> identical edges)
     raw_all = raw1.unionByName(raw2)
     na, ea, ma, sa = split_parse_output(raw_all)
-    linked_full, inferred_full, _ = link_all(ma, sa, nodes=na, edges=ea)
+    combined_full, _ = link_combined(ma, sa, na, ea)
+    linked_full, inferred_full = split_linked(combined_full)
     full = _call_facts(linked_full, na.unionByName(inferred_full))
     assert delta <= full
     raw1.unpersist()

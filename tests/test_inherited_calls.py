@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all, link_calls
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.queries import INHERIT_BASE_SRC, INHERIT_CHILD_SRC
 from cpg_spark.schemas import DOCS_SCHEMA
@@ -31,13 +31,10 @@ def parsed(spark):
     raw.unpersist()
 
 
-def _resolutions(parsed, with_closure: bool):
+def _resolutions(parsed):
     nodes, edges, mentions, symbols = parsed
-    if with_closure:
-        linked, inferred, _ = link_all(mentions, symbols,
-                                       nodes=nodes, edges=edges)
-    else:
-        linked, inferred, _ = link_all(mentions, symbols)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     calls = linked.filter(F.col("pred") == "CALLS")
     rows = (
         calls.join(mentions.select(F.col("mention_id").alias("subj"),
@@ -51,52 +48,44 @@ def _resolutions(parsed, with_closure: bool):
 
 
 def test_inherited_call_resolves_to_ancestor(spark, parsed):
-    res = _resolutions(parsed, with_closure=True)
+    res = _resolutions(parsed)
     # run() is declared only on Base, two levels above Leaf
     assert res["run"] == "Base"
 
 
 def test_nearest_override_wins(spark, parsed):
-    res = _resolutions(parsed, with_closure=True)
+    res = _resolutions(parsed)
     # shared() exists on Base AND Mid: the nearer ancestor must win
     assert res["shared"] == "Mid"
 
 
 def test_unknown_method_still_inferred(spark, parsed):
     nodes, edges, mentions, symbols = parsed
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     inf = {r["name"] for r in inferred.select("name").collect()}
     assert inf == {"mystery"}
-    res = _resolutions(parsed, with_closure=True)
+    res = _resolutions(parsed)
     assert res["mystery"] is None  # CALLS edge points at the inferred node
-
-
-def test_without_closure_misresolves(spark, parsed):
-    """Documents the round-1 wrong-answer class: no closure -> inherited
-    calls fabricate inferred nodes for methods that exist."""
-    res = _resolutions(parsed, with_closure=False)
-    assert res["run"] is None and res["shared"] is None
 
 
 def test_exact_record_match_outranks_inherited(spark, parsed):
     """A method defined on the record itself must win over any ancestor's
     method of the same name (depth 0 < depth k)."""
     nodes, edges, mentions, symbols = parsed
-    from cpg_spark.operators.hierarchy import supertype_record_closure
-
-    closure = supertype_record_closure(nodes, edges, with_depth=True)
     # leaf_only resolves same-doc at parse time; exercise the link path by
     # re-resolving a synthetic mention against Leaf
     # scope_path inside baselib so the same-module visibility arm applies
-    m = mentions.sparkSession.createDataFrame(
-        [("m1", "member_call", "shared", "Mid", "baselib.probe",
-          "py/baselib/0001", 0, 0, None, None)],
-        "mention_id string, kind string, name string, base_type string, "
-        "scope_path string, doc_id string, n_args int, n_kwargs int, "
-        "arg_ids array<string>, arg_types array<string>")
-    edges_out, _, _ = link_calls(m, symbols, closure=closure)
+    row = dict.fromkeys(mentions.columns)
+    row.update(mention_id=1, kind="member_call", name="shared",
+               base_type="Mid", scope_path="baselib.probe",
+               doc_id="py/baselib/0001", n_args=0, n_kwargs=0)
+    m = spark.createDataFrame([row], mentions.schema)
+    combined, _ = link_combined(m, symbols, nodes, edges)
+    edges_out, _ = split_linked(combined)
     got = (
-        edges_out.filter(F.col("pred") == "CALLS")
+        edges_out.filter((F.col("pred") == "CALLS")
+                         & (F.col("subj") == 1))
         .join(symbols.select(F.col("decl_id").alias("obj"),
                              F.col("record").alias("rec")), "obj")
         .select("rec").collect()

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -39,8 +39,8 @@ def test_local_module_outranks_prefix_named_import(spark):
         _doc("py/mod149/0001",
              "import mod1\n\ndef main():\n    return f()\n"),
     ])
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     callee_mods = {
         r["callee_mod"]
         for r in linked.filter(F.col("pred") == "CALLS")
@@ -61,8 +61,8 @@ def test_unimported_prefix_module_is_invisible(spark):
         _doc("py/mod1/0001", "def g():\n    return 1\n"),
         _doc("py/mod149/0001", "def main():\n    return g()\n"),
     ])
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     resolved = (
         linked.filter(F.col("pred") == "CALLS")
         .join(symbols.select(F.col("decl_id").alias("obj"),
@@ -96,8 +96,8 @@ def test_fnptr_terminal_wrong_arity_still_infers(spark):
         _doc("cpp/liba/0001", FNPTR_LIB, kind="code/cpp"),
         _doc("cpp/main/0001", FNPTR_USE, kind="code/cpp"),
     ])
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     call_ids = [r["mention_id"] for r in mentions.filter(
         (F.col("kind") == "call") & (F.col("name") == "two_param")
     ).collect()]

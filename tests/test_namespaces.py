@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -23,8 +23,8 @@ def _docs(spark, rows):
 def _link(spark, rows):
     nodes, edges, mentions, symbols = split_parse_output(
         parse_docs(_docs(spark, rows)))
-    linked, inferred, _ = link_all(mentions, symbols,
-                                   nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     return nodes, linked, inferred
 
 

@@ -115,7 +115,7 @@ def test_crossdoc_overload_link(spark):
     carries two overloads — the exact-type one must win."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -132,7 +132,8 @@ def test_crossdoc_overload_link(spark):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     got = (
         linked.filter(F.col("pred") == "CALLS")
         .join(mentions.select(F.col("mention_id").alias("subj"),
@@ -154,7 +155,7 @@ def test_crossdoc_wrong_arity_inferred(spark):
     wrong-arity declaration."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -170,7 +171,8 @@ def test_crossdoc_wrong_arity_inferred(spark):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     inf = {r["name"] for r in inferred.select("name").collect()}
     assert inf == {"only2"}
     raw.unpersist()

@@ -8,7 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.pipeline import run_cpg_pipeline, triples
 from cpg_spark.synth import (
@@ -58,10 +58,17 @@ def test_parse_matches_pure_python(spark, parsed):
     assert got_nodes == len(expected.nodes)
 
 
+def _link(parsed, strategy=None):
+    combined, _ = link_combined(parsed["mentions"], parsed["symbols"],
+                                parsed["nodes"], parsed["edges"],
+                                strategy=strategy)
+    return split_linked(combined)
+
+
 def test_cross_document_call_linking(spark, parsed):
     """Generated modules call util_helper_<h> defined in hub docs — the
     linking join must connect them across documents."""
-    edges, inferred, stats = link_all(parsed["mentions"], parsed["symbols"])
+    edges, _ = _link(parsed)
     edges = edges.cache()
     nodes = parsed["nodes"]
     calls = (
@@ -82,7 +89,7 @@ def test_cross_document_call_linking(spark, parsed):
 
 
 def test_inferred_functions_deterministic(spark, parsed):
-    _, inferred, _ = link_all(parsed["mentions"], parsed["symbols"])
+    _, inferred = _link(parsed)
     pdf = inferred.select("node_id", "name").toPandas()
     # print is unresolvable -> inferred, and all same-name/arity misses
     # collapse into one deterministic node
@@ -91,8 +98,8 @@ def test_inferred_functions_deterministic(spark, parsed):
 
 
 def test_salted_equals_broadcast(spark, parsed):
-    e1, i1, _ = link_all(parsed["mentions"], parsed["symbols"], strategy="broadcast")
-    e2, i2, _ = link_all(parsed["mentions"], parsed["symbols"], strategy="salted")
+    e1, _ = _link(parsed, strategy="broadcast")
+    e2, _ = _link(parsed, strategy="salted")
     a = {tuple(r) for r in e1.select("subj", "pred", "obj").collect()}
     b = {tuple(r) for r in e2.select("subj", "pred", "obj").collect()}
     assert a == b and len(a) > 0

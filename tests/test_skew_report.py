@@ -79,13 +79,15 @@ def test_hot_key_salting_matches_blanket_and_plain(spark):
 def test_link_all_hot_key_salted_equals_broadcast(spark):
     """End-to-end: forced-salted link (which now auto-measures hot keys)
     must emit exactly the broadcast plan's edges on a Zipf corpus."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
 
     raw = parse_docs(generated_docs(spark, 120, n_hubs=3)).persist()
     try:
-        _, _, mentions, symbols = split_parse_output(raw)
-        eb, ib, _ = link_all(mentions, symbols, strategy="broadcast")
-        es, is_, _ = link_all(mentions, symbols, strategy="salted")
+        nodes, edges, mentions, symbols = split_parse_output(raw)
+        eb, ib = split_linked(link_combined(
+            mentions, symbols, nodes, edges, strategy="broadcast")[0])
+        es, is_ = split_linked(link_combined(
+            mentions, symbols, nodes, edges, strategy="salted")[0])
         key = ["subj", "pred", "obj"]
         assert sorted(map(tuple, eb.select(key).collect())) == \
             sorted(map(tuple, es.select(key).collect()))

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -31,7 +31,8 @@ def _parsed(spark):
 
 def test_star_import_expands_to_all_module_symbols(spark):
     nodes, edges, mentions, symbols = _parsed(spark)
-    linked, _, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, _ = split_linked(combined)
     star = mentions.filter((F.col("kind") == "import")
                            & (F.col("name") == "*"))
     star_ids = [r["mention_id"] for r in star.collect()]
@@ -48,7 +49,8 @@ def test_star_import_expands_to_all_module_symbols(spark):
 
 def test_name_through_star_import_resolves(spark):
     nodes, edges, mentions, symbols = _parsed(spark)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     calls = (
         linked.filter(F.col("pred") == "CALLS")
         .join(symbols.select(F.col("decl_id").alias("obj"),

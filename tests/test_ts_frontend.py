@@ -157,6 +157,24 @@ function render(users: any) {
                for m in g.mentions)
 
 
+def test_parenthesized_receiver_is_not_arrow_params():
+    """`(expr).method(cb => ...)`: the parenthesized receiver is an
+    expression, not an arrow parameter list — the lookahead must not scan
+    through the member call to the callback's `=>`."""
+    g = parse_ts_document("ts/m/0006", 0, "const r = (a).map(x => x + 1);\n")
+    assert _labels(g)["LambdaExpression"] == 1
+    assert any(m["kind"] == "member_call" and m["name"] == "map"
+               for m in g.mentions)
+    g2 = parse_ts_document("ts/m/0007", 0,
+                           "const r = (p || q).filter(y => y);\n")
+    assert _labels(g2)["ProblemDeclaration"] == 0
+    assert _labels(g2)["LambdaExpression"] == 1
+    # a real return annotation still makes an arrow
+    g3 = parse_ts_document("ts/m/0008", 0,
+                           "const f = (x): Map<string, number> => m;\n")
+    assert _labels(g3)["LambdaExpression"] == 1
+
+
 def test_parse_docs_dispatch(spark):
     docs = spark.createDataFrame(
         [{"doc_id": "ts/mod/0001",
@@ -171,7 +189,7 @@ def test_parse_docs_dispatch(spark):
 def test_crossdoc_ts_import_link(spark):
     """import { helper } from "./util" + helper() -> cross-document CALLS
     through the link stage (same path the py/go frontends use)."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
 
     util = 'export function helper(x: number): number { return x; }\n'
     main = 'import { helper } from "./util";\nconst r = helper(1);\n'
@@ -185,8 +203,8 @@ def test_crossdoc_ts_import_link(spark):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes,
-                                   edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     calls = linked.filter(F.col("pred") == "CALLS")
     # the helper() call in ts/main must land on the declaration in ts/util
     hit = (calls.join(nodes.selectExpr("node_id as obj",

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_all
+from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.operators.type_prop import dataflow_type_edges, propagate_types
 from cpg_spark.queries import FNPTR_SRC, TYPE_PROP_SRC
@@ -68,7 +68,8 @@ def test_dataflow_edges_reuse_type_node_ids(spark):
 
 def test_fnptr_call_resolves_and_no_inferred(spark):
     nodes, edges, mentions, symbols = _parse(spark, "py/fp9/0001", FNPTR_SRC)
-    linked, inferred, _ = link_all(mentions, symbols, nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     callees = {
         r["callee"] for r in linked.filter(F.col("pred") == "CALLS")
         .join(nodes.select(F.col("node_id").alias("obj"),

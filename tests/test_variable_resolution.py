@@ -202,7 +202,7 @@ def test_java_catch_params(java_b):
 @pytest.fixture(scope="module")
 def crossdoc(spark):
     """scope_variables.cpp + external_class.h as two documents, linked."""
-    from cpg_spark.operators.link import link_all
+    from cpg_spark.operators.link import link_combined, split_linked
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -218,8 +218,8 @@ def crossdoc(spark):
         schema=DOCS_SCHEMA)
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    linked, inferred, _ = link_all(mentions, symbols,
-                                   nodes=nodes, edges=edges)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    linked, inferred = split_linked(combined)
     rows = (
         linked.filter(F.col("pred") == "REFERS_TO")
         .join(mentions.select(F.col("mention_id").alias("subj"),
