@@ -588,13 +588,14 @@ class TsFrontend(Emitter):
     def _scan_past_return_type(self, k: int) -> int:
         """Arrow lookahead: token index of the `=>` following an optional
         ``: Type`` return annotation starting at ``k`` (the token after
-        the parameter list's `)`).  Only a `:` opens an annotation, and
-        its scan stops at `(` and `.`, so a member-call chain
-        ``(a).map(x => ...)`` or a ternary ``c ? (a) : b.f(x => ...)``
-        never reaches the callback's `=>`.  Angle depth is tracked so
-        generic return types scan past their commas —
-        ``(x): Map<string, number> => ...`` is an arrow.  Terminators
-        only count at depth 0."""
+        the parameter list's `)`).  Only a `:` opens an annotation, so a
+        member-call chain ``(a).map(x => ...)`` never reaches the
+        callback's `=>`; the scan stops at `(`, so a ternary
+        ``c ? (a) : b.f(x => ...)`` does not either, while a qualified
+        return type ``(): JSX.Element => ...`` still scans past its `.`.
+        Angle depth is tracked so generic return types scan past their
+        commas — ``(x): Map<string, number> => ...`` is an arrow.
+        Terminators only count at depth 0."""
         n = len(self.toks)
         if k >= n or self.toks[k].text != ":":
             return k
@@ -606,7 +607,7 @@ class TsFrontend(Emitter):
                 ang += 1
             elif tx in (">", ">>", ">>>") and ang:
                 ang = max(0, ang - len(tx))
-            elif ang == 0 and tx in ("=>", ";", ")", "{", ",", "(", "."):
+            elif ang == 0 and tx in ("=>", ";", ")", "{", ",", "("):
                 break
             k += 1
         return k

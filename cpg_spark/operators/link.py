@@ -1019,8 +1019,7 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
     # ONE closure computation (depth-ranked) feeds both the inherited
     # member-call walk and the OVERRIDES join
     closure = supertype_record_closure(
-        nodes, edges, with_depth=True,
-        nonempty=any_resolved or jdk is not None)
+        nodes, edges, any_resolved or jdk is not None, with_depth=True)
 
     dim = symbol_dim(symbols)
     dim_rows = None

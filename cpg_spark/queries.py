@@ -1972,8 +1972,9 @@ def q_cpg_jdk_hierarchy(spark, sf_dir):
     nodes, edges, _, _ = split_parse_output(parse_docs(docs))
     _, triggers = probe_supertypes(nodes, edges)
     jn, je = external_jdk_hierarchy(spark, triggers)
+    # the implicit JDK records resolve the triggering supertypes
     closure = supertype_record_closure(
-        nodes.unionByName(jn), edges.unionByName(je), with_depth=True)
+        nodes.unionByName(jn), edges.unionByName(je), True, with_depth=True)
     return closure.select("descendant", "ancestor",
                           F.col("depth").cast("int").alias("depth")) \
         .orderBy("descendant", "ancestor")

@@ -212,11 +212,12 @@ def execute_cypher(query: str, nodes: DataFrame, edges: DataFrame) -> DataFrame:
         if w["var"] in edge_vars:
             # relationship property through the edge props map (string
             # values); a numeric literal compares numerically, so
-            # `r.index < 10` does not sort "2" after "10"
+            # `r.index < 10` does not sort "2" after "10", and a
+            # non-numeric value casts to null and does not match
             col = F.col(f"{w['var']}__props")[w["prop"]]
             lit = _literal(w["val"])
             if not isinstance(lit, str):
-                col = col.cast("double")
+                col = col.try_cast("double")
         elif w["var"] in vars_seen:
             col = _prop_col(f"{w['var']}__", w["prop"])
             lit = _literal(w["val"])

@@ -183,13 +183,15 @@ def test_edge_variable_in_where(graph):
 
 def test_edge_property_orders_numerically(spark):
     """Edge props are a string map; a numeric literal must compare
-    numerically — as strings "2" sorts after "10" and `< 10` missed it."""
+    numerically — as strings "2" sorts after "10" and `< 10` missed it.
+    A value that is not a number simply does not match."""
     nodes = spark.createDataFrame(
         [(1, "CallExpression", "f"), (2, "Literal", "a"), (3, "Literal", "b")],
         "node_id long, label string, name string")
     edges = spark.createDataFrame(
         [(1, "ARGUMENTS", 2, {"index": "2"}, "d"),
-         (1, "ARGUMENTS", 3, {"index": "12"}, "d")],
+         (1, "ARGUMENTS", 3, {"index": "12"}, "d"),
+         (1, "ARGUMENTS", 3, {"index": "true"}, "d")],
         "subj long, pred string, obj long, props map<string,string>, "
         "doc_id string")
     rows = execute_cypher(
@@ -202,3 +204,10 @@ def test_edge_property_orders_numerically(spark):
         " WHERE r.index >= 10 RETURN a.name",
         nodes, edges).collect()
     assert [r["a_name"] for r in rows] == ["b"]
+    # a non-numeric value does not match and does not fail the query
+    # (a plain cast raises under ANSI mode)
+    rows = execute_cypher(
+        "MATCH (c:CallExpression)-[r:ARGUMENTS]->(a)"
+        " WHERE r.index = 1 RETURN a.name",
+        nodes, edges).collect()
+    assert rows == []

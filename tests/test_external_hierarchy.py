@@ -61,7 +61,7 @@ def test_implicit_nodes_are_marked(graph):
 def test_closure_reaches_object_through_jdk_chain(spark, graph):
     nodes, edges, jn, je = graph
     closure = supertype_record_closure(
-        nodes.unionByName(jn), edges.unionByName(je), with_depth=True)
+        nodes.unionByName(jn), edges.unionByName(je), True, with_depth=True)
     got = {(r["descendant"], r["ancestor"]): r["depth"]
            for r in closure.collect()}
     # the corpus record closes over the full JDK chain, minimal depths

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cpg_spark.operators.external_hierarchy import probe_supertypes
 from cpg_spark.operators.hierarchy import (
     overrides_edges,
     supertype_record_closure,
@@ -48,7 +49,8 @@ def parsed(spark):
 def test_supertype_closure_transitive(spark, parsed):
     nodes, edges, _, symbols = parsed
     closure = {(r["descendant"], r["ancestor"])
-               for r in supertype_record_closure(nodes, edges).collect()}
+               for r in supertype_record_closure(
+                   nodes, edges, probe_supertypes(nodes, edges)[0]).collect()}
     assert ("Mid", "Base") in closure
     assert ("Leaf", "Mid") in closure
     assert ("Leaf", "Base") in closure  # transitive

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cpg_spark.operators.external_hierarchy import probe_supertypes
 from cpg_spark.operators.hierarchy import supertype_record_closure
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
@@ -313,7 +314,8 @@ def test_demo_hierarchy_corpus(spark):
     assert {"Interface", "Implementor1", "Super", "Sub", "Root",
             "Level2"} <= recs
     # the multistep chain closes: Level2 -> Level1 -> Level0 -> Root
-    closure = supertype_record_closure(nodes, edges)
+    any_resolved, _ = probe_supertypes(nodes, edges)
+    closure = supertype_record_closure(nodes, edges, any_resolved)
     anc = {r["ancestor"] for r in closure.filter(
         F.col("descendant") == "Level2").collect()}
     assert {"Level1", "Level0", "Root"} <= anc

@@ -173,6 +173,17 @@ def test_parenthesized_receiver_is_not_arrow_params():
     g3 = parse_ts_document("ts/m/0008", 0,
                            "const f = (x): Map<string, number> => m;\n")
     assert _labels(g3)["LambdaExpression"] == 1
+    # qualified return types scan past their `.`
+    g4 = parse_ts_document("ts/m/0009", 0,
+                           "const f = (): JSX.Element => x;\n")
+    assert _labels(g4)["LambdaExpression"] == 1
+    g5 = parse_ts_document("ts/m/0010", 0, "const g = (x): ns.T => x;\n")
+    assert _labels(g5)["LambdaExpression"] == 1
+    # ternary: the `(` of the member call ends the scan
+    g6 = parse_ts_document("ts/m/0011", 0,
+                           "const r = c ? (a) : b.f(x => x);\n")
+    assert _labels(g6)["LambdaExpression"] == 1
+    assert _labels(g6)["ProblemDeclaration"] == 0
 
 
 def test_parse_docs_dispatch(spark):
