@@ -144,23 +144,26 @@ def symbol_dim(symbols: DataFrame) -> DataFrame:
     )
 
 
+_FNPTR_MAX_HOPS = 4
+
+
 def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
-                              edges: DataFrame, max_hops: int = 4,
-                              mentions: DataFrame | None = None):
+                              edges: DataFrame,
+                              mentions: DataFrame) -> DataFrame:
     """Resolve calls through function-valued variables by walking the DFG
     backward (CallResolver.java:1402-1434 ``handleFunctionPointerCall``):
     an unresolved call ``f(...)`` whose name matches a same-document
     variable/field follows that variable's inbound DFG chain (assignment
     -> reference -> declaration) up to a Function/MethodDeclaration.
 
-    Spark shape: the seed set is only the *missed* mentions (tiny after
-    the name join), so each hop is a small join against the DFG edge
-    table; the frontier stops at function nodes (walking past a function
-    would follow its return-value edges).  Returns (hits, terminals):
-    ``hits`` are (mention_id, fn_id) pairs — ALL functions reachable,
-    matching the reference's multi-invokes for conditionally-assigned
-    pointers; ``terminals`` are (mention_id, t_name, t_nargs) rows where
-    the chain ended at an UNRESOLVED signature-hinted function reference
+    The seed set is only the *missed* mentions (tiny after the name
+    join); the frontier stops at function nodes (walking past a function
+    would follow its return-value edges).  Returns ONE materialized frame
+    of (kind, mention_id, fn_id, t_name, t_nargs) rows: ``kind="hit"``
+    rows carry (mention_id, fn_id) — ALL functions reachable, matching
+    the reference's multi-invokes for conditionally-assigned pointers;
+    ``kind="term"`` rows carry (mention_id, t_name, t_nargs) where the
+    chain ended at an UNRESOLVED signature-hinted function reference
     (``&fun`` with no local declaration — FunctionPointerTest's inferred
     leg), for the caller to resolve cross-document or infer.
 
@@ -215,24 +218,19 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                       F.lit(0).cast("long").alias("b"),
                       F.lit(None).cast("string").alias("s"),
                       F.lit(None).cast("int").alias("n")),
+        # signature-hinted refs (``&fun``): where a chain may end unresolved
+        mentions.filter(F.col("kind").isin("ref", "member_ref")
+                        & F.col("n_args").isNotNull())
+        .join(seed_docs, "doc_id", "left_semi")
+        .select("doc_id", F.lit("hint").alias("rk"),
+                F.col("mention_id").alias("a"),
+                F.lit(0).cast("long").alias("b"),
+                F.col("name").alias("s"),
+                F.col("n_args").cast("int").alias("n")),
     ]
-    if mentions is not None:
-        hint_refs = (
-            mentions.filter(F.col("kind").isin("ref", "member_ref")
-                            & F.col("n_args").isNotNull())
-            .join(seed_docs, "doc_id", "left_semi")
-            .select("doc_id", F.lit("hint").alias("rk"),
-                    F.col("mention_id").alias("a"),
-                    F.lit(0).cast("long").alias("b"),
-                    F.col("name").alias("s"),
-                    F.col("n_args").cast("int").alias("n"))
-        )
-        parts.append(hint_refs)
     stream = parts[0]
     for p in parts[1:]:
         stream = stream.unionByName(p)
-
-    hops = max_hops
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         rk = pdf["rk"]
@@ -251,7 +249,7 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                             pdf.loc[rk == "seed", "b"]):
             frontier = {cur}
             visited = {cur}
-            for _ in range(hops):
+            for _ in range(_FNPTR_MAX_HOPS):
                 step = set()
                 for c in frontier:
                     for p in dfg.get(c, ()):
@@ -286,22 +284,16 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
             out, columns=["kind", "mention_id", "fn_id", "t_name",
                           "t_nargs"], dtype=object)
 
-    # LAZY on purpose: the walk folds into the stage's single final
-    # job (no probe/checkpoint jobs — measured 16 s of flat, parallelism-
-    # independent driver+job latency at 96k docs); its consumers within
-    # one physical plan share the group-shuffle via exchange reuse, and
-    # a corpus with no fnptr mentions contributes an empty-input subtree
-    # that costs nothing at run time
-    walked = stream.groupBy("doc_id").applyInPandas(
+    # EAGER, once: the walk has four consumers (CALLS, the terminal
+    # join, two miss anti-joins), and Spark reuses no exchange above a
+    # localCheckpoint scan (``missed``), so a lazy walk would re-run its
+    # Python stage per consumer (5 runs per link write on the lifecycle
+    # bench).  Output is at most one row per (seed, target).
+    return stream.groupBy("doc_id").applyInPandas(
         walk,
         schema=("kind string, mention_id bigint, fn_id bigint, "
                 "t_name string, t_nargs int"),
-    )
-    hits = walked.filter(F.col("kind") == "hit").select("mention_id",
-                                                        "fn_id")
-    terms = walked.filter(F.col("kind") == "term").select(
-        "mention_id", "t_name", "t_nargs")
-    return hits, terms
+    ).localCheckpoint(eager=True)
 
 
 def joined_mentions(mentions: DataFrame, dim: DataFrame, strategy: str,
@@ -600,10 +592,10 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     # inferred FunctionDeclaration
     # (deterministic id on (name, arity) so identical misses across 10^12
     # docs collapse to ONE canonical inferred node)
-    # materialize the miss set ONCE: the fnptr walk, the terminal join,
-    # the inference path and two anti-joins all consume it — lazily each
-    # re-runs the whole name-join + overload-ladder subtree (measured
-    # 54 s vs 18 s for the stage at 96k docs)
+    # materialize the miss set: the fnptr walk's input, the terminal
+    # join, the fnptr join and the inference path all consume it —
+    # lazily each re-runs the whole name-join + overload-ladder subtree
+    # (measured 54 s vs 18 s for the stage at 96k docs)
     missed = calls.join(winners.select("mention_id"), "mention_id",
                         "left_anti").localCheckpoint(eager=True)
     # keep the pre-anti-join miss set: a conditionally-assigned pointer
@@ -611,8 +603,10 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     # terminal leg must still be processed even though the resolved hit
     # removes the mention from `missed`
     fp_base = missed
-    fp, fp_terms = _function_pointer_targets(missed, nodes, edges,
-                                             mentions=mentions)
+    walked = _function_pointer_targets(missed, nodes, edges, mentions)
+    fp = walked.filter(F.col("kind") == "hit").select("mention_id", "fn_id")
+    fp_terms = walked.filter(F.col("kind") == "term").select(
+        "mention_id", "t_name", "t_nargs")
     fp_calls = (
         fp.select(
             F.col("mention_id").alias("subj"),
@@ -636,8 +630,7 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     # materialize (FunctionPointerTest noParamUnknown: every call
     # through any pointer to &fun invokes one inferred fn).  Built
     # lazily: with no terminals the window + dim join run over an empty
-    # sliver inside the same final job (an isEmpty probe here used to
-    # force the whole walk eagerly)
+    # sliver inside the same final job
     tm = fp_terms.join(
         fp_base.select("mention_id", "doc_id"), "mention_id")
     t_dim = dim.filter(F.col("d_kind").isin("function", "method")).select(

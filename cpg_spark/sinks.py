@@ -40,6 +40,14 @@ def scratch_table(df: DataFrame, name: str = "scratch",
     exactly the stage-table shape ``pipeline.py`` commits — minus the
     lineage/commit bookkeeping.
 
+    Exchange reuse: in Spark 4.1.2 identical exchanges in one plan are
+    reused only above file scans, never above a ``localCheckpoint``,
+    ``persist()`` or RDD-``checkpoint`` scan (a three-way self-join of
+    one grouped aggregate shows 2 ``Reused`` nodes above parquet, 0
+    above each of the others).  So every consumer of a lazy subtree over
+    such a scan re-executes it; materialize the subtree itself when it
+    is expensive.
+
     ``base`` defaults to ``$CPG_SPARK_SCRATCH_DIR``, else
     ``$CPG_SPARK_LOCAL_DIR`` (the shuffle scratch, tmpfs in scaling
     runs), else the system temp dir.  The caller owns cleanup of the

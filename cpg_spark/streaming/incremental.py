@@ -135,11 +135,13 @@ def incremental_link(
         # from a PRIOR link plan — without the cut, every one of
         # link_combined's ~20 downstream actions would re-execute that
         # entire plan as lineage (measured: thousands of stages on a
-        # 5-doc corpus); the id set itself is mention-count-bounded
-        resolved = (resolved_mention_ids.select("mention_id").distinct()
-                    .localCheckpoint(eager=True))
-        backward = backward.join(F.broadcast(resolved),
-                                 "mention_id", "left_anti")
+        # 5-doc corpus).  Semi-joined to the gained-name mentions first,
+        # so the cut is sized by the delta, not by the committed corpus
+        resolved = (resolved_mention_ids.select("mention_id")
+                    .join(backward.select("mention_id"), "mention_id",
+                          "left_semi")
+                    .distinct().localCheckpoint(eager=True))
+        backward = backward.join(resolved, "mention_id", "left_anti")
     delta_mentions = mentions_n.unionByName(backward)
     return link_combined(delta_mentions, symbols_all, nodes_all, edges_all,
                          **link_kwargs)

@@ -313,3 +313,19 @@ def test_cpp(spark):
                                          FUNC_PTR_CPP)
     _check_calls(node_rows, edge_rows, men, CPP_SITES)
     _check_unused(node_rows, edge_rows, None)
+
+
+def test_walk_is_materialized_inside_link(spark):
+    """The backward-DFG walk runs once, inside ``link_combined``: the
+    returned plan only reads its materialized output.  A lazy walk would
+    leave its Python group stage in the plan, where each of its four
+    consumers re-runs it (no exchange is reused above the checkpointed
+    miss set it reads)."""
+    docs = spark.createDataFrame(
+        [("c/fnptr/0001", [("code/cpp", FUNC_PTR_C, None, 1)])], DOCS_SCHEMA)
+    raw = parse_docs(docs).persist()
+    nodes, edges, mentions, symbols = split_parse_output(raw)
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
+    plan = combined._jdf.queryExecution().executedPlan().toString()
+    raw.unpersist()
+    assert "FlatMapGroupsInPandas" not in plan

@@ -15,6 +15,8 @@ comparing against the full batch link of the union corpus.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.link import link_combined, split_linked
@@ -106,5 +108,50 @@ def test_cross_batch_call_resolves_without_full_relink(spark):
     linked_full, inferred_full = split_linked(combined_full)
     full = _call_facts(linked_full, na.unionByName(inferred_full))
     assert delta <= full
+    raw1.unpersist()
+    raw2.unpersist()
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The text of every BroadcastExchange subtree in a plan string."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1:]:
+            if depth(nxt) <= depth(line):
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def test_committed_resolved_ids_are_not_broadcast(spark):
+    """The caller's resolved-id set is sized by the committed corpus; the
+    delta link semi-joins it to the gained-name mentions and forces no
+    broadcast of it.  With size-based broadcasting off, no
+    BroadcastExchange may hold the id set (its checkpointed one-column
+    ``mention_id`` scan)."""
+    raw1 = parse_docs(_docs(spark, BATCH1)).persist()
+    raw2 = parse_docs(_docs(spark, BATCH2)).persist()
+    committed_ids = split_parse_output(raw1)[2].select("mention_id")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        combined, _ = incremental_link(raw1, raw2,
+                                       resolved_mention_ids=committed_ids)
+        plan = combined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    ids_scan = re.compile(r"Scan ExistingRDD\[mention_id#\d+L?\]")
+    assert ids_scan.search(plan), "resolved-id scan not found in the plan"
+    assert not [b for b in _broadcast_subtrees(plan) if ids_scan.search(b)]
     raw1.unpersist()
     raw2.unpersist()
