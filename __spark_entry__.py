@@ -35,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = docs_from_plain_documents(spark, "/root/testdata/sf0.001")
     # the span-sequence invariant is enforced inside the parse UDF itself
-    # (parse.py _rows_for_doc raises on violation) — no separate scan here
+    # (parse.py parse_docs raises on violation) — no separate scan here
     # scratch-materialize: the linking joins consult the parse output
     # several times (dim sizing + two join cascades); a scratch parquet
     # round-trip beats .persist() 3.2x at scale (sinks.scratch_table

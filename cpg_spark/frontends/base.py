@@ -48,6 +48,24 @@ class DocGraph:
         self.id_log.update(other.id_log)
 
 
+def problem_graph(doc_id: str, span_offset: int, message,
+                  problem: str) -> DocGraph:
+    """The graph of a span its frontend cannot parse: one
+    ProblemDeclaration node (the reference's error placeholder) instead
+    of a failed batch.  Its id is logged like any location-derived id, so
+    a relocated duplicate of the span gets its own id."""
+    nid = _hash_node_id(doc_id, span_offset, "problem", "ProblemDeclaration")
+    out = DocGraph(id_log={nid: ("problem", "ProblemDeclaration")})
+    out.nodes.append({
+        "node_id": nid, "label": "ProblemDeclaration",
+        "name": str(message)[:200], "code": None,
+        "doc_id": doc_id, "span_offset": span_offset, "loc": None,
+        "is_inferred": False, "is_implicit": False, "argument_index": None,
+        "props": {"problem": problem},
+    })
+    return out
+
+
 class Scope:
     """One lexical scope frame (module / record / function).
 

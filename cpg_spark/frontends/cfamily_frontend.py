@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter, Scope
+from cpg_spark.frontends.base import DocGraph, Emitter, Scope, problem_graph
 from cpg_spark.frontends.eog import build_eog
 from cpg_spark.frontends.typeparser import normalize_type
 
@@ -4864,7 +4864,10 @@ class CFamilyFrontend(Emitter):
         ARGUMENTS/AST edges at a new implicit CastExpression wrapping the
         original argument (CallResolver.java:847-907 applyImplicitCast)."""
         aid = a["arg_id"]
-        cid = self.node(f"icast.{call_id}.{a['index']}", "CastExpression",
+        # keyed on the call's AST path, not its doc-hashed id, so a
+        # relocated duplicate span re-hashes to the id a direct parse mints
+        call_path = self.out.id_log[call_id][0]
+        cid = self.node(f"icast.{call_path}.{a['index']}", "CastExpression",
                         tname, None, is_implicit=True)
         for e in self.out.edges:
             if e["subj"] == call_id and e["obj"] == aid and (
@@ -4978,12 +4981,14 @@ class CFamilyFrontend(Emitter):
             self._wrap_cast(call_id, a, want)
         self._dfg_args_to_params(args, fn["decl_id"])
         self.edge(call_id, "TEMPLATE_INSTANTIATION", tpl["tid"])
+        call_path = self.out.id_log[call_id][0]  # see _wrap_cast
         for tp in tpl["params"]:
             src, (vkind, val) = inst["sources"][tp["pi"]]
             props = {"index": tp["pi"], "instantiation": src}
             if vkind == "type":
-                te = self.node(f"targ.{call_id}.{tp['pi']}", "TypeExpression",
-                               val, None, is_implicit=(src != "EXPLICIT"))
+                te = self.node(f"targ.{call_path}.{tp['pi']}",
+                               "TypeExpression", val, None,
+                               is_implicit=(src != "EXPLICIT"))
                 self.eval_type(te, val)
                 self.edge(call_id, "TEMPLATE_PARAMETERS", te, props)
             else:
@@ -5463,15 +5468,7 @@ def _parse_cfamily(doc_id, span_offset, source, module_name, dialect,
     try:
         return fe.run()
     except (CFamilyParseError, RecursionError, IndexError) as e:
-        out = DocGraph()
-        out.nodes.append({
-            "node_id": fe.make_id("problem", "ProblemDeclaration"),
-            "label": "ProblemDeclaration", "name": str(e)[:200], "code": None,
-            "doc_id": doc_id, "span_offset": span_offset, "loc": None,
-            "is_inferred": False, "is_implicit": False,
-            "argument_index": None, "props": {"problem": "CFamilyParseError"},
-        })
-        return out
+        return problem_graph(doc_id, span_offset, e, "CFamilyParseError")
 
 
 def parse_java_document(doc_id: str, span_offset: int, source: str,

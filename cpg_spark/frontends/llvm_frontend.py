@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import re
 
-from .base import DocGraph, Emitter
+from .base import DocGraph, Emitter, problem_graph
 
 # opcode -> C-style operator spelling (reference ExpressionHandler maps LLVM
 # opcodes onto BinaryOperator operator codes the same way)
@@ -756,12 +756,4 @@ def parse_llvm_document(doc_id: str, span_offset: int, source: str,
     try:
         return fe.run()
     except (LlvmParseError, RecursionError, IndexError) as e:
-        out = DocGraph()
-        out.nodes.append({
-            "node_id": fe.em.make_id("problem", "ProblemDeclaration"),
-            "label": "ProblemDeclaration", "name": str(e)[:200], "code": None,
-            "doc_id": doc_id, "span_offset": span_offset, "loc": None,
-            "is_inferred": False, "is_implicit": False, "argument_index": None,
-            "props": {"problem": "LlvmParseError"},
-        })
-        return out
+        return problem_graph(doc_id, span_offset, e, "LlvmParseError")

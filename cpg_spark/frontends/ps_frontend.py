@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter
+from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
 from cpg_spark.frontends.eog import build_eog
 
 # control keywords, lower-cased (PowerShell keywords are case-insensitive)
@@ -1231,12 +1231,4 @@ def parse_ps_document(doc_id: str, span_offset: int, source: str,
     try:
         return fe.run()
     except (PsParseError, RecursionError, IndexError) as e:
-        out = DocGraph()
-        out.nodes.append({
-            "node_id": fe.make_id("problem", "ProblemDeclaration"),
-            "label": "ProblemDeclaration", "name": str(e)[:200], "code": None,
-            "doc_id": doc_id, "span_offset": span_offset, "loc": None,
-            "is_inferred": False, "is_implicit": False, "argument_index": None,
-            "props": {"problem": "PsParseError"},
-        })
-        return out
+        return problem_graph(doc_id, span_offset, e, "PsParseError")

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import ast
 
-from cpg_spark.frontends.base import DocGraph, Emitter
+from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
 from cpg_spark.frontends.eog import build_eog
 from cpg_spark.ids import inferred_id
 
@@ -1590,12 +1590,4 @@ def parse_python_document(doc_id: str, span_offset: int, source: str,
     try:
         return fe.run()
     except SyntaxError as e:
-        out = DocGraph()
-        out.nodes.append({
-            "node_id": fe.make_id("problem", "ProblemDeclaration"),
-            "label": "ProblemDeclaration", "name": str(e)[:200], "code": None,
-            "doc_id": doc_id, "span_offset": span_offset, "loc": None,
-            "is_inferred": False, "is_implicit": False, "argument_index": None,
-            "props": {"problem": "SyntaxError"},
-        })
-        return out
+        return problem_graph(doc_id, span_offset, e, "SyntaxError")

@@ -21,8 +21,8 @@ include loading is a JOIN, not file I/O —
 Each spliced span keeps the header's own text verbatim, so node
 locations parsed out of it are header-exact (testCodeAndRegionInInclude:
 the constructor's region cites include.h line 16, not a line of the
-preprocessed includer) — and the pre-parse span dedup (S3,
-``parse_docs(dedup_spans=True)``) still collapses the header to ONE
+preprocessed includer) — and the pre-parse span dedup (S3, every
+``parse_docs`` call) still collapses the header to ONE
 parse however many documents splice it: at corpus scale a hot header
 spliced into 10^6 includers costs one frontend invocation plus
 relocation, which is the whole point of keeping spans separate instead

@@ -2,11 +2,10 @@
 
 Spark shape of the reference frontend stage (``TranslationManager.kt
 runFrontends :146-245`` + per-file parallel parse ``:247-299``): every
-partition parses its documents in one Arrow batch stream via
-``mapInPandas`` — per-document work (AST build, EOG, provisional DFG, local
-scope resolution) never shuffles (SURVEY.md §7.0).  Frontend dispatch by
-span ``kind`` replaces dispatch by file extension
-(``TranslationManager.kt:373-405``).
+partition parses its spans in one Arrow batch stream via ``mapInPandas``
+— per-span work (AST build, EOG, provisional DFG, local scope resolution)
+never shuffles (SURVEY.md §7.0).  Frontend dispatch by span ``kind``
+replaces dispatch by file extension (``TranslationManager.kt:373-405``).
 
 The stage emits ONE unified row stream (``row_kind`` discriminator) so the
 expensive parse runs exactly once; the four logical tables (nodes, edges,
@@ -98,8 +97,8 @@ _SENT_DOC = f"{_SENT_MOD}/{_SENT_MOD}/0000"
 
 
 def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
-    """PARSE_OUT_SCHEMA row dicts for one span's DocGraph (shared by the
-    direct and the relocated paths)."""
+    """PARSE_OUT_SCHEMA row dicts for one span's DocGraph (a direct parse,
+    or the relocatable template of a duplicate)."""
     rows: list[dict] = []
     for n in g.nodes:
         loc = n.get("loc")
@@ -221,8 +220,15 @@ def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
     return out
 
 
+# frontends that consume preprocessor symbol maps (compdb -D defines /
+# TranslationConfiguration.symbols — CXXSymbolConfigurationTest)
+_SYMBOL_KINDS = {"code/cpp", "code/java"}
+
+
 class _SpanParseCache:
-    """Per-partition two-sighting parse cache, keyed by (kind, sha1(text)).
+    """Per-partition two-sighting parse cache, keyed by (kind, sha1(text),
+    defines) — the defines only for the symbol-map frontends, so identical
+    text under different ``-D`` maps never shares a template.
 
     First sighting of a span parses DIRECTLY under its real (doc, offset)
     — an all-distinct corpus pays zero dedup overhead beyond the content
@@ -238,7 +244,7 @@ class _SpanParseCache:
         from collections import OrderedDict
 
         self._d: "OrderedDict" = OrderedDict()
-        self._first: set = set()  # sha1 digests of once-seen spans
+        self._first: set = set()  # keys of once-seen spans
         self.cap = cap
         self.py_parity = py_parity
         self.parses = 0
@@ -249,24 +255,34 @@ class _SpanParseCache:
 
         g = parser(doc_id, offset, text)
         self.parses += 1
-        # expression-level EOG applied BEFORE the relocation template is
-        # built, so cached duplicates relocate those edges like any others
+        # expression-level EOG rewrite (EvaluationOrderGraphPass.java
+        # :917-951 runs at expression granularity), applied BEFORE the
+        # relocation template is built, so cached duplicates relocate
+        # those edges like any others
         expand_expression_eog(g)
         return g
 
-    def rows_for(self, kind: str, text: str, doc_id: str, offset: int):
+    def rows_for(self, kind: str, text: str, doc_id: str, offset: int,
+                 defines=None):
         import hashlib
+        from functools import partial
 
+        # imported lazily so the workers pick up the shipped package
         from cpg_spark.frontends import FRONTENDS
 
         parser = FRONTENDS.get(kind)
         if parser is None:
-            return None
-        if self.py_parity and kind == "code/python":
-            from functools import partial
-
+            return []  # non-code spans pass through untouched
+        symbols = None
+        if defines and kind in _SYMBOL_KINDS:
+            symbols = dict(defines)
+            parser = partial(parser, symbols=symbols)
+        elif self.py_parity and kind == "code/python":
+            # reference-parity gap matrix for the P/R oracle gates
+            # (python_frontend parity_mode docstring)
             parser = partial(parser, parity_mode=True)
-        key = (kind, hashlib.sha1(text.encode("utf-8", "replace")).digest())
+        key = (kind, hashlib.sha1(text.encode("utf-8", "replace")).digest(),
+               tuple(sorted(symbols.items())) if symbols else None)
         ent = self._d.get(key)
         if ent is not None:
             self._d.move_to_end(key)
@@ -286,171 +302,86 @@ class _SpanParseCache:
         return _graph_rows(g, doc_id, offset)
 
 
-# frontends that consume preprocessor symbol maps (compdb -D defines /
-# TranslationConfiguration.symbols — CXXSymbolConfigurationTest)
-_SYMBOL_KINDS = {"code/cpp", "code/java"}
+def parse_docs(docs: DataFrame, py_parity: bool = False) -> DataFrame:
+    """docs(doc_id, spans[, defines]) -> unified parse rows
+    (PARSE_OUT_SCHEMA), row-for-row what a plain per-span parse gives.
 
+    The docs explode into a span stream that each partition parses through
+    a :class:`_SpanParseCache` (SURVEY S3, the unity-build dedup of
+    TranslationManager.kt:184-209): duplicates past the second sighting
+    re-key a cached graph instead of parsing — on duplicate-heavy corpora
+    (vendored files, headers, boilerplate) the biggest parse-cost lever.
+    Batch input is repartitioned on the span content so duplicates
+    colocate, at twice the cluster parallelism so the CPU-bound parse
+    fans out (the small docs checkpoint scans as few partitions; span
+    rows are tiny, the shuffle is cheap, the parse is not).  Streaming
+    input parses each micro-batch in place.
 
-def _rows_for_doc(doc_id: str, spans, defines=None,
-                  py_parity: bool = False) -> list[dict]:
-    # imported lazily so the workers pick up the shipped package
-    from cpg_spark.frontends import FRONTENDS
-    from cpg_spark.frontends.eog import expand_expression_eog
-
-    rows: list[dict] = []
-    if spans is None:
-        return rows
-    # span-sequence invariant (BASELINE input_hint): offsets strictly
-    # increasing in array order; enforced in-flight (zero extra jobs —
-    # the former driver-side validation pass cost a full corpus scan)
-    prev = None
-    for span in spans:
-        off = span["offset"] if isinstance(span, dict) else span.offset
-        if prev is not None and off is not None and off <= prev:
-            raise ValueError(
-                f"span-sequence invariant violated in doc {doc_id}: "
-                f"offset {off} after {prev}")
-        if off is not None:
-            prev = off
-    for span in spans:
-        kind = span["kind"] if isinstance(span, dict) else span.kind
-        text = span["text"] if isinstance(span, dict) else span.text
-        offset = span["offset"] if isinstance(span, dict) else span.offset
-        parser = FRONTENDS.get(kind)
-        if parser is None or text is None:
-            continue  # non-code spans pass through untouched
-        if defines and kind in _SYMBOL_KINDS:
-            g = parser(doc_id, int(offset), text, symbols=dict(defines))
-        elif py_parity and kind == "code/python":
-            # reference-parity gap matrix for the P/R oracle gates
-            # (python_frontend parity_mode docstring)
-            g = parser(doc_id, int(offset), text, parity_mode=True)
-        else:
-            g = parser(doc_id, int(offset), text)
-        # expression-level EOG rewrite (EvaluationOrderGraphPass.java
-        # :917-951 runs at expression granularity)
-        expand_expression_eog(g)
-        rows.extend(_graph_rows(g, doc_id, int(offset)))
-    return rows
-
-
-def parse_docs(docs: DataFrame, target_partitions: int | None = None,
-               dedup_spans: bool = False,
-               py_parity: bool = False) -> DataFrame:
-    """docs(doc_id, spans) -> unified parse rows (PARSE_OUT_SCHEMA).
-
-    The docs checkpoint is small on disk, so a naive scan coalesces into
-    a handful of input partitions and the (CPU-bound) parse would run on
-    as few cores; an explicit doc_id-hash repartition to cluster
-    parallelism restores full fan-out — the docs rows are tiny, the
-    shuffle is cheap, the parse is not.
-
-    ``dedup_spans=True`` (SURVEY S3, the unity-build dedup of
-    TranslationManager.kt:184-209): the span stream is repartitioned on
-    ``xxhash64(kind, text)`` so identical spans colocate, each distinct
-    span parses ONCE under a sentinel document, and every occurrence is
-    emitted by re-keying the cached graph (content-hash id relocation) —
-    on duplicate-heavy corpora (vendored files, headers, boilerplate) this
-    is the single biggest parse-cost lever.  Output is row-for-row
-    identical to the direct path."""
-
-    if target_partitions is None:
-        try:
-            target_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-        except Exception:
-            target_partitions = None
-    # per-doc symbol maps make identical span text parse DIFFERENTLY, so
-    # the content-hash dedup cache would be wrong — bypass it
-    if (dedup_spans and not docs.isStreaming
-            and "defines" not in docs.columns):
-        return _parse_docs_dedup(docs, target_partitions,
-                                 py_parity=py_parity)
-    if target_partitions and not docs.isStreaming:
-        docs = docs.repartition(target_partitions, "doc_id")
-
-    def run(batches):
-        # yield in bounded chunks: accumulating a whole 2048-doc input
-        # batch (~700k row dicts) before converting turns linear parse
-        # into superlinear GC churn; ~64k-row frames keep workers flat
-        out: list[dict] = []
-        for pdf in batches:
-            # optional per-doc preprocessor symbols (compdb_docs options
-            # joined in as a `defines` map column); absent for plain docs
-            defs = (pdf["defines"] if "defines" in pdf.columns
-                    else [None] * len(pdf))
-            for doc_id, spans, defines in zip(pdf["doc_id"], pdf["spans"],
-                                              defs):
-                out.extend(_rows_for_doc(doc_id, spans, defines,
-                                         py_parity=py_parity))
-                if len(out) >= 65536:
-                    frame = pd.DataFrame(out, columns=_COLS, dtype=object)
-                    yield frame.where(frame.notna(), None)
-                    out = []
-        if out:
-            # object-dtype frame + where(): missing keys must become None
-            # (not pandas NaN, which breaks Arrow conversion of int cols)
-            frame = pd.DataFrame(out, columns=_COLS, dtype=object)
-            yield frame.where(frame.notna(), None)
-
-    return docs.mapInPandas(run, schema=PARSE_OUT_SCHEMA)
-
-
-def _parse_docs_dedup(docs: DataFrame,
-                      target_partitions: int | None,
-                      py_parity: bool = False) -> DataFrame:
-    """Content-hash-partitioned span stream -> memoized parse + relocate."""
+    An optional ``defines`` map column (compdb ``-D`` symbols,
+    ``sources.compdb.docs_with_defines``) reaches the C++ and Java
+    frontends; ``py_parity=True`` parses Python in the reference-parity
+    mode the P/R oracle gates compare against."""
+    defines = (F.col("defines") if "defines" in docs.columns
+               else F.lit(None).cast("map<string,string>"))
     spans = docs.select(
-        "doc_id",
+        "doc_id", defines.alias("defines"),
         F.explode(F.expr(
             "transform(spans, (s, i) -> struct("
             "s.kind as kind, s.text as text, s.offset as offset, "
             "CASE WHEN i = 0 THEN CAST(NULL AS INT) "
             "ELSE spans[i-1].offset END as prev_offset))"
         )).alias("s"),
-    ).select("doc_id", "s.kind", "s.text", "s.offset", "s.prev_offset")
-    if target_partitions:
+    ).select("doc_id", "defines", "s.kind", "s.text", "s.offset",
+             "s.prev_offset")
+    if not docs.isStreaming:
         # salt the content key: a span duplicated across the whole corpus
         # would otherwise land on ONE core (the classic hot-key skew —
         # measured 4x slower than no dedup on a header-heavy corpus).
         # With salt K each distinct span parses at most K times while its
         # occurrences relocate on K cores — K bounds the redundancy, the
-        # corpus size doesn't.
-        k = 8
+        # corpus size doesn't (K = 8).
         spans = spans.repartition(
-            target_partitions,
+            2 * docs.sparkSession.sparkContext.defaultParallelism,
             F.xxhash64("kind", "text"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(k)),
+            F.pmod(F.xxhash64("doc_id"), F.lit(8)),
         )
 
     def run(batches):
         cache = _SpanParseCache(py_parity=py_parity)
+        # yield in bounded chunks: accumulating a whole input batch
+        # (~700k row dicts) before converting turns linear parse into
+        # superlinear GC churn; ~64k-row frames keep workers flat
         out: list[dict] = []
         for pdf in batches:
-            for doc_id, kind, text, offset, prev in zip(
-                    pdf["doc_id"], pdf["kind"], pdf["text"], pdf["offset"],
-                    pdf["prev_offset"]):
-                # span-sequence invariant, enforced in-flight like the
-                # direct path (adjacent-pair check survives the explode)
-                if (prev is not None and offset is not None
-                        and offset <= prev):
+            for doc_id, defs, kind, text, offset, prev in zip(
+                    pdf["doc_id"], pdf["defines"], pdf["kind"], pdf["text"],
+                    pdf["offset"], pdf["prev_offset"]):
+                # span-sequence invariant (BASELINE input_hint): offsets
+                # strictly increasing in array order, enforced in-flight
+                # on adjacent pairs (zero extra jobs — a driver-side
+                # validation pass would cost a full corpus scan)
+                if pd.notna(prev) and pd.notna(offset) and offset <= prev:
                     raise ValueError(
                         f"span-sequence invariant violated in doc {doc_id}: "
                         f"offset {offset} after {prev}")
-                if text is None or offset is None:
+                if text is None or pd.isna(offset):
                     continue
-                rows = cache.rows_for(kind, str(text), doc_id, int(offset))
-                if rows is None:
-                    continue  # non-code span
-                out.extend(rows)
+                out.extend(cache.rows_for(kind, text, doc_id, int(offset),
+                                          defs))
                 if len(out) >= 65536:
-                    frame = pd.DataFrame(out, columns=_COLS, dtype=object)
-                    yield frame.where(frame.notna(), None)
+                    yield _frame(out)
                     out = []
         if out:
-            frame = pd.DataFrame(out, columns=_COLS, dtype=object)
-            yield frame.where(frame.notna(), None)
+            yield _frame(out)
 
     return spans.mapInPandas(run, schema=PARSE_OUT_SCHEMA)
+
+
+def _frame(rows: list[dict]) -> pd.DataFrame:
+    # object-dtype frame + where(): missing keys must become None (not
+    # pandas NaN, which breaks Arrow conversion of int cols)
+    frame = pd.DataFrame(rows, columns=_COLS, dtype=object)
+    return frame.where(frame.notna(), None)
 
 
 def _props_col():

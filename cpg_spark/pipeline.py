@@ -221,8 +221,7 @@ def _ingest(spark, ctx):
 def _parse(spark, ctx):
     # the span-sequence invariant is enforced inside the parse UDF
     # (ValueError fails the stage) — no separate validation scan.
-    # dedup_spans: identical spans across the corpus parse once (S3).
-    raw = parse_docs(ctx["docs"], dedup_spans=True)
+    raw = parse_docs(ctx["docs"])
     return {"cpg_raw": raw}, {}, {"cpg_raw": ["row_kind"]}
 
 

@@ -2840,12 +2840,12 @@ def q_cpg_incremental(spark, sf_dir):
          "from provider import later_fn\nres = later_fn(3)\n"),
         ("py/other/0001",
          "from util import shared_util\nq = shared_util(1)\n"),
-    ]), target_partitions=2).localCheckpoint(eager=True)
+    ])).coalesce(2).localCheckpoint(eager=True)
     raw2 = parse_docs(docs([
         ("py/newdoc/0001",
          "from util import shared_util\ny = shared_util(5)\n"),
         ("py/provider/0001", "def later_fn(a):\n    return a\n"),
-    ]), target_partitions=2).localCheckpoint(eager=True)
+    ])).coalesce(2).localCheckpoint(eager=True)
     n1 = split_parse_output(raw1)[0]
     # resolved_mention_ids omitted: py/other's name gains no batch-2
     # symbol, so the gained-name semi-join alone excludes it — the

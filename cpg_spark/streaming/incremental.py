@@ -8,7 +8,8 @@ docs table grows continuously; this module is the incremental-scan path:
 * ``readStream`` over the docs directory (file source; on a cluster the
   same code points at an Iceberg table with incremental scan),
 * the SAME ``parse_docs`` mapInPandas operator (vectorized parse is
-  streaming-safe: per-batch, no state),
+  streaming-safe: its span cache lives for one task, no cross-batch
+  state; streaming input skips the content shuffle),
 * ``writeStream`` appending to the cpg_raw table, checkpointed — resume
   after failure reprocesses only unfinished files,
 * ``trigger(availableNow=True)`` drains the backlog and stops, which is

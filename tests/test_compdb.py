@@ -136,3 +136,45 @@ def test_defines_flow_through_parse_docs(spark, compdb):
     refs = nodes.filter((F.col("label") == "DeclaredReferenceExpression")
                         & (F.col("name") == "MAX"))
     assert refs.count() == 0
+
+
+MAX_SRC = "int main() { int a = MAX; return a; }\n"
+
+
+def test_defines_key_the_span_cache(spark):
+    """One C++ span under two -D maps: each map folds its own literal and
+    every doc keeps its own node ids — identical text never shares a
+    cached parse across different defines."""
+    from cpg_spark.operators.parse import (
+        _SpanParseCache, parse_docs, split_parse_output)
+    from cpg_spark.schemas import DOCS_SCHEMA
+
+    maxes = {"cpp/a/0001": "4", "cpp/b/0001": "9",
+             "cpp/c/0001": "4", "cpp/d/0001": "9"}
+    docs = spark.createDataFrame(
+        [{"doc_id": d, "spans": [{"kind": "code/cpp", "text": MAX_SRC,
+                                  "media_ref": None, "offset": 0}]}
+         for d in maxes], DOCS_SCHEMA)
+    defines = spark.createDataFrame(
+        [(d, {"MAX": v}) for d, v in maxes.items()],
+        "doc_id string, defines map<string,string>")
+    nodes, _, _, _ = split_parse_output(
+        parse_docs(docs.join(defines, "doc_id")))
+    lits = {(r["doc_id"], r["name"]) for r in
+            nodes.filter(F.col("label") == "Literal").collect()}
+    assert lits == set(maxes.items())
+    mains = nodes.filter((F.col("label") == "FunctionDeclaration")
+                         & (F.col("name") == "main")).collect()
+    assert sorted(r["doc_id"] for r in mains) == sorted(maxes)
+    assert len({r["node_id"] for r in mains}) == 4
+
+    # one partition's cache sees the maps interleaved: the third round
+    # relocates a template, each from its own map's parse
+    cache = _SpanParseCache()
+    for i in range(3):
+        for v in ("4", "9"):
+            rows = cache.rows_for("code/cpp", MAX_SRC, f"cpp/m{i}{v}/0001",
+                                  0, {"MAX": v})
+            assert {r["name"] for r in rows if r.get("label") == "Literal"} \
+                == {v}
+    assert cache.hits == 2
