@@ -33,9 +33,10 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter, Scope, problem_graph
+from cpg_spark.frontends.base import (DocGraph, Scope, Tok, TokenFrontend,
+                                      parse_span)
 from cpg_spark.frontends.eog import build_eog
-from cpg_spark.frontends.typeparser import normalize_type
+from cpg_spark.frontends.typeparser import erase_generics, normalize_type
 
 _PRIMITIVES = {
     "int", "long", "short", "byte", "char", "float", "double", "boolean",
@@ -124,8 +125,6 @@ class _RecordTable(dict):
     @staticmethod
     def _k(key):
         if isinstance(key, str) and "<" in key:
-            from cpg_spark.frontends.typeparser import erase_generics
-
             return erase_generics(key)
         return key
 
@@ -137,16 +136,6 @@ class _RecordTable(dict):
 
     def get(self, key, default=None):
         return super().get(self._k(key), default)
-
-
-class Tok:
-    __slots__ = ("kind", "text", "line", "col")
-
-    def __init__(self, kind, text, line, col):
-        self.kind = kind
-        self.text = text
-        self.line = line
-        self.col = col
 
 
 def tokenize(src: str) -> list[Tok]:
@@ -392,7 +381,8 @@ def _expand_symbols(toks: list[Tok], symbols: dict | None) -> list[Tok]:
                                for a in sub[bt.text])
                 else:
                     out.append(Tok(bt.kind, bt.text, t.line, t.col))
-            i = j + 1
+            # past the closing ')'; an unclosed call keeps the eof
+            i = j if toks[j].kind == "eof" else j + 1
             continue
         if t.kind == "ident" and t.text in obj:
             out.extend(Tok(bt.kind, bt.text, t.line, t.col)
@@ -473,16 +463,16 @@ def _strip_gnu_decorations(toks: list[Tok]) -> list[Tok]:
             # ("x")]]`: skip to the matching `]]` (two adjacent `[` can
             # start nothing else in declaration grammar)
             d = 0
-            while i < len(toks) and toks[i].kind != "eof":
+            while toks[i].kind != "eof":
                 if toks[i].kind == "[":
                     d += 1
                 elif toks[i].kind == "]":
                     d -= 1
                     if d == 0:
+                        i += 1
                         break
                 i += 1
-            i += 1
-            continue
+            continue  # an unclosed `[[` keeps the eof
         if t.kind == "ident":
             if t.text in _GNU_BARE:
                 i += 1
@@ -513,27 +503,24 @@ def _strip_gnu_decorations(toks: list[Tok]) -> list[Tok]:
     return out
 
 
-class CFamilyFrontend(Emitter):
+class CFamilyFrontend(TokenFrontend):
+    ParseError = CFamilyParseError
+    EXPECT_MSG = "expected {want}, got {t.kind}@{t.line}"
+
     def __init__(self, doc_id: str, span_offset: int, source: str,
                  module_name: str, dialect: str, symbols: dict | None = None):
-        super().__init__(doc_id, span_offset, source, module_name)
-        self.dialect = dialect  # 'java' | 'cpp'
-        self.toks = _expand_symbols(
+        toks = _expand_symbols(
             _filter_conditionals(tokenize(source), symbols), symbols)
         if dialect != "java":
-            self.toks = _strip_gnu_decorations(self.toks)
-        self.i = 0
-        self.pending_refs: list = []
-        self.pending_calls: list = []
-        self.pending_members: list = []
+            toks = _strip_gnu_decorations(toks)
+        super().__init__(doc_id, span_offset, source, module_name, toks)
+        self.dialect = dialect  # 'java' | 'cpp'
         # record registry keyed by ERASED type name: lookups may arrive
         # with generic arguments attached (`Pair<int,int> p;` declares a
         # var of that spelling but members resolve through the erased
         # record — the reference resolves through the class-template
         # realization the same way, ClassTemplateTest)
         self.records: dict[str, dict] = _RecordTable()
-        self.imports: dict[str, str] = {}
-        self._functions_by_id: dict[str, dict] = {}
         # (record_name_or_'', fn_name) -> [fn_info, ...]: C++ overload sets
         # (CallResolver.java keeps candidate lists per name; a plain dict
         # scope entry would collapse overloads to the last declaration)
@@ -633,79 +620,12 @@ class CFamilyFrontend(Emitter):
             self._pending_anns.append(aid)
 
     # ------------------------------------------------------------- tokens
-    def peek(self, k: int = 0) -> Tok:
-        j = min(self.i + k, len(self.toks) - 1)
-        return self.toks[j]
-
-    def next(self) -> Tok:
-        t = self.toks[self.i]
-        if self.i < len(self.toks) - 1:
-            self.i += 1
-        return t
-
-    def accept(self, kind: str) -> Tok | None:
-        if self.peek().kind == kind:
-            return self.next()
-        return None
-
-    def expect(self, kind: str) -> Tok:
-        t = self.peek()
-        if t.kind != kind:
-            raise CFamilyParseError(f"expected {kind}, got {t.kind}@{t.line}")
-        return self.next()
-
     def _p(self, tag: str) -> str:
         self._path_n += 1
         return f"cf.{tag}.{self._path_n}"
 
-    def _sync_toplevel(self) -> None:
-        """Panic-mode resynchronisation after a declaration-level parse
-        error: consume up to and including the next ';' at brace depth 0
-        or the '}' that closes the current construct, so the rest of the
-        document still parses (CDT recovers per-declaration the same
-        way — one bad prototype yields one problem node, not a dead
-        file)."""
-        depth = 0
-        while True:
-            t = self.peek()
-            if t.kind == "eof":
-                return
-            if t.kind == "{":
-                depth += 1
-            elif t.kind == "}":
-                self.next()
-                if depth <= 1:
-                    return
-                depth -= 1
-                continue
-            elif t.kind == ";" and depth == 0:
-                self.next()
-                return
-            self.next()
-
-    def _guard_top(self, fn, *args, **kw):
-        """Run one top-level declaration parse; on failure emit a
-        ProblemDeclaration (the reference's ProblemDeclaration.java — one
-        per failed construct) anchored at the failing token, restore the
-        scope/typedef/namespace stacks, and resync."""
-        start_i = self.i
-        scopes_n = len(self.scopes)
-        typedefs_n = len(self._typedefs)
-        ns_n = len(self._ns_stack)
-        try:
-            return fn(*args, **kw)
-        except (CFamilyParseError, IndexError, RecursionError) as e:
-            del self.scopes[scopes_n:]
-            del self._typedefs[typedefs_n:]
-            del self._ns_stack[ns_n:]
-            t = self.toks[min(start_i, len(self.toks) - 1)]
-            pid = self.node(self._p("problem"), "ProblemDeclaration",
-                            str(e)[:200], self._tloc(t),
-                            props={"problem": "CFamilyParseError"})
-            if self.i <= start_i:
-                self.i = start_i + 1
-            self._sync_toplevel()
-            return pid
+    def _stacks(self) -> tuple:
+        return (self.scopes, self._typedefs, self._ns_stack)
 
     def _tloc(self, t: Tok):
         return (t.line, t.col, t.line, t.col + max(len(t.text), 1))
@@ -878,6 +798,12 @@ class CFamilyFrontend(Emitter):
         self.leave_scope()
         self._resolve_locally()
         self._export_symbols()
+        for m in self.out.mentions:
+            # cross-document resolution joins base types to record
+            # symbols by NAME — the erased name is the join key
+            # (`ArrayList<String> l; l.add(x)` binds ArrayList.add)
+            m["base_type"] = erase_generics(m["base_type"])
+            m.setdefault("arg_types", None)
         return self.out
 
     def _parse_namespace(self, parent_ns_id: str, di: int):
@@ -4750,44 +4676,6 @@ class CFamilyFrontend(Emitter):
         self.accept(")")
         return args
 
-    def _drop_pending_ref(self, nid: str) -> None:
-        self.pending_refs = [p for p in self.pending_refs if p[0] != nid]
-
-    def _mark_write(self, nid: str) -> None:
-        for j, p in enumerate(self.pending_refs):
-            if p[0] == nid:
-                self.pending_refs[j] = (p[0], p[1], p[2], "write", p[4])
-        for j, p in enumerate(self.pending_members):
-            if p[0] == nid:
-                self.pending_members[j] = p[:5] + ("write", p[6])
-
-    def _dfg_args_to_params(self, args, fn_id):
-        info = self._functions_by_id.get(fn_id)
-        if not info:
-            return
-        pids = info.get("param_ids") or []
-        for a in args or []:
-            if a["index"] < len(pids):
-                self.edge(a["arg_id"], "DFG", pids[a["index"]])
-
-    # ------------------------------------------------ deferred resolution
-    def _mention(self, mid, kind, name, base_type=None, scopes=None,
-                 n_args=None, arg_ids=None, n_kwargs=None, arg_types=None):
-        from cpg_spark.frontends.typeparser import erase_generics
-
-        return {
-            "mention_id": mid, "kind": kind, "name": name,
-            # cross-document resolution joins base types to record
-            # symbols by NAME — the erased name is the join key
-            # (`ArrayList<String> l; l.add(x)` binds ArrayList.add)
-            "base_type": erase_generics(base_type),
-            "scope_path": ".".join(s.name for s in (scopes or []) if s.name)
-            or self.module_name,
-            "doc_id": self.doc_id,
-            "n_args": n_args, "n_kwargs": n_kwargs, "arg_ids": arg_ids,
-            "arg_types": arg_types,
-        }
-
     # ------------------------------------------------ overload ladder
     # signature-compatibility subset of CallResolver.java:847-1014: arity
     # with default arguments and variadics, exact type match outranking
@@ -5033,23 +4921,6 @@ class CFamilyFrontend(Emitter):
                 mx = max(f.get("n_defaults") or 0 for f in group)
                 for f in group:
                     f["n_defaults"] = mx
-
-    @staticmethod
-    def _lookup(scopes, name, seq=None):
-        """Innermost-first walk honouring the point-of-declaration rule:
-        inside function/block scopes a declaration is visible only to
-        references parsed AFTER it (C++/Java local semantics); record and
-        module scopes are order-independent (class members bind from the
-        whole body — the reference's two-phase parse-then-resolve)."""
-        for s in reversed(scopes):
-            d = s.decls.get(name)
-            if d is None:
-                continue
-            if (seq is not None and s.kind in ("function", "block")
-                    and d.get("seq", 0) > seq):
-                continue  # declared later in this scope — not visible here
-            return d
-        return None
 
     def _process_fnptr_assigns(self):
         """Derive signature hints for ``p = &target;`` assignments: the
@@ -5452,23 +5323,17 @@ class CFamilyFrontend(Emitter):
 
 def _parse_cfamily(doc_id, span_offset, source, module_name, dialect,
                    symbols=None):
-    if module_name is None:
-        if dialect == "java":
-            # Java visibility is the PACKAGE, not the file: files without
-            # a ``package`` statement share the default package and see
-            # each other without imports (JLS 7.4.2; the reference
-            # resolves across same-package files with no ImportResolver
-            # involvement).  A ``package a.b;`` statement overrides this
-            # during parse.
-            module_name = "<default>"
-        else:
-            module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = CFamilyFrontend(doc_id, span_offset, source, module_name, dialect,
-                         symbols=symbols)
-    try:
-        return fe.run()
-    except (CFamilyParseError, RecursionError, IndexError) as e:
-        return problem_graph(doc_id, span_offset, e, "CFamilyParseError")
+    if module_name is None and dialect == "java":
+        # Java visibility is the PACKAGE, not the file: files without a
+        # ``package`` statement share the default package and see each
+        # other without imports (JLS 7.4.2; the reference resolves across
+        # same-package files with no ImportResolver involvement).  A
+        # ``package a.b;`` statement overrides this during parse.
+        module_name = "<default>"
+    return parse_span(CFamilyFrontend, doc_id, span_offset, source,
+                      module_name, (CFamilyParseError, RecursionError,
+                                    IndexError),
+                      dialect=dialect, symbols=symbols)
 
 
 def parse_java_document(doc_id: str, span_offset: int, source: str,

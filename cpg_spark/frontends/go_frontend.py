@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
+from cpg_spark.frontends.base import DocGraph, Tok, TokenFrontend, parse_span
 from cpg_spark.frontends.eog import build_eog
 from cpg_spark.ids import inferred_id
 
@@ -75,19 +75,6 @@ _PREC = {
 
 _ASSIGN_OPS = {"=", "+=", "-=", "*=", "/=", "%=", "&=", "|=", "^=", "<<=",
                ">>=", "&^="}
-
-
-class Tok:
-    __slots__ = ("kind", "text", "line", "col")
-
-    def __init__(self, kind, text, line, col):
-        self.kind = kind
-        self.text = text
-        self.line = line
-        self.col = col
-
-    def __repr__(self):  # pragma: no cover - debug aid
-        return f"Tok({self.kind},{self.text!r}@{self.line}:{self.col})"
 
 
 def tokenize(src: str) -> list[Tok]:
@@ -132,51 +119,21 @@ class GoParseError(Exception):
     pass
 
 
-class GoFrontend(Emitter):
+class GoFrontend(TokenFrontend):
     """Parses one Go source span; emits the same row vocabulary as the
     Python frontend (SURVEY.md §2.2 F3)."""
 
+    ParseError = GoParseError
+    EXPECT_MSG = "expected {want}, got {t.kind}@{t.line}"
+
     def __init__(self, doc_id: str, span_offset: int, source: str,
                  module_name: str):
-        super().__init__(doc_id, span_offset, source, module_name)
-        self.toks = tokenize(source)
-        self.i = 0
-        self.pending_refs: list = []
-        self.pending_calls: list = []
-        self.pending_members: list = []
-        self.records: dict[str, dict] = {}
-        self.imports: dict[str, str] = {}  # local alias -> package path
-        self._functions_by_id: dict[str, dict] = {}
+        super().__init__(doc_id, span_offset, source, module_name,
+                         tokenize(source))
         # methods parsed before their receiver type declaration
         self._pending_methods: list[tuple[str, str, str]] = []
         self._no_composite: int = 0  # composite-literal ban depth (if/for/switch headers)
         self._path_n = 0
-
-    # ------------------------------------------------------------- tokens
-    def peek(self, k: int = 0) -> Tok:
-        j = min(self.i + k, len(self.toks) - 1)
-        return self.toks[j]
-
-    def next(self) -> Tok:
-        t = self.toks[self.i]
-        if self.i < len(self.toks) - 1:
-            self.i += 1
-        return t
-
-    def accept(self, kind: str) -> Tok | None:
-        if self.peek().kind == kind:
-            return self.next()
-        return None
-
-    def expect(self, kind: str) -> Tok:
-        t = self.peek()
-        if t.kind != kind:
-            raise GoParseError(f"expected {kind}, got {t.kind}@{t.line}")
-        return self.next()
-
-    def skip_semis(self) -> None:
-        while self.peek().kind == ";":
-            self.next()
 
     def _p(self, tag: str) -> str:
         """Fresh ast-path for node ids (deterministic per parse order)."""
@@ -201,23 +158,11 @@ class GoFrontend(Emitter):
         infos = []
         di = 0
         while self.peek().kind != "eof":
-            # panic-mode per-declaration recovery (C-family _guard_top
-            # contract): one bad construct -> one located
-            # ProblemDeclaration, the rest of the file still parses
-            start_i = self.i
-            scopes_n = len(self.scopes)
-            try:
-                self._top_decl(ns_id, infos, di)
-            except (GoParseError, IndexError, RecursionError) as e:
-                del self.scopes[scopes_n:]
-                t = self.toks[min(start_i, len(self.toks) - 1)]
-                pid = self.node(self._p("problem"), "ProblemDeclaration",
-                                str(e)[:200], self._tloc(t),
-                                props={"problem": "GoParseError"})
+            # panic-mode per-declaration recovery: one bad construct ->
+            # one located ProblemDeclaration, the rest of the file parses
+            pid = self._guard_top(self._top_decl, ns_id, infos, di)
+            if pid is not None:
                 self.ast_edge(ns_id, pid, "DECLARATIONS", di)
-                if self.i <= start_i:
-                    self.i = start_i + 1
-                self._sync_toplevel()
             di += 1
             self.skip_semis()
         self._attach_pending_methods()
@@ -247,27 +192,6 @@ class GoFrontend(Emitter):
                 self.ast_edge(ns_id, nid, "DECLARATIONS", di)
         else:
             # unknown top-level construct: skip one token
-            self.next()
-
-    def _sync_toplevel(self) -> None:
-        """Consume up to the next ';' at brace depth 0 or the '}' that
-        closes the current construct."""
-        depth = 0
-        while True:
-            t = self.peek()
-            if t.kind == "eof":
-                return
-            if t.kind == "{":
-                depth += 1
-            elif t.kind == "}":
-                self.next()
-                if depth <= 1:
-                    return
-                depth -= 1
-                continue
-            elif t.kind == ";" and depth == 0:
-                self.next()
-                return
             self.next()
 
     # ------------------------------------------------------------ imports
@@ -1307,17 +1231,6 @@ class GoFrontend(Emitter):
             return nid, {"kind": "plain", "nid": nid}
         return lhs_id, {"kind": "plain", "nid": lhs_id}
 
-    def _drop_pending_ref(self, nid: str) -> None:
-        self.pending_refs = [p for p in self.pending_refs if p[0] != nid]
-
-    def _mark_write(self, nid: str) -> None:
-        for j, p in enumerate(self.pending_refs):
-            if p[0] == nid:
-                self.pending_refs[j] = (p[0], p[1], p[2], "write")
-        for j, p in enumerate(self.pending_members):
-            if p[0] == nid:
-                self.pending_members[j] = p[:5] + ("write",)
-
     # ----------------------------------------------------------- expressions
     def parse_expr(self, path: str, min_prec: int = 1):
         lhs = self.parse_unary(path + ".u")
@@ -1734,97 +1647,11 @@ class GoFrontend(Emitter):
         return nid, {"kind": "construct", "name": tname, "type": tname}
 
     # ------------------------------------------------ deferred resolution
-    def _mention(self, mid, kind, name, base_type=None, scopes=None,
-                 n_args=None, arg_ids=None, n_kwargs=None):
-        return {
-            "mention_id": mid, "kind": kind, "name": name,
-            "base_type": base_type,
-            "scope_path": ".".join(s.name for s in (scopes or []) if s.name)
-            or self.module_name,
-            "doc_id": self.doc_id,
-            "n_args": n_args, "n_kwargs": n_kwargs, "arg_ids": arg_ids,
-        }
-
-    @staticmethod
-    def _lookup(scopes, name):
-        for s in reversed(scopes):
-            if name in s.decls:
-                return s.decls[name]
-        return None
-
-    def _dfg_args_to_params(self, args, fn_id):
-        info = self._functions_by_id.get(fn_id)
-        if not info:
-            return
-        pids = info.get("param_ids") or []
-        for a in args or []:
-            if a["index"] < len(pids):
-                self.edge(a["arg_id"], "DFG", pids[a["index"]])
-
-    def _resolve_locally(self):
-        """Same zero-shuffle local-first resolution as the Python frontend
-        (reference VariableUsageResolver / CallResolver applied per-file)."""
-        for ref_id, name, scopes, access in self.pending_refs:
-            d = self._lookup(scopes, name)
-            if d is not None:
-                self.edge(ref_id, "REFERS_TO", d["decl_id"])
-                if access == "write":
-                    self.edge(ref_id, "DFG", d["decl_id"])
-                else:
-                    self.edge(d["decl_id"], "DFG", ref_id)
-                if d.get("type"):
-                    self.eval_type(ref_id, d["type"])
-            elif name in self.imports:
-                pass  # bare package ref — linked via member access
-            else:
-                self.out.mentions.append(
-                    self._mention(ref_id, "ref", name, scopes=scopes))
-        for call_id, name, scopes, args in self.pending_calls:
-            d = self._lookup(scopes, name)
-            if d is not None and d["kind"] == "function":
-                fid = d["decl_id"]
-                self.edge(call_id, "CALLS", fid)
-                self.edge(fid, "DFG", call_id)
-                self._dfg_args_to_params(args, fid)
-            else:
-                self.out.mentions.append(self._mention(
-                    call_id, "call", name, scopes=scopes,
-                    n_args=len(args), n_kwargs=0,
-                    arg_ids=[a["arg_id"] for a in args]))
-        for mid, attr, base_name, scopes, args, access in self.pending_members:
-            base_type = None
-            if base_name:
-                bd = self._lookup(scopes, base_name)
-                if bd is not None:
-                    base_type = (bd.get("type") or "").rstrip("*") or None
-                elif base_name in self.imports:
-                    base_type = self.imports[base_name]
-            rec = self.records.get(base_type) if base_type else None
-            if access == "call":
-                target = None
-                if rec and attr in rec["methods"]:
-                    target = rec["methods"][attr][0]
-                if target is not None:
-                    self.edge(mid, "CALLS", target)
-                    self.edge(target, "DFG", mid)
-                    self._dfg_args_to_params(args, target)
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_call", attr, base_type=base_type,
-                        scopes=scopes, n_args=len(args or []), n_kwargs=0,
-                        arg_ids=[a["arg_id"] for a in (args or [])]))
-            else:
-                fid = rec["fields"].get(attr) if rec else None
-                if fid is not None:
-                    self.edge(mid, "REFERS_TO", fid)
-                    if access == "write":
-                        self.edge(mid, "DFG", fid)
-                    else:
-                        self.edge(fid, "DFG", mid)
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_ref", attr, base_type=base_type,
-                        scopes=scopes))
+    def _member_base_type(self, base_name, scopes):
+        bd = self._lookup(scopes, base_name)
+        if bd is not None:
+            return (bd.get("type") or "").rstrip("*") or None
+        return self.imports.get(base_name)
 
     # --------------------------------------------------------------- export
     def _export_symbols(self):
@@ -1878,10 +1705,5 @@ def parse_go_document(doc_id: str, span_offset: int, source: str,
                       module_name: str | None = None) -> DocGraph:
     """Parse one Go code span into CPG rows; parse failures degrade to a
     ProblemDeclaration node (never fail the Arrow batch)."""
-    if module_name is None:
-        module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = GoFrontend(doc_id, span_offset, source, module_name)
-    try:
-        return fe.run()
-    except (GoParseError, RecursionError, IndexError) as e:
-        return problem_graph(doc_id, span_offset, e, "GoParseError")
+    return parse_span(GoFrontend, doc_id, span_offset, source, module_name,
+                      (GoParseError, RecursionError, IndexError))

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import re
 
-from .base import DocGraph, Emitter, problem_graph
+from .base import DocGraph, Emitter, parse_span
 
 # opcode -> C-style operator spelling (reference ExpressionHandler maps LLVM
 # opcodes onto BinaryOperator operator codes the same way)
@@ -750,10 +750,5 @@ def parse_llvm_document(doc_id: str, span_offset: int, source: str,
                         module_name: str | None = None) -> DocGraph:
     """Parse one LLVM-IR span; parse failures degrade to ProblemDeclaration
     (never fail the Arrow batch)."""
-    if module_name is None:
-        module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = LlvmFrontend(doc_id, span_offset, source, module_name)
-    try:
-        return fe.run()
-    except (LlvmParseError, RecursionError, IndexError) as e:
-        return problem_graph(doc_id, span_offset, e, "LlvmParseError")
+    return parse_span(LlvmFrontend, doc_id, span_offset, source, module_name,
+                      (LlvmParseError, RecursionError, IndexError))

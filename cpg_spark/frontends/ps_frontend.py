@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
+from cpg_spark.frontends.base import DocGraph, Tok, TokenFrontend, parse_span
 from cpg_spark.frontends.eog import build_eog
 
 # control keywords, lower-cased (PowerShell keywords are case-insensitive)
@@ -108,16 +108,6 @@ def _canon_type(name: str) -> str:
     return _TYPE_CANON.get(name.strip().lower(), name.strip() or "Object")
 
 
-class Tok:
-    __slots__ = ("kind", "text", "line", "col")
-
-    def __init__(self, kind: str, text: str, line: int, col: int):
-        self.kind = kind
-        self.text = text
-        self.line = line
-        self.col = col
-
-
 class PsParseError(Exception):
     pass
 
@@ -170,39 +160,21 @@ def tokenize(src: str) -> list[Tok]:
     return toks
 
 
-class PsFrontend(Emitter):
+class PsFrontend(TokenFrontend):
     """One PowerShell span -> DocGraph rows (mirrors GoFrontend/TsFrontend)."""
+
+    ParseError = PsParseError
 
     def __init__(self, doc_id: str, span_offset: int, source: str,
                  module_name: str):
-        super().__init__(doc_id, span_offset, source, module_name)
-        self.toks = tokenize(source)
-        self.i = 0
+        super().__init__(doc_id, span_offset, source, module_name,
+                         tokenize(source))
         self._paths: dict[str, int] = {}
-        self._functions_by_id: dict[str, dict] = {}
         self._functions_by_name: dict[str, str] = {}   # lower name -> fid
-        self.pending_refs: list[tuple] = []
-        self.pending_calls: list[tuple] = []
         self._lambda_n = 0
         self._node_rows: dict[str, dict] = {}          # id -> node row
 
     # ---------------------------------------------------------- token utils
-    def peek(self, k: int = 0) -> Tok:
-        j = min(self.i + k, len(self.toks) - 1)
-        return self.toks[j]
-
-    def next(self) -> Tok:
-        t = self.toks[self.i]
-        if t.kind != "eof":
-            self.i += 1
-        return t
-
-    def accept(self, kind: str, text: str | None = None) -> Tok | None:
-        t = self.peek()
-        if t.kind == kind and (text is None or t.text == text):
-            return self.next()
-        return None
-
     def accept_kw(self, word: str) -> Tok | None:
         t = self.peek()
         if t.kind == "ident" and t.text.lower() == word:
@@ -212,17 +184,6 @@ class PsFrontend(Emitter):
     def is_kw(self, word: str, k: int = 0) -> bool:
         t = self.peek(k)
         return t.kind == "ident" and t.text.lower() == word
-
-    def expect(self, kind: str, text: str | None = None) -> Tok:
-        t = self.peek()
-        if t.kind != kind or (text is not None and t.text != text):
-            raise PsParseError(
-                f"line {t.line}: expected {text or kind}, got {t.kind} {t.text!r}")
-        return self.next()
-
-    def skip_semis(self):
-        while self.peek().kind == ";":
-            self.next()
 
     def _p(self, tag: str) -> str:
         n = self._paths.get(tag, 0)
@@ -251,23 +212,11 @@ class PsFrontend(Emitter):
             self.skip_semis()
             if self.peek().kind == "eof":
                 break
-            # panic-mode per-declaration recovery (C-family _guard_top
-            # contract): one bad construct -> one located
-            # ProblemDeclaration, the rest of the script still parses
-            start_i = self.i
-            scopes_n = len(self.scopes)
-            try:
-                self._top_decl(ns_id, infos)
-            except (PsParseError, IndexError, RecursionError) as e:
-                del self.scopes[scopes_n:]
-                t = self.toks[min(start_i, len(self.toks) - 1)]
-                pid = self.node(self._p("problem"), "ProblemDeclaration",
-                                str(e)[:200], loc=self._tloc(t),
-                                props={"problem": "PsParseError"})
+            # panic-mode per-declaration recovery: one bad construct ->
+            # one located ProblemDeclaration, the rest of the script parses
+            pid = self._guard_top(self._top_decl, ns_id, infos)
+            if pid is not None:
                 self.ast_edge(ns_id, pid, "declarations")
-                if self.i <= start_i:
-                    self.i = start_i + 1
-                self._sync_toplevel()
         build_eog(self, ns_id, infos)
         self._resolve_locally()
         self._export_symbols()
@@ -290,27 +239,6 @@ class PsFrontend(Emitter):
         if pair is not None:
             self.ast_edge(ns_id, pair[0], "statements")
             infos.append(pair[1])
-
-    def _sync_toplevel(self) -> None:
-        """Consume up to the next ';' at brace depth 0 or the '}' that
-        closes the current construct."""
-        depth = 0
-        while True:
-            t = self.peek()
-            if t.kind == "eof":
-                return
-            if t.kind == "op" and t.text == "{":
-                depth += 1
-            elif t.kind == "op" and t.text == "}":
-                self.next()
-                if depth <= 1:
-                    return
-                depth -= 1
-                continue
-            elif t.kind == ";" and depth == 0:
-                self.next()
-                return
-            self.next()
 
     def parse_script_params(self, ns_id: str) -> None:
         """Script-level ``param(...)`` — the script's own parameters
@@ -1139,9 +1067,6 @@ class PsFrontend(Emitter):
         return (eid, None, None)
 
     # ------------------------------------------------------------ link-time
-    def _drop_pending_ref(self, nid: str):
-        self.pending_refs = [p for p in self.pending_refs if p[0] != nid]
-
     def _retract_node(self, nid: str):
         """Remove a speculatively emitted node and its edges (the ref node
         minted before `=` turned the expression into a declaration)."""
@@ -1151,60 +1076,10 @@ class PsFrontend(Emitter):
         self._node_rows.pop(nid, None)
         self.out.id_log.pop(nid, None)
 
-    def _mark_write(self, nid: str):
-        for k, p in enumerate(self.pending_refs):
-            if p[0] == nid:
-                self.pending_refs[k] = (p[0], p[1], p[2], "write")
-
-    @staticmethod
-    def _lookup(scopes, name):
-        for s in reversed(scopes):
-            if name in s.decls:
-                return s.decls[name]
-        return None
-
-    def _mention(self, mid, kind, name, scopes=None, n_args=None,
-                 arg_ids=None):
-        return {
-            "mention_id": mid, "kind": kind, "name": name,
-            "base_type": None,
-            "scope_path": ".".join(s.name for s in (scopes or []) if s.name)
-            or self.module_name,
-            "doc_id": self.doc_id,
-            "n_args": n_args, "n_kwargs": None, "arg_ids": arg_ids,
-        }
-
-    def _resolve_locally(self):
-        for ref_id, name, scopes, access in self.pending_refs:
-            d = self._lookup(scopes, name)
-            if d is not None:
-                self.edge(ref_id, "REFERS_TO", d["decl_id"])
-                if access == "write":
-                    self.edge(ref_id, "DFG", d["decl_id"])
-                else:
-                    self.edge(d["decl_id"], "DFG", ref_id)
-                if d.get("type"):
-                    self.eval_type(ref_id, d["type"])
-            else:
-                self.out.mentions.append(
-                    self._mention(ref_id, "ref", name, scopes=scopes))
-        for call_id, name, scopes, args in self.pending_calls:
-            d = self._lookup(scopes, name)
-            if d is not None and d["kind"] == "function":
-                fid = d["decl_id"]
-                self.edge(call_id, "CALLS", fid)
-                self.edge(fid, "DFG", call_id)
-                pids = self._functions_by_id.get(fid, {}).get("param_ids") \
-                    or []
-                for a in args:
-                    if a["index"] < len(pids):
-                        self.edge(a["arg_id"], "DFG", pids[a["index"]])
-            else:
-                # unresolved cmdlet (Write-Host / Get-Process) — the
-                # linker's import gate / inference handles it
-                self.out.mentions.append(self._mention(
-                    call_id, "call", name, scopes=scopes,
-                    n_args=len(args), arg_ids=[a["arg_id"] for a in args]))
+    def _arity(self, args):
+        # named (-Flag value) arguments are indexed like positional ones,
+        # so an unresolved command's keyword count stays unknown
+        return len(args), None
 
     def _export_symbols(self):
         for fid, info in self._functions_by_id.items():
@@ -1225,10 +1100,5 @@ def parse_ps_document(doc_id: str, span_offset: int, source: str,
                       module_name: str | None = None) -> DocGraph:
     """Parse one PowerShell span; parse failures degrade to a
     ProblemDeclaration node (never fail the Arrow batch)."""
-    if module_name is None:
-        module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = PsFrontend(doc_id, span_offset, source, module_name)
-    try:
-        return fe.run()
-    except (PsParseError, RecursionError, IndexError) as e:
-        return problem_graph(doc_id, span_offset, e, "PsParseError")
+    return parse_span(PsFrontend, doc_id, span_offset, source, module_name,
+                      (PsParseError, RecursionError, IndexError))

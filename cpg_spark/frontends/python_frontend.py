@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import ast
 
-from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
+from cpg_spark.frontends.base import DocGraph, Emitter, parse_span
 from cpg_spark.frontends.eog import build_eog
 from cpg_spark.ids import inferred_id
 
@@ -113,14 +113,6 @@ class PythonFrontend(Emitter):
                  module_name: str, parity_mode: bool = False):
         super().__init__(doc_id, span_offset, source, module_name)
         self.parity = parity_mode
-        # deferred resolutions, settled once the whole module is parsed
-        # (the reference settles them in whole-graph passes;
-        # VariableUsageResolver.java / CallResolver.java)
-        self.pending_refs: list = []       # (ref_id, name, scopes, access, loc)
-        self.pending_calls: list = []      # (call_id, name, scopes, args)
-        self.pending_members: list = []    # (id, attr, base_name, scopes, args|None, access)
-        # record registry: name -> {decl_id, fields, methods, ctors, supers}
-        self.records: dict[str, dict] = {}
 
     # ------------------------------------------------------------------ run
     def run(self) -> DocGraph:
@@ -640,7 +632,6 @@ class PythonFrontend(Emitter):
             "n_defaults": n_defaults, "param_types": param_types,
             "is_variadic": is_variadic,
         }
-        self._functions_by_id = getattr(self, "_functions_by_id", {})
         self._functions_by_id[fid] = fscope_decl
         # enrich the scope entry so call resolution can map args -> params
         self.scopes[-1].decls[name] = {
@@ -1371,126 +1362,25 @@ class PythonFrontend(Emitter):
             idx += 1
         return args
 
-    def _dfg_args_to_params(self, args, fn_id, fn_info=None):
-        """DFG argument -> parameter (Util.java:321-342): positional by
-        index, keyword args by parameter name."""
-        if fn_info is None:
-            fn_info = getattr(self, "_functions_by_id", {}).get(fn_id)
-        if not fn_info:
-            return
-        pids = fn_info.get("param_ids") or []
-        pnames = fn_info.get("param_names") or []
-        for a in args:
-            if a["kw"] is not None:
-                if a["kw"] in pnames:
-                    self.edge(a["arg_id"], "DFG", pids[pnames.index(a["kw"])])
-            elif a["index"] < len(pids):
-                self.edge(a["arg_id"], "DFG", pids[a["index"]])
-
     # ------------------------------------------------ deferred resolution
-    def _mention(self, mid, kind, name, base_type=None, scopes=None,
-                 n_args=None, arg_ids=None, n_kwargs=None):
-        return {
-            "mention_id": mid, "kind": kind, "name": name,
-            "base_type": base_type,
-            "scope_path": ".".join(s.name for s in (scopes or []) if s.name)
-            or self.module_name,
-            "doc_id": self.doc_id,
-            "n_args": n_args, "n_kwargs": n_kwargs, "arg_ids": arg_ids,
-        }
-
-    @staticmethod
-    def _lookup(scopes, name):
-        for s in reversed(scopes):
-            if name in s.decls:
-                return s.decls[name]
-        return None
-
-    def _resolve_locally(self):
-        """End-of-document resolution against the now-complete local symbol
-        tables — the zero-shuffle fast path for what the reference does in
-        whole-graph passes (VariableUsageResolver.java:86-116,
-        CallResolver.java:63-130).  Only survivors become mention rows."""
-        # references
-        for ref_id, name, scopes, access in self.pending_refs:
-            d = self._lookup(scopes, name)
-            if d is not None:
-                self.edge(ref_id, "REFERS_TO", d["decl_id"])
-                if access == "write":
-                    self.edge(ref_id, "DFG", d["decl_id"])
-                else:
-                    self.edge(d["decl_id"], "DFG", ref_id)
-                if d.get("type"):
-                    self.eval_type(ref_id, d["type"])
-            else:
-                self.out.mentions.append(self._mention(ref_id, "ref", name,
-                                                       scopes=scopes))
-        # plain calls
-        for call_id, name, scopes, args in self.pending_calls:
-            d = self._lookup(scopes, name)
-            if d is not None and d["kind"] == "function":
-                fid = d["decl_id"]
-                self.edge(call_id, "CALLS", fid)
-                self.edge(fid, "DFG", call_id)  # CallExpression.java:142-157
-                self._dfg_args_to_params(args, fid, d.get("fn"))
-            else:
-                self.out.mentions.append(self._mention(
-                    call_id, "call", name, scopes=scopes,
-                    n_args=sum(1 for a in args if a["kw"] is None),
-                    n_kwargs=sum(1 for a in args if a["kw"] is not None),
-                    arg_ids=[a["arg_id"] for a in args]))
-        # member refs / member calls
-        for mid, attr, base_name, scopes, args, access in self.pending_members:
-            base_type = None
-            if base_name:
-                bd = self._lookup(scopes, base_name)
-                if bd is not None:
-                    base_type = bd.get("type")
-            rec = self.records.get(base_type) if base_type else None
-            if args == "call" or access == "call":
-                pass
-            if access == "call":
-                # member call: resolve against methods of the base record,
-                # walking local supertypes (CallResolver.java:1089-1127)
-                target = self._find_method(rec, attr) if rec else None
-                if target is not None:
-                    self.edge(mid, "CALLS", target)
-                    self.edge(target, "DFG", mid)
-                    self._dfg_args_to_params(args, target)
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_call", attr, base_type=base_type,
-                        scopes=scopes,
-                        n_args=sum(1 for a in (args or []) if a["kw"] is None),
-                        n_kwargs=sum(1 for a in (args or []) if a["kw"] is not None),
-                        arg_ids=[a["arg_id"] for a in (args or [])]))
-            else:
-                fid = self._find_field(rec, attr) if rec else None
-                if fid is not None:
-                    self.edge(mid, "REFERS_TO", fid)
-                    if access == "write":
-                        self.edge(mid, "DFG", fid)
-                    else:
-                        self.edge(fid, "DFG", mid)
-                elif rec is not None:
-                    # known record, unknown member -> inferred field
-                    # (VariableUsageResolver.java:409-452), deterministic id
-                    iid = inferred_id("FieldDeclaration", attr, container=base_type)
-                    if attr not in rec["fields"]:
-                        self.out.nodes.append({
-                            "node_id": iid, "label": "FieldDeclaration",
-                            "name": attr, "code": None, "doc_id": self.doc_id,
-                            "span_offset": self.span_offset, "loc": None,
-                            "is_inferred": True, "is_implicit": False,
-                            "argument_index": None, "props": {},
-                        })
-                        rec["fields"][attr] = iid
-                        self.edge(rec["decl_id"], "FIELDS", iid)
-                    self.edge(mid, "REFERS_TO", rec["fields"][attr])
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_ref", attr, base_type=base_type,
-                        scopes=scopes))
+    def _unresolved_member_ref(self, mid, attr, base_type, rec, scopes):
+        if rec is None:
+            super()._unresolved_member_ref(mid, attr, base_type, rec, scopes)
+            return
+        # known record, unknown member -> inferred field
+        # (VariableUsageResolver.java:409-452), deterministic id
+        iid = inferred_id("FieldDeclaration", attr, container=base_type)
+        if attr not in rec["fields"]:
+            self.out.nodes.append({
+                "node_id": iid, "label": "FieldDeclaration",
+                "name": attr, "code": None, "doc_id": self.doc_id,
+                "span_offset": self.span_offset, "loc": None,
+                "is_inferred": True, "is_implicit": False,
+                "argument_index": None, "props": {},
+            })
+            rec["fields"][attr] = iid
+            self.edge(rec["decl_id"], "FIELDS", iid)
+        self.edge(mid, "REFERS_TO", rec["fields"][attr])
 
     def _find_method(self, rec, name, _depth=0):
         if rec is None or _depth > 16:
@@ -1525,8 +1415,7 @@ class PythonFrontend(Emitter):
             if s.kind == "module":
                 mod_scope = s
         # scopes are popped by now; recompute from emitted info instead
-        fns = getattr(self, "_functions_by_id", {})
-        for fid, info in fns.items():
+        for fid, info in self._functions_by_id.items():
             self.out.symbols.append({
                 "decl_id": fid,
                 "kind": "method" if info.get("record") else "function",
@@ -1583,11 +1472,5 @@ def parse_python_document(doc_id: str, span_offset: int, source: str,
     ``parity_mode=True`` reproduces the reference's NOT_IMPLEMENTED gap
     matrix verbatim (the P/R oracle anchor); the default models every
     gapped construct with real nodes (round 5, VERDICT item 1)."""
-    if module_name is None:
-        module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = PythonFrontend(doc_id, span_offset, source, module_name,
-                        parity_mode=parity_mode)
-    try:
-        return fe.run()
-    except SyntaxError as e:
-        return problem_graph(doc_id, span_offset, e, "SyntaxError")
+    return parse_span(PythonFrontend, doc_id, span_offset, source,
+                      module_name, (SyntaxError,), parity_mode=parity_mode)

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import re
 
-from cpg_spark.frontends.base import DocGraph, Emitter, problem_graph
+from cpg_spark.frontends.base import DocGraph, Tok, TokenFrontend, parse_span
 from cpg_spark.frontends.eog import build_eog
 
 _KEYWORDS = {
@@ -80,16 +80,6 @@ _ASSIGN_OPS = {"=", "+=", "-=", "*=", "/=", "%=", "&=", "|=", "^=",
                "<<=", ">>=", ">>>=", "**=", "&&=", "||=", "??="}
 
 _TEMPLATE_EXPR_RE = re.compile(r"\$\{([A-Za-z_$][A-Za-z0-9_$.]*)\}")
-
-
-class Tok:
-    __slots__ = ("kind", "text", "line", "col")
-
-    def __init__(self, kind, text, line, col):
-        self.kind = kind
-        self.text = text
-        self.line = line
-        self.col = col
 
 
 class TsParseError(Exception):
@@ -166,56 +156,24 @@ def tokenize(src: str) -> list[Tok]:
     return toks
 
 
-class TsFrontend(Emitter):
+class TsFrontend(TokenFrontend):
     """One TS/JS span -> DocGraph rows (mirrors GoFrontend's architecture)."""
+
+    ParseError = TsParseError
 
     def __init__(self, doc_id: str, span_offset: int, source: str,
                  module_name: str):
-        super().__init__(doc_id, span_offset, source, module_name)
-        self.toks = tokenize(source)
-        self.i = 0
+        super().__init__(doc_id, span_offset, source, module_name,
+                         tokenize(source))
         self._paths: dict[str, int] = {}
-        self.imports: dict[str, str] = {}          # local name -> module
-        self.records: dict[str, dict] = {}         # name -> {decl_id, methods, fields}
-        self._functions_by_id: dict[str, dict] = {}
-        self.pending_refs: list[tuple] = []        # (ref_id, name, scopes, access)
-        self.pending_calls: list[tuple] = []       # (call_id, name, scopes, args)
-        self.pending_members: list[tuple] = []     # (mid, attr, base, scopes, args, access)
         self._lambda_n = 0
 
     # ---------------------------------------------------------- token utils
-    def peek(self, k: int = 0) -> Tok:
-        j = min(self.i + k, len(self.toks) - 1)
-        return self.toks[j]
-
-    def next(self) -> Tok:
-        t = self.toks[self.i]
-        if t.kind != "eof":
-            self.i += 1
-        return t
-
-    def accept(self, kind: str, text: str | None = None) -> Tok | None:
-        t = self.peek()
-        if t.kind == kind and (text is None or t.text == text):
-            return self.next()
-        return None
-
     def accept_kw(self, word: str) -> Tok | None:
         t = self.peek()
         if t.kind == "ident" and t.text == word:
             return self.next()
         return None
-
-    def expect(self, kind: str) -> Tok:
-        t = self.peek()
-        if t.kind != kind:
-            raise TsParseError(
-                f"line {t.line}: expected {kind}, got {t.kind} {t.text!r}")
-        return self.next()
-
-    def skip_semis(self):
-        while self.peek().kind == ";":
-            self.next()
 
     def _p(self, tag: str) -> str:
         n = self._paths.get(tag, 0)
@@ -234,49 +192,16 @@ class TsFrontend(Emitter):
             self.skip_semis()
             if self.peek().kind == "eof":
                 break
-            # panic-mode per-declaration recovery (same contract as the
-            # C-family frontend's _guard_top): one bad construct yields
-            # one located ProblemDeclaration, not a dead file
-            start_i = self.i
-            scopes_n = len(self.scopes)
-            try:
-                self._top_decl(ns_id, infos)
-            except (TsParseError, IndexError, RecursionError) as e:
-                del self.scopes[scopes_n:]
-                t = self.toks[min(start_i, len(self.toks) - 1)]
-                pid = self.node(self._p("problem"), "ProblemDeclaration",
-                                str(e)[:200], loc=self._tloc(t),
-                                props={"problem": "TsParseError"})
+            # panic-mode per-declaration recovery: one bad construct
+            # yields one located ProblemDeclaration, not a dead file
+            pid = self._guard_top(self._top_decl, ns_id, infos)
+            if pid is not None:
                 self.ast_edge(ns_id, pid, "declarations")
-                if self.i <= start_i:
-                    self.i = start_i + 1
-                self._sync_toplevel()
         build_eog(self, ns_id, infos)
         self._resolve_locally()
         self._export_symbols()
         self.leave_scope()
         return self.out
-
-    def _sync_toplevel(self) -> None:
-        """Consume up to the next ';' at brace depth 0 or the '}' that
-        closes the current construct."""
-        depth = 0
-        while True:
-            t = self.peek()
-            if t.kind == "eof":
-                return
-            if t.kind == "op" and t.text == "{":
-                depth += 1
-            elif t.kind == "op" and t.text == "}":
-                self.next()
-                if depth <= 1:
-                    return
-                depth -= 1
-                continue
-            elif t.kind == ";" and depth == 0:
-                self.next()
-                return
-            self.next()
 
     def _top_decl(self, ns_id: str, infos: list) -> None:
         """One top-level declaration/statement dispatch."""
@@ -1284,7 +1209,7 @@ class TsFrontend(Emitter):
                             loc=self._tloc(op))
             if lhs[0]:
                 self.ast_edge(bid, lhs[0], "lhs")
-                self._mark_write(lhs[0])
+                self._mark_write(lhs[0], members=False)
             if rhs:
                 self.ast_edge(bid, rhs, "rhs")
                 self.edge(rhs, "DFG", bid)
@@ -1406,7 +1331,7 @@ class TsFrontend(Emitter):
                 if base[0]:
                     self.ast_edge(uid, base[0], "input")
                     self.edge(base[0], "DFG", uid)
-                    self._mark_write(base[0])
+                    self._mark_write(base[0], members=False)
                 base = (uid, None, None)
             else:
                 return base[:2]
@@ -1874,108 +1799,14 @@ class TsFrontend(Emitter):
             self.skip_semis()  # ASI after a bare `@name` line
 
     # ------------------------------------------------------------ link-time
-    def _drop_pending_ref(self, nid: str):
-        self.pending_refs = [p for p in self.pending_refs if p[0] != nid]
-
-    def _mark_write(self, nid: str):
-        for k, p in enumerate(self.pending_refs):
-            if p[0] == nid:
-                self.pending_refs[k] = (p[0], p[1], p[2], "write")
-
-    @staticmethod
-    def _lookup(scopes, name):
-        for s in reversed(scopes):
-            if name in s.decls:
-                return s.decls[name]
-        return None
-
-    def _dfg_args_to_params(self, args, fn_id):
-        info = self._functions_by_id.get(fn_id)
-        if not info:
-            return
-        pids = info.get("param_ids") or []
-        for a in args:
-            if a["index"] < len(pids):
-                self.edge(a["arg_id"], "DFG", pids[a["index"]])
-
-    def _mention(self, mid, kind, name, base_type=None, scopes=None,
-                 n_args=None, arg_ids=None, n_kwargs=None):
-        return {
-            "mention_id": mid, "kind": kind, "name": name,
-            "base_type": base_type,
-            "scope_path": ".".join(s.name for s in (scopes or []) if s.name)
-            or self.module_name,
-            "doc_id": self.doc_id,
-            "n_args": n_args, "n_kwargs": n_kwargs, "arg_ids": arg_ids,
-        }
-
-    def _resolve_locally(self):
-        for ref_id, name, scopes, access in self.pending_refs:
-            d = self._lookup(scopes, name)
-            if d is not None:
-                self.edge(ref_id, "REFERS_TO", d["decl_id"])
-                if access == "write":
-                    self.edge(ref_id, "DFG", d["decl_id"])
-                else:
-                    self.edge(d["decl_id"], "DFG", ref_id)
-                if d.get("type"):
-                    self.eval_type(ref_id, d["type"])
-            elif name in self.imports:
-                pass  # import-qualified — linker joins on the FQN
-            else:
-                self.out.mentions.append(
-                    self._mention(ref_id, "ref", name, scopes=scopes))
-        for call_id, name, scopes, args in self.pending_calls:
-            d = self._lookup(scopes, name)
-            if d is not None and d["kind"] == "function":
-                fid = d["decl_id"]
-                self.edge(call_id, "CALLS", fid)
-                self.edge(fid, "DFG", call_id)
-                self._dfg_args_to_params(args, fid)
-            else:
-                # bare name, like the py/go frontends — the linker's
-                # visibility gate joins the doc's import modules
-                self.out.mentions.append(self._mention(
-                    call_id, "call", name,
-                    scopes=scopes, n_args=len(args), n_kwargs=0,
-                    arg_ids=[a["arg_id"] for a in args]))
-        for mid, attr, base_name, scopes, args, access in self.pending_members:
-            base_type = None
-            if base_name:
-                bd = self._lookup(scopes, base_name)
-                if bd is not None:
-                    base_type = bd.get("type") or (
-                        base_name if bd.get("kind") == "record" else None)
-                elif base_name in self.imports:
-                    base_type = self.imports[base_name]
-                elif base_name in self.records:
-                    base_type = base_name
-            rec = self.records.get(base_type) if base_type else None
-            if access == "call":
-                target = None
-                if rec and attr in rec["methods"]:
-                    target = rec["methods"][attr][0]
-                if target is not None:
-                    self.edge(mid, "CALLS", target)
-                    self.edge(target, "DFG", mid)
-                    self._dfg_args_to_params(args or [], target)
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_call", attr, base_type=base_type,
-                        scopes=scopes, n_args=len(args or []), n_kwargs=0,
-                        arg_ids=[a["arg_id"] for a in (args or [])]))
-            else:
-                fid = rec["fields"].get(attr) if rec else None
-                if fid is not None:
-                    self.edge(mid, "REFERS_TO", fid)
-                    if access == "write":
-                        self.edge(mid, "DFG", fid)
-                    else:
-                        self.edge(fid, "DFG", mid)
-                else:
-                    self.out.mentions.append(self._mention(
-                        mid, "member_ref", attr, base_type=base_type,
-                        scopes=scopes))
+    def _member_base_type(self, base_name, scopes):
+        bd = self._lookup(scopes, base_name)
+        if bd is not None:
+            return bd.get("type") or (
+                base_name if bd.get("kind") == "record" else None)
+        if base_name in self.imports:
+            return self.imports[base_name]
+        return base_name if base_name in self.records else None
 
     def _export_symbols(self):
         for fid, info in self._functions_by_id.items():
@@ -2020,10 +1851,5 @@ def parse_ts_document(doc_id: str, span_offset: int, source: str,
                       module_name: str | None = None) -> DocGraph:
     """Parse one TypeScript/JavaScript span; parse failures degrade to a
     ProblemDeclaration node (never fail the Arrow batch)."""
-    if module_name is None:
-        module_name = doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-    fe = TsFrontend(doc_id, span_offset, source, module_name)
-    try:
-        return fe.run()
-    except (TsParseError, RecursionError, IndexError) as e:
-        return problem_graph(doc_id, span_offset, e, "TsParseError")
+    return parse_span(TsFrontend, doc_id, span_offset, source, module_name,
+                      (TsParseError, RecursionError, IndexError))

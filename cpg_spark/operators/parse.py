@@ -158,11 +158,6 @@ def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
     return rows
 
 
-def _module_for_doc(doc_id: str) -> str:
-    # the module-derivation rule the py/cpp/java frontends apply
-    return doc_id.rsplit("/", 2)[-2] if "/" in doc_id else doc_id
-
-
 def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
     """Re-key a sentinel-parsed row template to a real (doc_id, offset):
     location-derived ids are re-hashed through the id_log's (path, label)
@@ -170,10 +165,11 @@ def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
     content-derived ids (types, inferred) and the pre-serialized
     props_json pass through untouched (no re-json, no row rebuild — the
     relocation must cost far less than the parse it replaces)."""
+    from cpg_spark.frontends.base import module_for_doc
     from cpg_spark.ids import node_id as _hash_node_id
 
     template, id_log = entry
-    module = _module_for_doc(doc_id)
+    module = module_for_doc(doc_id)
     rename = {old: _hash_node_id(doc_id, offset, p, lb)
               for old, (p, lb) in id_log.items()}
     rget = rename.get
