@@ -8,6 +8,18 @@ equivalent of the reference's per-file LanguageFrontend instances
 private ScopeManager per file in a thread; our unit of parallelism is the
 partition).
 
+Shared code lives in ``base.py``, as the reference shares one
+``LanguageFrontend`` base and one ``ScopeManager``:
+
+* ``Emitter``: ids, rows, the scope stack and the end-of-document local
+  resolution ``_resolve_locally``; a frontend overrides small hooks such
+  as ``_member_base_type`` instead of copying it;
+* ``TokenFrontend``: the token cursor and the panic-mode
+  ``_guard_top``/``_sync_toplevel`` recovery of the hand-written
+  C/C++/Java, Go, TS/JS and PowerShell parsers;
+* ``module_for_doc`` and ``parse_span``, the entry wrapper that turns a
+  failed span into a ProblemDeclaration.
+
 Registration mirrors ``TranslationConfiguration.registerLanguage``
 (``cpg-core/.../TranslationConfiguration.java:413-418``): a dict from span
 ``kind`` to parser callable, consulted by the parse operator.

@@ -47,6 +47,20 @@ class DocGraph:
         self.symbols.extend(other.symbols)
         self.id_log.update(other.id_log)
 
+    def id_faults(self) -> list:
+        """Breaches of the per-span id invariants: a node id emitted
+        twice, or an edge endpoint that names no emitted node."""
+        seen: set = set()
+        faults = []
+        for n in self.nodes:
+            if n["node_id"] in seen:
+                faults.append(("duplicate", n["node_id"], n["label"]))
+            seen.add(n["node_id"])
+        faults += [("dangling", e["subj"], e["pred"], e["obj"])
+                   for e in self.edges
+                   if e["subj"] not in seen or e["obj"] not in seen]
+        return faults
+
 
 def problem_graph(doc_id: str, span_offset: int, message,
                   problem: str) -> DocGraph:

@@ -2971,6 +2971,10 @@ class CFamilyFrontend(TokenFrontend):
         block (`type name;` before '{')."""
         j = self.i
         while self.toks[j].kind in ("ident", ","):
+            if self.toks[j + 1].kind == self.toks[j].kind:
+                # `(int rc) const;` — two adjacent identifiers make a
+                # typed parameter, never a K&R name list
+                return False
             j += 1
         if self.toks[j].kind != ")" or j == self.i:
             return False

@@ -36,7 +36,6 @@ import re
 
 from cpg_spark.frontends.base import DocGraph, Tok, TokenFrontend, parse_span
 from cpg_spark.frontends.eog import build_eog
-from cpg_spark.ids import inferred_id
 
 _KEYWORDS = {
     "break", "case", "chan", "const", "continue", "default", "defer", "else",

@@ -940,11 +940,12 @@ class PsFrontend(TokenFrontend):
                 ai += 1
         # positional index assignment, honoring declared param order for
         # named flags when the callee is known
-        fid = self._functions_by_name.get(name_t.text.lower())
-        pnames = []
-        if fid is not None:
-            pnames = [p.lstrip("$").lower()
-                      for p in self._functions_by_id[fid]["param_names"]]
+        # (a definition whose header failed to parse has a name but no
+        # function info)
+        info = self._functions_by_id.get(
+            self._functions_by_name.get(name_t.text.lower()))
+        pnames = ([p.lstrip("$").lower() for p in info["param_names"]]
+                  if info else [])
         taken = set()
         indexed: list[tuple] = []
         for eid, flag in args:

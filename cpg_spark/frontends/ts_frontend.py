@@ -426,7 +426,8 @@ class TsFrontend(TokenFrontend):
                     self.next()
             if self.peek().kind == "op" and self.peek().text in ("{", "["):
                 # destructured parameter `({ a, b }: Opts)` — the bound
-                # names each become a ParameterDeclaration at this index
+                # names each become a ParameterDeclaration at this index;
+                # names after the first get their own path
                 close = "}" if self.peek().text == "{" else "]"
                 self.next()
                 bound = self._collect_binding_names(f"{path}.param[{j}]",
@@ -435,8 +436,9 @@ class TsFrontend(TokenFrontend):
                 ptype = self._type_annotation()
                 if not bound:
                     bound = [Tok("ident", f"<destructured{j}>", 0, 0)]
-                for b in bound:
-                    pid = self.node(f"{path}.param[{j}]",
+                for k, b in enumerate(bound):
+                    pid = self.node(f"{path}.param[{j}]"
+                                    + (f".b[{k}]" if k else ""),
                                     "ParameterDeclaration", b.text,
                                     loc=self._tloc(b) if b.line else None,
                                     argument_index=j)

@@ -95,13 +95,3 @@ def remap_types(nodes: DataFrame, edges: DataFrame, comp: DataFrame):
     )
     remapped_nodes = nodes.join(F.broadcast(non_canon), "node_id", "left_anti")
     return remapped_nodes, remapped_edges
-
-
-def canonicalize_types(nodes: DataFrame, edges: DataFrame,
-                       max_rounds: int = 50):
-    """Probe + CC + remap in one call (small-corpus convenience; the
-    pipeline calls type_components / remap_types separately so the CC
-    probe runs on the cheap committed scan)."""
-    comp = type_components(nodes, edges, max_rounds=max_rounds)
-    n2, e2 = remap_types(nodes, edges, comp)
-    return n2, e2, comp

@@ -69,6 +69,27 @@ def _inferred_id_col(kind: str, name_col, sig_col, container_col=None):
     )
 
 
+def _inferred_fn_nodes(df: DataFrame, node_id, name, arity) -> DataFrame:
+    """Node rows (one per id) for FunctionDeclarations no document
+    declares: inferred from a call or function reference by name and
+    arity, with no document or location."""
+    return df.select(
+        node_id.alias("node_id"),
+        F.lit("FunctionDeclaration").alias("label"),
+        name.alias("name"),
+        F.lit(None).cast("string").alias("code"),
+        F.lit(None).cast("string").alias("doc_id"),
+        F.lit(None).cast("int").alias("span_offset"),
+        F.lit(None).cast(
+            "struct<start_line:int,start_col:int,end_line:int,end_col:int>"
+        ).alias("loc"),
+        F.lit(True).alias("is_inferred"),
+        F.lit(False).alias("is_implicit"),
+        F.lit(None).cast("int").alias("argument_index"),
+        F.create_map(F.lit("arity"), arity.cast("string")).alias("props"),
+    ).dropDuplicates(["node_id"])
+
+
 def _pick_winner(joined: DataFrame, order_cols: list) -> DataFrame:
     """Deterministic candidate selection: the reference keeps the innermost /
     best-matching declaration (ScopeManager.kt:675-677 'local first'); across
@@ -674,27 +695,9 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
         F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
         F.col("subj").alias("obj"), "props", "doc_id")
     fp_calls = fp_calls.unionByName(t_calls).unionByName(t_dfg)
-    term_inferred = (
-        tj.filter(F.col("d_decl_id").isNull())
-        .select(
-            t_obj.alias("node_id"),
-            F.lit("FunctionDeclaration").alias("label"),
-            F.col("t_name").alias("name"),
-            F.lit(None).cast("string").alias("code"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("span_offset"),
-            F.lit(None).cast(
-                "struct<start_line:int,start_col:int,"
-                "end_line:int,end_col:int>"
-            ).alias("loc"),
-            F.lit(True).alias("is_inferred"),
-            F.lit(False).alias("is_implicit"),
-            F.lit(None).cast("int").alias("argument_index"),
-            F.create_map(F.lit("arity"),
-                         F.col("t_nargs").cast("string")).alias("props"),
-        )
-        .dropDuplicates(["node_id"])
-    )
+    term_inferred = _inferred_fn_nodes(
+        tj.filter(F.col("d_decl_id").isNull()), t_obj, F.col("t_name"),
+        F.col("t_nargs"))
     missed = missed.join(fp_terms.select("mention_id").distinct(),
                          "mention_id", "left_anti")
     # unknown-class gate (CallResolverTest.ensureNoUnknownClassDummies):
@@ -725,27 +728,8 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     missed_ids = missed.withColumn(
         "inf_id", _inferred_id_col("FunctionDeclaration", F.col("name"), inferred_sig)
     )
-    inferred_nodes = (
-        missed_ids.select(
-            F.col("inf_id").alias("node_id"),
-            F.lit("FunctionDeclaration").alias("label"),
-            F.col("name"),
-            F.lit(None).cast("string").alias("code"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("span_offset"),
-            F.lit(None).cast(
-                "struct<start_line:int,start_col:int,end_line:int,end_col:int>"
-            ).alias("loc"),
-            F.lit(True).alias("is_inferred"),
-            F.lit(False).alias("is_implicit"),
-            F.lit(None).cast("int").alias("argument_index"),
-            F.create_map(
-                F.lit("arity"),
-                F.coalesce(F.col("n_args"), F.lit(0)).cast("string")
-            ).alias("props"),
-        )
-        .dropDuplicates(["node_id"])
-    )
+    inferred_nodes = _inferred_fn_nodes(missed_ids, F.col("inf_id"),
+                                        F.col("name"), inferred_sig)
     inferred_calls = missed_ids.select(
         F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
         F.col("inf_id").alias("obj"),
@@ -914,26 +898,8 @@ def link_refs(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
         "inf_id",
         _inferred_id_col("FunctionDeclaration", F.col("name"),
                          F.col("n_args")))
-    ref_inferred = (
-        missed_h.select(
-            F.col("inf_id").alias("node_id"),
-            F.lit("FunctionDeclaration").alias("label"),
-            F.col("name"),
-            F.lit(None).cast("string").alias("code"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("span_offset"),
-            F.lit(None).cast(
-                "struct<start_line:int,start_col:int,"
-                "end_line:int,end_col:int>"
-            ).alias("loc"),
-            F.lit(True).alias("is_inferred"),
-            F.lit(False).alias("is_implicit"),
-            F.lit(None).cast("int").alias("argument_index"),
-            F.create_map(F.lit("arity"),
-                         F.col("n_args").cast("string")).alias("props"),
-        )
-        .dropDuplicates(["node_id"])
-    )
+    ref_inferred = _inferred_fn_nodes(missed_h, F.col("inf_id"),
+                                      F.col("name"), F.col("n_args"))
     refers_inf = missed_h.select(
         F.col("mention_id").alias("subj"), F.lit("REFERS_TO").alias("pred"),
         F.col("inf_id").alias("obj"),

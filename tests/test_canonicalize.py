@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.canonicalize import canonicalize_types
+from cpg_spark.operators.canonicalize import remap_types, type_components
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -47,7 +47,9 @@ def canonical(spark):
     )
     raw = parse_docs(docs).persist()
     nodes, edges, _, _ = split_parse_output(raw)
-    n2, e2, comp = canonicalize_types(nodes, edges)
+    # the pipeline's order: component map first, then the remap
+    comp = type_components(nodes, edges)
+    n2, e2 = remap_types(nodes, edges, comp)
     yield nodes, edges, n2, e2, comp
     raw.unpersist()
 

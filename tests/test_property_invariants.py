@@ -18,6 +18,7 @@ property sweep costs seconds.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from cpg_spark.frontends.python_frontend import parse_python_document
@@ -116,3 +117,48 @@ def test_eog_terminates_at_exit_or_return(src):
                if n["label"] == "ReturnStatement"}
     assert (fns & eog_in) or (returns & eog_in), (
         "EOG neither reaches the exit sentinel nor any return")
+
+
+def _fixture_sets():
+    from cpg_spark.fixtures_cfamily import CPP_FIXTURES, JAVA_FIXTURES
+    from cpg_spark.fixtures_go import GO_FIXTURES
+    from cpg_spark.fixtures_py import PY_FIXTURES
+    from cpg_spark.fixtures_templates import TEMPLATE_FIXTURES
+    from cpg_spark.fixtures_varres import VARRES_FIXTURES
+    from cpg_spark.sources import modern_fixtures as mf
+
+    varres_java = {k: v for k, v in VARRES_FIXTURES.items()
+                   if k.endswith("_java")}
+    varres_cpp = {k: v for k, v in VARRES_FIXTURES.items()
+                  if k not in varres_java}
+    return {
+        "PY": ("code/python", PY_FIXTURES),
+        "GO": ("code/go", GO_FIXTURES),
+        "JAVA": ("code/java", JAVA_FIXTURES),
+        "CPP": ("code/cpp", CPP_FIXTURES),
+        "VARRES_java": ("code/java", varres_java),
+        "VARRES_cpp": ("code/cpp", varres_cpp),
+        "TEMPLATE": ("code/cpp", TEMPLATE_FIXTURES),
+        "MODERN_CPP": ("code/cpp", mf.MODERN_CPP),
+        "MODERN_JAVA": ("code/java", mf.MODERN_JAVA),
+        "MODERN_GO": ("code/go", mf.MODERN_GO),
+        "MODERN_TS": ("code/typescript", mf.MODERN_TS),
+        "MODERN_PS": ("code/powershell", mf.MODERN_PS),
+        "MODERN_PY": ("code/python", mf.MODERN_PY),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_fixture_sets()))
+def test_fixture_ids_unique_and_edges_closed(name):
+    """The id invariants hold for every fixture of every frontend, not
+    only for generated Python: node ids are unique per parse and every
+    edge endpoint is an emitted node (a TS destructured parameter once
+    minted one id for all its names, and materialize silently kept
+    one)."""
+    from cpg_spark.frontends import FRONTENDS
+
+    kind, fixtures = _fixture_sets()[name]
+    assert fixtures
+    for fx, src in sorted(fixtures.items()):
+        g = FRONTENDS[kind](f"fx/{fx}/0001", 0, src)
+        assert not g.id_faults(), (fx, g.id_faults()[:5])

@@ -413,3 +413,14 @@ def test_ps_panic_mode_recovery():
     assert {"Good1", "Good2"} <= fns
     assert sum(1 for n in g.nodes
                if n["label"] == "ProblemDeclaration") == 1
+
+
+def test_ps_call_to_failed_definition_degrades():
+    """A definition whose header fails still registers its name; a later
+    call to it must not raise out of the frontend (that would fail the
+    whole parse batch) but parse as a plain call."""
+    g = parse_ps_document("r.ps1", 0, "function f { param( }\nf 1\n")
+    labels = Counter(n["label"] for n in g.nodes)
+    assert labels["ProblemDeclaration"] == 1
+    assert labels["CallExpression"] == 1
+    assert not g.id_faults()

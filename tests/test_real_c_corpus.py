@@ -88,6 +88,7 @@ def test_zlib_examples_parse_with_zero_degradation():
         with open(f, errors="replace") as fh:
             src = fh.read()
         g = parse_cpp_document(f, 0, src)
+        assert not g.id_faults(), (f, g.id_faults()[:5])
         tot_nodes += len(g.nodes)
         tot_gaps += len(_gaps(g))
     assert tot_nodes > 8_000

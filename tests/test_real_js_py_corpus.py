@@ -24,13 +24,16 @@ PY_ROOT = "/usr/lib/python3.11"
 def _rate(parse, files, kind):
     """Degraded-node rate over a corpus: Problem* labels PLUS empty-name
     Expression/Statement gap nodes — the honest union (round-5 fix of the
-    round-4 blind spot where gap Statements were invisible)."""
+    round-4 blind spot where gap Statements were invisible).  Every file
+    must also keep the id invariants (unique node ids, no dangling
+    edge endpoint)."""
     nodes = probs = whole = 0
     for p in files:
         src = open(p, errors="replace").read()
         if len(src) > 150_000:
             continue
         g = parse(p, 0, src)
+        assert not g.id_faults(), (p, g.id_faults()[:5])
         pr = [n for n in g.nodes
               if "Problem" in (n["label"] or "")
               or (n["label"] in ("Expression", "Statement")

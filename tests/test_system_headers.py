@@ -41,6 +41,9 @@ def test_system_headers_parse_with_bounded_problem_rate():
         with open(f, errors="replace") as fh:
             src = fh.read()
         g = parse_cpp_document(f, 0, src, "sys")
+        # `(int rc) const;` once misparsed as a K&R name list and minted
+        # its parameter id twice (idn2.h, cursesw.h)
+        assert not g.id_faults(), (f, g.id_faults()[:5])
         probs = [x for x in g.nodes if "Problem" in x["label"]]
         # a whole-file failure is the degenerate graph: nothing but the
         # problem marker (the pre-recovery behavior)
