@@ -13,7 +13,7 @@ Architecture (idiomatic Spark, NOT a port of the reference's single-JVM
 mutable-object engine):
 
 * per-document work (parsing, AST building, EOG, function-local DFG, local
-  scope resolution) runs in vectorized Arrow batches via ``mapInPandas`` —
+  scope resolution) runs in vectorized Arrow batches via ``mapInArrow`` —
   zero shuffle;
 * cross-document work (REFERS_TO / CALLS entity linking, supertype closure,
   alias canonicalization) is pure DataFrame joins — broadcast for small

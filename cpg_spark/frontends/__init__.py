@@ -2,7 +2,7 @@
 
 Each frontend is a plain-Python callable
 ``parse_document(doc_id, span_offset, source, module_name) -> DocGraph``
-executed inside vectorized Arrow batches (``mapInPandas``) — the Spark
+executed inside vectorized Arrow batches (``mapInArrow``) — the Spark
 equivalent of the reference's per-file LanguageFrontend instances
 (``cpg-core/.../TranslationManager.kt:247-299`` runs one frontend + one
 private ScopeManager per file in a thread; our unit of parallelism is the

@@ -3098,7 +3098,7 @@ class CFamilyFrontend(TokenFrontend):
             # and `(` cannot be part of the condition in C/C++/Java.
             kwtok = self.next()
             if "constexpr" in kwtok.text.lower():
-                self.out.nodes[-1]["props"]["constexpr"] = True
+                self.out.nodes[-1]["props"]["constexpr"] = "true"
         has_init = self._paren_has_semi()
         self.expect("(")
         if has_init:

@@ -10,10 +10,12 @@ DFG edges (decl -> read-ref) are replaced by direct def->use edges
 field-insensitive (:43-46).
 
 Spark shape: documents are bounded, functions are small — the kernel
-runs inside ``applyInPandas`` over a **cogroup by doc_id** (nodes x
-edges), zero driver involvement, shuffle keyed on doc_id only.  Output
-is a delta stream: ``action='add'`` rows (direct def->use edges) and
-``action='remove'`` rows (stale coarse edges); the caller applies
+runs inside ``applyInArrow`` over a **cogroup by doc_id** (nodes x
+edges), zero driver involvement, shuffle keyed on doc_id only; each
+group arrives as Arrow tables and the delta leaves as one.  Output is a
+delta stream: ``action='add'`` rows (direct def->use edges) and
+``action='remove'`` rows (stale coarse edges); the caller filters on
+``action`` and applies
 
     refined = edges UNION adds LEFT ANTI JOIN removes
 
@@ -23,10 +25,11 @@ which is the immutable-DataFrame form of the reference's in-place
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DELTA_SCHEMA = T.StructType([
     T.StructField("action", T.StringType(), False),  # add | remove
@@ -185,26 +188,19 @@ def refine_dfg_delta(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     e = edges.filter(F.col("pred").isin("EOG", "AST", "REFERS_TO", "DFG")) \
         .select("doc_id", "subj", "pred", "obj")
 
-    def run(key, npdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = key[0]
-        labels = dict(zip(npdf["node_id"], npdf["label"]))
-        rows = _refine_doc(doc_id, labels, epdf.to_dict("records"))
-        return pd.DataFrame(rows, columns=[f.name for f in DELTA_SCHEMA.fields])
+    arrow_schema = to_arrow_schema(DELTA_SCHEMA)
+
+    def run(key, ntbl, etbl):
+        labels = dict(zip(ntbl.column("node_id").to_pylist(),
+                          ntbl.column("label").to_pylist()))
+        rows = _refine_doc(key[0].as_py(), labels, etbl.to_pylist())
+        return pa.Table.from_pylist(rows, schema=arrow_schema)
 
     return (
         n.groupBy("doc_id")
         .cogroup(e.groupBy("doc_id"))
-        .applyInPandas(run, schema=DELTA_SCHEMA)
+        .applyInArrow(run, schema=DELTA_SCHEMA)
     )
-
-
-def refine_dfg(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(adds, removes) convenience split — callers that materialize both
-    should write :func:`refine_dfg_delta` once instead."""
-    delta = refine_dfg_delta(nodes, edges)
-    adds = delta.filter(F.col("action") == "add").drop("action")
-    removes = delta.filter(F.col("action") == "remove").drop("action")
-    return adds, removes
 
 
 def apply_refinement(edges: DataFrame, adds: DataFrame,

@@ -25,8 +25,8 @@ Spark shape — pure joins over the parse output, no UDF:
   the same miss repeated across a module's documents collapses to ONE
   node at materialize.
 
-Off by default like the reference (``InferenceConfiguration.kt:44``);
-enable via ``link_combined(..., infer_records=True)`` or call directly.
+Off by default like the reference (``InferenceConfiguration.kt:44``):
+the pipeline does not run it; call it directly.
 """
 
 from __future__ import annotations

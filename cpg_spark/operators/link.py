@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cpg_spark.operators.joins import (BROADCAST_MAX_ROWS,
                                        bounded_dim_count, linking_join)
@@ -166,6 +167,13 @@ def symbol_dim(symbols: DataFrame) -> DataFrame:
 
 
 _FNPTR_MAX_HOPS = 4
+_FNPTR_SCHEMA = T.StructType([
+    T.StructField("kind", T.StringType()),
+    T.StructField("mention_id", T.LongType()),
+    T.StructField("fn_id", T.LongType()),
+    T.StructField("t_name", T.StringType()),
+    T.StructField("t_nargs", T.IntegerType()),
+])
 
 
 def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
@@ -196,9 +204,10 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
     link stage's 19 s at 96k docs, parallelism-independent — the whole
     reason the link stage didn't scale 8->32).  Now ONE shuffle
     colocates each seed document's (seed, dfg, fn, hint) rows and an
-    ``applyInPandas`` BFS walks every chain in-memory; the non-seed
+    ``applyInArrow`` BFS walks every chain in-memory; the non-seed
     corpus never shuffles (left-semi on seed docs, as before)."""
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     vars_ = nodes.filter(
         F.col("label").isin("VariableDeclaration",
@@ -231,12 +240,9 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                        F.col("cur").alias("a"), F.col("prev").alias("b"),
                        F.lit(None).cast("string").alias("s"),
                        F.lit(None).cast("int").alias("n")),
-        # b = 0 (not NULL) for rows that don't carry a second id:
-        # a nullable int64 column round-trips through Arrow->pandas as
-        # float64 and 64-bit hash ids lose precision past 2^53
         fn_ids.select("doc_id", F.lit("fn").alias("rk"),
                       F.col("cur").alias("a"),
-                      F.lit(0).cast("long").alias("b"),
+                      F.lit(None).cast("long").alias("b"),
                       F.lit(None).cast("string").alias("s"),
                       F.lit(None).cast("int").alias("n")),
         # signature-hinted refs (``&fun``): where a chain may end unresolved
@@ -245,29 +251,34 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
         .join(seed_docs, "doc_id", "left_semi")
         .select("doc_id", F.lit("hint").alias("rk"),
                 F.col("mention_id").alias("a"),
-                F.lit(0).cast("long").alias("b"),
+                F.lit(None).cast("long").alias("b"),
                 F.col("name").alias("s"),
                 F.col("n_args").cast("int").alias("n")),
     ]
     stream = parts[0]
     for p in parts[1:]:
         stream = stream.unionByName(p)
+    arrow_schema = to_arrow_schema(_FNPTR_SCHEMA)
 
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        rk = pdf["rk"]
+    def walk(tbl):
         dfg: dict = {}
-        for a, b in zip(pdf.loc[rk == "dfg", "a"],
-                        pdf.loc[rk == "dfg", "b"]):
-            dfg.setdefault(a, []).append(b)
-        fns = set(pdf.loc[rk == "fn", "a"])
-        hints = {a: (s_, n_) for a, s_, n_ in zip(
-            pdf.loc[rk == "hint", "a"], pdf.loc[rk == "hint", "s"],
-            pdf.loc[rk == "hint", "n"])}
+        fns: set = set()
+        hints: dict = {}
+        seeds = []
+        for rk, a, b, s_, n_ in zip(*(tbl.column(c).to_pylist()
+                                      for c in ("rk", "a", "b", "s", "n"))):
+            if rk == "dfg":
+                dfg.setdefault(a, []).append(b)
+            elif rk == "fn":
+                fns.add(a)
+            elif rk == "hint":
+                hints[a] = (s_, n_)
+            else:
+                seeds.append((a, b))
         out = []
         seen_hit = set()
         seen_term = set()
-        for mid, cur in zip(pdf.loc[rk == "seed", "a"],
-                            pdf.loc[rk == "seed", "b"]):
+        for mid, cur in seeds:
             frontier = {cur}
             visited = {cur}
             for _ in range(_FNPTR_MAX_HOPS):
@@ -285,8 +296,7 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                         if (mid, p) not in seen_hit:
                             seen_hit.add((mid, p))
                             out.append({"kind": "hit", "mention_id": mid,
-                                        "fn_id": p, "t_name": None,
-                                        "t_nargs": None})
+                                        "fn_id": p})
                         continue  # stop at function nodes
                     if p in hints:
                         s_, n_ = hints[p]
@@ -294,31 +304,22 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                         if key not in seen_term:
                             seen_term.add(key)
                             out.append({"kind": "term", "mention_id": mid,
-                                        "fn_id": None, "t_name": s_,
-                                        "t_nargs": n_})
+                                        "t_name": s_, "t_nargs": n_})
                     nxt.add(p)
                 frontier = nxt
-        # dtype=object: a column mixing ints and None would coerce to
-        # float64 and 64-bit hash ids lose precision past 2^53 (the same
-        # rule parse.py applies to its row stream)
-        return pd.DataFrame(
-            out, columns=["kind", "mention_id", "fn_id", "t_name",
-                          "t_nargs"], dtype=object)
+        return pa.Table.from_pylist(out, schema=arrow_schema)
 
     # EAGER, once: the walk has four consumers (CALLS, the terminal
     # join, two miss anti-joins), and Spark reuses no exchange above a
     # localCheckpoint scan (``missed``), so a lazy walk would re-run its
     # Python stage per consumer (5 runs per link write on the lifecycle
     # bench).  Output is at most one row per (seed, target).
-    return stream.groupBy("doc_id").applyInPandas(
-        walk,
-        schema=("kind string, mention_id bigint, fn_id bigint, "
-                "t_name string, t_nargs int"),
-    ).localCheckpoint(eager=True)
+    return stream.groupBy("doc_id").applyInArrow(
+        walk, schema=_FNPTR_SCHEMA).localCheckpoint(eager=True)
 
 
-def joined_mentions(mentions: DataFrame, dim: DataFrame, strategy: str,
-                    buckets: int = 16) -> DataFrame:
+def joined_mentions(mentions: DataFrame, dim: DataFrame,
+                    strategy: str) -> DataFrame:
     """ONE linking join covering every resolvable mention kind (calls,
     member calls, refs, member refs, imports) — with the visibility rule
     encoded IN THE JOIN KEY, not as a post-join filter.
@@ -374,6 +375,7 @@ def joined_mentions(mentions: DataFrame, dim: DataFrame, strategy: str,
     else:
         hot_keys = None
 
+    buckets = 16  # salted strategy: reducers each hot name spreads over
     non_import = facts.filter(F.col("kind") != "import")
     segs = F.split(F.col("scope_path"), r"\.")
     prefixes = F.transform(
@@ -944,8 +946,7 @@ def override_dispatch(calls_edges: DataFrame, overrides: DataFrame) -> DataFrame
 
 
 def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
-                  edges: DataFrame, strategy: str | None = None,
-                  buckets: int = 16, infer_records: bool = False):
+                  edges: DataFrame, strategy: str | None = None):
     """The linking stage: one output frame (row_kind edge|node) carrying
     linked edges, OVERRIDES edges and inferred nodes — materializing a
     SINGLE table lets Catalyst reuse the name-join exchanges across the
@@ -953,9 +954,6 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
     output (:func:`split_linked` separates them again).
     ``strategy`` forces ``"broadcast"`` or ``"salted"`` for the name
     join; None sizes the symbol dimension and picks.
-    ``infer_records`` additionally mints inferred RecordDeclarations for
-    member accesses on unknown records (InferenceConfiguration.inferRecords,
-    off by default like the reference — cpg_spark/operators/infer.py).
     Unresolved record supertypes that name a JDK type pull in the static
     JDK ancestry (JavaExternalTypeHierarchyResolver, a default pass in
     the reference); the trigger set comes from the probe job the closure
@@ -986,7 +984,7 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
         # ONE sizing job over the shared dimension (both joins use it)
         dim_rows = bounded_dim_count(dim)
         strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
-    joined = joined_mentions(mentions, dim, strategy, buckets)
+    joined = joined_mentions(mentions, dim, strategy)
     call_edges, inferred_nodes = link_calls(mentions, joined, dim, closure,
                                             nodes, edges)
     ref_edges, ref_inferred = link_refs(mentions, joined, dim, closure)
@@ -1011,14 +1009,6 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
             jdk_edges.withColumn("row_kind", F.lit("edge")))
         nodes_part = nodes_part.unionByName(
             jdk_nodes.withColumn("row_kind", F.lit("node")))
-    if infer_records:
-        from cpg_spark.operators.infer import infer_records as _infer
-
-        rec_nodes, rec_edges = _infer(mentions, nodes, edges)
-        all_edges = all_edges.unionByName(
-            rec_edges.withColumn("row_kind", F.lit("edge")))
-        nodes_part = nodes_part.unionByName(
-            rec_nodes.withColumn("row_kind", F.lit("node")))
     combined = all_edges.unionByName(nodes_part, allowMissingColumns=True)
     return combined, {"strategy": strategy, "dim_rows": dim_rows}
 

@@ -2,7 +2,7 @@
 
 Spark shape of the reference frontend stage (``TranslationManager.kt
 runFrontends :146-245`` + per-file parallel parse ``:247-299``): every
-partition parses its spans in one Arrow batch stream via ``mapInPandas``
+partition parses its spans in one Arrow batch stream via ``mapInArrow``
 — per-span work (AST build, EOG, provisional DFG, local scope resolution)
 never shuffles (SURVEY.md §7.0).  Frontend dispatch by span ``kind``
 replaces dispatch by file extension (``TranslationManager.kt:373-405``).
@@ -12,22 +12,30 @@ expensive parse runs exactly once; the four logical tables (nodes, edges,
 mentions, symbols) are cheap filters over the checkpointed output with
 ``row_kind`` predicate pushdown.
 
-Performance-critical detail: the UDF-side schema is **all primitive
-columns** — props as a JSON string, id arrays as CSV, location as four
-ints.  Map/struct/array construction through pandas->Arrow is 10-30x
-slower per row than strings; the typed columns (map<string,string> props,
-loc struct, arrays) are rebuilt JVM-side in :func:`split_parse_output`
-with ``from_json``/``split``/``struct`` — inside whole-stage codegen.
+The kernel writes typed Arrow rows: each output chunk is one
+``pa.RecordBatch.from_pylist`` over :data:`PARSE_OUT_SCHEMA`, whose
+``props`` is a ``map<string,string>``, ``loc`` a struct and the id, type
+and name lists arrays — the column types the four tables carry, so
+:func:`split_parse_output` only filters and renames.  The cost of a
+Python UDF lies in its boundary conversion (CIDR'22, *Accelerating Python
+UDFs in Vectorized Query Execution*); building the batch straight from
+the row dicts skips a pandas frame and any string encoding of nested
+values.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from cpg_spark.schemas import LOC_SCHEMA
+
+_PROPS = T.MapType(T.StringType(), T.StringType())
+_IDS = T.ArrayType(T.LongType())
+_STRS = T.ArrayType(T.StringType())
 
 PARSE_OUT_SCHEMA = T.StructType(
     [
@@ -39,15 +47,12 @@ PARSE_OUT_SCHEMA = T.StructType(
         T.StructField("name", T.StringType(), True),
         T.StructField("code", T.StringType(), True),
         T.StructField("span_offset", T.IntegerType(), True),
-        T.StructField("loc_sl", T.IntegerType(), True),
-        T.StructField("loc_sc", T.IntegerType(), True),
-        T.StructField("loc_el", T.IntegerType(), True),
-        T.StructField("loc_ec", T.IntegerType(), True),
+        T.StructField("loc", LOC_SCHEMA, True),
         T.StructField("is_inferred", T.BooleanType(), True),
         T.StructField("is_implicit", T.BooleanType(), True),
         T.StructField("argument_index", T.IntegerType(), True),
-        T.StructField("props_json", T.StringType(), True),
-        # edge fields (props_json/doc_id shared)
+        T.StructField("props", _PROPS, True),
+        # edge fields (props/doc_id shared)
         T.StructField("subj", T.LongType(), True),
         T.StructField("pred", T.StringType(), True),
         T.StructField("obj", T.LongType(), True),
@@ -57,35 +62,30 @@ PARSE_OUT_SCHEMA = T.StructType(
         T.StructField("m_scope_path", T.StringType(), True),
         T.StructField("m_n_args", T.IntegerType(), True),
         T.StructField("m_n_kwargs", T.IntegerType(), True),
-        T.StructField("m_arg_ids", T.StringType(), True),  # CSV of int64 ids
-        T.StructField("m_arg_types", T.StringType(), True),  # CSV ('' = unknown)
+        T.StructField("m_arg_ids", _IDS, True),
+        T.StructField("m_arg_types", _STRS, True),  # '' = unknown
         # symbol fields (name shared)
         T.StructField("s_kind", T.StringType(), True),
         T.StructField("s_fqn", T.StringType(), True),
         T.StructField("s_record", T.StringType(), True),
         T.StructField("s_module", T.StringType(), True),
         T.StructField("s_n_params", T.IntegerType(), True),
-        T.StructField("s_param_ids", T.StringType(), True),   # CSV
-        T.StructField("s_param_names", T.StringType(), True), # CSV
+        T.StructField("s_param_ids", _IDS, True),
+        T.StructField("s_param_names", _STRS, True),
         # signature detail for overload resolution (CallResolver.java:847-1014
         # subset): defaulted-parameter count, spelled parameter types,
         # variadic flag — null where a frontend does not model signatures
         T.StructField("s_n_defaults", T.IntegerType(), True),
-        T.StructField("s_param_types", T.StringType(), True),  # CSV ('' = unknown)
+        T.StructField("s_param_types", _STRS, True),  # '' = unknown
         T.StructField("s_is_variadic", T.BooleanType(), True),
     ]
 )
 
-_COLS = [f.name for f in PARSE_OUT_SCHEMA.fields]
 
-
-def _csv(ids) -> str | None:
-    # elements may be int64 ids or strings (type/param-name CSVs); the
-    # UDF-side schema keeps ALL list columns as one CSV string (see module
-    # docstring) and split_parse_output rebuilds typed arrays JVM-side
-    if not ids:
-        return None
-    return ",".join("" if x is None else str(x) for x in ids)
+def _strs(xs) -> list | None:
+    # list convention of the parse output: an empty list is null, an
+    # unknown entry of a string list is ''
+    return ["" if x is None else x for x in xs] if xs else None
 
 
 # sentinel document for relocatable parsing (pre-parse span dedup, SURVEY
@@ -98,24 +98,9 @@ _SENT_DOC = f"{_SENT_MOD}/{_SENT_MOD}/0000"
 
 def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
     """PARSE_OUT_SCHEMA row dicts for one span's DocGraph (a direct parse,
-    or the relocatable template of a duplicate)."""
-    rows: list[dict] = []
-    for n in g.nodes:
-        loc = n.get("loc")
-        rows.append({
-            "row_kind": "node", "doc_id": n["doc_id"],
-            "node_id": n["node_id"], "label": n["label"],
-            "name": n["name"], "code": n["code"],
-            "span_offset": n["span_offset"],
-            "loc_sl": loc["start_line"] if loc else None,
-            "loc_sc": loc["start_col"] if loc else None,
-            "loc_el": loc["end_line"] if loc else None,
-            "loc_ec": loc["end_col"] if loc else None,
-            "is_inferred": n["is_inferred"],
-            "is_implicit": n["is_implicit"],
-            "argument_index": n["argument_index"],
-            "props_json": json.dumps(n["props"]) if n["props"] else None,
-        })
+    or the relocatable template of a duplicate).  Node and edge dicts
+    already carry their table's columns."""
+    rows: list[dict] = [{"row_kind": "node", **n} for n in g.nodes]
     # per-span (subj, pred, obj) dedup: doc-scoped content-hash ids can
     # only collide within one span, so the global edge table stays
     # duplicate-free by construction and materialize skips the
@@ -126,11 +111,7 @@ def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
         if key in seen_e:
             continue
         seen_e.add(key)
-        rows.append({
-            "row_kind": "edge", "doc_id": e["doc_id"],
-            "subj": e["subj"], "pred": e["pred"], "obj": e["obj"],
-            "props_json": json.dumps(e["props"]) if e["props"] else None,
-        })
+        rows.append({"row_kind": "edge", **e})
     for m in g.mentions:
         rows.append({
             "row_kind": "mention", "doc_id": m["doc_id"],
@@ -138,9 +119,9 @@ def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
             "m_kind": m["kind"], "m_base_type": m["base_type"],
             "m_scope_path": m["scope_path"], "m_n_args": m["n_args"],
             "m_n_kwargs": m["n_kwargs"],
-            "m_arg_ids": _csv(m["arg_ids"]),
-            "m_arg_types": _csv(m.get("arg_types")),
-            "span_offset": int(offset),
+            "m_arg_ids": m["arg_ids"] or None,
+            "m_arg_types": _strs(m.get("arg_types")),
+            "span_offset": offset,
         })
     for s in g.symbols:
         rows.append({
@@ -148,22 +129,22 @@ def _graph_rows(g, doc_id: str, offset: int) -> list[dict]:
             "node_id": s["decl_id"], "name": s["name"],
             "s_kind": s["kind"], "s_fqn": s["fqn"], "s_record": s["record"],
             "s_module": s["module"], "s_n_params": s["n_params"],
-            "s_param_ids": _csv(s["param_ids"]),
-            "s_param_names": _csv(s["param_names"]),
+            "s_param_ids": s["param_ids"] or None,
+            "s_param_names": _strs(s["param_names"]),
             "s_n_defaults": s.get("n_defaults"),
-            "s_param_types": _csv(s.get("param_types")),
+            "s_param_types": _strs(s.get("param_types")),
             "s_is_variadic": s.get("is_variadic"),
-            "span_offset": int(offset),
+            "span_offset": offset,
         })
     return rows
 
 
 def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
     """Re-key a sentinel-parsed row template to a real (doc_id, offset):
-    location-derived ids are re-hashed through the id_log's (path, label)
-    keys; sentinel module strings in names/fqns/scope paths are replaced;
-    content-derived ids (types, inferred) and the pre-serialized
-    props_json pass through untouched (no re-json, no row rebuild — the
+    location-derived ids, in id columns and id lists alike, are re-hashed
+    through the id_log's (path, label) keys; sentinel module strings in
+    names/fqns/scope paths are replaced; content-derived ids (types,
+    inferred) and props pass through untouched (no row rebuild — the
     relocation must cost far less than the parse it replaces)."""
     from cpg_spark.frontends.base import module_for_doc
     from cpg_spark.ids import node_id as _hash_node_id
@@ -198,10 +179,7 @@ def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
                     r2["m_scope_path"] = sp.replace(_SENT_MOD, module)
                 ai = r2["m_arg_ids"]
                 if ai:
-                    # CSV tokens are decimal int64 ids ('' = absent)
-                    r2["m_arg_ids"] = ",".join(
-                        x if x == "" else str(rget(int(x), x))
-                        for x in ai.split(","))
+                    r2["m_arg_ids"] = [rget(x, x) for x in ai]
             else:  # symbol
                 for fkey in ("s_fqn", "s_module"):
                     v = r2[fkey]
@@ -209,9 +187,7 @@ def _relocated_rows(entry, doc_id: str, offset: int) -> list[dict]:
                         r2[fkey] = v.replace(_SENT_MOD, module)
                 pi = r2["s_param_ids"]
                 if pi:
-                    r2["s_param_ids"] = ",".join(
-                        x if x == "" else str(rget(int(x), x))
-                        for x in pi.split(","))
+                    r2["s_param_ids"] = [rget(x, x) for x in pi]
         out.append(r2)
     return out
 
@@ -342,102 +318,65 @@ def parse_docs(docs: DataFrame, py_parity: bool = False) -> DataFrame:
             F.pmod(F.xxhash64("doc_id"), F.lit(8)),
         )
 
+    # pyspark's Spark -> Arrow type mapping (no pandas involved), the one
+    # the worker checks the returned batches against
+    arrow_schema = to_arrow_schema(PARSE_OUT_SCHEMA)
+
     def run(batches):
         cache = _SpanParseCache(py_parity=py_parity)
         # yield in bounded chunks: accumulating a whole input batch
         # (~700k row dicts) before converting turns linear parse into
-        # superlinear GC churn; ~64k-row frames keep workers flat
+        # superlinear GC churn; ~64k-row batches keep workers flat
         out: list[dict] = []
-        for pdf in batches:
+        for batch in batches:
             for doc_id, defs, kind, text, offset, prev in zip(
-                    pdf["doc_id"], pdf["defines"], pdf["kind"], pdf["text"],
-                    pdf["offset"], pdf["prev_offset"]):
+                    *(batch.column(c).to_pylist() for c in (
+                        "doc_id", "defines", "kind", "text", "offset",
+                        "prev_offset"))):
                 # span-sequence invariant (BASELINE input_hint): offsets
                 # strictly increasing in array order, enforced in-flight
                 # on adjacent pairs (zero extra jobs — a driver-side
                 # validation pass would cost a full corpus scan)
-                if pd.notna(prev) and pd.notna(offset) and offset <= prev:
+                if prev is not None and offset is not None and offset <= prev:
                     raise ValueError(
                         f"span-sequence invariant violated in doc {doc_id}: "
                         f"offset {offset} after {prev}")
-                if text is None or pd.isna(offset):
+                if text is None or offset is None:
                     continue
-                out.extend(cache.rows_for(kind, text, doc_id, int(offset),
-                                          defs))
+                out.extend(cache.rows_for(kind, text, doc_id, offset, defs))
                 if len(out) >= 65536:
-                    yield _frame(out)
+                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
                     out = []
         if out:
-            yield _frame(out)
+            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
 
-    return spans.mapInPandas(run, schema=PARSE_OUT_SCHEMA)
-
-
-def _frame(rows: list[dict]) -> pd.DataFrame:
-    # object-dtype frame + where(): missing keys must become None (not
-    # pandas NaN, which breaks Arrow conversion of int cols)
-    frame = pd.DataFrame(rows, columns=_COLS, dtype=object)
-    return frame.where(frame.notna(), None)
-
-
-def _props_col():
-    return F.coalesce(
-        F.from_json(F.col("props_json"), "map<string,string>"),
-        F.expr("map()"),
-    ).alias("props")
-
-
-def _loc_col():
-    return F.when(
-        F.col("loc_sl").isNotNull(),
-        F.struct(
-            F.col("loc_sl").alias("start_line"),
-            F.col("loc_sc").alias("start_col"),
-            F.col("loc_el").alias("end_line"),
-            F.col("loc_ec").alias("end_col"),
-        ),
-    ).alias("loc")
-
-
-def _split_csv(col: str):
-    return F.when(F.col(col).isNotNull(), F.split(F.col(col), ","))
-
-
-def _split_csv_ids(col: str):
-    """Id CSVs -> array<bigint>.  try_cast keeps '' placeholders as null
-    under ANSI mode (Spark 4 default) instead of throwing."""
-    return F.when(
-        F.col(col).isNotNull(),
-        F.expr(f"transform(split({col}, ','), x -> try_cast(x AS BIGINT))"),
-    )
+    return spans.mapInArrow(run, schema=PARSE_OUT_SCHEMA)
 
 
 def split_parse_output(raw: DataFrame):
-    """Four logical typed tables from the unified primitive stream.
-    ``row_kind`` filters and column pruning push down to the parquet scan
-    of the checkpointed stage output; map/struct/array reconstruction is
-    whole-stage-codegen JVM work."""
+    """Four logical typed tables from the unified row stream: ``row_kind``
+    filters and column pruning push down to the parquet scan of the
+    checkpointed stage output."""
     nodes = raw.filter(F.col("row_kind") == "node").select(
-        "node_id", "label", "name", "code", "doc_id", "span_offset",
-        _loc_col(), "is_inferred", "is_implicit", "argument_index",
-        _props_col())
+        "node_id", "label", "name", "code", "doc_id", "span_offset", "loc",
+        "is_inferred", "is_implicit", "argument_index", "props")
     edges = raw.filter(F.col("row_kind") == "edge").select(
-        "subj", "pred", "obj", _props_col(), "doc_id")
+        "subj", "pred", "obj", "props", "doc_id")
     mentions = raw.filter(F.col("row_kind") == "mention").select(
         F.col("node_id").alias("mention_id"), F.col("m_kind").alias("kind"),
         "name", F.col("m_base_type").alias("base_type"),
         F.col("m_scope_path").alias("scope_path"), "doc_id",
         F.col("m_n_args").alias("n_args"), F.col("m_n_kwargs").alias("n_kwargs"),
-        _split_csv_ids("m_arg_ids").alias("arg_ids"),
-        _split_csv("m_arg_types").alias("arg_types"))
+        F.col("m_arg_ids").alias("arg_ids"),
+        F.col("m_arg_types").alias("arg_types"))
     symbols = raw.filter(F.col("row_kind") == "symbol").select(
         F.col("node_id").alias("decl_id"), F.col("s_kind").alias("kind"),
         "name", F.col("s_fqn").alias("fqn"), F.col("s_record").alias("record"),
         F.col("s_module").alias("module"), "doc_id",
         F.col("s_n_params").alias("n_params"),
-        _split_csv_ids("s_param_ids").alias("param_ids"),
-        _split_csv("s_param_names").alias("param_names"),
+        F.col("s_param_ids").alias("param_ids"),
+        F.col("s_param_names").alias("param_names"),
         F.col("s_n_defaults").alias("n_defaults"),
-        _split_csv("s_param_types").alias("param_types"),
+        F.col("s_param_types").alias("param_types"),
         F.col("s_is_variadic").alias("is_variadic"))
     return nodes, edges, mentions, symbols

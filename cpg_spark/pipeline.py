@@ -229,11 +229,7 @@ def _link(spark, ctx):
     from cpg_spark.operators.link import link_combined
 
     nodes, edges, mentions, symbols = split_parse_output(ctx["cpg_raw"])
-    combined, stats = link_combined(
-        mentions, symbols, nodes, edges,
-        # InferenceConfiguration.inferRecords equivalent (off by default,
-        # like the reference — InferenceConfiguration.kt:44)
-        infer_records=os.environ.get("CPG_SPARK_INFER_RECORDS") == "1")
+    combined, stats = link_combined(mentions, symbols, nodes, edges)
     if os.environ.get("CPG_SPARK_SKEW_REPORT") == "1":
         # per-key histogram of the join key (SURVEY §7.3) — one extra
         # aggregation job, so opt-in

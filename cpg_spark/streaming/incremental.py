@@ -7,7 +7,7 @@ docs table grows continuously; this module is the incremental-scan path:
 
 * ``readStream`` over the docs directory (file source; on a cluster the
   same code points at an Iceberg table with incremental scan),
-* the SAME ``parse_docs`` mapInPandas operator (vectorized parse is
+* the SAME ``parse_docs`` mapInArrow operator (vectorized parse is
   streaming-safe: its span cache lives for one task, no cross-batch
   state; streaming input skips the content shuffle),
 * ``writeStream`` appending to the cpg_raw table, checkpointed — resume

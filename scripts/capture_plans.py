@@ -5,7 +5,8 @@ The point: show that the declarative formulation actually produces the
 plans we designed for — filter/column pushdown into the parquet scans,
 broadcast joins on the symbol dimensions, whole-stage codegen over the
 relational stages — and that the UDF stages are Arrow-vectorized
-(`mapInPandas`/`cogroup`), not row-at-a-time Python.
+(`mapInArrow`/`applyInArrow`/`applyInPandas`), not row-at-a-time
+Python.
 """
 
 from __future__ import annotations
@@ -125,7 +126,7 @@ def main() -> None:
     sections.append(
         "## cpg_link_calls (broadcast path)\n\n"
         "mentions x symbols name join — expect BroadcastHashJoin (symbol "
-        "dim broadcast), ArrowEvalPython/mapInPandas ONLY in the parse "
+        "dim broadcast), PythonMapInArrow ONLY in the parse "
         "leaf (vectorized), window for innermost-winner selection\n\n"
         f"```\n{trim(plan_of(linked), 80)}\n```\n")
 
@@ -151,7 +152,7 @@ def main() -> None:
         "Generated by `python scripts/capture_plans.py` (sf0.01, local[8]).\n"
         "What to look for: `PushedFilters`/`ReadSchema` on scans, "
         "`BroadcastHashJoin` for small dims, `WholeStageCodegen` spans over "
-        "the relational stages, and Arrow-vectorized (`mapInPandas`) "
+        "the relational stages, and Arrow-vectorized (`mapInArrow`) "
         "python only at the parse/refine leaves.\n\n")
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(header + "\n".join(sections))

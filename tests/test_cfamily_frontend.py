@@ -148,7 +148,8 @@ def test_java_refine_if_merge(spark):
     initializer path (else-branch read keeps it live) and the then-write."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.dfg_refine import apply_refinement, refine_dfg
+    from cpg_spark.operators.dfg_refine import (apply_refinement,
+                                                refine_dfg_delta)
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -161,8 +162,10 @@ def test_java_refine_if_merge(spark):
     )
     raw = parse_docs(docs).persist()
     nodes, edges, _, _ = split_parse_output(raw)
-    adds, removes = refine_dfg(nodes, edges)
-    refined = apply_refinement(edges, adds, removes)
+    delta = refine_dfg_delta(nodes, edges)
+    refined = apply_refinement(
+        edges, delta.filter(F.col("action") == "add").drop("action"),
+        delta.filter(F.col("action") == "remove").drop("action"))
     # the read of `a` in `int b = a;` (line 10)
     into = (
         refined.filter(F.col("pred") == "DFG")

@@ -115,7 +115,8 @@ def test_symbol_configuration_with_symbols():
 
 def test_defines_flow_through_parse_docs(spark, compdb):
     """compdb -D defines reach the frontend: a doc whose code uses MAX
-    (defined -DMAX=4) folds it to the literal 4 via docs_with_defines."""
+    (defined -DMAX=4) folds it to the literal 4 via docs_with_defines.
+    A parameter type spelled with a comma stays one list entry."""
     from cpg_spark.operators.parse import parse_docs, split_parse_output
     from cpg_spark.schemas import DOCS_SCHEMA
     from cpg_spark.sources.compdb import docs_with_defines
@@ -125,10 +126,11 @@ def test_defines_flow_through_parse_docs(spark, compdb):
     docs = spark.createDataFrame(
         [{"doc_id": "/src/main.cpp",
           "spans": [{"kind": "code/cpp",
-                     "text": "int main() { int a = MAX; return a; }\n",
+                     "text": "int main() { int a = MAX; return a; }\n"
+                             "void f(std::map<int, int> m, int x) {}\n",
                      "media_ref": None, "offset": 0}]}],
         DOCS_SCHEMA)
-    nodes, _, _, _ = split_parse_output(
+    nodes, _, _, symbols = split_parse_output(
         parse_docs(docs_with_defines(docs, options)))
     lits = {r["name"] for r in
             nodes.filter(F.col("label") == "Literal").collect()}
@@ -136,6 +138,8 @@ def test_defines_flow_through_parse_docs(spark, compdb):
     refs = nodes.filter((F.col("label") == "DeclaredReferenceExpression")
                         & (F.col("name") == "MAX"))
     assert refs.count() == 0
+    f = symbols.filter(F.col("name") == "f").collect()
+    assert [(r["n_params"], len(r["param_types"])) for r in f] == [(2, 2)]
 
 
 MAX_SRC = "int main() { int a = MAX; return a; }\n"

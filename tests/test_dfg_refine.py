@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.dfg_refine import apply_refinement, refine_dfg
+from cpg_spark.operators.dfg_refine import apply_refinement, refine_dfg_delta
 from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.schemas import DOCS_SCHEMA
 
@@ -52,8 +52,10 @@ def _docs(spark, src):
 def _facts(spark, src):
     raw = parse_docs(_docs(spark, src)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    adds, removes = refine_dfg(nodes, edges)
-    refined = apply_refinement(edges, adds, removes)
+    delta = refine_dfg_delta(nodes, edges)
+    refined = apply_refinement(
+        edges, delta.filter(F.col("action") == "add").drop("action"),
+        delta.filter(F.col("action") == "remove").drop("action"))
     named = (
         refined.filter(F.col("pred") == "DFG")
         .join(nodes.select(F.col("node_id").alias("subj"),

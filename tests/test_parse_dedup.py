@@ -13,7 +13,7 @@ from cpg_spark.fixtures_templates import TEMPLATE_FIXTURES
 from cpg_spark.frontends import FRONTENDS
 from cpg_spark.frontends.eog import expand_expression_eog
 from cpg_spark.operators.parse import (
-    _COLS,
+    PARSE_OUT_SCHEMA,
     _SpanParseCache,
     _graph_rows,
     parse_docs,
@@ -25,10 +25,14 @@ from cpg_spark.synth import fixture_docs
 PY_SRC = "def dup(a, b):\n    c = a + b\n    return c\n"
 BROKEN_PY = "def broken(:\n    pass\n"
 COPIES = 3
+_COLS = PARSE_OUT_SCHEMA.fieldNames()
 
 
 def _key(values) -> tuple:
-    return tuple("<null>" if v is None else str(v) for v in values)
+    # a collected map keeps no key order
+    return tuple("<null>" if v is None
+                 else str(sorted(v.items()) if isinstance(v, dict) else v)
+                 for v in values)
 
 
 def _colocated_ids(spark, bases) -> dict:
@@ -87,7 +91,7 @@ def test_duplicates_parse_identical_to_reference(spark):
     document-scoped ids."""
     corpus = _duplicate_corpus(spark)
     raw = parse_docs(spark.createDataFrame(corpus, schema=DOCS_SCHEMA))
-    got = [r.asDict() for r in raw.collect()]
+    got = [r.asDict(recursive=True) for r in raw.collect()]
     assert sorted(_key(r[c] for c in _COLS) for r in got) == \
         _reference_rows(corpus)
     # Type nodes and inferred declarations carry content-hash ids by
