@@ -61,10 +61,13 @@ def may_null_values(nodes: DataFrame, edges: DataFrame,
     ).select("node_id")
     carriers = nodes.filter(F.col("label").isin(*_VALUE_LABELS)).select(
         F.col("node_id").alias("tgt"))
+    # loop-invariant: materialized once so the rounds do not re-run a
+    # lazy input (a fresh parse)
     dfg = (
         edges.filter(F.col("pred") == "DFG")
         .select(F.col("subj").alias("src"), F.col("obj").alias("tgt"))
         .join(carriers, "tgt")
+        .localCheckpoint(eager=True)
     )
     known = seeds.localCheckpoint(eager=True)
     for _ in range(max_iters):

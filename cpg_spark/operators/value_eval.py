@@ -86,6 +86,13 @@ def evaluate_constants(nodes: DataFrame, edges: DataFrame,
     for every node with a derivable compile-time constant.  Numeric
     constants carry ``value`` (booleans additionally ``is_bool``); string
     constants carry ``s_value``."""
+    # every round joins dimensions built from these; over a lazy input
+    # (a fresh parse) each round would re-run the Python parse, so
+    # materialize the projected inputs once
+    nodes = nodes.select("node_id", "label", "name", "props") \
+        .localCheckpoint(eager=True)
+    edges = edges.filter(F.col("pred").isin("AST", "DFG", "REFERS_TO")) \
+        .select("subj", "pred", "obj", "props").localCheckpoint(eager=True)
     props_val = F.col("props").getItem("value")
     # a literal is a STRING when the frontend recorded a quoted source
     # value (python repr / C string or char token) — checked before the

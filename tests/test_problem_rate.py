@@ -7,11 +7,19 @@ cpg_problem_rate golden."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cpg_spark import queries as Q
+from cpg_spark.sources import realcorpus
 
 SF = "/root/testdata/sf0.001"
+
+# the corpus is the reference checkout; real_file_docs raises without it
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(realcorpus.DEFAULT_ROOT),
+    reason=f"reference corpus {realcorpus.DEFAULT_ROOT} not present")
 
 
 @pytest.fixture(scope="module")
