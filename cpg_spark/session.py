@@ -18,13 +18,9 @@ _CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max",
 
 
 def _host_memory_bytes() -> int:
-    """Physical memory (``MemTotal``), or the cgroup limit when lower."""
-    try:
-        with open("/proc/meminfo") as f:
-            total = next(int(line.split()[1]) * 1024 for line in f
-                         if line.startswith("MemTotal:"))
-    except OSError:
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    """Physical memory (``MemTotal`` on Linux), or the cgroup limit when
+    lower."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     for path in _CGROUP_LIMITS:
         try:
             with open(path) as f:

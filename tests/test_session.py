@@ -2,23 +2,42 @@
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
+from cpg_spark import session
 from cpg_spark.session import default_driver_memory
 
+GIB = 1 << 30
 
-@pytest.mark.skipif(not os.path.isfile("/proc/meminfo"),
-                    reason="/proc/meminfo not present")
-def test_default_heap_is_a_share_of_host_memory(monkeypatch):
+
+def _fake_host(monkeypatch, tmp_path, phys_bytes, limits):
+    """Physical memory ``phys_bytes``; ``limits`` are the cgroup files'
+    contents (``None`` for a file that does not exist)."""
+    sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_bytes // 4096}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    paths = []
+    for i, text in enumerate(limits):
+        path = tmp_path / f"limit{i}"
+        if text is not None:
+            path.write_text(text + "\n")
+        paths.append(str(path))
+    monkeypatch.setattr(session, "_CGROUP_LIMITS", tuple(paths))
     monkeypatch.delenv("CPG_SPARK_DRIVER_MEM", raising=False)
-    with open("/proc/meminfo") as f:
-        mem_total_mb = next(int(line.split()[1]) // 1024 for line in f
-                            if line.startswith("MemTotal:"))
-    heap = default_driver_memory()
-    assert heap.endswith("m")
-    assert 0 < int(heap[:-1]) < mem_total_mb
+
+
+def test_default_heap_is_a_share_of_host_memory(monkeypatch, tmp_path):
+    _fake_host(monkeypatch, tmp_path, 10 * GIB, ["max", None])
+    assert default_driver_memory() == "4096m"
+
+
+def test_lower_cgroup_limit_wins(monkeypatch, tmp_path):
+    _fake_host(monkeypatch, tmp_path, 16 * GIB, ["max", str(5 * GIB)])
+    assert default_driver_memory() == "2048m"
+
+
+def test_unlimited_cgroup_keeps_physical_memory(monkeypatch, tmp_path):
+    # cgroup v1 reads an unlimited limit as a number near 2**63
+    _fake_host(monkeypatch, tmp_path, 10 * GIB,
+               [None, "9223372036854771712"])
+    assert default_driver_memory() == "4096m"
 
 
 def test_env_overrides_default_heap(monkeypatch):
