@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[cpus] (``--cpus``, else
+``session.default_cpus()``).
 
 Prints ONE JSON line:
   {"metric": "total_runtime", "value": N, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": 0.1,
+   "queries": {...per-query sec...}, "skipped": [...untimed queries...],
+   "sf": 0.1,
    "cpg_docs_per_sec": D, "cpg_docs": N}
 
 The CPG pipeline benchmark (parse -> link -> triples over the
@@ -196,6 +198,7 @@ def main() -> None:
     from cpg_spark.session import build_session
 
     import __spark_entry__ as entrymod
+    from cpg_spark.sources import realcorpus
 
     spark = build_session(app_name="cpg_spark_bench", cpus=args.cpus)
     t_total0 = time.time()
@@ -205,9 +208,15 @@ def main() -> None:
     cpg_sec, n_docs, cpg_runs = run_cpg_bench(spark, n_docs)
     per_query["cpg_pipeline"] = round(cpg_sec, 3)
 
+    # cpg_problem_rate parses the reference checkout, which a host may
+    # not have (real_file_docs raises rather than time an empty corpus)
+    skipped = ([] if os.path.isdir(realcorpus.DEFAULT_ROOT)
+               else ["cpg_problem_rate"])
     if not args.cpg_only:
         qs = entrymod.queries()
         for name in BENCH_QUERIES:
+            if name in skipped:
+                continue
             # best-of-2 per query: ambient host contention swings even
             # 0.5 s relational queries 3-4x on this VM (a bench run with
             # NO local competitor measured every unrelated query
@@ -235,11 +244,12 @@ def main() -> None:
         "wall_sec": wall,
         "unit": "sec",
         "queries": per_query,
+        "skipped": skipped,
         "sf": sf,
         "cpg_docs": n_docs,
         "cpg_docs_per_sec": round(n_docs / cpg_sec, 1),
         "cpg_pipeline_runs": [round(r, 3) for r in cpg_runs],
-        "cpus": args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": spark.sparkContext.defaultParallelism,
         "scratch": scratch or "default shared disk",
     }))
     spark.stop()

@@ -51,8 +51,7 @@ def type_components(nodes: DataFrame, edges: DataFrame,
         alias.unpersist()
         spark = nodes.sparkSession
         return spark.createDataFrame([], "node bigint, component bigint")
-    return connected_components(alias, max_rounds=max_rounds,
-                                checkpoint=False).persist()
+    return connected_components(alias, max_rounds=max_rounds).persist()
 
 
 def remap_types(nodes: DataFrame, edges: DataFrame, comp: DataFrame):

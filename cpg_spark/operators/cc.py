@@ -25,7 +25,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 50,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Returns (node, component) where component = min node id reachable.
 
@@ -38,9 +37,7 @@ def connected_components(
     )
     # parent pointers: every node starts pointing at its min neighbor or self
     e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = e.distinct()
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
+    e = e.distinct().localCheckpoint(eager=True)
 
     for _ in range(max_rounds):
         # large-star: connect every strictly-larger neighbor to the min
@@ -66,9 +63,7 @@ def connected_components(
             .unionByName(min_small.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-        )
-        if checkpoint:
-            small = small.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         # convergence: every node points directly at its component min —
         # i.e. the graph is a star forest: no v appears as a u with a
         # different target

@@ -24,6 +24,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -370,3 +371,45 @@ def run_cpg_pipeline(spark: SparkSession, docs: DataFrame, workdir: str,
 def triples(edges: DataFrame) -> DataFrame:
     """The deliverable (subj, pred, obj) projection."""
     return edges.select("subj", "pred", "obj")
+
+
+class CpgGraph:
+    """The parse and link output of ``docs``, built in the pipeline's
+    stage order with its stage functions, for driver queries and tests.
+
+    Construction runs ``parse_docs`` and checkpoints its output once, as
+    the pipeline commits ``cpg_raw``; ``nodes``, ``edges``, ``mentions``
+    and ``symbols`` are ``split_parse_output``'s views of it.  The first
+    read of ``linked``, ``inferred`` or ``link_stats`` runs
+    ``link_combined`` and checkpoints its combined table once, as the
+    pipeline commits ``linked``, so parse-only callers never pay link.
+    Every exposed frame's plan is a scan of a checkpoint, with no Python
+    stage and no shuffle: a driver loop over these frames never re-runs
+    parse or link."""
+
+    def __init__(self, docs: DataFrame):
+        raw = parse_docs(docs).localCheckpoint(eager=True)
+        self.nodes, self.edges, self.mentions, self.symbols = (
+            split_parse_output(raw))
+
+    @cached_property
+    def _link(self):
+        from cpg_spark.operators.link import link_combined, split_linked
+
+        combined, stats = link_combined(self.mentions, self.symbols,
+                                        self.nodes, self.edges)
+        return (*split_linked(combined.localCheckpoint(eager=True)), stats)
+
+    @cached_property
+    def linked(self) -> DataFrame:
+        """Cross-document edges (CALLS, REFERS_TO, ...) from link."""
+        return self._link[0]
+
+    @cached_property
+    def inferred(self) -> DataFrame:
+        """Nodes link inferred for unresolved targets."""
+        return self._link[1]
+
+    @cached_property
+    def link_stats(self) -> dict:
+        return self._link[2]

@@ -41,6 +41,17 @@ def default_driver_memory() -> str:
     return f"{int(_host_memory_bytes() * _HEAP_SHARE) >> 20}m"
 
 
+def default_cpus() -> int:
+    """Local parallelism for a session: ``$SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on.  One Python worker per slot
+    sits beside the driver JVM, so more slots than cores only adds
+    memory pressure."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    return len(os.sched_getaffinity(0))
+
+
 def build_session(
     app_name: str = "cpg_spark",
     cpus: int | None = None,
@@ -50,6 +61,9 @@ def build_session(
     """local[N] session sized from the host; on a real cluster the same
     pipeline runs unchanged via ``spark-submit --py-files`` (the only
     local-specific knob is ``spark.driver.memory``).
+
+    ``cpus`` defaults to :func:`default_cpus` (``$SPARK_GRAFT_CPUS``, else
+    the host's usable cores).
 
     The driver heap is ``$CPG_SPARK_DRIVER_MEM`` when set, else 40% of
     the host's physical memory (``MemTotal``, or the cgroup memory limit
@@ -65,7 +79,7 @@ def build_session(
             pkg_root + (os.pathsep + existing if existing else "")
         )
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # match core count locally; on a cluster this should be
         # ~2-3x total executor cores, or left to AQE coalescing

@@ -274,11 +274,6 @@ _CORPUS = (
 def modern_docs(spark: SparkSession) -> DataFrame:
     """Docs table over the embedded modern-syntax corpus (one code span
     per snippet; a bounded literal list — ~20 rows, not a scan)."""
-    from cpg_spark.schemas import DOCS_SCHEMA
-    rows = [
-        {"doc_id": doc_id,
-         "spans": [{"kind": kind, "text": text, "media_ref": None,
-                    "offset": 0}]}
-        for doc_id, kind, text in sorted(_CORPUS)
-    ]
-    return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    from cpg_spark.synth import code_docs
+
+    return code_docs(spark, sorted(_CORPUS))

@@ -10,6 +10,8 @@ has a plain ``documents(doc_id, text, ...)`` table, so we synthesize the
 spans-shaped table two ways, both deterministic (no RNG state leaks — every
 value is a pure function of (doc_id, seed)):
 
+* :func:`code_docs` — one code span per doc from ``(doc_id, kind, text)``
+  rows: the hand-written fixtures of the driver queries and tests.
 * :func:`fixture_docs` — the reference repo's own per-language test programs
   as code spans, interleaved with text and media spans (FIXTURES.md §2: the
   pipeline must provably ignore non-code spans without disturbing order).
@@ -57,6 +59,18 @@ def _interleave(code_spans: list[tuple[str, str]], doc_key: str) -> list[dict]:
                           "media_ref": f"blob://{doc_key}/{i}", "offset": off})
             off += 1
     return spans
+
+
+def code_docs(spark: SparkSession, rows) -> DataFrame:
+    """One ``DOCS_SCHEMA`` doc per ``(doc_id, kind, text)`` or
+    ``(doc_id, kind, text, offset)`` row, holding that one code span.
+    The offset (default 0) is per-row data: it feeds the node-id hash."""
+    return spark.createDataFrame(
+        [{"doc_id": r[0],
+          "spans": [{"kind": r[1], "text": r[2], "media_ref": None,
+                     "offset": r[3] if len(r) > 3 else 0}]}
+         for r in rows],
+        schema=DOCS_SCHEMA)
 
 
 def fixture_docs(spark: SparkSession, langs: tuple = ("python", "go")) -> DataFrame:

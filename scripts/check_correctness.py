@@ -78,7 +78,8 @@ def main():
     import __spark_entry__ as entry
     from cpg_spark.session import build_session
 
-    spark = build_session(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    spark = build_session()
+    print(f"local[{spark.sparkContext.defaultParallelism}]")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(args.sf_dir, f"{t}.parquet")

@@ -17,9 +17,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 FNPTR_OR_CAST_C = """
 void foo(int i) {
@@ -89,32 +88,22 @@ private:
 """
 
 
-def _graph(spark, doc_id, src):
-    docs = spark.createDataFrame(
-        [{"doc_id": doc_id,
-          "spans": [{"kind": "code/cpp", "text": src, "media_ref": None,
-                     "offset": 0}]}], schema=DOCS_SCHEMA)
-    return split_parse_output(parse_docs(docs).persist())
-
-
 def test_function_call_or_type_cast(spark):
     """testFunctionCallOrTypeCast (CXXAmbiguitiesTest:88-117)."""
-    nodes, edges, mentions, symbols = _graph(
-        spark, "cpp/ambig/0001", FNPTR_OR_CAST_C)
-    labels = {(r["label"], r["name"]) for r in nodes.collect()}
+    g = CpgGraph(code_docs(spark, [("cpp/ambig/0001", "code/cpp",
+                                    FNPTR_OR_CAST_C)]))
+    labels = {(r["label"], r["name"]) for r in g.nodes.collect()}
     assert ("FunctionDeclaration", "main") in labels
     assert ("FunctionDeclaration", "foo") in labels
     # the two (A)(B) statements where A names a type are casts
-    casts = {r["name"] for r in nodes.filter(
+    casts = {r["name"] for r in g.nodes.filter(
         F.col("label") == "CastExpression").collect()}
     assert casts == {"int", "S*"}  # s_t_p resolves through the chain
     # the two fnptr invocations are calls and resolve to foo through the
     # backward DFG walk (CallResolver.java:1402-1434)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
     callees = {
-        r["callee"] for r in linked.filter(F.col("pred") == "CALLS")
-        .join(nodes.select(F.col("node_id").alias("obj"),
+        r["callee"] for r in g.linked.filter(F.col("pred") == "CALLS")
+        .join(g.nodes.select(F.col("node_id").alias("obj"),
                            F.col("name").alias("callee")), "obj").collect()
     }
     assert "foo" in callees
@@ -123,8 +112,9 @@ def test_function_call_or_type_cast(spark):
 def test_method_or_function_call(spark):
     """testMethodOrFunction (CXXAmbiguitiesTest:125-141): parse must
     survive, records and main intact."""
-    nodes, _, _, _ = _graph(spark, "cpp/ambig/0002", METHOD_OR_FUNCTION_CPP)
-    got = {(r["label"], r["name"]) for r in nodes.collect()}
+    g = CpgGraph(code_docs(spark, [("cpp/ambig/0002", "code/cpp",
+                                    METHOD_OR_FUNCTION_CPP)]))
+    got = {(r["label"], r["name"]) for r in g.nodes.collect()}
     assert ("RecordDeclaration", "A") in got
     assert ("RecordDeclaration", "B") in got
     assert ("FunctionDeclaration", "main") in got
@@ -136,8 +126,9 @@ def test_call_me_crazy(spark):
     """testCallVsFunctionDeclaration (CXXAmbiguitiesTest:55-82): the
     record and its method survive; the nested call in the body parses as
     real CallExpressions (no CDT mis-parse to contain)."""
-    nodes, _, _, _ = _graph(spark, "cpp/ambig/0003", CALL_ME_CRAZY_H)
-    got = {(r["label"], r["name"]) for r in nodes.collect()}
+    g = CpgGraph(code_docs(spark, [("cpp/ambig/0003", "code/cpp",
+                                    CALL_ME_CRAZY_H)]))
+    got = {(r["label"], r["name"]) for r in g.nodes.collect()}
     assert ("RecordDeclaration", "MyClass") in got
     assert ("MethodDeclaration", "someFunction") in got
     calls = {n for lbl, n in got if lbl == "CallExpression"}

@@ -24,24 +24,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.fixtures_cfamily import CPP_FIXTURES, JAVA_FIXTURES
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 
-def _run(spark, rows):
-    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    all_edges = edges.select("subj", "pred", "obj").unionByName(
-        linked.select("subj", "pred", "obj"))
-    nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
+def _calls(spark, rows):
+    """Every CALLS edge (frontend-local and linked) of the graph of
+    ``rows`` as one dict per call site."""
+    g = CpgGraph(code_docs(spark, rows))
+    all_edges = g.edges.select("subj", "pred", "obj").unionByName(
+        g.linked.select("subj", "pred", "obj"))
+    nd = {r["node_id"]: r.asDict(recursive=True) for r in g.nodes.collect()}
     inf = {r["node_id"]: r.asDict(recursive=True)
-           for r in inferred.collect()}
+           for r in g.inferred.collect()}
     men = {r["mention_id"]: r.asDict(recursive=True)
-           for r in mentions.collect()}
+           for r in g.mentions.collect()}
     calls = []
     for r in all_edges.filter(F.col("pred") == "CALLS").collect():
         s = men.get(r["subj"]) or nd.get(r["subj"])
@@ -57,7 +54,6 @@ def _run(spark, rows):
             "target_label": o["label"],
             "inferred": bool(o["is_inferred"]),
         })
-    raw.unpersist()
     return calls
 
 
@@ -70,15 +66,14 @@ def _targets(calls, site, args=None):
 
 @pytest.fixture(scope="module")
 def cpp_calls(spark):
-    return _run(spark, [("cpp/calls/0001",
-                         [("code/cpp", CPP_FIXTURES["calls"], None, 1)])])
+    return _calls(spark, [("cpp/calls/0001", "code/cpp",
+                           CPP_FIXTURES["calls"], 1)])
 
 
 @pytest.fixture(scope="module")
 def java_calls(spark):
-    rows = [(f"java/{n}/0001", [("code/java", JAVA_FIXTURES[n], None, 1)])
-            for n in ("Calls", "External", "SuperClass")]
-    return _run(spark, rows)
+    return _calls(spark, [(f"java/{n}/0001", "code/java", JAVA_FIXTURES[n], 1)
+                          for n in ("Calls", "External", "SuperClass")])
 
 
 def test_cpp_exact_signature_resolution(cpp_calls):
@@ -156,10 +151,9 @@ def test_java_override_dispatch(java_calls):
 
 @pytest.fixture(scope="module")
 def more_cpp(spark):
-    rows = [(f"cpp/{n}/0001", [("code/cpp", CPP_FIXTURES[n], None, 1)])
-            for n in ("partialDefaults", "defaultInMethod",
-                      "prio_defined", "prio_undefined")]
-    return _run(spark, rows)
+    return _calls(spark, [(f"cpp/{n}/0001", "code/cpp", CPP_FIXTURES[n], 1)
+                          for n in ("partialDefaults", "defaultInMethod",
+                                    "prio_defined", "prio_undefined")])
 
 
 def test_partial_defaults(more_cpp):
@@ -202,33 +196,23 @@ def test_inherited_field_member_ref(spark):
     """VariableUsageResolver.java:375-407: a member ref on a subclass
     instance resolves to the FIELD declared on the ancestor record
     (c.shared with c: FChild resolves to FBase.shared across docs)."""
-    rows = [
-        ("java/FBase/0001",
-         [("code/java", "public class FBase {\n  public int shared = 1;\n}\n",
-           None, 1)]),
-        ("java/FChild/0001",
-         [("code/java", "public class FChild extends FBase {\n}\n",
-           None, 1)]),
-        ("java/FMain/0001",
-         [("code/java",
-           "public class FMain {\n  public int go() {\n"
-           "    FChild c = new FChild();\n    return c.shared;\n  }\n}\n",
-           None, 1)]),
-    ]
-    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
+    g = CpgGraph(code_docs(spark, [
+        ("java/FBase/0001", "code/java",
+         "public class FBase {\n  public int shared = 1;\n}\n", 1),
+        ("java/FChild/0001", "code/java",
+         "public class FChild extends FBase {\n}\n", 1),
+        ("java/FMain/0001", "code/java",
+         "public class FMain {\n  public int go() {\n"
+         "    FChild c = new FChild();\n    return c.shared;\n  }\n}\n", 1),
+    ]))
+    nd = {r["node_id"]: r.asDict(recursive=True) for r in g.nodes.collect()}
     men = {r["mention_id"]: r.asDict(recursive=True)
-           for r in mentions.collect()}
+           for r in g.mentions.collect()}
     hits = []
-    for r in linked.filter(F.col("pred") == "REFERS_TO").collect():
+    for r in g.linked.filter(F.col("pred") == "REFERS_TO").collect():
         s, o = men.get(r["subj"]), nd.get(r["obj"])
         if s and s["name"] == "shared":
             hits.append(o)
-    raw.unpersist()
     assert len(hits) == 1, hits
     assert hits[0]["label"] == "FieldDeclaration"
     assert hits[0]["doc_id"] == "java/FBase/0001"
@@ -240,15 +224,11 @@ def test_inherited_field_member_ref(spark):
 def super_calls(spark):
     """SuperCallTest corpus: SubClass + SuperClass + the two interfaces,
     one document each (reference superCalls/ resources)."""
-    rows = [("java/SubClass/0001",
-             [("code/java", JAVA_FIXTURES["SubClass"], None, 1)]),
-            ("java/SCSuper/0001",
-             [("code/java", JAVA_FIXTURES["SC_SuperClass"], None, 1)]),
-            ("java/Interface1/0001",
-             [("code/java", JAVA_FIXTURES["Interface1"], None, 1)]),
-            ("java/Interface2/0001",
-             [("code/java", JAVA_FIXTURES["Interface2"], None, 1)])]
-    return _run(spark, rows)
+    return _calls(spark, [
+        ("java/SubClass/0001", "code/java", JAVA_FIXTURES["SubClass"], 1),
+        ("java/SCSuper/0001", "code/java", JAVA_FIXTURES["SC_SuperClass"], 1),
+        ("java/Interface1/0001", "code/java", JAVA_FIXTURES["Interface1"], 1),
+        ("java/Interface2/0001", "code/java", JAVA_FIXTURES["Interface2"], 1)])
 
 
 def test_super_calls_bind_supertype_method(super_calls):
@@ -270,23 +250,17 @@ def test_super_calls_bind_supertype_method(super_calls):
 
 def test_super_field_ref(spark, super_calls):
     """super.field in getSuperField resolves to SuperClass.field."""
-    rows = [("java/SubClass/0001",
-             [("code/java", JAVA_FIXTURES["SubClass"], None, 1)]),
-            ("java/SCSuper/0001",
-             [("code/java", JAVA_FIXTURES["SC_SuperClass"], None, 1)])]
-    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    nd = {r["node_id"]: r.asDict(recursive=True) for r in nodes.collect()}
+    g = CpgGraph(code_docs(spark, [
+        ("java/SubClass/0001", "code/java", JAVA_FIXTURES["SubClass"], 1),
+        ("java/SCSuper/0001", "code/java",
+         JAVA_FIXTURES["SC_SuperClass"], 1)]))
+    nd = {r["node_id"]: r.asDict(recursive=True) for r in g.nodes.collect()}
     men = {r["mention_id"]: r.asDict(recursive=True)
-           for r in mentions.collect()}
+           for r in g.mentions.collect()}
     hits = [nd.get(r["obj"]) for r in
-            linked.filter(F.col("pred") == "REFERS_TO").collect()
+            g.linked.filter(F.col("pred") == "REFERS_TO").collect()
             if men.get(r["subj"], {}).get("name") == "field"
             and men.get(r["subj"], {}).get("kind") == "member_ref"]
-    raw.unpersist()
     hits = [h for h in hits if h]
     assert len(hits) == 1
     assert hits[0]["label"] == "FieldDeclaration"
@@ -325,29 +299,16 @@ def test_fix328_super_field_write_binds_inherited_field(spark):
     protected field across documents (same package `my`) — the package
     clause must root the scope path so same-package symbols are visible
     (JavaLanguageFrontendTest fix-328 leg)."""
-    from pyspark.sql import functions as F
-
-    from cpg_spark.operators.link import link_combined, split_linked
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
-
     cat = ("package my;\n\npublic class Cat extends Animal implements "
            "OtherBehavior {\n\n    public Cat() {\n        super.myField = 2;"
            "\n    }\n}\n")
     animal = ("package my;\n\npublic abstract class Animal implements "
               "Behavior<T> {\n\n    protected int myField;\n\n}\n")
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/Cat/0001", "spans": [{"kind": "code/java",
-          "text": cat, "media_ref": None, "offset": 0}]},
-         {"doc_id": "java/Animal/0001", "spans": [{"kind": "code/java",
-          "text": animal, "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    n = nodes.select("node_id", "label", "name", "doc_id")
+    g = CpgGraph(code_docs(spark, [("java/Cat/0001", "code/java", cat),
+                                   ("java/Animal/0001", "code/java", animal)]))
+    n = g.nodes.select("node_id", "label", "name", "doc_id")
     hits = (
-        linked.filter(F.col("pred") == "REFERS_TO")
+        g.linked.filter(F.col("pred") == "REFERS_TO")
         .join(n.withColumnRenamed("node_id", "subj")
               .withColumnRenamed("name", "sname")
               .withColumnRenamed("label", "slab")

@@ -8,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.canonicalize import remap_types, type_components
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 DOC_A = """\
 package p
@@ -34,24 +34,12 @@ func f() {
 
 @pytest.fixture(scope="module")
 def canonical(spark):
-    docs = spark.createDataFrame(
-        [
-            {"doc_id": "go/alias_a/0001",
-             "spans": [{"kind": "code/go", "text": DOC_A, "media_ref": None,
-                        "offset": 0}]},
-            {"doc_id": "go/alias_b/0001",
-             "spans": [{"kind": "code/go", "text": DOC_B, "media_ref": None,
-                        "offset": 0}]},
-        ],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("go/alias_a/0001", "code/go", DOC_A),
+                                   ("go/alias_b/0001", "code/go", DOC_B)]))
     # the pipeline's order: component map first, then the remap
-    comp = type_components(nodes, edges)
-    n2, e2 = remap_types(nodes, edges, comp)
-    yield nodes, edges, n2, e2, comp
-    raw.unpersist()
+    comp = type_components(g.nodes, g.edges)
+    n2, e2 = remap_types(g.nodes, g.edges, comp)
+    return g.nodes, g.edges, n2, e2, comp
 
 
 def test_alias_chain_single_component(canonical):

@@ -150,18 +150,13 @@ def test_java_refine_if_merge(spark):
 
     from cpg_spark.operators.dfg_refine import (apply_refinement,
                                                 refine_dfg_delta)
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.pipeline import CpgGraph
+    from cpg_spark.synth import code_docs
 
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/ifmerge/0001",
-          "spans": [{"kind": "code/java",
-                     "text": JAVA_FIXTURES["ControlFlowSensitiveDFGIfMerge"],
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [
+        ("java/ifmerge/0001", "code/java",
+         JAVA_FIXTURES["ControlFlowSensitiveDFGIfMerge"])]))
+    nodes, edges = g.nodes, g.edges
     delta = refine_dfg_delta(nodes, edges)
     refined = apply_refinement(
         edges, delta.filter(F.col("action") == "add").drop("action"),
@@ -183,7 +178,6 @@ def test_java_refine_if_merge(spark):
     assert ("DeclaredReferenceExpression", 5) in srcs
     # initializer path survives (else branch does not write a)
     assert ("VariableDeclaration", 3) in srcs
-    raw.unpersist()
 
 
 def test_constructors_cpp_overload_resolution():

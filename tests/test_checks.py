@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from cpg_spark.operators.checks import (null_pointer_findings,
                                         out_of_bounds_findings)
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 JAVA_SRC = """
 public class App {
@@ -47,16 +47,9 @@ def f():
 
 @pytest.fixture(scope="module")
 def graph(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/app/0001",
-          "spans": [{"kind": "code/java", "text": JAVA_SRC,
-                     "media_ref": None, "offset": 0}]},
-         {"doc_id": "py/mod/0001",
-          "spans": [{"kind": "code/python", "text": PY_SRC,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs))
-    return nodes.persist(), edges.persist()
+    g = CpgGraph(code_docs(spark, [("java/app/0001", "code/java", JAVA_SRC),
+                                   ("py/mod/0001", "code/python", PY_SRC)]))
+    return g.nodes, g.edges
 
 
 def test_array_creation_expression(graph):

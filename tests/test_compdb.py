@@ -52,7 +52,7 @@ def test_options_extracted(compdb):
 
 
 def test_docs_join_and_parse(spark, compdb):
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
+    from cpg_spark.pipeline import CpgGraph
 
     sources = spark.createDataFrame(SOURCES, "path string, content string")
     docs, options = compdb_docs(compdb, sources)
@@ -62,7 +62,7 @@ def test_docs_join_and_parse(spark, compdb):
     opt = {r["doc_id"]: r for r in options.collect()}
     assert opt["/src/main.cpp"]["defines"]["MAX"] == "4"
     # the docs flow through the normal parse stage
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs).persist())
+    nodes = CpgGraph(docs).nodes
     fns = {r["name"] for r in
            nodes.filter(F.col("label") == "FunctionDeclaration").collect()}
     assert {"main", "util"} <= fns
@@ -151,14 +151,11 @@ def test_defines_key_the_span_cache(spark):
     cached parse across different defines."""
     from cpg_spark.operators.parse import (
         _SpanParseCache, parse_docs, split_parse_output)
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.synth import code_docs
 
     maxes = {"cpp/a/0001": "4", "cpp/b/0001": "9",
              "cpp/c/0001": "4", "cpp/d/0001": "9"}
-    docs = spark.createDataFrame(
-        [{"doc_id": d, "spans": [{"kind": "code/cpp", "text": MAX_SRC,
-                                  "media_ref": None, "offset": 0}]}
-         for d in maxes], DOCS_SCHEMA)
+    docs = code_docs(spark, [(d, "code/cpp", MAX_SRC) for d in maxes])
     defines = spark.createDataFrame(
         [(d, {"MAX": v}) for d, v in maxes.items()],
         "doc_id string, defines map<string,string>")

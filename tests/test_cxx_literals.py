@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 INTEGER_LITERALS_CPP = """
 void zero() {
@@ -62,12 +62,8 @@ int main() {
 def _literal_types(spark, doc_id, src):
     """set of (spelled_token, value, type) for every int literal, via the
     props raw token, node name and EVAL_TYPE edge."""
-    docs = spark.createDataFrame(
-        [{"doc_id": doc_id,
-          "spans": [{"kind": "code/cpp", "text": src,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs))
+    g = CpgGraph(code_docs(spark, [(doc_id, "code/cpp", src)]))
+    nodes, edges = g.nodes, g.edges
     lits = nodes.filter(F.col("label") == "Literal").select(
         F.col("node_id").alias("lit"), F.col("name").alias("value"),
         F.col("props").getItem("value").alias("token"))

@@ -7,17 +7,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
+from cpg_spark.pipeline import CpgGraph
 from cpg_spark.query.cypher import CypherError, execute_cypher
 from cpg_spark.synth import fixture_docs
 
 
 @pytest.fixture(scope="module")
 def graph(spark):
-    raw = parse_docs(fixture_docs(spark, langs=("python",))).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    yield nodes.persist(), edges.persist()
-    raw.unpersist()
+    g = CpgGraph(fixture_docs(spark, langs=("python",)))
+    return g.nodes, g.edges
 
 
 def test_label_filter(graph):

@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.dfg_refine import apply_refinement, refine_dfg_delta
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 IF_MERGE = """\
 def f(x):
@@ -40,18 +40,9 @@ def f(n):
 """
 
 
-def _docs(spark, src):
-    return spark.createDataFrame(
-        [{"doc_id": "py/refine/0001",
-          "spans": [{"kind": "code/python", "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-
-
 def _facts(spark, src):
-    raw = parse_docs(_docs(spark, src)).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("py/refine/0001", "code/python", src)]))
+    nodes, edges = g.nodes, g.edges
     delta = refine_dfg_delta(nodes, edges)
     refined = apply_refinement(
         edges, delta.filter(F.col("action") == "add").drop("action"),
@@ -70,7 +61,6 @@ def _facts(spark, src):
                 "props")
         .collect()
     )
-    raw.unpersist()
     return named
 
 

@@ -14,7 +14,8 @@ from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
                                                     probe_supertypes)
 from cpg_spark.operators.hierarchy import supertype_record_closure
 from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 SRC = """
 public class Base { }
@@ -28,12 +29,8 @@ class Child extends Base { }
 
 @pytest.fixture(scope="module")
 def graph(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/jdkhier/0001",
-          "spans": [{"kind": "code/java", "text": SRC,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs))
+    g = CpgGraph(code_docs(spark, [("java/jdkhier/0001", "code/java", SRC)]))
+    nodes, edges = g.nodes, g.edges
     any_resolved, triggers = probe_supertypes(nodes, edges)
     # Child extends Base resolves in source; Base is no trigger
     assert any_resolved and triggers == ["HashMap", "RuntimeException"]
@@ -81,11 +78,7 @@ def test_closure_reaches_object_through_jdk_chain(spark, graph):
 def test_link_combined_carries_jdk_rows(spark, graph):
     from cpg_spark.operators.link import link_combined, split_linked
 
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/jdkhier/0001",
-          "spans": [{"kind": "code/java", "text": SRC,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
+    docs = code_docs(spark, [("java/jdkhier/0001", "code/java", SRC)])
     nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
     combined, _ = link_combined(mentions, symbols, nodes, edges,
                                 strategy="broadcast")
@@ -100,13 +93,10 @@ def test_no_trigger_adds_nothing(spark):
     type) triggers nothing: no implicit rows reach the link output."""
     from cpg_spark.operators.link import link_combined, split_linked
 
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/nojdk/0001",
-          "spans": [{"kind": "code/java",
-                     "text": "class Base { }\nclass Child extends Base { }\n"
-                             "class Odd extends Unknown { }\n",
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
+    docs = code_docs(spark, [
+        ("java/nojdk/0001", "code/java",
+         "class Base { }\nclass Child extends Base { }\n"
+         "class Odd extends Unknown { }\n")])
     nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
     assert probe_supertypes(nodes, edges) == (True, [])
     assert external_jdk_hierarchy(spark, []) is None

@@ -25,9 +25,10 @@ from collections import defaultdict, deque
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
+from cpg_spark.operators.link import link_combined
 from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 FUNC_PTR_C = r"""
 void target() {}
@@ -174,23 +175,17 @@ int main() {
 
 
 def _analyze(spark, doc_id, src):
-    docs = spark.createDataFrame(
-        [(doc_id, [("code/cpp", src, None, 1)])], DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [(doc_id, "code/cpp", src, 1)]))
     node_rows = {r["node_id"]: r.asDict(recursive=True)
-                 for r in nodes.collect()}
-    for r in inferred.collect():
+                 for r in g.nodes.collect()}
+    for r in g.inferred.collect():
         node_rows[r["node_id"]] = r.asDict(recursive=True)
     men = {r["mention_id"]: r.asDict(recursive=True)
-           for r in mentions.collect()}
-    edge_rows = [r.asDict() for r in edges.select(
+           for r in g.mentions.collect()}
+    edge_rows = [r.asDict() for r in g.edges.select(
         "subj", "pred", "obj").collect()]
-    edge_rows += [r.asDict() for r in linked.select(
+    edge_rows += [r.asDict() for r in g.linked.select(
         "subj", "pred", "obj").collect()]
-    raw.unpersist()
     return node_rows, edge_rows, men
 
 
@@ -321,11 +316,10 @@ def test_walk_is_materialized_inside_link(spark):
     leave its Python group stage in the plan, where each of its four
     consumers re-runs it (no exchange is reused above the checkpointed
     miss set it reads)."""
-    docs = spark.createDataFrame(
-        [("c/fnptr/0001", [("code/cpp", FUNC_PTR_C, None, 1)])], DOCS_SCHEMA)
+    docs = code_docs(spark, [("c/fnptr/0001", "code/cpp", FUNC_PTR_C, 1)])
     raw = parse_docs(docs).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
     combined, _ = link_combined(mentions, symbols, nodes, edges)
     plan = combined._jdf.queryExecution().executedPlan().toString()
     raw.unpersist()
-    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsInArrow" not in plan

@@ -190,16 +190,13 @@ def test_cross_doc_call_and_construct(spark):
     them (reference runs them as one module)."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_combined, split_linked
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
+    from cpg_spark.pipeline import CpgGraph
     from cpg_spark.synth import fixture_docs
 
-    raw = parse_docs(fixture_docs(spark, langs=("go",))).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, _ = split_linked(combined)
+    g = CpgGraph(fixture_docs(spark, langs=("go",)))
+    nodes = g.nodes
     resolved = (
-        linked.filter(F.col("pred") == "CALLS")
+        g.linked.filter(F.col("pred") == "CALLS")
         .join(nodes.select(F.col("node_id").alias("obj"),
                            F.col("name").alias("callee"),
                            F.col("doc_id").alias("callee_doc")), "obj")
@@ -211,7 +208,6 @@ def test_cross_doc_call_and_construct(spark):
     cross = {(r["callee"], r["caller_doc"], r["callee_doc"]) for r in resolved}
     assert ("NewMyStruct", "go/call/0001", "go/struct/0001") in cross
     assert ("myOtherFunc", "go/call/0001", "go/struct/0001") in cross
-    raw.unpersist()
 
 
 def test_labeled_break_continue():

@@ -11,8 +11,8 @@ from cpg_spark.operators.hierarchy import (
     overrides_edges,
     supertype_record_closure,
 )
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 SRC = """\
 class Base:
@@ -35,15 +35,8 @@ class Leaf(Mid):
 
 @pytest.fixture(scope="module")
 def parsed(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/hier/0001",
-          "spans": [{"kind": "code/python", "text": SRC, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    yield split_parse_output(raw)
-    raw.unpersist()
+    g = CpgGraph(code_docs(spark, [("py/hier/0001", "code/python", SRC)]))
+    return g.nodes, g.edges, g.mentions, g.symbols
 
 
 def test_supertype_closure_transitive(spark, parsed):

@@ -42,20 +42,12 @@ def test_identify_nodes_preorder(spark):
     """Ids over parsed fixture nodes are dense, and doc-major: every node
     of doc A gets a smaller id than every node of doc B > A — the
     reference's TU-then-walk order (IdentifierPass.kt:40-50)."""
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.pipeline import CpgGraph
+    from cpg_spark.synth import code_docs
 
     src = "def f(x):\n    y = x + 1\n    return y\n"
-    docs = spark.createDataFrame(
-        [
-            {"doc_id": f"py/mod{i}/0001",
-             "spans": [{"kind": "code/python", "text": src,
-                        "media_ref": None, "offset": 0}]}
-            for i in range(4)
-        ],
-        schema=DOCS_SCHEMA,
-    )
-    nodes, _, _, _ = split_parse_output(parse_docs(docs))
+    nodes = CpgGraph(code_docs(spark, [(f"py/mod{i}/0001", "code/python", src)
+                                       for i in range(4)])).nodes
     got = identify_nodes(nodes).select("doc_id", "seq_id").collect()
     n = len(got)
     assert sorted(r["seq_id"] for r in got) == list(range(n))

@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 
 from cpg_spark.operators.includes import (include_directives,
                                           load_includes, loaded_includes)
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 # cpg-core/src/test/resources/include.h
 INCLUDE_H = """/**
@@ -65,29 +64,17 @@ int SomeClass::DoSomething() { return someField; }
 
 
 def _docs(spark):
-    def d(i, t):
-        return {"doc_id": i,
-                "spans": [{"kind": "code/cpp", "text": t,
-                           "media_ref": None, "offset": 0}]}
-
-    return spark.createDataFrame(
-        [d("res/include.cpp", INCLUDE_CPP), d("res/include.h", INCLUDE_H),
-         d("res/another-include.h", ANOTHER_INCLUDE_H)],
-        DOCS_SCHEMA,
-    )
+    return code_docs(spark, [
+        ("res/include.cpp", "code/cpp", INCLUDE_CPP),
+        ("res/include.h", "code/cpp", INCLUDE_H),
+        ("res/another-include.h", "code/cpp", ANOTHER_INCLUDE_H)])
 
 
 @pytest.fixture(scope="module")
 def graph(spark):
     """load_includes -> parse -> link over the reference fixture."""
-    docs = load_includes(_docs(spark))
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    nodes, edges = nodes.persist(), edges.persist()
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    yield nodes, edges, linked.persist(), inferred
-    raw.unpersist()
+    g = CpgGraph(load_includes(_docs(spark)))
+    return g.nodes, g.edges, g.linked, g.inferred
 
 
 def test_directive_resolution(spark):
@@ -173,9 +160,8 @@ def test_load_includes_false(spark):
     RecordDeclaration (the class lives in the header), but its
     out-of-line definitions still parse as detached members carrying
     record=SomeClass."""
-    raw = parse_docs(_docs(spark).filter(
-        F.col("doc_id") == "res/include.cpp"))
-    nodes, _, _, symbols = split_parse_output(raw)
+    g = CpgGraph(_docs(spark).filter(F.col("doc_id") == "res/include.cpp"))
+    nodes, symbols = g.nodes, g.symbols
     assert nodes.filter(F.col("label") == "RecordDeclaration").count() == 0
     meth = {(r["kind"], r["name"], r["record"]) for r in symbols.collect()}
     assert ("method", "DoSomething", "SomeClass") in meth
@@ -185,17 +171,10 @@ def test_load_includes_false(spark):
 def test_transitive_and_cyclic_includes(spark):
     """A -> B -> C splices C into A (depth 2); a B <-> C cycle must not
     loop or self-splice."""
-    def d(i, t):
-        return {"doc_id": i,
-                "spans": [{"kind": "code/cpp", "text": t,
-                           "media_ref": None, "offset": 0}]}
-
-    docs = spark.createDataFrame(
-        [d("p/a.cpp", '#include "b.h"\nint main() { return 0; }\n'),
-         d("p/b.h", '#include "c.h"\nclass B {};\n'),
-         d("p/c.h", '#include "b.h"\nclass C {};\n')],
-        DOCS_SCHEMA,
-    )
+    docs = code_docs(spark, [
+        ("p/a.cpp", "code/cpp", '#include "b.h"\nint main() { return 0; }\n'),
+        ("p/b.h", "code/cpp", '#include "c.h"\nclass B {};\n'),
+        ("p/c.h", "code/cpp", '#include "b.h"\nclass C {};\n')])
     out = {r["doc_id"]: r["spans"] for r in load_includes(docs).collect()}
     a_texts = [s["text"] for s in out["p/a.cpp"]]
     assert any("class B" in t for t in a_texts)

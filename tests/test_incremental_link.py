@@ -21,16 +21,12 @@ from pyspark.sql import functions as F
 
 from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
 from cpg_spark.streaming.incremental import incremental_link
+from cpg_spark.synth import code_docs
 
 
 def _docs(spark, rows):
-    return spark.createDataFrame(
-        [{"doc_id": d,
-          "spans": [{"kind": "code/python", "text": src,
-                     "media_ref": None, "offset": 0}]}
-         for d, src in rows], schema=DOCS_SCHEMA)
+    return code_docs(spark, [(d, "code/python", src) for d, src in rows])
 
 
 BATCH1 = [

@@ -10,21 +10,17 @@ from pyspark.sql import functions as F
 
 from cpg_spark.fixtures_cfamily import CPP_FIXTURES
 from cpg_spark.operators.infer import infer_records
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 
 @pytest.fixture(scope="module")
 def inferred(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": f"cpp/{n}/0001",
-          "spans": [{"kind": "code/cpp", "text": CPP_FIXTURES[n],
-                     "media_ref": None, "offset": 0}]}
-         for n in ("inference_record", "inference_record_ptr")],
-        schema=DOCS_SCHEMA)
-    nodes, edges, mentions, _ = split_parse_output(parse_docs(docs))
-    inf_nodes, inf_edges = infer_records(mentions, nodes, edges)
-    return nodes, inf_nodes.persist(), inf_edges.persist()
+    g = CpgGraph(code_docs(spark, [
+        (f"cpp/{n}/0001", "code/cpp", CPP_FIXTURES[n])
+        for n in ("inference_record", "inference_record_ptr")]))
+    inf_nodes, inf_edges = infer_records(g.mentions, g.nodes, g.edges)
+    return g.nodes, inf_nodes.persist(), inf_edges.persist()
 
 
 def _members(nodes, inf_nodes, inf_edges, kind):
@@ -83,12 +79,7 @@ def test_known_record_not_inferred(spark):
     .java:415)."""
     src_decl = "struct T { int value; };\n"
     src_use = "int main() {\n    T node;\n    node.value = 1;\n}\n"
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/a/1", "spans": [{"kind": "code/cpp",
-          "text": src_decl, "media_ref": None, "offset": 0}]},
-         {"doc_id": "cpp/b/1", "spans": [{"kind": "code/cpp",
-          "text": src_use, "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, mentions, _ = split_parse_output(parse_docs(docs))
-    inf_nodes, _ = infer_records(mentions, nodes, edges)
+    g = CpgGraph(code_docs(spark, [("cpp/a/1", "code/cpp", src_decl),
+                                   ("cpp/b/1", "code/cpp", src_use)]))
+    inf_nodes, _ = infer_records(g.mentions, g.nodes, g.edges)
     assert inf_nodes.filter(F.col("label") == "RecordDeclaration").count() == 0

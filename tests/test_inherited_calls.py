@@ -11,35 +11,24 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
+from cpg_spark.pipeline import CpgGraph
 from cpg_spark.queries import INHERIT_BASE_SRC, INHERIT_CHILD_SRC
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.synth import code_docs
 
 
 @pytest.fixture(scope="module")
-def parsed(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/baselib/0001",
-          "spans": [{"kind": "code/python", "text": INHERIT_BASE_SRC,
-                     "media_ref": None, "offset": 0}]},
-         {"doc_id": "py/childlib/0001",
-          "spans": [{"kind": "code/python", "text": INHERIT_CHILD_SRC,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    yield split_parse_output(raw)
-    raw.unpersist()
+def graph(spark):
+    return CpgGraph(code_docs(spark, [
+        ("py/baselib/0001", "code/python", INHERIT_BASE_SRC),
+        ("py/childlib/0001", "code/python", INHERIT_CHILD_SRC)]))
 
 
-def _resolutions(parsed):
-    nodes, edges, mentions, symbols = parsed
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, _ = split_linked(combined)
-    calls = linked.filter(F.col("pred") == "CALLS")
+def _resolutions(g):
+    calls = g.linked.filter(F.col("pred") == "CALLS")
     rows = (
-        calls.join(mentions.select(F.col("mention_id").alias("subj"),
-                                   F.col("name").alias("site")), "subj")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        calls.join(g.mentions.select(F.col("mention_id").alias("subj"),
+                                     F.col("name").alias("site")), "subj")
+        .join(g.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("record").alias("callee_record")),
               "obj", "left")
         .select("site", "callee_record").collect()
@@ -47,32 +36,30 @@ def _resolutions(parsed):
     return {r["site"]: r["callee_record"] for r in rows}
 
 
-def test_inherited_call_resolves_to_ancestor(spark, parsed):
-    res = _resolutions(parsed)
+def test_inherited_call_resolves_to_ancestor(graph):
+    res = _resolutions(graph)
     # run() is declared only on Base, two levels above Leaf
     assert res["run"] == "Base"
 
 
-def test_nearest_override_wins(spark, parsed):
-    res = _resolutions(parsed)
+def test_nearest_override_wins(graph):
+    res = _resolutions(graph)
     # shared() exists on Base AND Mid: the nearer ancestor must win
     assert res["shared"] == "Mid"
 
 
-def test_unknown_method_still_inferred(spark, parsed):
-    nodes, edges, mentions, symbols = parsed
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    inf = {r["name"] for r in inferred.select("name").collect()}
+def test_unknown_method_still_inferred(graph):
+    inf = {r["name"] for r in graph.inferred.select("name").collect()}
     assert inf == {"mystery"}
-    res = _resolutions(parsed)
+    res = _resolutions(graph)
     assert res["mystery"] is None  # CALLS edge points at the inferred node
 
 
-def test_exact_record_match_outranks_inherited(spark, parsed):
+def test_exact_record_match_outranks_inherited(spark, graph):
     """A method defined on the record itself must win over any ancestor's
     method of the same name (depth 0 < depth k)."""
-    nodes, edges, mentions, symbols = parsed
+    nodes, edges, mentions, symbols = (graph.nodes, graph.edges,
+                                       graph.mentions, graph.symbols)
     # leaf_only resolves same-doc at parse time; exercise the link path by
     # re-resolving a synthetic mention against Leaf
     # scope_path inside baselib so the same-module visibility arm applies

@@ -12,20 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
-
-
-def _doc(doc_id, text, kind="code/python"):
-    return {"doc_id": doc_id,
-            "spans": [{"kind": kind, "text": text, "media_ref": None,
-                       "offset": 0}]}
-
-
-def _parsed(spark, docs):
-    frame = spark.createDataFrame(docs, schema=DOCS_SCHEMA)
-    return split_parse_output(parse_docs(frame).persist())
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 
 def test_local_module_outranks_prefix_named_import(spark):
@@ -33,18 +21,16 @@ def test_local_module_outranks_prefix_named_import(spark):
     the same-module (cross-document) f, not mod1's — a raw startswith
     ranked 'mod1' as same-module for scope 'mod149.*' and the d_fqn
     tiebreak then picked the wrong winner."""
-    nodes, edges, mentions, symbols = _parsed(spark, [
-        _doc("py/mod1/0001", "def f():\n    return 1\n"),
-        _doc("py/mod149/0002", "def f():\n    return 2\n"),
-        _doc("py/mod149/0001",
-             "import mod1\n\ndef main():\n    return f()\n"),
-    ])
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [
+        ("py/mod1/0001", "code/python", "def f():\n    return 1\n"),
+        ("py/mod149/0002", "code/python", "def f():\n    return 2\n"),
+        ("py/mod149/0001", "code/python",
+         "import mod1\n\ndef main():\n    return f()\n"),
+    ]))
     callee_mods = {
         r["callee_mod"]
-        for r in linked.filter(F.col("pred") == "CALLS")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        for r in g.linked.filter(F.col("pred") == "CALLS")
+        .join(g.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("module").alias("callee_mod"),
                              F.col("name").alias("callee")), "obj")
         .filter(F.col("callee") == "f")
@@ -57,20 +43,18 @@ def test_unimported_prefix_module_is_invisible(spark):
     """mod149 calls g() WITHOUT importing mod1; mod1's g must not be
     visible just because 'mod149'.startswith('mod1') — the miss path
     mints an inferred declaration instead."""
-    nodes, edges, mentions, symbols = _parsed(spark, [
-        _doc("py/mod1/0001", "def g():\n    return 1\n"),
-        _doc("py/mod149/0001", "def main():\n    return g()\n"),
-    ])
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [
+        ("py/mod1/0001", "code/python", "def g():\n    return 1\n"),
+        ("py/mod149/0001", "code/python", "def main():\n    return g()\n"),
+    ]))
     resolved = (
-        linked.filter(F.col("pred") == "CALLS")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        g.linked.filter(F.col("pred") == "CALLS")
+        .join(g.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("name").alias("callee")), "obj")
         .filter(F.col("callee") == "g").count()
     )
     assert resolved == 0
-    assert inferred.filter(F.col("name") == "g").count() == 1
+    assert g.inferred.filter(F.col("name") == "g").count() == 1
 
 
 FNPTR_LIB = r"""
@@ -92,22 +76,20 @@ def test_fnptr_terminal_wrong_arity_still_infers(spark):
     FunctionDeclaration (fun, 2) — dropping the arity-mismatched rows
     used to erase the call entirely (no CALLS edge AND no inferred
     node)."""
-    nodes, edges, mentions, symbols = _parsed(spark, [
-        _doc("cpp/liba/0001", FNPTR_LIB, kind="code/cpp"),
-        _doc("cpp/main/0001", FNPTR_USE, kind="code/cpp"),
-    ])
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    call_ids = [r["mention_id"] for r in mentions.filter(
+    g = CpgGraph(code_docs(spark, [
+        ("cpp/liba/0001", "code/cpp", FNPTR_LIB),
+        ("cpp/main/0001", "code/cpp", FNPTR_USE),
+    ]))
+    call_ids = [r["mention_id"] for r in g.mentions.filter(
         (F.col("kind") == "call") & (F.col("name") == "two_param")
     ).collect()]
     assert call_ids, "fixture must produce the pointer call mention"
     edges_for_call = (
-        linked.filter(F.col("pred") == "CALLS")
+        g.linked.filter(F.col("pred") == "CALLS")
         .filter(F.col("subj").isin(call_ids)).collect()
     )
     assert edges_for_call, "pointer call lost its CALLS edge entirely"
-    inf = inferred.filter((F.col("name") == "fun")
+    inf = g.inferred.filter((F.col("name") == "fun")
                           & (F.col("label") == "FunctionDeclaration")
                           ).collect()
     arities = {r["props"]["arity"] for r in inf}

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from cpg_spark.frontends.llvm_frontend import parse_llvm_document
 from cpg_spark.operators.compress_llvm import compress_llvm
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 BR_LL = """
 declare i32 @rand() nounwind
@@ -133,27 +133,18 @@ def test_problem_declaration_on_garbage():
 
 
 def test_parse_docs_dispatch(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "ll/mod/0001",
-          "spans": [{"kind": "code/llvm", "text": PHI_LL, "media_ref": None,
-                     "offset": 0}]}], schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    assert nodes.filter(F.col("label") == "ConditionalExpression").count() == 1
-    assert edges.filter(F.col("pred") == "EOG").count() > 8
+    g = CpgGraph(code_docs(spark, [("ll/mod/0001", "code/llvm", PHI_LL)]))
+    assert g.nodes.filter(
+        F.col("label") == "ConditionalExpression").count() == 1
+    assert g.edges.filter(F.col("pred") == "EOG").count() > 8
 
 
 def test_compress_inlines_single_entry_labels(spark):
     """IfEqual/IfUnequal are single-entry: after compression the gotos are
     gone and the label blocks hang off the IfStatement (then/else), matching
     CompressLLVMPass.kt:67-92."""
-    docs = spark.createDataFrame(
-        [{"doc_id": "ll/mod/0002",
-          "spans": [{"kind": "code/llvm", "text": BR_LL, "media_ref": None,
-                     "offset": 0}]}], schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    n2, e2 = compress_llvm(nodes, edges)
+    g = CpgGraph(code_docs(spark, [("ll/mod/0002", "code/llvm", BR_LL)]))
+    n2, e2 = compress_llvm(g.nodes, g.edges)
     assert n2.filter(F.col("label") == "GotoStatement").count() == 0
     # then/else AST slots now hold CompoundStatements (the inlined blocks)
     if_children = (
@@ -174,13 +165,8 @@ def test_compress_inlines_single_entry_labels(spark):
 def test_compress_keeps_multi_entry_labels(spark):
     """continue in the phi fixture has TWO incoming gotos -> must NOT be
     inlined (reference keeps multi-entry labels as join points)."""
-    docs = spark.createDataFrame(
-        [{"doc_id": "ll/mod/0003",
-          "spans": [{"kind": "code/llvm", "text": PHI_LL, "media_ref": None,
-                     "offset": 0}]}], schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    n2, e2 = compress_llvm(nodes, edges)
+    g = CpgGraph(code_docs(spark, [("ll/mod/0003", "code/llvm", PHI_LL)]))
+    n2, e2 = compress_llvm(g.nodes, g.edges)
     remaining = [r["name"] for r in
                  n2.filter(F.col("label") == "GotoStatement")
                  .select("name").collect()]

@@ -5,15 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
+from cpg_spark.pipeline import CpgGraph
 from cpg_spark.synth import generated_docs_multilang, validate_span_invariant
 
 
 def test_multilang_parse_clean(spark):
     docs = generated_docs_multilang(spark, 400, n_hubs=8)
     assert validate_span_invariant(docs).count() == 0
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
+    g = CpgGraph(docs)
+    nodes, edges = g.nodes, g.edges
     problems = nodes.filter(F.col("label") == "ProblemDeclaration")
     assert problems.count() == 0, problems.limit(5).collect()
     per_lang = {
@@ -36,4 +36,3 @@ def test_multilang_parse_clean(spark):
                         & (F.col("callee") == "calc")).count() > 0
     # go short-var + call facts exist
     assert calls.filter(F.col("d").startswith("go/")).count() > 0
-    raw.unpersist()

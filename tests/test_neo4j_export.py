@@ -11,9 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
 from cpg_spark.sinks import write_neo4j_bulk
+from cpg_spark.synth import code_docs
 
 SRC = """
 def caller():
@@ -26,15 +26,10 @@ def callee(x):
 
 @pytest.fixture(scope="module")
 def exported(spark, tmp_path_factory):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/m/0001",
-          "spans": [{"kind": "code/python", "text": SRC,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    nodes, edges, _, _ = split_parse_output(parse_docs(docs))
+    g = CpgGraph(code_docs(spark, [("py/m/0001", "code/python", SRC)]))
     outdir = str(tmp_path_factory.mktemp("neo4j"))
-    cmd = write_neo4j_bulk(nodes, edges, outdir)
-    return spark, nodes.persist(), edges.persist(), outdir, cmd
+    cmd = write_neo4j_bulk(g.nodes, g.edges, outdir)
+    return spark, g.nodes, g.edges, outdir, cmd
 
 
 def test_layout_and_headers(exported):

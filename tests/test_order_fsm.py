@@ -13,8 +13,8 @@ from __future__ import annotations
 import pytest
 
 from cpg_spark.operators.order_fsm import evaluate_order
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 from cpg_spark.fixtures_order import (  # noqa: F401
     COMPLEX_DFA, COMPLEX_ORDER, SIMPLE_DFA, SIMPLE_ORDER)
@@ -47,15 +47,8 @@ COMPLEX_EXPECTED = {
 
 
 def _verdicts(spark, src: str, dfa: dict, base_type: str) -> dict[str, bool]:
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/order/0001",
-          "spans": [{"kind": "code/java", "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    rows = evaluate_order(nodes, edges, dfa, base_type).collect()
+    g = CpgGraph(code_docs(spark, [("java/order/0001", "code/java", src)]))
+    rows = evaluate_order(g.nodes, g.edges, dfa, base_type).collect()
     out: dict[str, bool] = {}
     for r in rows:
         out[r["function"]] = out.get(r["function"], True) and r["everything_ok"]
@@ -77,15 +70,9 @@ def test_complex_order_parity(spark):
     ("nok2", "incomplete"),      # ends in q2, not accepting
 ])
 def test_simple_order_reasons(spark, fn, reason):
-    docs = spark.createDataFrame(
-        [{"doc_id": "java/order/0001",
-          "spans": [{"kind": "code/java", "text": SIMPLE_ORDER,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    rows = evaluate_order(nodes, edges, SIMPLE_DFA, "Botan").collect()
+    g = CpgGraph(code_docs(spark, [("java/order/0001", "code/java",
+                                    SIMPLE_ORDER)]))
+    rows = evaluate_order(g.nodes, g.edges, SIMPLE_DFA, "Botan").collect()
     by_fn = {r["function"]: r for r in rows}
     assert by_fn[fn]["reason"] == reason
 

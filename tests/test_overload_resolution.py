@@ -115,64 +115,38 @@ def test_crossdoc_overload_link(spark):
     carries two overloads — the exact-type one must win."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.link import link_combined, split_linked
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.pipeline import CpgGraph
+    from cpg_spark.synth import code_docs
 
     defs = ("int scale(int v) { return v; }\n"
             "int scale(float v) { return 1; }\n")
     use = ("int use() { int q = scale(2.5f); int r = scale(3); return q; }\n")
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/scalemod/0001",
-          "spans": [{"kind": "code/cpp", "text": defs, "media_ref": None,
-                     "offset": 0}]},
-         {"doc_id": "cpp/scalemod/0002",
-          "spans": [{"kind": "code/cpp", "text": use, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [("cpp/scalemod/0001", "code/cpp", defs),
+                                   ("cpp/scalemod/0002", "code/cpp", use)]))
     got = (
-        linked.filter(F.col("pred") == "CALLS")
-        .join(mentions.select(F.col("mention_id").alias("subj"),
-                              F.col("arg_types")), "subj")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        g.linked.filter(F.col("pred") == "CALLS")
+        .join(g.mentions.select(F.col("mention_id").alias("subj"),
+                                F.col("arg_types")), "subj")
+        .join(g.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("param_types")), "obj")
         .select("arg_types", "param_types").collect()
     )
     res = {tuple(r["arg_types"]): tuple(r["param_types"]) for r in got}
     assert res[("float",)] == ("float",)   # exact beats int-cast
     assert res[("int",)] == ("int",)
-    assert inferred.count() == 0
-    raw.unpersist()
+    assert g.inferred.count() == 0
 
 
 def test_crossdoc_wrong_arity_inferred(spark):
     """A cross-document call whose arity no candidate accepts must fall
     through to an inferred node (CallResolver miss path), not bind to a
     wrong-arity declaration."""
-    from pyspark.sql import functions as F
-
-    from cpg_spark.operators.link import link_combined, split_linked
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.pipeline import CpgGraph
+    from cpg_spark.synth import code_docs
 
     defs = "int only2(int a, int b) { return a; }\n"
     use = "int use() { return only2(1, 2, 3); }\n"
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/aritymod/0001",
-          "spans": [{"kind": "code/cpp", "text": defs, "media_ref": None,
-                     "offset": 0}]},
-         {"doc_id": "cpp/aritymod/0002",
-          "spans": [{"kind": "code/cpp", "text": use, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    inf = {r["name"] for r in inferred.select("name").collect()}
+    g = CpgGraph(code_docs(spark, [("cpp/aritymod/0001", "code/cpp", defs),
+                                   ("cpp/aritymod/0002", "code/cpp", use)]))
+    inf = {r["name"] for r in g.inferred.select("name").collect()}
     assert inf == {"only2"}
-    raw.unpersist()

@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.pipeline import run_cpg_pipeline, triples
+from cpg_spark.pipeline import CpgGraph, run_cpg_pipeline, triples
 from cpg_spark.synth import (
     fixture_docs,
     generated_docs,
@@ -19,19 +18,17 @@ from cpg_spark.synth import (
 
 
 @pytest.fixture(scope="module")
-def parsed(spark):
-    docs = fixture_docs(spark).union(generated_docs(spark, 30, n_hubs=2))
-    raw = parse_docs(docs).cache()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    return {
-        "docs": docs, "raw": raw, "nodes": nodes.cache(),
-        "edges": edges.cache(), "mentions": mentions.cache(),
-        "symbols": symbols.cache(),
-    }
+def docs(spark):
+    return fixture_docs(spark).union(generated_docs(spark, 30, n_hubs=2))
 
 
-def test_span_invariant_holds(spark, parsed):
-    assert validate_span_invariant(parsed["docs"]).count() == 0
+@pytest.fixture(scope="module")
+def graph(docs):
+    return CpgGraph(docs)
+
+
+def test_span_invariant_holds(docs):
+    assert validate_span_invariant(docs).count() == 0
 
 
 def test_span_invariant_detects_violation(spark):
@@ -44,7 +41,7 @@ def test_span_invariant_detects_violation(spark):
     assert validate_span_invariant(docs).count() == 1
 
 
-def test_parse_matches_pure_python(spark, parsed):
+def test_parse_matches_pure_python(graph):
     """The distributed parse must emit exactly the rows the frontend emits
     standalone (determinism across partitioning)."""
     from cpg_spark.fixtures_py import PY_FIXTURES
@@ -52,25 +49,16 @@ def test_parse_matches_pure_python(spark, parsed):
 
     doc_id = "py/function/0001"
     expected = parse_python_document(doc_id, 1, PY_FIXTURES["function"], "function")
-    got_nodes = parsed["nodes"].filter(F.col("doc_id") == doc_id).count()
+    got_nodes = graph.nodes.filter(F.col("doc_id") == doc_id).count()
     # span offset differs (interleaved docs put code at offset 1) but the
     # row COUNT is partition-invariant
     assert got_nodes == len(expected.nodes)
 
 
-def _link(parsed, strategy=None):
-    combined, _ = link_combined(parsed["mentions"], parsed["symbols"],
-                                parsed["nodes"], parsed["edges"],
-                                strategy=strategy)
-    return split_linked(combined)
-
-
-def test_cross_document_call_linking(spark, parsed):
+def test_cross_document_call_linking(graph):
     """Generated modules call util_helper_<h> defined in hub docs — the
     linking join must connect them across documents."""
-    edges, _ = _link(parsed)
-    edges = edges.cache()
-    nodes = parsed["nodes"]
+    edges, nodes = graph.linked, graph.nodes
     calls = (
         edges.filter(F.col("pred") == "CALLS")
         .join(nodes.select(F.col("node_id").alias("obj"),
@@ -88,20 +76,23 @@ def test_cross_document_call_linking(spark, parsed):
     assert cross.filter(~F.col("callee_doc").startswith("py/hub")).count() == 0
 
 
-def test_inferred_functions_deterministic(spark, parsed):
-    _, inferred = _link(parsed)
-    pdf = inferred.select("node_id", "name").toPandas()
+def test_inferred_functions_deterministic(graph):
+    pdf = graph.inferred.select("node_id", "name").toPandas()
     # print is unresolvable -> inferred, and all same-name/arity misses
     # collapse into one deterministic node
     assert "print" in set(pdf["name"])
     assert pdf["node_id"].is_unique
 
 
-def test_salted_equals_broadcast(spark, parsed):
-    e1, _ = _link(parsed, strategy="broadcast")
-    e2, _ = _link(parsed, strategy="salted")
-    a = {tuple(r) for r in e1.select("subj", "pred", "obj").collect()}
-    b = {tuple(r) for r in e2.select("subj", "pred", "obj").collect()}
+def test_salted_equals_broadcast(graph):
+    legs = []
+    for strategy in ("broadcast", "salted"):
+        combined, _ = link_combined(graph.mentions, graph.symbols,
+                                    graph.nodes, graph.edges,
+                                    strategy=strategy)
+        legs.append({tuple(r) for r in split_linked(combined)[0].select(
+            "subj", "pred", "obj").collect()})
+    a, b = legs
     assert a == b and len(a) > 0
 
 

@@ -50,9 +50,9 @@ def test_no_whole_file_failures(spark):
     casts, fnptr params — all closed in round 4)."""
     from pyspark.sql import functions as F
 
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
+    from cpg_spark.pipeline import CpgGraph
     from cpg_spark.sources.realcorpus import real_file_docs
 
-    nodes, _, _, _ = split_parse_output(parse_docs(real_file_docs(spark)))
+    nodes = CpgGraph(real_file_docs(spark)).nodes
     probs = nodes.filter(F.col("label").startswith("Problem"))
     assert probs.count() == 0

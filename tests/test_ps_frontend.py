@@ -15,8 +15,8 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from cpg_spark.frontends.ps_frontend import parse_ps_document
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 LITERAL_PS1 = """
 $b = True
@@ -308,14 +308,10 @@ def test_scriptblock_lambda():
 
 
 def test_parse_docs_dispatch(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "ps/mod/0001",
-          "spans": [{"kind": "code/powershell", "text": FUNCTION_PS1,
-                     "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
-    assert nodes.filter(F.col("label") == "FunctionDeclaration").count() == 3
-    assert edges.filter(F.col("pred") == "CALLS").count() == 2
+    g = CpgGraph(code_docs(spark, [("ps/mod/0001", "code/powershell",
+                                    FUNCTION_PS1)]))
+    assert g.nodes.filter(F.col("label") == "FunctionDeclaration").count() == 3
+    assert g.edges.filter(F.col("pred") == "CALLS").count() == 2
 
 
 def test_ps_script_params_and_attributes():

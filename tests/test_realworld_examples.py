@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 from cpg_spark.operators.external_hierarchy import probe_supertypes
 from cpg_spark.operators.hierarchy import supertype_record_closure
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 BOTAN_CPP = r"""
 #include <iostream>
@@ -276,11 +276,9 @@ PARTIAL_METHOD = ("int x = 0;\nif (x + 5 > 10) {\n"
 
 
 def test_botan_example(spark):
-    docs = spark.createDataFrame(
-        [("cpp/botan/0001", [("code/cpp", BOTAN_CPP, None, 1)])],
-        DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("cpp/botan/0001", "code/cpp",
+                                    BOTAN_CPP, 1)]))
+    nodes, edges, symbols = g.nodes, g.edges, g.symbols
     # no parse failure on the production-style file
     assert nodes.filter(F.col("label") == "ProblemDeclaration").count() == 0
     # the 4 functions + the __IV global = the reference's 5 top-level
@@ -299,15 +297,12 @@ def test_botan_example(spark):
     # main calls encrypt and decrypt
     callees = {r["callee"] for r in calls.collect()}
     assert {"encrypt", "decrypt"} <= callees
-    raw.unpersist()
 
 
 def test_demo_hierarchy_corpus(spark):
-    docs = spark.createDataFrame(
-        [(f"java/hier/{n}", [("code/java", src, None, 1)])
-         for n, src in HIERARCHY.items()], DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [(f"java/hier/{n}", "code/java", src, 1)
+                                   for n, src in HIERARCHY.items()]))
+    nodes, edges, symbols = g.nodes, g.edges, g.symbols
     assert nodes.filter(F.col("label") == "ProblemDeclaration").count() == 0
     recs = {r["name"] for r in symbols.filter(
         F.col("kind") == "record").collect()}
@@ -320,25 +315,20 @@ def test_demo_hierarchy_corpus(spark):
         F.col("descendant") == "Level2").collect()}
     assert {"Level1", "Level0", "Root"} <= anc
     assert "Unrelated" not in anc
-    raw.unpersist()
 
 
 def test_demo_partial_snippets(spark):
     """testPartial: class-level and method-level FRAGMENTS (not whole
     compilation units) must parse without crashing — the reference only
     asserts non-null translation units."""
-    docs = spark.createDataFrame(
-        [("java/partial/class", [("code/java", PARTIAL_CLASS, None, 1)]),
-         ("java/partial/method", [("code/java", PARTIAL_METHOD, None, 1)])],
-        DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, _, _, _ = split_parse_output(raw)
+    nodes = CpgGraph(code_docs(spark, [
+        ("java/partial/class", "code/java", PARTIAL_CLASS, 1),
+        ("java/partial/method", "code/java", PARTIAL_METHOD, 1)])).nodes
     # parse survives; SOME nodes come out of each fragment
     per_doc = {r["doc_id"]: r["n"] for r in nodes.groupBy("doc_id")
                .agg(F.count("*").alias("n")).collect()}
     assert per_doc.get("java/partial/class", 0) > 0
     assert per_doc.get("java/partial/method", 0) > 0
-    raw.unpersist()
 
 
 def test_parse_large_initializer_list():

@@ -1,9 +1,10 @@
-"""The default driver heap fits the host: no JVM is started here."""
+"""The default driver heap and parallelism fit the host: no JVM is
+started here."""
 
 from __future__ import annotations
 
 from cpg_spark import session
-from cpg_spark.session import default_driver_memory
+from cpg_spark.session import default_cpus, default_driver_memory
 
 GIB = 1 << 30
 
@@ -43,3 +44,17 @@ def test_unlimited_cgroup_keeps_physical_memory(monkeypatch, tmp_path):
 def test_env_overrides_default_heap(monkeypatch):
     monkeypatch.setenv("CPG_SPARK_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+def test_default_cpus_are_the_usable_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity",
+                        lambda pid: {0, 1, 2, 5})
+    assert default_cpus() == 4
+
+
+def test_env_overrides_default_cpus(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setattr(session.os, "sched_getaffinity",
+                        lambda pid: {0, 1, 2, 5})
+    assert default_cpus() == 3

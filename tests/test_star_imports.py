@@ -4,11 +4,11 @@ source module, and names used through it resolve cross-document."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 LIB = ("def fa(x):\n    return x\n\n"
        "def fb():\n    return 2\n\n"
@@ -17,46 +17,34 @@ USE = ("from amod import *\n\n"
        "def main():\n    y = fa(1)\n    return y\n")
 
 
-def _parsed(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/amod/0001",
-          "spans": [{"kind": "code/python", "text": LIB, "media_ref": None,
-                     "offset": 0}]},
-         {"doc_id": "py/bmod/0001",
-          "spans": [{"kind": "code/python", "text": USE, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    return split_parse_output(parse_docs(docs).persist())
+@pytest.fixture(scope="module")
+def graph(spark):
+    return CpgGraph(code_docs(spark, [("py/amod/0001", "code/python", LIB),
+                                      ("py/bmod/0001", "code/python", USE)]))
 
 
-def test_star_import_expands_to_all_module_symbols(spark):
-    nodes, edges, mentions, symbols = _parsed(spark)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, _ = split_linked(combined)
-    star = mentions.filter((F.col("kind") == "import")
+def test_star_import_expands_to_all_module_symbols(graph):
+    star = graph.mentions.filter((F.col("kind") == "import")
                            & (F.col("name") == "*"))
     star_ids = [r["mention_id"] for r in star.collect()]
     assert len(star_ids) == 1
     targets = {
-        r["tname"] for r in linked.filter(F.col("pred") == "REFERS_TO")
+        r["tname"] for r in graph.linked.filter(F.col("pred") == "REFERS_TO")
         .filter(F.col("subj").isin(star_ids))
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        .join(graph.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("name").alias("tname")), "obj")
         .select("tname").collect()
     }
     assert targets == {"fa", "fb", "VA"}
 
 
-def test_name_through_star_import_resolves(spark):
-    nodes, edges, mentions, symbols = _parsed(spark)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+def test_name_through_star_import_resolves(graph):
     calls = (
-        linked.filter(F.col("pred") == "CALLS")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        graph.linked.filter(F.col("pred") == "CALLS")
+        .join(graph.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("module").alias("callee_mod"),
                              F.col("name").alias("callee")), "obj")
         .select("callee", "callee_mod").collect()
     )
     assert ("fa", "amod") in {(r["callee"], r["callee_mod"]) for r in calls}
-    assert inferred.filter(F.col("name") == "fa").count() == 0
+    assert graph.inferred.filter(F.col("name") == "fa").count() == 0

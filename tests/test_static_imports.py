@@ -20,9 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 SINGLE_A = """
 public class A {
@@ -89,24 +88,18 @@ public class B {
 
 
 def _analyze(spark, docs_rows):
-    docs = spark.createDataFrame(
-        [(d, [("code/java", s, None, 1)]) for d, s in docs_rows],
-        DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [(d, "code/java", s, 1)
+                                   for d, s in docs_rows]))
     node_rows = {r["node_id"]: r.asDict(recursive=True)
-                 for r in nodes.collect()}
-    for r in inferred.collect():
+                 for r in g.nodes.collect()}
+    for r in g.inferred.collect():
         node_rows[r["node_id"]] = r.asDict(recursive=True)
     men = {r["mention_id"]: r.asDict(recursive=True)
-           for r in mentions.collect()}
-    edge_rows = [r.asDict() for r in edges.select(
+           for r in g.mentions.collect()}
+    edge_rows = [r.asDict() for r in g.edges.select(
         "subj", "pred", "obj").collect()]
-    edge_rows += [r.asDict() for r in linked.select(
+    edge_rows += [r.asDict() for r in g.linked.select(
         "subj", "pred", "obj").collect()]
-    raw.unpersist()
     return node_rows, edge_rows, men
 
 

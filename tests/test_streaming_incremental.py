@@ -63,11 +63,11 @@ def test_reingest_is_idempotent_after_dedup(spark, tmp_path):
     one.coalesce(1).write.mode("append").parquet(docs_dir)
     incremental_parse(spark, docs_dir, out_dir, ckpt)
 
-    from cpg_spark.operators.parse import parse_docs
+    from cpg_spark.pipeline import CpgGraph
 
     raw = read_cpg_raw(spark, out_dir)
     nodes = raw.filter(F.col("row_kind") == "node")
-    single = parse_docs(one).filter(F.col("row_kind") == "node")
+    single = CpgGraph(one).nodes
     n_single = single.count()
     d_single = single.select("node_id").distinct().count()
     total = nodes.count()

@@ -14,11 +14,12 @@ and the return statement being visited exactly once.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.cc import bfs_reachable
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 RECORD_JAVA = """\
 package compiling;
@@ -45,18 +46,16 @@ class SimpleClass {
 """
 
 
-def _graph(spark):
-    docs = spark.createDataFrame(
-        [("java/walker/0001", [("code/java", RECORD_JAVA, None, 1)])],
-        DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    return split_parse_output(raw)
+@pytest.fixture(scope="module")
+def graph(spark):
+    return CpgGraph(code_docs(spark, [("java/walker/0001", "code/java",
+                                       RECORD_JAVA, 1)]))
 
 
-def test_ast_children_getter(spark):
+def test_ast_children_getter(graph):
     """testASTChildrenGetter: the record's DIRECT AST children are the
     4 declarations — field, implicit this, constructor, method."""
-    nodes, edges, _, _ = _graph(spark)
+    nodes, edges = graph.nodes, graph.edges
     rec = nodes.filter((F.col("label") == "RecordDeclaration")
                        & (F.col("name") == "SimpleClass")).collect()
     assert len(rec) == 1
@@ -72,12 +71,12 @@ def test_ast_children_getter(spark):
     assert by_label.get("MethodDeclaration") == ["method"]
 
 
-def test_eog_forward_visitor(spark):
+def test_eog_forward_visitor(graph):
     """testAllEogNodeVisitor semantics at our statement granularity:
     every statement of method() — both if-branch arms AND the return —
     is forward-EOG-reachable from the first statement; the return is
     reached exactly once (testReturnStmtVisitor)."""
-    nodes, edges, _, _ = _graph(spark)
+    nodes, edges = graph.nodes, graph.edges
     eog = edges.filter(F.col("pred") == "EOG")
     # the method body's statements in span order
     meth = nodes.filter((F.col("label") == "MethodDeclaration")

@@ -17,8 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.frontends.ts_frontend import parse_ts_document
-from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 FUNCTION_TS = """
 function someFunction(): Number {
@@ -187,12 +187,9 @@ def test_parenthesized_receiver_is_not_arrow_params():
 
 
 def test_parse_docs_dispatch(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "ts/mod/0001",
-          "spans": [{"kind": "code/typescript", "text": FUNCTION_TS,
-                     "media_ref": None, "offset": 0}]}], schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("ts/mod/0001", "code/typescript",
+                                    FUNCTION_TS)]))
+    nodes, edges = g.nodes, g.edges
     assert nodes.filter(F.col("label") == "FunctionDeclaration").count() == 2
     assert edges.filter(F.col("pred") == "CALLS").count() == 1
 
@@ -200,25 +197,13 @@ def test_parse_docs_dispatch(spark):
 def test_crossdoc_ts_import_link(spark):
     """import { helper } from "./util" + helper() -> cross-document CALLS
     through the link stage (same path the py/go frontends use)."""
-    from cpg_spark.operators.link import link_combined, split_linked
-
     util = 'export function helper(x: number): number { return x; }\n'
     main = 'import { helper } from "./util";\nconst r = helper(1);\n'
-    docs = spark.createDataFrame(
-        [{"doc_id": "ts/util/0001",
-          "spans": [{"kind": "code/typescript", "text": util,
-                     "media_ref": None, "offset": 0}]},
-         {"doc_id": "ts/main/0002",
-          "spans": [{"kind": "code/typescript", "text": main,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
-    calls = linked.filter(F.col("pred") == "CALLS")
+    g = CpgGraph(code_docs(spark, [("ts/util/0001", "code/typescript", util),
+                                   ("ts/main/0002", "code/typescript", main)]))
+    calls = g.linked.filter(F.col("pred") == "CALLS")
     # the helper() call in ts/main must land on the declaration in ts/util
-    hit = (calls.join(nodes.selectExpr("node_id as obj",
-                                       "doc_id as callee_doc"), "obj")
+    hit = (calls.join(g.nodes.selectExpr("node_id as obj",
+                                         "doc_id as callee_doc"), "obj")
            .filter(F.col("callee_doc") == "ts/util/0001"))
     assert hit.count() == 1

@@ -5,27 +5,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.link import link_combined, split_linked
-from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.operators.type_prop import dataflow_type_edges, propagate_types
+from cpg_spark.pipeline import CpgGraph
 from cpg_spark.queries import FNPTR_SRC, TYPE_PROP_SRC
-from cpg_spark.schemas import DOCS_SCHEMA
-
-
-def _parse(spark, doc_id, src):
-    docs = spark.createDataFrame(
-        [{"doc_id": doc_id,
-          "spans": [{"kind": "code/python", "text": src, "media_ref": None,
-                     "offset": 0}]}], schema=DOCS_SCHEMA)
-    return split_parse_output(parse_docs(docs).persist())
+from cpg_spark.synth import code_docs
 
 
 def test_types_flow_through_assignments_and_returns(spark):
-    nodes, edges, _, _ = _parse(spark, "py/tp1/0001", TYPE_PROP_SRC)
-    types = propagate_types(nodes, edges)
+    g = CpgGraph(code_docs(spark, [("py/tp1/0001", "code/python",
+                                    TYPE_PROP_SRC)]))
+    types = propagate_types(g.nodes, g.edges)
     got = {
         r["name"]: (r["type_name"], r["origin"])
-        for r in types.join(nodes.select("node_id", "label", "name"),
+        for r in types.join(g.nodes.select("node_id", "label", "name"),
                             "node_id")
         .filter(F.col("label") == "VariableDeclaration")
         .select("name", "type_name", "origin").collect()
@@ -46,10 +38,11 @@ def test_conflicting_writers_stay_untyped(spark):
            "    if p:\n        e = g1()\n"
            "    else:\n        e = g2()\n"
            "    return e\n")
-    nodes, edges, _, _ = _parse(spark, "py/tp2/0001", src)
-    types = propagate_types(nodes, edges)
+    g = CpgGraph(code_docs(spark, [("py/tp2/0001", "code/python",
+                                    src)]))
+    types = propagate_types(g.nodes, g.edges)
     e_rows = (
-        types.join(nodes.select("node_id", "label", "name"), "node_id")
+        types.join(g.nodes.select("node_id", "label", "name"), "node_id")
         .filter((F.col("label") == "VariableDeclaration")
                 & (F.col("name") == "e")).collect()
     )
@@ -57,24 +50,24 @@ def test_conflicting_writers_stay_untyped(spark):
 
 
 def test_dataflow_edges_reuse_type_node_ids(spark):
-    nodes, edges, _, _ = _parse(spark, "py/tp3/0001", TYPE_PROP_SRC)
-    new = dataflow_type_edges(nodes, edges)
+    g = CpgGraph(code_docs(spark, [("py/tp3/0001", "code/python",
+                                    TYPE_PROP_SRC)]))
+    new = dataflow_type_edges(g.nodes, g.edges)
     tids = {r["node_id"] for r in
-            nodes.filter(F.col("label") == "Type").collect()}
+            g.nodes.filter(F.col("label") == "Type").collect()}
     rows = new.collect()
     assert rows and all(r["obj"] in tids for r in rows)
     assert all(r["props"]["origin"] == "DATAFLOW" for r in rows)
 
 
 def test_fnptr_call_resolves_and_no_inferred(spark):
-    nodes, edges, mentions, symbols = _parse(spark, "py/fp9/0001", FNPTR_SRC)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [("py/fp9/0001", "code/python",
+                                    FNPTR_SRC)]))
     callees = {
-        r["callee"] for r in linked.filter(F.col("pred") == "CALLS")
-        .join(nodes.select(F.col("node_id").alias("obj"),
+        r["callee"] for r in g.linked.filter(F.col("pred") == "CALLS")
+        .join(g.nodes.select(F.col("node_id").alias("obj"),
                            F.col("name").alias("callee")), "obj")
         .select("callee").collect()
     }
     assert callees == {"helper", "other"}
-    assert inferred.count() == 0  # no fabricated nodes for f/g
+    assert g.inferred.count() == 0  # no fabricated nodes for f/g

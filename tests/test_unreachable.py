@@ -5,9 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.operators.unreachable import mark_unreachable
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 SRC = """\
 def f(x):
@@ -21,14 +21,8 @@ def f(x):
 
 
 def test_constant_if_marks_false_branch(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/unreach/0001",
-          "spans": [{"kind": "code/python", "text": SRC, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("py/unreach/0001", "code/python", SRC)]))
+    nodes, edges = g.nodes, g.edges
     marked = mark_unreachable(nodes, edges)
     eog = marked.filter(F.col("pred") == "EOG").select(
         "subj",
@@ -46,7 +40,6 @@ def test_constant_if_marks_false_branch(spark):
         F.col("props").getItem("unreachable").isNotNull()
     ).count()
     assert marked_count == 1
-    raw.unpersist()
 
 
 def test_computed_constant_condition(spark):
@@ -56,14 +49,9 @@ def test_computed_constant_condition(spark):
     is not a literal."""
     src = ("def f():\n    y = 6\n    if y < 10:\n        a = 1\n"
            "    else:\n        a = 2\n")
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/unreach_comp/0001",
-          "spans": [{"kind": "code/python", "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("py/unreach_comp/0001", "code/python",
+                                    src)]))
+    nodes, edges = g.nodes, g.edges
     marked = mark_unreachable(nodes, edges)
     eog = marked.filter(F.col("pred") == "EOG").select(
         F.col("props").getItem("branch").alias("branch"),
@@ -73,19 +61,13 @@ def test_computed_constant_condition(spark):
     true_b = [r for r in eog if r["branch"] == "true"]
     assert any(r["unreachable"] == "true" for r in false_b)
     assert all(r["unreachable"] != "true" for r in true_b)
-    raw.unpersist()
 
 
 def test_literal_only_mode_still_works(spark):
     src = "def f(x):\n    if False:\n        a = 1\n    else:\n        a = 2\n"
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/unreach_lit/0001",
-          "spans": [{"kind": "code/python", "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("py/unreach_lit/0001", "code/python",
+                                    src)]))
+    nodes, edges = g.nodes, g.edges
     marked = mark_unreachable(nodes, edges, evaluate=False)
     eog = marked.filter(F.col("pred") == "EOG").select(
         F.col("props").getItem("branch").alias("branch"),
@@ -93,4 +75,3 @@ def test_literal_only_mode_still_works(spark):
     ).collect()
     assert any(r["branch"] == "true" and r["unreachable"] == "true"
                for r in eog)
-    raw.unpersist()

@@ -6,9 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators.parse import parse_docs, split_parse_output
 from cpg_spark.operators.value_eval import evaluate_constants
-from cpg_spark.schemas import DOCS_SCHEMA
+from cpg_spark.pipeline import CpgGraph
+from cpg_spark.synth import code_docs
 
 # the reference's own fixture, verbatim
 # (cpg-analysis/src/test/resources/value_evaluation/example.cpp)
@@ -45,14 +45,9 @@ def test_example_cpp_constants(spark):
     d=2 (INTEGER division of 8/3 — ValueEvaluator folds Int/Int to Int),
     e=3.5, f=10, g=-3, h..n all false, and the string concatenation
     "Hello " + "world"."""
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/veval/0001",
-          "spans": [{"kind": "code/cpp", "text": EXAMPLE_CPP,
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("cpp/veval/0001", "code/cpp",
+                                    EXAMPLE_CPP)]))
+    nodes, edges = g.nodes, g.edges
     vals = evaluate_constants(nodes, edges)
     named = (
         vals.join(nodes.select("node_id", "label", "name"), "node_id")
@@ -76,7 +71,6 @@ def test_example_cpp_constants(spark):
     concats = {r["s_value"] for r in vals.filter(
         F.col("s_value").isNotNull()).collect()}
     assert "Hello world" in concats
-    raw.unpersist()
 
 
 def test_ambiguous_write_is_not_constant(spark):
@@ -84,14 +78,8 @@ def test_ambiguous_write_is_not_constant(spark):
     get a constant (conservative projection of the reference's ambiguous
     result set)."""
     src = "int main() {\n int a = 1;\n a = 2;\n int b = 7;\n}\n"
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/veval2/0001",
-          "spans": [{"kind": "code/cpp", "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    raw = parse_docs(docs).persist()
-    nodes, edges, _, _ = split_parse_output(raw)
+    g = CpgGraph(code_docs(spark, [("cpp/veval2/0001", "code/cpp", src)]))
+    nodes, edges = g.nodes, g.edges
     vals = evaluate_constants(nodes, edges)
     named = (
         vals.join(nodes.select("node_id", "label", "name"), "node_id")
@@ -102,20 +90,14 @@ def test_ambiguous_write_is_not_constant(spark):
     got = {r["name"]: r["value"] for r in named}
     assert got.get("b") == 7.0
     assert "a" not in got
-    raw.unpersist()
 
 
-def _parse(spark, doc_id, kind, src):
-    docs = spark.createDataFrame(
-        [{"doc_id": doc_id,
-          "spans": [{"kind": kind, "text": src, "media_ref": None,
-                     "offset": 0}]}],
-        schema=DOCS_SCHEMA,
-    )
-    return split_parse_output(parse_docs(docs).persist())
-
-
-def _decl_values(nodes, vals):
+def _py_values(spark, doc_id, src):
+    """name -> (value, s_value) of each constant-valued variable of one
+    python doc."""
+    g = CpgGraph(code_docs(spark, [(doc_id, "code/python", src)]))
+    nodes = g.nodes
+    vals = evaluate_constants(nodes, g.edges)
     named = (
         vals.join(nodes.select("node_id", "label", "name"), "node_id")
         .filter(F.col("label") == "VariableDeclaration")
@@ -129,16 +111,14 @@ def test_subscript_constant_index(spark):
     """ValueEvaluator.kt:269-294: a[const] folds through the declaration's
     initializer list."""
     src = "def f():\n    xs = [10, 20, 30]\n    v = xs[1]\n    return v\n"
-    nodes, edges, _, _ = _parse(spark, "py/veval_sub/0001", "code/python", src)
-    got = _decl_values(nodes, evaluate_constants(nodes, edges))
+    got = _py_values(spark, "py/veval_sub/0001", src)
     assert got["v"] == (20.0, None)
 
 
 def test_conditional_expression_folds(spark):
     """ValueEvaluator.kt:296-314: known condition picks the branch."""
     src = "def f():\n    c = 7 if 2 > 1 else 9\n    d = 5 if 1 > 2 else 8\n"
-    nodes, edges, _, _ = _parse(spark, "py/veval_cond/0001", "code/python", src)
-    got = _decl_values(nodes, evaluate_constants(nodes, edges))
+    got = _py_values(spark, "py/veval_cond/0001", src)
     assert got["c"] == (7.0, None)
     assert got["d"] == (8.0, None)
 
@@ -146,23 +126,19 @@ def test_conditional_expression_folds(spark):
 def test_conditional_agreeing_branches(spark):
     """Branches that agree fold even when the condition is unknown."""
     src = "def f(x):\n    c = 4 if x else 4\n"
-    nodes, edges, _, _ = _parse(spark, "py/veval_agree/0001", "code/python", src)
-    got = _decl_values(nodes, evaluate_constants(nodes, edges))
+    got = _py_values(spark, "py/veval_agree/0001", src)
     assert got["c"] == (4.0, None)
 
 
 def test_string_concatenation(spark):
     """ValueEvaluator.kt:120-243 string handling subset: '+' concatenates."""
     src = 'def f():\n    s = "ab" + "cd"\n    n = "x"\n'
-    nodes, edges, _, _ = _parse(spark, "py/veval_str/0001", "code/python", src)
-    got = _decl_values(nodes, evaluate_constants(nodes, edges))
+    got = _py_values(spark, "py/veval_str/0001", src)
     assert got["s"] == (None, "abcd")
     assert got["n"] == (None, "x")
 
 
 def test_string_literal_true_is_not_bool(spark):
     src = 'def f():\n    s = "True"\n'
-    nodes, edges, _, _ = _parse(spark, "py/veval_strbool/0001", "code/python",
-                                src)
-    got = _decl_values(nodes, evaluate_constants(nodes, edges))
+    got = _py_values(spark, "py/veval_strbool/0001", src)
     assert got["s"] == (None, "True")

@@ -202,37 +202,26 @@ def test_java_catch_params(java_b):
 @pytest.fixture(scope="module")
 def crossdoc(spark):
     """scope_variables.cpp + external_class.h as two documents, linked."""
-    from cpg_spark.operators.link import link_combined, split_linked
-    from cpg_spark.operators.parse import parse_docs, split_parse_output
-    from cpg_spark.schemas import DOCS_SCHEMA
+    from cpg_spark.pipeline import CpgGraph
+    from cpg_spark.synth import code_docs
 
-    docs = spark.createDataFrame(
-        [{"doc_id": "cpp/scopevars/0001",
-          "spans": [{"kind": "code/cpp",
-                     "text": VARRES_FIXTURES["scope_variables_cpp"],
-                     "media_ref": None, "offset": 0}]},
-         {"doc_id": "cpp/external_class/0001",
-          "spans": [{"kind": "code/cpp",
-                     "text": VARRES_FIXTURES["external_class_h"],
-                     "media_ref": None, "offset": 0}]}],
-        schema=DOCS_SCHEMA)
-    raw = parse_docs(docs).persist()
-    nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges)
-    linked, inferred = split_linked(combined)
+    g = CpgGraph(code_docs(spark, [
+        ("cpp/scopevars/0001", "code/cpp",
+         VARRES_FIXTURES["scope_variables_cpp"]),
+        ("cpp/external_class/0001", "code/cpp",
+         VARRES_FIXTURES["external_class_h"])]))
     rows = (
-        linked.filter(F.col("pred") == "REFERS_TO")
-        .join(mentions.select(F.col("mention_id").alias("subj"),
-                              F.col("name").alias("m_name"),
-                              F.col("base_type")), "subj")
-        .join(symbols.select(F.col("decl_id").alias("obj"),
+        g.linked.filter(F.col("pred") == "REFERS_TO")
+        .join(g.mentions.select(F.col("mention_id").alias("subj"),
+                                F.col("name").alias("m_name"),
+                                F.col("base_type")), "subj")
+        .join(g.symbols.select(F.col("decl_id").alias("obj"),
                              F.col("name").alias("d_name"),
                              F.col("record").alias("d_record"),
                              F.col("kind").alias("d_kind")), "obj")
         .filter(F.col("base_type") == "ExternalClass")
         .select("m_name", "d_name", "d_record", "d_kind")
         .collect())
-    raw.unpersist()
     return rows
 
 
