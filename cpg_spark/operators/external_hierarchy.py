@@ -13,8 +13,9 @@ spellings our Java frontend records).
 
 Spark shape: the only Spark work is the trigger probe
 (:func:`probe_supertypes`), ONE aggregation job that also answers the
-supertype closure's "does anything resolve" question, so a corpus with
-no trigger pays nothing extra.  The table has ≤ ~50 names, so the rows
+supertype closure's "does anything resolve" question (and, for link,
+sizes the symbol dimension), so a corpus with no trigger pays nothing
+extra.  The table has ≤ ~50 names, so the rows
 for the triggered subset are built on the driver.  Triggered JDK types
 materialize as
 *implicit* RecordDeclarations (``is_inferred=True`` so cross-document
@@ -104,29 +105,42 @@ def _rec_id(name: str) -> int:
     return inferred_id("RecordDeclaration", name, container="jdk")
 
 
-def probe_supertypes(nodes: DataFrame, edges: DataFrame):
+def probe_supertypes(nodes: DataFrame, edges: DataFrame,
+                     dim: DataFrame | None = None):
     """(any_resolved, triggers) from ONE aggregation job over the record
     supertype names: ``any_resolved`` says whether some supertype names a
     source RecordDeclaration (the closure's emptiness probe);
     ``triggers`` are the sorted names that resolve to no source record
     but are in the static JDK table (the in-source case belongs to
-    TypeHierarchyResolver / supertype_record_closure)."""
+    TypeHierarchyResolver / supertype_record_closure).
+
+    With ``dim`` (link's symbol dimension) the same job also counts the
+    dimension's rows, returned as a third value ``dim_rows``: the dim
+    rows ride the supertype aggregation as a tagged union branch, so the
+    link stage sizes its join and probes its hierarchy in one action."""
     from cpg_spark.operators.hierarchy import record_super_pairs
 
     declared = nodes.filter(F.col("label") == "RecordDeclaration").select(
         F.col("name").alias("super_name"),
         F.lit(True).alias("_declared")).distinct()
-    row = (
-        record_super_pairs(nodes, edges).select("super_name")
-        .join(F.broadcast(declared), "super_name", "left")
-        .agg(F.max(F.col("_declared").isNotNull()).alias("any_resolved"),
-             F.collect_set(F.when(
-                 F.col("_declared").isNull()
-                 & F.col("super_name").isin(*JDK_DIRECT_SUPERS),
-                 F.col("super_name"))).alias("triggers"))
-        .first()
-    )
-    return bool(row["any_resolved"]), sorted(row["triggers"])
+    supers = (record_super_pairs(nodes, edges).select("super_name")
+              .join(F.broadcast(declared), "super_name", "left"))
+    aggs = [F.max(F.col("_declared").isNotNull()).alias("any_resolved"),
+            F.collect_set(F.when(
+                F.col("_declared").isNull()
+                & F.col("super_name").isin(*JDK_DIRECT_SUPERS),
+                F.col("super_name"))).alias("triggers")]
+    if dim is not None:
+        # a dim row has no supertype: it adds False to any_resolved and
+        # nothing to triggers
+        supers = supers.withColumn("_dim", F.lit(None).cast("int")).unionByName(
+            dim.select(F.lit(None).cast("string").alias("super_name"),
+                       F.lit(None).cast("boolean").alias("_declared"),
+                       F.lit(1).alias("_dim")))
+        aggs.append(F.count("_dim").alias("dim_rows"))
+    row = supers.agg(*aggs).first()
+    probe = (bool(row["any_resolved"]), sorted(row["triggers"]))
+    return probe if dim is None else (*probe, row["dim_rows"])
 
 
 def external_jdk_hierarchy(spark: SparkSession, triggers):

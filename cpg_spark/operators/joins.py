@@ -36,20 +36,6 @@ from pyspark.sql import functions as F
 BROADCAST_MAX_ROWS = 100_000
 
 
-def bounded_dim_count(dim, threshold: int = None) -> int:
-    """min(true count, threshold+1) via an early-exit ``limit().count()``
-    — the broadcast-vs-salt decision needs only WHICH SIDE of the
-    threshold the dim falls on, and a full ``count()`` of a corpus-scale
-    symbol dimension is a serial full scan gating every linking join
-    (at 10^12 docs the dim is corpus-sized; the limit stops the scan
-    after threshold+1 rows via Spark's incremental CollectLimit job
-    submission).  A returned value of threshold+1 therefore means
-    "more than threshold", not an exact count."""
-    if threshold is None:
-        threshold = BROADCAST_MAX_ROWS
-    return dim.limit(threshold + 1).count()
-
-
 def salted_equi_join(
     facts: DataFrame,
     dims: DataFrame,
@@ -107,27 +93,30 @@ def hot_fact_keys(facts: DataFrame, key: str, partitions: int,
     share (``total / partitions``, floored at ``min_rows``) — the keys
     that would stall one reducer in an unsalted shuffle join.  Bounded to
     ``max_keys`` hottest (a Zipf head is far smaller); the result rides to
-    executors as an ``isin`` literal set, costing no extra join.  One
-    map-side-combined aggregation job + one driver collect of at most
-    ``max_keys`` values — at any corpus size the aggregated frame is
-    |distinct keys|, not |facts|."""
-    counts = facts.groupBy(key).count().persist()
-    try:
-        tot = counts.agg(F.sum("count").alias("t"),
-                         F.max("count").alias("m")).first()
-        if not tot["t"]:
-            return []
-        threshold = max(tot["t"] / max(partitions, 1), min_rows)
-        if tot["m"] is None or tot["m"] <= threshold:
-            return []
-        return [
-            r[key]
-            for r in counts.filter(F.col("count") > threshold)
-            .orderBy(F.col("count").desc()).limit(max_keys).collect()
-            if r[key] is not None
-        ]
-    finally:
-        counts.unpersist()
+    executors as an ``isin`` literal set, costing no extra join.
+
+    ONE action: a hot key holds more than ``1/partitions`` of the rows,
+    so fewer than ``partitions`` keys can be hot, and the top that many
+    keys plus the total decide the answer.  Both branches read one
+    map-side-combined count exchange (reused), and the driver collects
+    at most ``min(partitions, max_keys) + 1`` rows at any corpus size."""
+    counts = facts.groupBy(key).count()
+    top = (counts.orderBy(F.col("count").desc())
+           .limit(min(max(partitions, 1), max_keys))
+           .withColumn("_total", F.lit(False)))
+    total = (counts.agg(F.sum("count").alias("count"))
+             .withColumn("_total", F.lit(True)))
+    rows = top.unionByName(total, allowMissingColumns=True).collect()
+    tot = next(r["count"] for r in rows if r["_total"])
+    if not tot:
+        return []
+    threshold = max(tot / max(partitions, 1), min_rows)
+    return [
+        r[key]
+        for r in sorted((r for r in rows if not r["_total"]),
+                        key=lambda r: -r["count"])
+        if r["count"] > threshold and r[key] is not None
+    ]
 
 
 def skew_report(facts: DataFrame, key: str = "name", top_k: int = 8) -> dict:

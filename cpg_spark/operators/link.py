@@ -27,8 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cpg_spark.operators.joins import (BROADCAST_MAX_ROWS,
-                                       bounded_dim_count, linking_join)
+from cpg_spark.operators.joins import BROADCAST_MAX_ROWS, linking_join
 
 # implicit-conversion groups (CallResolver.java:847-907 subset), mirrored
 # from the frontend-local ladder (cfamily_frontend._NUM_TYPES) so local
@@ -71,9 +70,11 @@ def _inferred_id_col(kind: str, name_col, sig_col, container_col=None):
 
 
 def _inferred_fn_nodes(df: DataFrame, node_id, name, arity) -> DataFrame:
-    """Node rows (one per id) for FunctionDeclarations no document
-    declares: inferred from a call or function reference by name and
-    arity, with no document or location."""
+    """Node rows for FunctionDeclarations no document declares: inferred
+    from a call or function reference by name and arity, with no
+    document or location.  Rows repeat per inferring mention; every
+    field derives from the id, so :func:`link_combined` deduplicates
+    them once over all branches."""
     return df.select(
         node_id.alias("node_id"),
         F.lit("FunctionDeclaration").alias("label"),
@@ -88,7 +89,7 @@ def _inferred_fn_nodes(df: DataFrame, node_id, name, arity) -> DataFrame:
         F.lit(False).alias("is_implicit"),
         F.lit(None).cast("int").alias("argument_index"),
         F.create_map(F.lit("arity"), arity.cast("string")).alias("props"),
-    ).dropDuplicates(["node_id"])
+    )
 
 
 def _pick_winner(joined: DataFrame, order_cols: list) -> DataFrame:
@@ -125,6 +126,26 @@ def _same_module(scope_col, module_col):
     return (module_col.isNotNull()
             & ((scope_col == module_col)
                | scope_col.startswith(F.concat(module_col, F.lit(".")))))
+
+
+def _with_ancestry(joined: DataFrame, closure: DataFrame | None) -> DataFrame:
+    """``joined`` plus ``_anc_depth``: the minimal supertype distance
+    from the mention's ``base_type`` up to the candidate's ``d_record``,
+    null when that record is no ancestor.  ``closure`` is the record
+    supertype closure (records with ancestry only, so broadcast), or
+    None when the corpus has none: then every depth is null and no join
+    is planned."""
+    if closure is None:
+        return joined.withColumn("_anc_depth", F.lit(None).cast("int"))
+    anc = closure.select(F.col("descendant").alias("_anc_child"),
+                         F.col("ancestor").alias("_anc_parent"),
+                         F.col("depth").alias("_anc_depth"))
+    return joined.join(
+        F.broadcast(anc),
+        (F.col("base_type") == F.col("_anc_child"))
+        & (F.col("d_record") == F.col("_anc_parent")),
+        "left_outer",
+    ).drop("_anc_child", "_anc_parent")
 
 
 def _imports_dim(mentions: DataFrame) -> DataFrame:
@@ -169,6 +190,7 @@ def symbol_dim(symbols: DataFrame) -> DataFrame:
 _FNPTR_MAX_HOPS = 4
 _FNPTR_SCHEMA = T.StructType([
     T.StructField("kind", T.StringType()),
+    T.StructField("doc_id", T.StringType()),
     T.StructField("mention_id", T.LongType()),
     T.StructField("fn_id", T.LongType()),
     T.StructField("t_name", T.StringType()),
@@ -188,9 +210,10 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
     The seed set is only the *missed* mentions (tiny after the name
     join); the frontier stops at function nodes (walking past a function
     would follow its return-value edges).  Returns ONE materialized frame
-    of (kind, mention_id, fn_id, t_name, t_nargs) rows: ``kind="hit"``
-    rows carry (mention_id, fn_id) — ALL functions reachable, matching
-    the reference's multi-invokes for conditionally-assigned pointers;
+    of (kind, doc_id, mention_id, fn_id, t_name, t_nargs) rows, where
+    ``doc_id`` is the calling mention's document: ``kind="hit"`` rows
+    carry (mention_id, fn_id) — ALL functions reachable, matching the
+    reference's multi-invokes for conditionally-assigned pointers;
     ``kind="term"`` rows carry (mention_id, t_name, t_nargs) where the
     chain ended at an UNRESOLVED signature-hinted function reference
     (``&fun`` with no local declaration — FunctionPointerTest's inferred
@@ -261,6 +284,7 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
     arrow_schema = to_arrow_schema(_FNPTR_SCHEMA)
 
     def walk(tbl):
+        doc = tbl.column("doc_id")[0].as_py()
         dfg: dict = {}
         fns: set = set()
         hints: dict = {}
@@ -295,25 +319,26 @@ def _function_pointer_targets(missed: DataFrame, nodes: DataFrame,
                     if p in fns:
                         if (mid, p) not in seen_hit:
                             seen_hit.add((mid, p))
-                            out.append({"kind": "hit", "mention_id": mid,
-                                        "fn_id": p})
+                            out.append({"kind": "hit", "doc_id": doc,
+                                        "mention_id": mid, "fn_id": p})
                         continue  # stop at function nodes
                     if p in hints:
                         s_, n_ = hints[p]
                         key = (mid, s_, n_)
                         if key not in seen_term:
                             seen_term.add(key)
-                            out.append({"kind": "term", "mention_id": mid,
-                                        "t_name": s_, "t_nargs": n_})
+                            out.append({"kind": "term", "doc_id": doc,
+                                        "mention_id": mid, "t_name": s_,
+                                        "t_nargs": n_})
                     nxt.add(p)
                 frontier = nxt
         return pa.Table.from_pylist(out, schema=arrow_schema)
 
-    # EAGER, once: the walk has four consumers (CALLS, the terminal
-    # join, two miss anti-joins), and Spark reuses no exchange above a
-    # localCheckpoint scan (``missed``), so a lazy walk would re-run its
-    # Python stage per consumer (5 runs per link write on the lifecycle
-    # bench).  Output is at most one row per (seed, target).
+    # EAGER, once: the walk has up to five consumers (the row-kind
+    # probe, CALLS, the terminal join, two miss anti-joins), and Spark
+    # reuses no exchange above a localCheckpoint scan (``missed``), so a
+    # lazy walk would re-run its Python stage per consumer.  Output is
+    # at most one row per (seed, target).
     return stream.groupBy("doc_id").applyInArrow(
         walk, schema=_FNPTR_SCHEMA).localCheckpoint(eager=True)
 
@@ -445,14 +470,17 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
 
     ``closure`` is the record supertype closure
     (descendant, ancestor, depth) from
-    :func:`cpg_spark.operators.hierarchy.supertype_record_closure`: member
-    calls whose base record does not declare the method resolve against
-    ancestor records' methods, nearest ancestor first — the reference's
+    :func:`cpg_spark.operators.hierarchy.supertype_record_closure`, or
+    None when the corpus has no resolvable supertype: member calls whose
+    base record does not declare the method resolve against ancestor
+    records' methods, nearest ancestor first — the reference's
     ``getInvocationCandidatesFromParents`` walk
     (CallResolver.java:1707-1739) with overriding-candidate ranking
     (:1089-1127).  ``nodes``/``edges`` feed the function-pointer walk.
 
-    Returns (edges, inferred_nodes).
+    Returns (edges, inferred_nodes, fnptr_kinds): ``fnptr_kinds`` are the
+    sorted row kinds the function-pointer walk produced, which decide
+    the branches built after it.
     """
     calls = mentions.filter(
         F.col("kind").isin("call", "member_call", "super_call")).select(
@@ -463,16 +491,8 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
         F.col("kind").isin("call", "member_call", "super_call"))
 
     # supertype walk: (base_type, d_record) ancestry pairs with minimal
-    # depth; the closure is records-with-ancestry only -> broadcast
-    anc = closure.select(F.col("descendant").alias("_anc_child"),
-                         F.col("ancestor").alias("_anc_parent"),
-                         F.col("depth").alias("_anc_depth"))
-    joined = joined.join(
-        F.broadcast(anc),
-        (F.col("base_type") == F.col("_anc_child"))
-        & (F.col("d_record") == F.col("_anc_parent")),
-        "left_outer",
-    ).drop("_anc_child", "_anc_parent")
+    # depth
+    joined = _with_ancestry(joined, closure)
 
     # signature viability (CallResolver.java:980-1014 defaults,
     # :847-907 implicit casts): applied only where the frontend exported
@@ -615,93 +635,90 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     # inferred FunctionDeclaration
     # (deterministic id on (name, arity) so identical misses across 10^12
     # docs collapse to ONE canonical inferred node)
-    # materialize the miss set: the fnptr walk's input, the terminal
-    # join, the fnptr join and the inference path all consume it —
-    # lazily each re-runs the whole name-join + overload-ladder subtree
-    # (measured 54 s vs 18 s for the stage at 96k docs)
+    # materialize the miss set: the fnptr walk's input and the inference
+    # path both consume it — lazily each re-runs the whole name-join +
+    # overload-ladder subtree (measured 54 s vs 18 s for the stage at
+    # 96k docs)
     missed = calls.join(winners.select("mention_id"), "mention_id",
                         "left_anti").localCheckpoint(eager=True)
-    # keep the pre-anti-join miss set: a conditionally-assigned pointer
-    # can have BOTH a resolved target and an unresolved terminal; the
-    # terminal leg must still be processed even though the resolved hit
-    # removes the mention from `missed`
-    fp_base = missed
     walked = _function_pointer_targets(missed, nodes, edges, mentions)
-    fp = walked.filter(F.col("kind") == "hit").select("mention_id", "fn_id")
-    fp_terms = walked.filter(F.col("kind") == "term").select(
-        "mention_id", "t_name", "t_nargs")
-    fp_calls = (
-        fp.select(
-            F.col("mention_id").alias("subj"),
-            F.lit("CALLS").alias("pred"),
-            F.col("fn_id").alias("obj"))
-        .join(missed.select(F.col("mention_id").alias("subj"), "doc_id"),
-              "subj")
-        .withColumn("props", F.create_map().cast("map<string,string>"))
-        .select("subj", "pred", "obj", "props", "doc_id")
-    )
-    fp_dfg = fp_calls.select(
-        F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
-        F.col("subj").alias("obj"), "props", "doc_id")
-    fp_calls = fp_calls.unionByName(fp_dfg)
-    missed = missed.join(fp.select("mention_id").distinct(),
-                         "mention_id", "left_anti")
-    # chains ending at an UNRESOLVED signature-hinted function ref
-    # (`&fun`): resolve the terminal's (name, arity) against the symbol
-    # dim, else infer FunctionDeclaration(name, arity) — the same key
-    # link_refs' miss path mints, so both collapse to ONE node at
-    # materialize (FunctionPointerTest noParamUnknown: every call
-    # through any pointer to &fun invokes one inferred fn).  Built
-    # lazily: with no terminals the window + dim join run over an empty
-    # sliver inside the same final job
-    tm = fp_terms.join(
-        fp_base.select("mention_id", "doc_id"), "mention_id")
-    t_dim = dim.filter(F.col("d_kind").isin("function", "method")).select(
-        F.col("d_name").alias("t_name"), "d_decl_id", "d_n_params")
-    tj = tm.join(
-        F.broadcast(
-            t_dim.join(tm.select("t_name").distinct(), "t_name",
-                       "left_semi")),
-        ["t_name"], "left_outer",
-    )
-    # arity-mismatched declarations are NULLED, not row-dropped: a
-    # terminal whose name matches only wrong-arity decls must still fall
-    # through to inference — dropping its rows would erase the call
-    # entirely (no edge AND no inferred node)
-    _t_arity_ok = (F.coalesce(F.col("d_n_params"), F.lit(0))
-                   == F.col("t_nargs"))
-    tj = (tj.withColumn(
-              "d_n_params",
-              F.when(_t_arity_ok, F.col("d_n_params")))
-          .withColumn(
-              "d_decl_id",
-              F.when(_t_arity_ok, F.col("d_decl_id"))))
-    # one winner PER TERMINAL, not per mention: a pointer reaching
-    # several functions (cond ? &f : &g) keeps every invokes leg
-    # (multi-invokes semantics); best declared match first, else the
-    # inferred (name, arity) node
-    tw = Window.partitionBy("mention_id", "t_name", "t_nargs").orderBy(
-        F.col("d_decl_id").isNull().cast("int"), "d_decl_id")
-    tj = (tj.withColumn("_rk", F.row_number().over(tw))
-          .filter(F.col("_rk") == 1).drop("_rk"))
-    t_obj = F.coalesce(
-        F.col("d_decl_id"),
-        _inferred_id_col("FunctionDeclaration", F.col("t_name"),
-                         F.col("t_nargs")))
-    t_calls = tj.select(
-        F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
-        t_obj.alias("obj"),
-        F.create_map().cast("map<string,string>").alias("props"),
-        "doc_id")
-    t_dfg = t_calls.select(
-        F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
-        F.col("subj").alias("obj"), "props", "doc_id")
-    fp_calls = fp_calls.unionByName(t_calls).unionByName(t_dfg)
-    term_inferred = _inferred_fn_nodes(
-        tj.filter(F.col("d_decl_id").isNull()), t_obj, F.col("t_name"),
-        F.col("t_nargs"))
-    missed = missed.join(fp_terms.select("mention_id").distinct(),
-                         "mention_id", "left_anti")
+    # one single-task job over the materialized walk: a row kind the
+    # walk did not produce leaves its branch below unplanned (most
+    # corpora have no function-pointer call at all)
+    fnptr_kinds = sorted(r["kind"] for r in walked.coalesce(1)
+                         .select("kind").distinct().collect())
+    fp_edges = []
+    fp_nodes = []
+    if "hit" in fnptr_kinds:
+        fp = walked.filter(F.col("kind") == "hit")
+        hit_calls = fp.select(
+            F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
+            F.col("fn_id").alias("obj"),
+            F.create_map().cast("map<string,string>").alias("props"),
+            "doc_id")
+        hit_dfg = hit_calls.select(
+            F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
+            F.col("subj").alias("obj"), "props", "doc_id")
+        fp_edges += [hit_calls, hit_dfg]
+        missed = missed.join(fp.select("mention_id").distinct(),
+                             "mention_id", "left_anti")
+    if "term" in fnptr_kinds:
+        # chains ending at an UNRESOLVED signature-hinted function ref
+        # (`&fun`): resolve the terminal's (name, arity) against the
+        # symbol dim, else infer FunctionDeclaration(name, arity) — the
+        # same key link_refs' miss path mints, so both collapse to ONE
+        # node (FunctionPointerTest noParamUnknown: every call through
+        # any pointer to &fun invokes one inferred fn).  A mention with
+        # a resolved hit keeps its terminals too: a conditionally
+        # assigned pointer can have both
+        tm = walked.filter(F.col("kind") == "term").select(
+            "mention_id", "doc_id", "t_name", "t_nargs")
+        t_dim = dim.filter(F.col("d_kind").isin("function", "method")).select(
+            F.col("d_name").alias("t_name"), "d_decl_id", "d_n_params")
+        tj = tm.join(
+            F.broadcast(
+                t_dim.join(tm.select("t_name").distinct(), "t_name",
+                           "left_semi")),
+            ["t_name"], "left_outer",
+        )
+        # arity-mismatched declarations are NULLED, not row-dropped: a
+        # terminal whose name matches only wrong-arity decls must still
+        # fall through to inference — dropping its rows would erase the
+        # call entirely (no edge AND no inferred node)
+        _t_arity_ok = (F.coalesce(F.col("d_n_params"), F.lit(0))
+                       == F.col("t_nargs"))
+        tj = (tj.withColumn(
+                  "d_n_params",
+                  F.when(_t_arity_ok, F.col("d_n_params")))
+              .withColumn(
+                  "d_decl_id",
+                  F.when(_t_arity_ok, F.col("d_decl_id"))))
+        # one winner PER TERMINAL, not per mention: a pointer reaching
+        # several functions (cond ? &f : &g) keeps every invokes leg
+        # (multi-invokes semantics); best declared match first, else the
+        # inferred (name, arity) node
+        tw = Window.partitionBy("mention_id", "t_name", "t_nargs").orderBy(
+            F.col("d_decl_id").isNull().cast("int"), "d_decl_id")
+        tj = (tj.withColumn("_rk", F.row_number().over(tw))
+              .filter(F.col("_rk") == 1).drop("_rk"))
+        t_obj = F.coalesce(
+            F.col("d_decl_id"),
+            _inferred_id_col("FunctionDeclaration", F.col("t_name"),
+                             F.col("t_nargs")))
+        t_calls = tj.select(
+            F.col("mention_id").alias("subj"), F.lit("CALLS").alias("pred"),
+            t_obj.alias("obj"),
+            F.create_map().cast("map<string,string>").alias("props"),
+            "doc_id")
+        t_dfg = t_calls.select(
+            F.col("obj").alias("subj"), F.lit("DFG").alias("pred"),
+            F.col("subj").alias("obj"), "props", "doc_id")
+        fp_edges += [t_calls, t_dfg]
+        fp_nodes.append(_inferred_fn_nodes(
+            tj.filter(F.col("d_decl_id").isNull()), t_obj, F.col("t_name"),
+            F.col("t_nargs")))
+        missed = missed.join(tm.select("mention_id").distinct(),
+                             "mention_id", "left_anti")
     # unknown-class gate (CallResolverTest.ensureNoUnknownClassDummies):
     # a member call whose base type names NO record anywhere in the corpus
     # gets neither an inferred target nor a CALLS edge — the reference
@@ -739,8 +756,12 @@ def link_calls(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     )
 
     out_edges = (calls_edges.unionByName(fn_dfg).unionByName(arg_param)
-                 .unionByName(inferred_calls).unionByName(fp_calls))
-    return out_edges, inferred_nodes.unionByName(term_inferred)
+                 .unionByName(inferred_calls))
+    for part in fp_edges:
+        out_edges = out_edges.unionByName(part)
+    for part in fp_nodes:
+        inferred_nodes = inferred_nodes.unionByName(part)
+    return out_edges, inferred_nodes, fnptr_kinds
 
 
 def link_refs(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
@@ -754,7 +775,8 @@ def link_refs(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
     ``dim`` is the shared symbol dimension (see :func:`symbol_dim`) —
     unfiltered so its broadcast exchange is reused with link_calls';
     kind restrictions happen in the candidate filter.  ``closure`` (the
-    record supertype closure) lets member refs reach INHERITED fields —
+    record supertype closure, or None when empty) lets member refs reach
+    INHERITED fields —
     ``child.inheritedField`` resolves against ancestor records' fields,
     nearest ancestor first (VariableUsageResolver.java:375-407
     resolveMember walks superTypesMap)."""
@@ -781,15 +803,7 @@ def link_refs(mentions: DataFrame, joined: DataFrame, dim: DataFrame,
 
     # inherited-field walk: (base_type, d_record) ancestry pairs, nearest
     # ancestor first — mirrors the member-call supertype walk
-    anc = closure.select(F.col("descendant").alias("_anc_child"),
-                         F.col("ancestor").alias("_anc_parent"),
-                         F.col("depth").alias("_anc_depth"))
-    joined = joined.join(
-        F.broadcast(anc),
-        (F.col("base_type") == F.col("_anc_child"))
-        & (F.col("d_record") == F.col("_anc_parent")),
-        "left_outer",
-    ).drop("_anc_child", "_anc_parent")
+    joined = _with_ancestry(joined, closure)
     cand = joined.filter(
         # member refs need a field of the matching record OR one of its
         # ancestor records when the base is known
@@ -956,15 +970,30 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
     join; None sizes the symbol dimension and picks.
     Unresolved record supertypes that name a JDK type pull in the static
     JDK ancestry (JavaExternalTypeHierarchyResolver, a default pass in
-    the reference); the trigger set comes from the probe job the closure
-    needs anyway, so a corpus without one pays nothing for it.
-    Returns (combined, stats)."""
+    the reference).
+
+    The plan holds only the branches the input can fill.  One probe job
+    (:func:`probe_supertypes`) answers whether any supertype resolves,
+    which JDK types trigger, and the dimension size: with no resolvable
+    supertype the closure is empty, so the ancestry joins, OVERRIDES and
+    override dispatch are not planned.  The function-pointer walk's row
+    kinds decide its hit and terminal branches (:func:`link_calls`).
+
+    Returns (combined, stats); ``stats`` holds ``strategy``,
+    ``dim_rows`` (None when ``strategy`` is forced), ``closure``
+    (``"built"`` or ``"skipped"``) and ``fnptr_kinds``."""
     from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
                                                         probe_supertypes)
     from cpg_spark.operators.hierarchy import (overrides_edges,
                                                supertype_record_closure)
 
-    any_resolved, triggers = probe_supertypes(nodes, edges)
+    dim = symbol_dim(symbols)
+    dim_rows = None
+    if strategy is None:
+        any_resolved, triggers, dim_rows = probe_supertypes(nodes, edges, dim)
+        strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
+    else:
+        any_resolved, triggers = probe_supertypes(nodes, edges)
     jdk = external_jdk_hierarchy(nodes.sparkSession, triggers)
     if jdk is not None:
         # the closure below must see the implicit JDK records/edges so
@@ -973,36 +1002,32 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
         nodes = nodes.unionByName(jdk_nodes)
         edges = edges.unionByName(jdk_edges)
 
-    # ONE closure computation (depth-ranked) feeds both the inherited
-    # member-call walk and the OVERRIDES join
-    closure = supertype_record_closure(
-        nodes, edges, any_resolved or jdk is not None, with_depth=True)
+    # ONE closure computation (depth-ranked) feeds the inherited member
+    # walks and the OVERRIDES join; None when nothing can resolve
+    closure = None
+    if any_resolved or jdk is not None:
+        closure = supertype_record_closure(nodes, edges, True,
+                                           with_depth=True)
 
-    dim = symbol_dim(symbols)
-    dim_rows = None
-    if strategy is None:
-        # ONE sizing job over the shared dimension (both joins use it)
-        dim_rows = bounded_dim_count(dim)
-        strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
     joined = joined_mentions(mentions, dim, strategy)
-    call_edges, inferred_nodes = link_calls(mentions, joined, dim, closure,
-                                            nodes, edges)
+    call_edges, inferred_nodes, fnptr_kinds = link_calls(
+        mentions, joined, dim, closure, nodes, edges)
     ref_edges, ref_inferred = link_refs(mentions, joined, dim, closure)
-    inferred_nodes = inferred_nodes.unionByName(ref_inferred)
-    ov = overrides_edges(nodes, edges, symbols,
-                         closure=closure.select("descendant", "ancestor"))
-    # dynamic dispatch over BOTH frontend-local and link-resolved CALLS
-    # (see override_dispatch) — ov is reused for the OVERRIDES rows below
-    dispatch = override_dispatch(
-        edges.select("subj", "pred", "obj", "props", "doc_id").unionByName(
-            call_edges.select("subj", "pred", "obj", "props", "doc_id")),
-        ov)
-    all_edges = (
-        call_edges.unionByName(ref_edges)
-        .unionByName(dispatch)
-        .unionByName(ov)
-        .withColumn("row_kind", F.lit("edge"))
-    )
+    # branches infer the same (name, arity) node; one dedup over all
+    inferred_nodes = inferred_nodes.unionByName(ref_inferred).dropDuplicates(
+        ["node_id"])
+    all_edges = call_edges.unionByName(ref_edges)
+    if closure is not None:
+        ov = overrides_edges(nodes, edges, symbols,
+                             closure=closure.select("descendant", "ancestor"))
+        # dynamic dispatch over BOTH frontend-local and link-resolved
+        # CALLS (see override_dispatch) — ov also lands as OVERRIDES rows
+        dispatch = override_dispatch(
+            edges.select("subj", "pred", "obj", "props", "doc_id").unionByName(
+                call_edges.select("subj", "pred", "obj", "props", "doc_id")),
+            ov)
+        all_edges = all_edges.unionByName(dispatch).unionByName(ov)
+    all_edges = all_edges.withColumn("row_kind", F.lit("edge"))
     nodes_part = inferred_nodes.withColumn("row_kind", F.lit("node"))
     if jdk is not None:
         all_edges = all_edges.unionByName(
@@ -1010,7 +1035,9 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
         nodes_part = nodes_part.unionByName(
             jdk_nodes.withColumn("row_kind", F.lit("node")))
     combined = all_edges.unionByName(nodes_part, allowMissingColumns=True)
-    return combined, {"strategy": strategy, "dim_rows": dim_rows}
+    return combined, {"strategy": strategy, "dim_rows": dim_rows,
+                      "closure": "skipped" if closure is None else "built",
+                      "fnptr_kinds": fnptr_kinds}
 
 
 def split_linked(combined: DataFrame):

@@ -126,8 +126,10 @@ def main() -> None:
     sections.append(
         "## cpg_link_calls (broadcast path)\n\n"
         "mentions x symbols name join — expect BroadcastHashJoin (symbol "
-        "dim broadcast), PythonMapInArrow ONLY in the parse "
-        "leaf (vectorized), window for innermost-winner selection\n\n"
+        "dim broadcast), MapInArrow ONLY in the parse leaf (vectorized), "
+        "a min_by SortAggregate for innermost-winner selection; the "
+        "ancestry joins, OVERRIDES and the fnptr terminal Window are "
+        "planned only when the probed input has them\n\n"
         f"```\n{trim(plan_of(linked), 80)}\n```\n")
 
     # the shared visibility-keyed linking join (join key = (name, visible

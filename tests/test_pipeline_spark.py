@@ -161,13 +161,38 @@ def test_ingest_passthrough_commits_by_reference(spark, tmp_path_factory):
     assert t1 == t3
 
 
-def test_final_tables_unique_ids(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def fixture_run(spark, tmp_path_factory):
+    """(workdir, pipeline) of one pipeline run over the fixture corpus."""
     wd = str(tmp_path_factory.mktemp("cpgwd2"))
-    p = run_cpg_pipeline(spark, fixture_docs(spark), wd, run_id="r2")
+    return wd, run_cpg_pipeline(spark, fixture_docs(spark), wd, run_id="r2")
+
+
+def test_final_tables_unique_ids(spark, fixture_run):
+    _, p = fixture_run
     nodes = spark.read.parquet(p.results[-1].outputs["nodes"])
     assert nodes.count() == nodes.select("node_id").distinct().count()
     edges = spark.read.parquet(p.results[-1].outputs["edges"])
     assert edges.count() == edges.select("subj", "pred", "obj").distinct().count()
+
+
+def test_link_stats_in_lineage(fixture_run):
+    """The link stage's lineage row carries the probe's answers: the
+    join strategy and dim size, whether the supertype closure was built,
+    and which function-pointer walk rows exist."""
+    import json
+    import os
+
+    wd, p = fixture_run
+    with open(os.path.join(wd, "r2", "_lineage", "link.jsonl")) as fh:
+        summary = [json.loads(ln) for ln in fh][-1]
+    assert summary["partition_id"] == -1
+    stats = summary["metrics"]
+    assert stats == [r.metrics for r in p.results if r.name == "link"][0]
+    assert stats["strategy"] == "broadcast" and stats["dim_rows"] > 0
+    # the fixtures include python class hierarchies, so the closure runs
+    assert stats["closure"] == "built"
+    assert set(stats["fnptr_kinds"]) <= {"hit", "term"}
 
 
 def test_dense_id_materialize(spark, tmp_path, monkeypatch):
