@@ -45,7 +45,3 @@ FRONTENDS = {
     "code/javascript": parse_ts_document,
     "code/powershell": parse_ps_document,
 }
-
-
-def register_frontend(kind: str, fn) -> None:
-    FRONTENDS[kind] = fn

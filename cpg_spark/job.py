@@ -4,6 +4,8 @@ Cluster invocation::
 
     spark-submit --master <cluster> \\
         --py-files cpg_spark.zip \\
+        --conf spark.cpg.catalog=<iceberg catalog> \\
+        --conf spark.cpg.scratchDir=<scratch root> \\
         scripts/cpg_job.py \\
         --input  <docs table uri>   \\
         --workdir <checkpoint root> \\
@@ -13,7 +15,11 @@ The package ships to every executor via ``--py-files`` (a plain zip of
 ``cpg_spark/`` — no data files, so zipimport suffices for the Arrow UDF
 workers); the session comes from ``getOrCreate()`` so master, executor
 sizing and shuffle partitions are whatever spark-submit configured —
-nothing in the pipeline is local-mode-specific.  ``--workdir`` is the
+nothing in the pipeline is local-mode-specific.  The two ``spark.cpg.*``
+keys are optional: ``spark.cpg.catalog`` commits stage tables to that
+catalog instead of parquet directories, and ``spark.cpg.scratchDir`` is
+the base of scratch tables (default: the system temp dir).  The job
+reads no environment variable.  ``--workdir`` is the
 stage-commit root: re-running with the same ``--run-id`` resumes from
 the last committed stage (pipeline.py checkpoint contract).
 """

@@ -960,14 +960,14 @@ def override_dispatch(calls_edges: DataFrame, overrides: DataFrame) -> DataFrame
 
 
 def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
-                  edges: DataFrame, strategy: str | None = None):
+                  edges: DataFrame):
     """The linking stage: one output frame (row_kind edge|node) carrying
     linked edges, OVERRIDES edges and inferred nodes — materializing a
     SINGLE table lets Catalyst reuse the name-join exchanges across the
     edge and inferred-node branches instead of executing the join per
     output (:func:`split_linked` separates them again).
-    ``strategy`` forces ``"broadcast"`` or ``"salted"`` for the name
-    join; None sizes the symbol dimension and picks.
+    The name join broadcasts the symbol dimension up to
+    ``BROADCAST_MAX_ROWS`` rows and is salted above it.
     Unresolved record supertypes that name a JDK type pull in the static
     JDK ancestry (JavaExternalTypeHierarchyResolver, a default pass in
     the reference).
@@ -980,7 +980,7 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
     kinds decide its hit and terminal branches (:func:`link_calls`).
 
     Returns (combined, stats); ``stats`` holds ``strategy``,
-    ``dim_rows`` (None when ``strategy`` is forced), ``closure``
+    ``dim_rows``, ``closure``
     (``"built"`` or ``"skipped"``) and ``fnptr_kinds``."""
     from cpg_spark.operators.external_hierarchy import (external_jdk_hierarchy,
                                                         probe_supertypes)
@@ -988,12 +988,8 @@ def link_combined(mentions: DataFrame, symbols: DataFrame, nodes: DataFrame,
                                                supertype_record_closure)
 
     dim = symbol_dim(symbols)
-    dim_rows = None
-    if strategy is None:
-        any_resolved, triggers, dim_rows = probe_supertypes(nodes, edges, dim)
-        strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
-    else:
-        any_resolved, triggers = probe_supertypes(nodes, edges)
+    any_resolved, triggers, dim_rows = probe_supertypes(nodes, edges, dim)
+    strategy = "broadcast" if dim_rows <= BROADCAST_MAX_ROWS else "salted"
     jdk = external_jdk_hierarchy(nodes.sparkSession, triggers)
     if jdk is not None:
         # the closure below must see the implicit JDK records/edges so

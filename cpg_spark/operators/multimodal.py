@@ -5,7 +5,7 @@ URIs); a real pipeline joins them to a binary table
 ``media(media_ref string, payload binary, mime string)`` and runs decode /
 feature-extraction in Arrow batches.  The image/audio/video codecs are
 not in this container, so every kernel defaults to a deterministic fake
-(``CPG_SPARK_FAKE_DECODE=1``); with the gate off, ALL FOUR kernels take
+(``fake_decode=True``); with ``fake_decode=False``, ALL FOUR kernels take
 a real codec path — PIL for decode/resize, PyAV for frame sampling,
 soundfile for audio chunking — attempted per partition and failing
 loudly (``NotImplementedError``) only when the executor environment
@@ -19,7 +19,6 @@ untouched while preserving span order (our input invariant)."""
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -79,17 +78,9 @@ def _media_parallelism(media: DataFrame) -> int:
     return max(media.sparkSession.sparkContext.defaultParallelism, 8)
 
 
-def _fake_decode_default() -> bool:
-    """The codec gate, resolved DRIVER-side at plan build and captured in
-    the UDF closure — worker processes do not see driver env mutations,
-    so reading the env inside the kernel would silently ignore the
-    setting on a cluster."""
-    return os.environ.get("CPG_SPARK_FAKE_DECODE", "1") == "1"
-
-
 def _decode_image(payload: bytes, fake: bool) -> tuple[int, int, list[float]]:
     """Decode + feature-extract. The deterministic fake is the default
-    (this container has no codecs); with ``CPG_SPARK_FAKE_DECODE=0`` the
+    (this container has no codecs); with ``fake_decode=False`` the
     REAL path activates and uses PIL when the executor environment
     provides it (ship it via ``spark-submit --archives pyenv.tar.gz`` —
     the standard conda-pack/venv-pack pattern), failing loudly when it
@@ -109,7 +100,7 @@ def _decode_image(payload: bytes, fake: bool) -> tuple[int, int, list[float]]:
         raise NotImplementedError(
             "real image decode requires PIL — ship it to executors via "
             "spark-submit --archives (conda-pack/venv-pack), or set "
-            "CPG_SPARK_FAKE_DECODE=1 for the deterministic fake"
+            "fake_decode=True for the deterministic fake"
         ) from exc
     img = Image.open(io.BytesIO(payload))
     img.load()
@@ -121,11 +112,9 @@ def _decode_image(payload: bytes, fake: bool) -> tuple[int, int, list[float]]:
 
 
 def extract_features(media: DataFrame,
-                     fake_decode: bool | None = None) -> DataFrame:
+                     fake_decode: bool = True) -> DataFrame:
     """Arrow-batched decode/feature pipeline over the binary column — the
-    pattern for any multimodal kernel (resize, frame-sample, fingerprint).
-    ``fake_decode`` defaults to the driver-side env gate."""
-    fake = _fake_decode_default() if fake_decode is None else fake_decode
+    pattern for any multimodal kernel (resize, frame-sample, fingerprint)."""
 
     def run(batches):
         for pdf in batches:
@@ -133,7 +122,7 @@ def extract_features(media: DataFrame,
             for ref, payload, mime in zip(pdf["media_ref"], pdf["payload"],
                                           pdf["mime"]):
                 payload = bytes(payload) if payload is not None else b""
-                w, h, feat = _decode_image(payload, fake)
+                w, h, feat = _decode_image(payload, fake_decode)
                 rows.append({
                     "media_ref": ref, "mime": mime, "n_bytes": len(payload),
                     "sha": hashlib.sha256(payload).hexdigest(),
@@ -158,7 +147,7 @@ RESIZED_SCHEMA = T.StructType([
 
 def resize_images(media: DataFrame, target_w: int = 32,
                   target_h: int = 32,
-                  fake_decode: bool | None = None) -> DataFrame:
+                  fake_decode: bool = True) -> DataFrame:
     """Arrow-batched image resize over the binary column: one output row
     per image with the resized payload at (target_w, target_h).
 
@@ -169,12 +158,11 @@ def resize_images(media: DataFrame, target_w: int = 32,
     by tests.  Partitioning: pure per-row map — no shuffle beyond the
     repartition to full parallelism (resize is the canonical
     embarrassingly-parallel media kernel)."""
-    fake = _fake_decode_default() if fake_decode is None else fake_decode
 
     def run(batches):
         # gate checked once per partition (before any rows are consumed)
         # so real-decode mode fails loudly even on empty partitions
-        if not fake:
+        if not fake_decode:
             try:
                 import io
 
@@ -183,13 +171,13 @@ def resize_images(media: DataFrame, target_w: int = 32,
                 raise NotImplementedError(
                     "real image resize requires PIL — ship it via "
                     "spark-submit --archives, or set "
-                    "CPG_SPARK_FAKE_DECODE=1") from exc
+                    "fake_decode=True") from exc
         for pdf in batches:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
                 need = target_w * target_h
-                if fake:
+                if fake_decode:
                     out = bytearray()
                     seed = payload or b"\x00"
                     while len(out) < need:
@@ -221,7 +209,7 @@ FRAME_SCHEMA = T.StructType([
 
 def sample_frames(media: DataFrame, n_frames: int = 4,
                   frame_interval_ms: int = 1000,
-                  fake_decode: bool | None = None) -> DataFrame:
+                  fake_decode: bool = True) -> DataFrame:
     """Video frame sampling: FAN-OUT kernel — one input row (a video
     payload) yields ``n_frames`` output rows (frame_no, timestamp,
     per-frame feature), one every ``frame_interval_ms`` milliseconds of
@@ -233,13 +221,12 @@ def sample_frames(media: DataFrame, n_frames: int = 4,
     Scale shape: mapInPandas emits the fan-out inside the Arrow batch —
     no explode/join; downstream per-frame ops group on (media_ref,
     frame_no), a uniform composite key."""
-    fake = _fake_decode_default() if fake_decode is None else fake_decode
 
     def run(batches):
         # real mode mirrors the decode/resize PIL pattern: attempt the
         # codec import once per partition, fail loudly only when absent
         # (ship PyAV to executors via spark-submit --archives)
-        if not fake:
+        if not fake_decode:
             try:
                 import io
 
@@ -248,13 +235,13 @@ def sample_frames(media: DataFrame, n_frames: int = 4,
                 raise NotImplementedError(
                     "real frame sampling requires PyAV (ffmpeg bindings) "
                     "— ship it via spark-submit --archives, or set "
-                    "CPG_SPARK_FAKE_DECODE=1 for the deterministic fake"
+                    "fake_decode=True for the deterministic fake"
                 ) from exc
         for pdf in batches:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
-                if fake:
+                if fake_decode:
                     for fno in range(n_frames):
                         fb = hashlib.blake2b(
                             payload + fno.to_bytes(4, "big"),
@@ -355,13 +342,13 @@ def _read_audio(payload: bytes):
     raise NotImplementedError(
         "real audio chunking requires soundfile (libsndfile) for non-WAV "
         "containers — ship it via spark-submit --archives "
-        "(pip install soundfile), or set CPG_SPARK_FAKE_DECODE=1 for the "
+        "(pip install soundfile), or set fake_decode=True for the "
         "deterministic fake")
 
 
 def chunk_audio(media: DataFrame, chunk_ms: int = 1000,
                 n_chunks: int = 4,
-                fake_decode: bool | None = None) -> DataFrame:
+                fake_decode: bool = True) -> DataFrame:
     """Audio chunking: the third modality's fan-out kernel (images
     decode 1->1, video samples frames 1->N, audio windows into fixed
     chunks 1->N with per-chunk timestamps + features — the Whisper-style
@@ -374,14 +361,13 @@ def chunk_audio(media: DataFrame, chunk_ms: int = 1000,
     Scale shape: mapInPandas emits the fan-out inside the batch — no
     explode/join; downstream per-chunk ops key on (media_ref, chunk_no),
     a uniform composite key."""
-    fake = _fake_decode_default() if fake_decode is None else fake_decode
 
     def run(batches):
         for pdf in batches:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
-                if fake:
+                if fake_decode:
                     for cno in range(n_chunks):
                         cb = hashlib.blake2b(
                             payload + b"a" + cno.to_bytes(4, "big"),

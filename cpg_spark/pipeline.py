@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from cpg_spark import sinks
 from cpg_spark.operators.parse import parse_docs, split_parse_output
+from cpg_spark.session import settings_in_force
 
 
 @dataclass
@@ -82,7 +83,9 @@ class Pipeline:
         Row counts come from the parquet file footers (pyarrow metadata) —
         one part file per write partition — so lineage costs zero Spark
         jobs and no table re-scan.  On an Iceberg catalog the same counts
-        come from the snapshot manifests."""
+        come from the snapshot manifests.  The stage's summary row also
+        records the settings in force
+        (:func:`cpg_spark.session.settings_in_force`)."""
         rows = []
         for name, uri in outputs.items():
             try:
@@ -104,6 +107,7 @@ class Pipeline:
             fh.write(json.dumps({
                 "run_id": self.run_id, "stage": stage, "partition_id": -1,
                 "resumed": resumed, "wall_ms": wall_ms, "metrics": metrics,
+                "config": settings_in_force(self.spark),
             }) + "\n")
 
     # ------------------------------------------------------------------
@@ -111,19 +115,11 @@ class Pipeline:
                   resume: bool = True) -> dict[str, DataFrame]:
         t0 = time.time()
         probe = sinks.table_uri(self.workdir, self.run_id, stage.name, "_stage_done")
-        if resume and sinks.is_committed(probe):
+        if resume and sinks.is_committed(self.spark, probe):
             # all outputs of this stage are committed: reload them.  The
             # commit marker records the output URIs (incl. passthrough
-            # sources outside the stage dir); fall back to a dir listing
-            # for markers written by older runs.
+            # sources outside the stage dir).
             outputs = sinks.committed_outputs(probe)
-            if outputs is None:
-                stage_dir = os.path.join(self.workdir, self.run_id, stage.name)
-                outputs = {
-                    n: os.path.join(stage_dir, n)
-                    for n in os.listdir(stage_dir)
-                    if not n.startswith("_")
-                }
             dfs = {n: sinks.read_table(self.spark, u) for n, u in outputs.items()}
             self.results.append(StageResult(stage.name, outputs, 0, True))
             return dfs
@@ -231,12 +227,6 @@ def _link(spark, ctx):
 
     nodes, edges, mentions, symbols = split_parse_output(ctx["cpg_raw"])
     combined, stats = link_combined(mentions, symbols, nodes, edges)
-    if os.environ.get("CPG_SPARK_SKEW_REPORT") == "1":
-        # per-key histogram of the join key (SURVEY §7.3) — one extra
-        # aggregation job, so opt-in
-        from cpg_spark.operators.joins import skew_report
-
-        stats["mention_name_skew"] = skew_report(mentions)
     return {"linked": combined}, stats, {}
 
 
@@ -294,36 +284,10 @@ def _materialize(spark, ctx):
     st = all_edges.filter(F.col("pred") == "SUPER_TYPE").dropDuplicates(
         ["subj", "pred", "obj"])
     all_edges = all_edges.filter(F.col("pred") != "SUPER_TYPE").unionByName(st)
-    metrics = {}
-    if os.environ.get("CPG_SPARK_DENSE_IDS") == "1":
-        # IdentifierPass remap at the OUTPUT boundary: content-hash ids
-        # (random int64) are the in-flight determinism/resume contract but
-        # are incompressible — measured 97% of edge-table bytes; remapping
-        # to dense walk-order ids shrank the dominant output table 68 MB
-        # -> 23 MB (3x) at 24k docs.  The content hash is kept as
-        # `content_id` on nodes so resume/idempotency joins stay possible.
-        from cpg_spark.operators.identifiers import identify_nodes
-
-        withseq = identify_nodes(all_nodes).persist()
-        dense = withseq.select(F.col("node_id").alias("_h"), "seq_id")
-        all_nodes = (
-            withseq.withColumn("content_id", F.col("node_id"))
-            .withColumn("node_id", F.col("seq_id")).drop("seq_id")
-        )
-        all_edges = (
-            all_edges
-            .join(dense.withColumnRenamed("_h", "subj")
-                  .withColumnRenamed("seq_id", "_s"), "subj", "left")
-            .join(dense.withColumnRenamed("_h", "obj")
-                  .withColumnRenamed("seq_id", "_o"), "obj", "left")
-            .select(F.coalesce("_s", "subj").alias("subj"), "pred",
-                    F.coalesce("_o", "obj").alias("obj"), "props", "doc_id")
-        )
-        metrics["dense_ids"] = True
     return (
         {"nodes": all_nodes, "edges": all_edges,
          "type_components": comp},
-        metrics,
+        {},
         # pred-partitioning keeps per-predicate scans (triple view queries)
         # pruned; doc_id bucketing is the Iceberg-side refinement on cluster
         {"edges": ["pred"]},

@@ -512,8 +512,8 @@ def q_cpg_triples(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Multimodal plumbing: media spans -> synthetic blob-store join ->
-    Arrow-batched decode/feature extraction (decode kernel stubbed behind
-    CPG_SPARK_FAKE_DECODE; Spark-side schema/batching real)."""
+    Arrow-batched decode/feature extraction (decode kernel stubbed by the
+    default ``fake_decode=True``; Spark-side schema/batching real)."""
     from cpg_spark.operators.multimodal import extract_features, synth_media_table
 
     media = synth_media_table(fixture_docs(spark))

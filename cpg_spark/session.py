@@ -1,4 +1,9 @@
-"""SparkSession factory used by tests, bench, and the driver entry point."""
+"""SparkSession factory used by tests, bench, and the driver entry point.
+
+The one module that reads the environment: :func:`build_session` maps
+every setting into the Spark conf, where ``spark-submit --conf`` and
+``extra_conf`` set the same keys (README "Settings").
+"""
 
 from __future__ import annotations
 
@@ -15,6 +20,13 @@ _HEAP_SHARE = 0.4
 # huge number, v2 as "max")
 _CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max",
                   "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+CATALOG_CONF = "spark.cpg.catalog"
+SCRATCH_DIR_CONF = "spark.cpg.scratchDir"
+# the conf keys a stage's lineage records: the deployment settings above
+# plus the Spark keys build_session maps from the environment
+RECORDED_CONF = ("spark.master", "spark.driver.memory", "spark.local.dir",
+                 CATALOG_CONF, SCRATCH_DIR_CONF)
 
 
 def _host_memory_bytes() -> int:
@@ -52,6 +64,40 @@ def default_cpus() -> int:
     return len(os.sched_getaffinity(0))
 
 
+def env_conf() -> dict[str, str]:
+    """The deployment settings the environment gives, as Spark conf
+    entries (unset variables give none):
+
+    * ``CPG_SPARK_LOCAL_DIR`` -> ``spark.local.dir``, the shuffle and
+      spill dirs.  On a cluster every executor has its own local disks
+      (NVMe), so shuffle I/O scales with machines; a local session
+      shares ONE disk across all threads, which becomes the bottleneck
+      at high parallelism (measured: parse+persist 94.7 s on disk vs
+      69.7 s on tmpfs at local[32]/192k docs, identical at local[8]).
+      A tmpfs path here models per-executor local storage for scaling
+      measurements;
+    * ``CPG_SPARK_SCRATCH_DIR``, else ``CPG_SPARK_LOCAL_DIR`` ->
+      :data:`SCRATCH_DIR_CONF`;
+    * ``CPG_SPARK_CATALOG`` -> :data:`CATALOG_CONF`."""
+    conf = {}
+    local_dir = os.environ.get("CPG_SPARK_LOCAL_DIR")
+    if local_dir:
+        conf["spark.local.dir"] = local_dir
+    scratch_dir = os.environ.get("CPG_SPARK_SCRATCH_DIR") or local_dir
+    if scratch_dir:
+        conf[SCRATCH_DIR_CONF] = scratch_dir
+    catalog = os.environ.get("CPG_SPARK_CATALOG")
+    if catalog:
+        conf[CATALOG_CONF] = catalog
+    return conf
+
+
+def settings_in_force(spark: SparkSession) -> dict[str, str | None]:
+    """The :data:`RECORDED_CONF` values of ``spark``'s conf, ``None``
+    where a key is unset.  Read on the driver: no Spark job."""
+    return {k: spark.conf.get(k, None) for k in RECORDED_CONF}
+
+
 def build_session(
     app_name: str = "cpg_spark",
     cpus: int | None = None,
@@ -69,7 +115,10 @@ def build_session(
     the host's physical memory (``MemTotal``, or the cgroup memory limit
     when that is lower); see :func:`default_driver_memory`.  A heap
     sized past the host lets G1 commit far beyond the live set until the
-    kernel kills the JVM."""
+    kernel kills the JVM.
+
+    The local dir, scratch dir and catalog come from :func:`env_conf`;
+    ``extra_conf`` is applied last, so it overrides any of them."""
     # make the package importable inside forked Python workers regardless of
     # the caller's cwd (cluster deployments ship it via --py-files instead)
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,20 +152,11 @@ def build_session(
         # object-store traffic
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    # shuffle/spill scratch dirs.  On a cluster every executor has its own
-    # local disks (NVMe), so shuffle I/O scales with machines; this sandbox
-    # shares ONE virtual disk across all local threads, which becomes the
-    # bottleneck at high parallelism (measured: parse+persist 94.7 s on
-    # disk vs 69.7 s on tmpfs at local[32]/192k docs, identical at
-    # local[8]).  CPG_SPARK_LOCAL_DIR (e.g. a tmpfs path) models the
-    # per-executor-local-storage reality for scaling measurements.
-    local_dir = os.environ.get("CPG_SPARK_LOCAL_DIR")
-    if local_dir:
-        os.makedirs(local_dir, exist_ok=True)
-        builder = builder.config("spark.local.dir", local_dir)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = env_conf()
+    if "spark.local.dir" in conf:
+        os.makedirs(conf["spark.local.dir"], exist_ok=True)
+    for k, v in {**conf, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

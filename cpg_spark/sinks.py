@@ -6,7 +6,8 @@ table commit.  This sandbox has no Iceberg runtime jar, so the sink writes
 parquet directories with an atomic ``_SUCCESS`` marker (what
 ``spark.write`` already provides); on a cluster with an Iceberg catalog the
 same call sites switch to ``df.writeTo(table).createOrReplace()`` by
-setting ``CPG_SPARK_CATALOG`` — the stage/pipeline code is format-agnostic.
+setting ``spark.cpg.catalog`` in the session's conf — the stage/pipeline
+code is format-agnostic.
 """
 
 from __future__ import annotations
@@ -14,6 +15,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cpg_spark.session import CATALOG_CONF, SCRATCH_DIR_CONF
+
+
+def _catalog(spark: SparkSession) -> str | None:
+    return spark.conf.get(CATALOG_CONF, None)
 
 
 def table_uri(workdir: str, run_id: str, stage: str, name: str) -> str:
@@ -48,8 +55,9 @@ def scratch_table(df: DataFrame, name: str = "scratch",
     such a scan re-executes it; materialize the subtree itself when it
     is expensive.
 
-    ``base`` defaults to ``$CPG_SPARK_SCRATCH_DIR``, else
-    ``$CPG_SPARK_LOCAL_DIR`` (the shuffle scratch, tmpfs in scaling
+    ``base`` defaults to the session's ``spark.cpg.scratchDir``
+    (``build_session`` sets it from ``$CPG_SPARK_SCRATCH_DIR``, else
+    ``$CPG_SPARK_LOCAL_DIR``, the shuffle scratch, tmpfs in scaling
     runs), else the system temp dir.  The caller owns cleanup of the
     returned path; ``overwrite=True`` uses a FIXED per-name path
     (successive calls replace it instead of accumulating dirs — the
@@ -58,8 +66,7 @@ def scratch_table(df: DataFrame, name: str = "scratch",
     import tempfile
     import uuid
 
-    base = (base or os.environ.get("CPG_SPARK_SCRATCH_DIR")
-            or os.environ.get("CPG_SPARK_LOCAL_DIR")
+    base = (base or df.sparkSession.conf.get(SCRATCH_DIR_CONF, None)
             or tempfile.gettempdir())
     os.makedirs(base, exist_ok=True)
     if overwrite:
@@ -72,7 +79,7 @@ def scratch_table(df: DataFrame, name: str = "scratch",
 
 
 def write_table(df: DataFrame, uri: str, partition_by: list[str] | None = None) -> None:
-    catalog = os.environ.get("CPG_SPARK_CATALOG")
+    catalog = _catalog(df.sparkSession)
     if catalog:
         # Iceberg path (cluster): uri is interpreted as a table name suffix
         tbl = f"{catalog}.{uri.strip('/').replace('/', '_')}"
@@ -103,34 +110,28 @@ def write_table(df: DataFrame, uri: str, partition_by: list[str] | None = None) 
 
 
 def read_table(spark: SparkSession, uri: str) -> DataFrame:
-    catalog = os.environ.get("CPG_SPARK_CATALOG")
+    catalog = _catalog(spark)
     if catalog:
         tbl = f"{catalog}.{uri.strip('/').replace('/', '_')}"
         return spark.read.table(tbl)
     return spark.read.parquet(uri)
 
 
-def is_committed(uri: str) -> bool:
-    if os.environ.get("CPG_SPARK_CATALOG"):
+def is_committed(spark: SparkSession, marker_uri: str) -> bool:
+    """Whether the stage commit marker dir ``marker_uri`` holds its
+    ``_COMMIT.json`` (see :func:`write_commit_marker`)."""
+    if _catalog(spark):
         return False  # catalog existence checks are cluster-specific; recompute
-    return os.path.exists(os.path.join(uri, "_SUCCESS")) or os.path.exists(
-        uri if uri.endswith(".json") else os.path.join(uri, "_COMMIT.json")
-    )
+    return os.path.exists(os.path.join(marker_uri, "_COMMIT.json"))
 
 
-def committed_outputs(marker_uri: str) -> dict[str, str] | None:
+def committed_outputs(marker_uri: str) -> dict[str, str]:
     """Output-name -> table URI mapping recorded in a stage commit marker
-    (supports passthrough outputs living outside the stage dir); None when
-    the marker predates the outputs field or is unreadable."""
+    (supports passthrough outputs living outside the stage dir)."""
     import json
 
-    path = (marker_uri if marker_uri.endswith(".json")
-            else os.path.join(marker_uri, "_COMMIT.json"))
-    try:
-        with open(path) as fh:
-            return json.load(fh).get("outputs")
-    except Exception:
-        return None
+    with open(os.path.join(marker_uri, "_COMMIT.json")) as fh:
+        return json.load(fh)["outputs"]
 
 
 def partition_row_counts(uri: str) -> list[tuple[int, int]]:

@@ -28,7 +28,6 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cpg_spark.fixtures_cfamily import CPP_FIXTURES, JAVA_FIXTURES
 from cpg_spark.fixtures_go import GO_FIXTURES
@@ -302,20 +301,3 @@ def docs_from_plain_documents(spark: SparkSession, sf_dir: str,
             yield _pd.DataFrame(out)
 
     return plain.select("doc_id", "text").mapInPandas(wrap, schema=DOCS_SCHEMA)
-
-
-def validate_span_invariant(docs: DataFrame) -> DataFrame:
-    """Rows violating the span-sequence invariant (offsets strictly
-    increasing in array order) — must be empty.  Pure Catalyst expressions,
-    no UDF."""
-    return docs.filter(
-        ~F.forall(
-            F.zip_with(
-                F.col("spans"),
-                F.slice(F.col("spans"), 2, F.greatest(F.size("spans") - 1, F.lit(1))),
-                lambda a, b: a["offset"] < b["offset"],
-            ),
-            lambda ok: ok,
-        )
-        & (F.size("spans") > 1)
-    )

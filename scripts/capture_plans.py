@@ -120,8 +120,9 @@ def main() -> None:
     # the CPG linking join over the parsed fixture corpus
     raw = parse_docs(fixture_docs(spark)).persist()
     nodes, edges, mentions, symbols = split_parse_output(raw)
-    combined, _ = link_combined(mentions, symbols, nodes, edges,
-                                strategy="broadcast")
+    # the fixture corpus's symbol dimension is far below
+    # BROADCAST_MAX_ROWS, so link picks the broadcast join
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
     linked, _ = split_linked(combined)
     sections.append(
         "## cpg_link_calls (broadcast path)\n\n"

@@ -65,8 +65,8 @@ def compute_job():
     raw, raw_path = scratch_table(parse_docs(docs), "compute_raw")
     try:
         nodes, edges, mentions, symbols = split_parse_output(raw)
-        # strategy=None: the engine sizes the dim and picks for itself
-        # (salted above BROADCAST_MAX_ROWS) — measure what users get
+        # the engine sizes the dim and picks the join for itself (salted
+        # above BROADCAST_MAX_ROWS) — measure what users get
         combined, _ = link_combined(mentions, symbols, nodes, edges)
         linked, _ = split_linked(combined)
         return edges.select("subj", "pred", "obj").unionByName(

@@ -80,8 +80,7 @@ def test_link_combined_carries_jdk_rows(spark, graph):
 
     docs = code_docs(spark, [("java/jdkhier/0001", "code/java", SRC)])
     nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
-    combined, _ = link_combined(mentions, symbols, nodes, edges,
-                                strategy="broadcast")
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
     linked_edges, inferred_nodes = split_linked(combined)
     names = {r["name"] for r in inferred_nodes.filter(
         F.col("label") == "RecordDeclaration").collect()}
@@ -100,8 +99,7 @@ def test_no_trigger_adds_nothing(spark):
     nodes, edges, mentions, symbols = split_parse_output(parse_docs(docs))
     assert probe_supertypes(nodes, edges) == (True, [])
     assert external_jdk_hierarchy(spark, []) is None
-    combined, _ = link_combined(mentions, symbols, nodes, edges,
-                                strategy="broadcast")
+    combined, _ = link_combined(mentions, symbols, nodes, edges)
     _, inferred_nodes = split_linked(combined)
     assert inferred_nodes.filter(F.col("props")["origin"] == "jdk").count() == 0
 

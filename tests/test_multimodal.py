@@ -64,8 +64,8 @@ def test_sample_frames_fanout_and_timestamps(spark):
         assert all(len(r["feature"]) == 16 for r in rows)
 
 
-def test_real_codec_path(spark, monkeypatch):
-    """CPG_SPARK_FAKE_DECODE=0 activates the REAL PIL decode path: when
+def test_real_codec_path(spark):
+    """``fake_decode=False`` activates the REAL PIL decode path: when
     PIL is shipped to executors (--archives) a real PNG decodes with its
     true dimensions; in codec-less environments (this container) the
     kernel fails loudly with NotImplementedError instead of silently
@@ -84,7 +84,6 @@ def test_real_codec_path(spark, monkeypatch):
     except ImportError:
         have_pil = False
 
-    monkeypatch.setenv("CPG_SPARK_FAKE_DECODE", "0")
     if have_pil:  # pragma: no cover - container has no PIL
         buf = io.BytesIO()
         Image.new("RGB", (20, 10)).save(buf, format="PNG")
@@ -92,19 +91,19 @@ def test_real_codec_path(spark, monkeypatch):
             pd.DataFrame([{"media_ref": "blob://real/0",
                            "payload": buf.getvalue(),
                            "mime": "image/png"}]), schema=MEDIA_SCHEMA)
-        row, = extract_features(media).collect()
+        row, = extract_features(media, fake_decode=False).collect()
         assert (row["width"], row["height"]) == (20, 10)
         assert len(row["feature"]) == 16
     else:
         media = _media(spark)
         with pytest.raises(Exception) as exc_info:
-            extract_features(media).collect()
+            extract_features(media, fake_decode=False).collect()
         assert "NotImplementedError" in str(exc_info.value) or isinstance(
             exc_info.value, NotImplementedError)
 
 
-def test_real_frame_sampling_path(spark, monkeypatch):
-    """CPG_SPARK_FAKE_DECODE=0 on sample_frames: with PyAV shipped, a
+def test_real_frame_sampling_path(spark):
+    """``fake_decode=False`` on sample_frames: with PyAV shipped, a
     real container demuxes and per-frame features come from decoded
     pixels; without codecs (this container) the kernel fails loudly —
     same contract as decode/resize, no unconditional dead end."""
@@ -116,20 +115,19 @@ def test_real_frame_sampling_path(spark, monkeypatch):
     except ImportError:
         have_av = False
 
-    monkeypatch.setenv("CPG_SPARK_FAKE_DECODE", "0")
     media = _media(spark)
     if have_av:  # pragma: no cover - container has no PyAV
         pytest.skip("fake payloads are not real containers; the real-AV "
                     "leg needs a fixture video, exercised in deployment")
     with pytest.raises(Exception) as exc_info:
-        sample_frames(media, n_frames=2).collect()
+        sample_frames(media, n_frames=2, fake_decode=False).collect()
     assert "NotImplementedError" in str(exc_info.value) or isinstance(
         exc_info.value, NotImplementedError)
     assert "PyAV" in str(exc_info.value)
 
 
-def test_real_audio_chunking_path(spark, monkeypatch):
-    """CPG_SPARK_FAKE_DECODE=0 on chunk_audio: with soundfile present a
+def test_real_audio_chunking_path(spark):
+    """``fake_decode=False`` on chunk_audio: with soundfile present a
     real WAV chunks by true sample intervals; otherwise fail loudly."""
     import pytest
 
@@ -141,7 +139,6 @@ def test_real_audio_chunking_path(spark, monkeypatch):
     except ImportError:
         have_sf = False
 
-    monkeypatch.setenv("CPG_SPARK_FAKE_DECODE", "0")
     if have_sf:  # pragma: no cover - container has no soundfile
         import io
 
@@ -157,7 +154,8 @@ def test_real_audio_chunking_path(spark, monkeypatch):
             pd.DataFrame([{"media_ref": "blob://real/a0",
                            "payload": buf.getvalue(),
                            "mime": "audio/wav"}]), schema=MEDIA_SCHEMA)
-        rows = chunk_audio(media, chunk_ms=1000, n_chunks=4).collect()
+        rows = chunk_audio(media, chunk_ms=1000, n_chunks=4,
+                           fake_decode=False).collect()
         # 2 s of audio at 1 s chunks: exactly 2 chunks, true intervals
         assert [(r["start_ms"], r["end_ms"]) for r in
                 sorted(rows, key=lambda r: r["chunk_no"])] == [
@@ -165,7 +163,7 @@ def test_real_audio_chunking_path(spark, monkeypatch):
     else:
         media = _media(spark)
         with pytest.raises(Exception) as exc_info:
-            chunk_audio(media).collect()
+            chunk_audio(media, fake_decode=False).collect()
         assert "NotImplementedError" in str(exc_info.value) or isinstance(
             exc_info.value, NotImplementedError)
         assert "soundfile" in str(exc_info.value)

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from collections import Counter, defaultdict
 
-import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.fixtures_templates import TEMPLATE_FIXTURES
@@ -142,16 +141,3 @@ def test_duplicate_spans_get_distinct_ids(spark):
             .select("module").collect()}
     assert mods == {f"dup{i}" for i in range(4)}
     raw.unpersist()
-
-
-def test_invariant_enforced_in_dedup_path(spark):
-    docs = spark.createDataFrame(
-        [{"doc_id": "py/bad/0001",
-          "spans": [
-              {"kind": "code/python", "text": "a = 1\n", "media_ref": None,
-               "offset": 10},
-              {"kind": "code/python", "text": "b = 2\n", "media_ref": None,
-               "offset": 5}]}],
-        schema=DOCS_SCHEMA)
-    with pytest.raises(Exception, match="span-sequence invariant"):
-        parse_docs(docs).count()

@@ -1,5 +1,5 @@
-"""End-to-end Spark tests: parse operator, span invariant, linking joins,
-pipeline checkpoint/resume determinism."""
+"""End-to-end Spark tests: parse operator, linking joins, pipeline
+checkpoint/resume determinism and lineage."""
 
 from __future__ import annotations
 
@@ -8,13 +8,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from cpg_spark.operators import link
 from cpg_spark.operators.link import link_combined, split_linked
 from cpg_spark.pipeline import CpgGraph, run_cpg_pipeline, triples
-from cpg_spark.synth import (
-    fixture_docs,
-    generated_docs,
-    validate_span_invariant,
-)
+from cpg_spark.synth import fixture_docs, generated_docs
 
 
 @pytest.fixture(scope="module")
@@ -25,20 +22,6 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def graph(docs):
     return CpgGraph(docs)
-
-
-def test_span_invariant_holds(docs):
-    assert validate_span_invariant(docs).count() == 0
-
-
-def test_span_invariant_detects_violation(spark):
-    docs = spark.createDataFrame(
-        [("bad", [{"kind": "text", "text": "a", "media_ref": None, "offset": 2},
-                  {"kind": "text", "text": "b", "media_ref": None, "offset": 1}])],
-        "doc_id string, spans array<struct<kind string, text string, "
-        "media_ref string, offset int>>",
-    )
-    assert validate_span_invariant(docs).count() == 1
 
 
 def test_parse_matches_pure_python(graph):
@@ -84,12 +67,16 @@ def test_inferred_functions_deterministic(graph):
     assert pdf["node_id"].is_unique
 
 
-def test_salted_equals_broadcast(graph):
+def test_salted_equals_broadcast(graph, monkeypatch):
+    """A dimension above ``BROADCAST_MAX_ROWS`` takes the salted join; it
+    links exactly what the broadcast join links."""
     legs = []
-    for strategy in ("broadcast", "salted"):
-        combined, _ = link_combined(graph.mentions, graph.symbols,
-                                    graph.nodes, graph.edges,
-                                    strategy=strategy)
+    for max_rows, strategy in ((link.BROADCAST_MAX_ROWS, "broadcast"),
+                               (0, "salted")):
+        monkeypatch.setattr(link, "BROADCAST_MAX_ROWS", max_rows)
+        combined, stats = link_combined(graph.mentions, graph.symbols,
+                                        graph.nodes, graph.edges)
+        assert stats["strategy"] == strategy
         legs.append({tuple(r) for r in split_linked(combined)[0].select(
             "subj", "pred", "obj").collect()})
     a, b = legs
@@ -176,66 +163,37 @@ def test_final_tables_unique_ids(spark, fixture_run):
     assert edges.count() == edges.select("subj", "pred", "obj").distinct().count()
 
 
-def test_link_stats_in_lineage(fixture_run):
+def test_link_stats_in_lineage(spark, fixture_run):
     """The link stage's lineage row carries the probe's answers: the
     join strategy and dim size, whether the supertype closure was built,
-    and which function-pointer walk rows exist."""
+    and which function-pointer walk rows exist.  Every stage's summary
+    row records the settings in force, as the session's conf holds
+    them."""
     import json
     import os
 
     wd, p = fixture_run
-    with open(os.path.join(wd, "r2", "_lineage", "link.jsonl")) as fh:
-        summary = [json.loads(ln) for ln in fh][-1]
-    assert summary["partition_id"] == -1
-    stats = summary["metrics"]
+
+    def summary(stage):
+        with open(os.path.join(wd, "r2", "_lineage", f"{stage}.jsonl")) as fh:
+            return [json.loads(ln) for ln in fh][-1]
+
+    link_row = summary("link")
+    assert link_row["partition_id"] == -1
+    stats = link_row["metrics"]
     assert stats == [r.metrics for r in p.results if r.name == "link"][0]
     assert stats["strategy"] == "broadcast" and stats["dim_rows"] > 0
     # the fixtures include python class hierarchies, so the closure runs
     assert stats["closure"] == "built"
     assert set(stats["fnptr_kinds"]) <= {"hit", "term"}
 
+    conf = spark.conf.getAll
+    expected = {k: conf.get(k) for k in
+                ("spark.master", "spark.driver.memory", "spark.local.dir")}
+    expected.update({k: v for k, v in conf.items()
+                     if k.startswith("spark.cpg.")})
+    for r in p.results:
+        config = summary(r.name)["config"]
+        assert {k: v for k, v in config.items() if v is not None} == {
+            k: v for k, v in expected.items() if v is not None}
 
-def test_dense_id_materialize(spark, tmp_path, monkeypatch):
-    """CPG_SPARK_DENSE_IDS=1: output ids are dense walk-order ints
-    (IdentifierPass at the output boundary — content-hash ids are 97% of
-    edge bytes and incompressible), the content hash survives as
-    nodes.content_id, and the triple set is isomorphic to the hash-id
-    run through that mapping."""
-    from pyspark.sql import functions as F
-
-    from cpg_spark.pipeline import run_cpg_pipeline
-    from cpg_spark.synth import fixture_docs
-
-    docs = fixture_docs(spark)
-    p1 = run_cpg_pipeline(spark, docs, str(tmp_path / "w1"), run_id="h",
-                          resume=False)
-    monkeypatch.setenv("CPG_SPARK_DENSE_IDS", "1")
-    p2 = run_cpg_pipeline(spark, docs, str(tmp_path / "w2"), run_id="d",
-                          resume=False)
-    n1 = spark.read.parquet(p1.results[-1].outputs["nodes"])
-    e1 = spark.read.parquet(p1.results[-1].outputs["edges"])
-    n2 = spark.read.parquet(p2.results[-1].outputs["nodes"])
-    e2 = spark.read.parquet(p2.results[-1].outputs["edges"])
-
-    n_nodes = n2.count()
-    assert n_nodes == n1.count()
-    # dense: exactly 0..n-1, no gaps
-    assert n2.agg(F.min("node_id"), F.max("node_id")).first() == (0, n_nodes - 1)
-    assert n2.select("node_id").distinct().count() == n_nodes
-    # every edge endpoint resolves to a node (no dangling hash leftovers)
-    ids = n2.select("node_id")
-    assert e2.join(ids.withColumnRenamed("node_id", "subj"), "subj",
-                   "left_anti").count() == 0
-    assert e2.join(ids.withColumnRenamed("node_id", "obj"), "obj",
-                   "left_anti").count() == 0
-    # isomorphic to the hash-id run: map dense ids back through content_id
-    m = n2.select(F.col("node_id").alias("d"), F.col("content_id").alias("h"))
-    back = (
-        e2.join(m.withColumnRenamed("d", "subj").withColumnRenamed("h", "hs"),
-                "subj")
-        .join(m.withColumnRenamed("d", "obj").withColumnRenamed("h", "ho"),
-              "obj")
-        .select(F.col("hs").alias("subj"), "pred", F.col("ho").alias("obj"))
-    )
-    t1 = e1.select("subj", "pred", "obj")
-    assert back.exceptAll(t1).isEmpty() and t1.exceptAll(back).isEmpty()

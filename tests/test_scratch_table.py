@@ -9,6 +9,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from cpg_spark.session import SCRATCH_DIR_CONF
 from cpg_spark.sinks import scratch_table
 
 
@@ -32,11 +33,16 @@ def test_scratch_table_roundtrip_and_pruning(spark, tmp_path):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_scratch_table_base_env(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("CPG_SPARK_SCRATCH_DIR", str(tmp_path / "scr"))
-    scan, path = scratch_table(spark.range(5), "env")
+def test_scratch_table_base_env(spark, tmp_path):
+    """The default base is the session's ``spark.cpg.scratchDir``."""
+    old = spark.conf.get(SCRATCH_DIR_CONF, None)
+    spark.conf.set(SCRATCH_DIR_CONF, str(tmp_path / "scr"))
     try:
-        assert path.startswith(str(tmp_path / "scr"))
-        assert scan.count() == 5
+        scan, path = scratch_table(spark.range(5), "env")
     finally:
-        shutil.rmtree(path, ignore_errors=True)
+        if old is None:
+            spark.conf.unset(SCRATCH_DIR_CONF)
+        else:
+            spark.conf.set(SCRATCH_DIR_CONF, old)
+    assert path.startswith(str(tmp_path / "scr"))
+    assert scan.count() == 5

@@ -1,10 +1,14 @@
-"""The default driver heap and parallelism fit the host: no JVM is
+"""The default driver heap and parallelism fit the host, and the
+environment reaches the program only through ``session``: no JVM is
 started here."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 from cpg_spark import session
-from cpg_spark.session import default_cpus, default_driver_memory
+from cpg_spark.session import default_cpus, default_driver_memory, env_conf
 
 GIB = 1 << 30
 
@@ -58,3 +62,53 @@ def test_env_overrides_default_cpus(monkeypatch):
     monkeypatch.setattr(session.os, "sched_getaffinity",
                         lambda pid: {0, 1, 2, 5})
     assert default_cpus() == 3
+
+
+def test_env_maps_into_conf(monkeypatch):
+    for var in ("CPG_SPARK_LOCAL_DIR", "CPG_SPARK_SCRATCH_DIR",
+                "CPG_SPARK_CATALOG"):
+        monkeypatch.delenv(var, raising=False)
+    assert env_conf() == {}
+    monkeypatch.setenv("CPG_SPARK_LOCAL_DIR", "/l")
+    # the scratch dir falls back to the local dir
+    assert env_conf() == {"spark.local.dir": "/l",
+                          "spark.cpg.scratchDir": "/l"}
+    monkeypatch.setenv("CPG_SPARK_SCRATCH_DIR", "/s")
+    monkeypatch.setenv("CPG_SPARK_CATALOG", "ice")
+    assert env_conf() == {"spark.local.dir": "/l",
+                          "spark.cpg.scratchDir": "/s",
+                          "spark.cpg.catalog": "ice"}
+
+
+def _env_reads(tree: ast.AST) -> list[int]:
+    """Lines that touch ``os.environ`` or ``os.getenv``, or import them
+    from ``os``."""
+    lines = []
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+                and isinstance(node.value, ast.Name) and node.value.id == "os"):
+            lines.append(node.lineno)
+        elif (isinstance(node, ast.ImportFrom) and node.module == "os"
+              and {a.name for a in node.names} & {"environ", "getenv"}):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_only_session_reads_the_environment():
+    pkg = os.path.dirname(session.__file__)
+    found = {}
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == session.__file__:
+                continue
+            with open(path) as fh:
+                lines = _env_reads(ast.parse(fh.read(), path))
+            if lines:
+                found[os.path.relpath(path, pkg)] = lines
+    assert found == {}
+    # the scan sees a read where there is one
+    assert sorted(_env_reads(ast.parse(
+        "import os\nx = os.environ.get('A')\ny = os.getenv('B')\n"
+        "from os import environ\n"))) == [2, 3, 4]

@@ -3,13 +3,10 @@ a Zipf-skewed mention corpus."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from cpg_spark.operators.joins import skew_report
 from cpg_spark.operators.parse import parse_docs, split_parse_output
-from cpg_spark.pipeline import run_cpg_pipeline
 from cpg_spark.synth import generated_docs
 
 
@@ -76,18 +73,22 @@ def test_hot_key_salting_matches_blanket_and_plain(spark):
     assert n_salts > 1
 
 
-def test_link_all_hot_key_salted_equals_broadcast(spark):
-    """End-to-end: forced-salted link (which now auto-measures hot keys)
-    must emit exactly the broadcast plan's edges on a Zipf corpus."""
+def test_link_all_hot_key_salted_equals_broadcast(spark, monkeypatch):
+    """End-to-end: salted link (which auto-measures hot keys), forced by
+    a zero broadcast bound, must emit exactly the broadcast plan's edges
+    on a Zipf corpus."""
+    from cpg_spark.operators import link
     from cpg_spark.operators.link import link_combined, split_linked
 
     raw = parse_docs(generated_docs(spark, 120, n_hubs=3)).persist()
     try:
         nodes, edges, mentions, symbols = split_parse_output(raw)
         eb, ib = split_linked(link_combined(
-            mentions, symbols, nodes, edges, strategy="broadcast")[0])
-        es, is_ = split_linked(link_combined(
-            mentions, symbols, nodes, edges, strategy="salted")[0])
+            mentions, symbols, nodes, edges)[0])
+        monkeypatch.setattr(link, "BROADCAST_MAX_ROWS", 0)
+        combined, stats = link_combined(mentions, symbols, nodes, edges)
+        assert stats["strategy"] == "salted"
+        es, is_ = split_linked(combined)
         key = ["subj", "pred", "obj"]
         assert sorted(map(tuple, eb.select(key).collect())) == \
             sorted(map(tuple, es.select(key).collect()))
@@ -96,14 +97,3 @@ def test_link_all_hot_key_salted_equals_broadcast(spark):
     finally:
         raw.unpersist()
 
-
-def test_pipeline_skew_metrics_env(spark, tmp_path):
-    os.environ["CPG_SPARK_SKEW_REPORT"] = "1"
-    try:
-        p = run_cpg_pipeline(spark, generated_docs(spark, 60, n_hubs=2),
-                             str(tmp_path), run_id="skew")
-        link_stats = [r.metrics for r in p.results if r.name == "link"][0]
-        assert "mention_name_skew" in link_stats
-        assert link_stats["mention_name_skew"]["hot_keys"]
-    finally:
-        del os.environ["CPG_SPARK_SKEW_REPORT"]
